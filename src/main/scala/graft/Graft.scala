@@ -14,8 +14,10 @@ import graft.sources.Sinks
   * SigV4/download concerns live in the cluster's Hadoop credential chain,
   * not in query code).
   *
-  * Everything is lazy DataFrames until the final writes; Catalyst plans
-  * the whole selection+parse+report graph per section with shared scans.
+  * Every entry point ingests through one path, [[LogLines.parseLogFiles]]
+  * (whole-file read → multi-line stitch → parse). The report sections
+  * share one materialized parse, so each selected file is read and
+  * parsed once per report.
   */
 object Graft {
 
@@ -29,23 +31,19 @@ object Graft {
     LogCatalog.selectLogFiles(catalog, referenceDateHour, maxRecords)
   }
 
-  /** Ingest the selected files as parsed log lines (file identity kept).
-    * The file list is collected to the driver — it is bounded by
-    * `max_records` (≤ a handful by the reference's contract,
-    * rds_pgbadger.py:80), and passing explicit paths means Spark lists and
-    * scans ONLY those files; reading the whole directory and semi-joining
-    * would scan everything.
+  /** Ingest the selected files as parsed log records (file identity
+    * kept) through [[LogLines.parseLogFiles]]: multi-line statements and
+    * CRLF files stitch into whole records, and `event_id` is a hash of
+    * (file, record index), stable across reads. The file list is
+    * collected to the driver — it is bounded by `max_records` (≤ a
+    * handful by the reference's contract, rds_pgbadger.py:80), and
+    * passing explicit paths means Spark lists and scans ONLY those files;
+    * reading the whole directory and semi-joining would scan everything.
     */
   def readLogLines(spark: SparkSession, logDir: String,
-                   selected: DataFrame): DataFrame = {
-    val files = selected.collect().map(r =>
-      s"$logDir/${r.getString(0)}").toSeq
-    val lines = spark.read.text(files: _*)
-      .select(col("value").as("line"),
-        element_at(split(input_file_name(), "/"), -1).as("file_name"))
-    LogLines.parseLines(
-      lines.withColumn("event_id", monotonically_increasing_id()))
-  }
+                   selected: DataFrame): DataFrame =
+    LogLines.parseLogFiles(spark,
+      selected.collect().map(r => s"$logDir/${r.getString(0)}").toSeq: _*)
 
   /** Parsed lines instrumented with `observe()` metrics — pipeline
     * telemetry (rows, parse failures, max duration) collected as a side
@@ -57,20 +55,25 @@ object Graft {
       count(when(col("level") === "", 1)).as("n_unparsed"),
       max(col("duration_ms")).as("max_duration_ms"))
 
-  /** Every pgbadger-style report section off one parsed-lines frame. */
+  /** Every pgbadger-style report section off one parsed-lines frame. The
+    * columns the sections read are materialized once ([[Checkpoints.cut]],
+    * one job), and all seven sections read that cut: the log text is
+    * scanned and parsed once, not once per section.
+    */
   def reportSections(parsed: DataFrame): Map[String, DataFrame] = {
-    val ev = parsed.select(col("ts"), col("level").as("event_type"),
+    val once = Checkpoints.cut(parsed.select(col("ts"), col("level"),
+      col("duration_ms"), col("pid"), col("query")))
+    val ev = once.select(col("ts"), col("level").as("event_type"),
       coalesce(col("duration_ms"), lit(0.0)).as("value"),
       col("pid").as("user_id"), col("query"))
     Map(
       "level_counts" -> Reports.levelCounts(ev),
       "hourly_histogram" -> Reports.hourlyHistogram(ev),
-      "query_stats" -> Reports.queryStats(parsed),
+      "query_stats" -> Reports.queryStats(once),
       "distinct_entities" -> Reports.distinctEntities(ev),
       "percentiles" -> Reports.percentiles(ev),
-      // tiebreak on a hash of stable parsed columns, not
-      // monotonically_increasing_id — ids depend on partition layout, so
-      // tie-broken output would differ run to run
+      // tiebreak on a hash of stable parsed columns, so tie-broken output
+      // is the same run to run
       "top_slowest" -> Reports.topSlowestPerClass(
         ev.withColumn("event_id",
           xxhash64(col("ts"), col("user_id"), col("query"))), 10),
@@ -150,13 +153,7 @@ object Graft {
   def runPerFileReports(spark: SparkSession, logDir: String, outDir: String,
                         referenceDateHour: String, maxRecords: Int = 5): Unit = {
     val selected = selectLogFiles(spark, logDir, referenceDateHour, maxRecords)
-    val files = selected.collect().map(r => s"$logDir/${r.getString(0)}").toSeq
-    val parsed = spark.read.text(files: _*)
-      .select(element_at(split(input_file_name(), "/"), -1).as("file_name"),
-        graft.functions.ParseLogLine.parse(col("value")).as("p"))
-      .select(col("file_name"), col("p.level").as("level"),
-        col("p.duration_ms").as("duration_ms"))
-    val perFile = parsed
+    val perFile = readLogLines(spark, logDir, selected)
       .groupBy(col("file_name"), col("level"))
       .agg(count(lit(1)).as("n"),
         sum(col("duration_ms").cast("decimal(18,2)")).cast("double")

@@ -48,15 +48,11 @@ object LogLines {
         .otherwise(durationLine).as("line"))
   }
 
-  // One regex per field keeps each extraction independently null-safe and
-  // the whole row parse inside codegen (SURVEY §2.10: no UDF needed).
-  private val PrefixRe =
-    "^(\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}) UTC:([^:]*):([^@:]*)@([^:]*):\\[(\\d+)\\]:([A-Z]+):"
-
   /** Parse `line` into the SURVEY §1.1 log-line struct columns — one regex
     * pass per line via [[graft.functions.ParseLogLine]] (the per-field
     * `regexp_extract` composition re-matched the same prefix 6-8×; field
-    * semantics are identical).
+    * semantics are identical). Every other input column (`event_id`,
+    * `file_name`, ...) passes through ahead of the parsed fields.
     *
     * The trailing `observe` is load-bearing twice over: it reports how
     * many lines were parsed (the operational metric a 100 TB ingest job
@@ -69,22 +65,19 @@ object LogLines {
     * parseLines frames can compose in one query (duplicate observed
     * metric names fail analysis).
     */
-  def parseLines(lines: DataFrame): DataFrame = lines
-    .select(col("event_id"),
-      graft.functions.ParseLogLine.parse(col("line")).as("p"))
-    .select(col("event_id"),
-      to_timestamp(col("p.ts_str"), "yyyy-MM-dd HH:mm:ss").as("ts"),
-      col("p.remote_host").as("remote_host"), col("p.usr").as("usr"),
-      col("p.db").as("db"), col("p.pid").as("pid"),
-      col("p.level").as("level"), col("p.message").as("message"),
-      col("p.duration_ms").as("duration_ms"), col("p.query").as("query"))
-    .observe(Checkpoints.freshMetricName("parse_lines"),
-      count(lit(1)).as("n_lines_parsed"))
-
-  /** F17: `duration: X ms` → double (null when absent). */
-  def durationMs(line: Column): Column = {
-    val m = regexp_extract(line, "duration: ([0-9.]+) ms", 1)
-    when(m === "", lit(null)).otherwise(m).cast("double")
+  def parseLines(lines: DataFrame): DataFrame = {
+    val keep = lines.columns.filter(_ != "line").map(c => col(s"`$c`")).toSeq
+    val p = graft.functions.ParseLogLine.parse(col("line")).as("p")
+    lines.select(keep :+ p: _*)
+      .select(keep ++ Seq(
+        to_timestamp(col("p.ts_str"), "yyyy-MM-dd HH:mm:ss").as("ts"),
+        col("p.remote_host").as("remote_host"), col("p.usr").as("usr"),
+        col("p.db").as("db"), col("p.pid").as("pid"),
+        col("p.level").as("level"), col("p.message").as("message"),
+        col("p.duration_ms").as("duration_ms"),
+        col("p.query").as("query")): _*)
+      .observe(Checkpoints.freshMetricName("parse_lines"),
+        count(lit(1)).as("n_lines_parsed"))
   }
 
   /** F18: query-class normalization — numeric literals and single-quoted
@@ -105,17 +98,15 @@ object LogLines {
     */
   private val RecordStart = "^\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2} UTC:.*".r
 
-  /** Multi-line record stitching (SURVEY §7.3.3, previously deferred).
+  /** Multi-line record stitching (SURVEY §7.3.3).
     *
     * Continuation lines are order-dependent, so stitching happens at file
     * granularity: input is one row per (file_name, whole file text) — the
     * `wholetext` read shape — and each file is stitched in a single
     * forward pass, in parallel across files. The reference's unit of work
-    * is the hourly file (bounded size) so per-file memory is bounded; at
-    * 100 TB the same pass runs per file-SPLIT with a boundary exchange —
-    * [[stitchSegments]] over [[readSplitLines]], which this per-file form
-    * is the degenerate (one split per file) case of; StitchSpec pins the
-    * two bit-equal across pathological split placements.
+    * is the whole hourly file, held in memory by pgBadger, so one file per
+    * task keeps its memory contract. Output is (file_name, record_idx,
+    * line), record_idx numbering each file's records in file order.
     */
   def stitchLines(files: DataFrame): DataFrame = {
     val spark = files.sparkSession
@@ -125,10 +116,10 @@ object LogLines {
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, String)]
         var cur: StringBuilder = null
         var idx = 0L
-        // stripSuffix("\r"): CRLF logs must stitch identically to the
-        // split-read path (whose TextInputFormat strips \r) — without
-        // it a trailing \r defeats RecordStart's '.*' (dot excludes
-        // line terminators) and every CRLF line reads as junk
+        // stripSuffix("\r"): CRLF logs must stitch identically to LF
+        // logs — without it a trailing \r defeats RecordStart's '.*'
+        // (dot excludes line terminators) and every CRLF line reads as
+        // junk
         text.split("\n", -1).map(_.stripSuffix("\r")).foreach { raw =>
           if (RecordStart.pattern.matcher(raw).matches()) {
             if (cur != null) out += ((file, idx, cur.toString)); idx += 1
@@ -143,160 +134,18 @@ object LogLines {
       .toDF("file_name", "record_idx", "line")
   }
 
-  /** Per-line read with BYTE OFFSETS — the 100 TB ingestion shape
-    * [[stitchSegments]] consumes: `TextInputFormat` splits each file
-    * into byte-range input splits (a 100 GB log never lands on one
-    * task, unlike the `wholetext` read), every line arrives keyed by
-    * its byte offset (the in-file total order), and each partition is
-    * a contiguous in-order line run of ONE file — the contract the
-    * segment stitch is built on. `maxSplitBytes` forces small splits
-    * (tests use it to drive real multi-split reads of small files).
+  /** The log ingestion: read each file whole (`wholetext`, one file per
+    * task), stitch its multi-line records, and parse them. `paths` are
+    * files or directories. `event_id` is xxhash64(file name, record index):
+    * unique across files and independent of how the read is partitioned.
+    * Output is `file_name`, `event_id` and the [[parseLines]] fields.
     */
-  def readSplitLines(spark: SparkSession, logDir: String,
-                     maxSplitBytes: Long = 0L): DataFrame = {
-    import spark.implicits._
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    if (maxSplitBytes > 0)
-      conf.setLong("mapreduce.input.fileinputformat.split.maxsize",
-        maxSplitBytes)
-    spark.sparkContext.newAPIHadoopFile(logDir,
-        classOf[org.apache.hadoop.mapreduce.lib.input.TextInputFormat],
-        classOf[org.apache.hadoop.io.LongWritable],
-        classOf[org.apache.hadoop.io.Text], conf)
-      .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[
-        org.apache.hadoop.io.LongWritable, org.apache.hadoop.io.Text]]
-      .mapPartitionsWithInputSplit { (split, it) =>
-        val name = split
-          .asInstanceOf[org.apache.hadoop.mapreduce.lib.input.FileSplit]
-          .getPath.getName
-        // Writables are REUSED by the record reader — copy immediately
-        it.map { case (off, txt) => (name, off.get, txt.toString) }
-      }
-      .toDF("file_name", "off", "raw")
-  }
-
-  /** Split-boundary stitching — [[stitchLines]]'s distributed form
-    * (the per-split boundary fix-up that Scaladoc promised): input is
-    * (file_name, off, raw) lines whose PARTITIONS are contiguous
-    * in-order runs of one file (the [[readSplitLines]] contract), and
-    * no file ever needs to fit one partition.
-    *
-    * Two passes, no per-file window:
-    *   1. partition-local stitch (mapPartitions — genuinely per-
-    *      partition imperative logic): lines fold into SEGMENTS — a
-    *      header line plus its same-partition continuations, or a
-    *      HEADLESS run of continuations at a partition's start (the
-    *      "first partial" of the boundary exchange). At most one
-    *      headless segment exists per partition, so the headless side
-    *      is ≤ #partitions rows — broadcast-sized by construction at
-    *      any corpus size.
-    *   2. the exchange: each headless segment attaches to the greatest
-    *      header offset below it in its file — a broadcast join of the
-    *      header segments against the tiny headless frame + a
-    *      per-headless max (a record spanning k partitions just
-    *      contributes k−1 headless pieces to the same header); the
-    *      record re-assembles with one (file, header-offset)-keyed
-    *      aggregate whose collect_list holds the ≤k pieces of one
-    *      record, never a corpus-sized list.
-    *
-    * Leading junk before a file's first header has no header below it
-    * — the inner attach join drops it, matching [[stitchLines]]. Output
-    * (file_name, rec_off, line): rec_off is the record's header byte
-    * offset — the stable distributed record id (xxhash64(file,
-    * rec_off) for an event id); [[stitchLinesFromSplits]] layers the
-    * wholetext form's sequential record_idx on top for parity checks.
-    */
-  def stitchSegments(lines: DataFrame): DataFrame = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-    val segs = lines.select(col("file_name"), col("off"), col("raw"))
-      .as[(String, Long, String)]
-      .mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(String, Long, Boolean, String)]
-        var file: String = null
-        var segOff = -1L
-        var isHead = false
-        var sb: StringBuilder = null
-        def flush(): Unit =
-          if (sb != null) { out += ((file, segOff, isHead, sb.toString)) }
-        it.foreach { case (f, off, raw0) =>
-          // hadoop's TextInputFormat already strips \r; synthetic line
-          // frames may not — normalize so both entries stitch alike
-          val raw = raw0.stripSuffix("\r")
-          if (f != file) { flush(); file = f; sb = null }
-          if (RecordStart.pattern.matcher(raw).matches()) {
-            flush(); segOff = off; isHead = true; sb = new StringBuilder(raw)
-          } else if (raw.nonEmpty) {
-            if (sb == null) { segOff = off; isHead = false
-              sb = new StringBuilder(raw)
-            } else sb.append('\n').append(raw)
-          } // empty continuation lines are dropped (the stitchLines rule)
-        }
-        flush()
-        out.iterator
-      }
-      .toDF("file_name", "seg_off", "is_header", "text")
-    val headers = segs.filter(col("is_header"))
-      .select(col("file_name"), col("seg_off").as("hoff"), col("text"))
-    val headless = segs.filter(!col("is_header"))
-      .select(col("file_name"), col("seg_off").as("coff"), col("text"))
-    // the boundary exchange: greatest header offset below each headless
-    // piece, per file — headless is ≤ #partitions rows, so it broadcasts
-    val attach = headers.select(col("file_name"), col("hoff"))
-      .join(broadcast(headless.select(col("file_name"), col("coff"))),
-        Seq("file_name"))
-      .filter(col("hoff") < col("coff"))
-      .groupBy(col("file_name"), col("coff"))
-      .agg(max(col("hoff")).as("hoff"))
-    val attached = headless
-      .join(broadcast(attach), Seq("file_name", "coff"))
-      .select(col("file_name"), col("hoff"), col("coff").as("off"),
-        col("text"))
-    headers
-      .select(col("file_name"), col("hoff"), col("hoff").as("off"),
-        col("text"))
-      .union(attached)
-      .groupBy(col("file_name"), col("hoff"))
-      .agg(concat_ws("\n",
-        transform(array_sort(collect_list(struct(col("off"), col("text")))),
-          x => x.getField("text"))).as("line"))
-      .select(col("file_name"), col("hoff").as("rec_off"), col("line"))
-  }
-
-  /** [[stitchSegments]] plus the wholetext form's sequential per-file
-    * record_idx — the parity surface StitchSpec compares bit-for-bit
-    * against [[stitchLines]]. The idx needs a per-file window over the
-    * RECORDS (not the lines); it exists for parity and presentation —
-    * distributed consumers key on rec_off (stable without any window).
-    */
-  def stitchLinesFromSplits(lines: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("file_name")).orderBy(col("rec_off"))
-    stitchSegments(lines)
-      .withColumn("record_idx", row_number().over(w).cast("long"))
-      .select(col("file_name"), col("record_idx"), col("line"))
-  }
-
-  /** wholetext read → stitch → parse: the full multi-line ingestion path.
-    * `event_id` is derived from (file, record index) so ids never collide
-    * across files, and the file identity survives parsing.
-    */
-  def parseLogDirectory(spark: SparkSession, logDir: String): DataFrame = {
-    val files = spark.read.option("wholetext", "true").text(logDir)
+  def parseLogFiles(spark: SparkSession, paths: String*): DataFrame = {
+    val files = spark.read.option("wholetext", "true").text(paths: _*)
       .select(element_at(split(input_file_name(), "/"), -1).as("file_name"),
         col("value").as("text"))
-    stitchLines(files)
-      .withColumn("event_id",
-        xxhash64(col("file_name"), col("record_idx")))
-      .select(col("file_name"), col("event_id"),
-        graft.functions.ParseLogLine.parse(col("line")).as("p"))
-      .select(col("file_name"), col("event_id"),
-        to_timestamp(col("p.ts_str"), "yyyy-MM-dd HH:mm:ss").as("ts"),
-        col("p.remote_host").as("remote_host"), col("p.usr").as("usr"),
-        col("p.db").as("db"), col("p.pid").as("pid"),
-        col("p.level").as("level"), col("p.message").as("message"),
-        col("p.duration_ms").as("duration_ms"), col("p.query").as("query"))
+    parseLines(stitchLines(files).select(col("file_name"),
+      xxhash64(col("file_name"), col("record_idx")).as("event_id"),
+      col("line")))
   }
 }

@@ -45,10 +45,13 @@ object Reports {
 
   /** G4: per-normalized-query-class duration stats over parsed log lines.
     *
-    * Relies on [[LogLines.parseLines]]' CollectMetrics barrier: without
-    * it, this isNotNull filter is pushed below the parse projection with
-    * the alias inlined — re-running the ENTIRE log-line parse a second
-    * time per row just to test one field.
+    * On an unmaterialized parse (the registry's
+    * [[LogLines.parsedFromEvents]] path) this relies on
+    * [[LogLines.parseLines]]' CollectMetrics barrier: without it, this
+    * isNotNull filter is pushed below the parse projection with the alias
+    * inlined — re-running the ENTIRE log-line parse a second time per row
+    * just to test one field. The report path reads a materialized cut
+    * ([[graft.Graft.reportSections]]), where the barrier plays no part.
     */
   def queryStats(parsed: DataFrame): DataFrame =
     parsed.filter(col("duration_ms").isNotNull)

@@ -30,6 +30,112 @@ class GraftSpec extends SparkSpec {
     root
   }
 
+  private val multiLineLf = "postgresql.log.2024-03-01-01"
+  private val multiLineCrlf = "postgresql.log.2024-03-01-02"
+  private val multiLineEmpty = "postgresql.log.2024-03-01-03"
+
+  /** Log shapes pgBadger reads and physical-line reads do not: leading
+    * junk, a statement wrapped over three tab-continued lines, an ERROR
+    * with its DETAIL record; the same records again with CRLF endings in
+    * the next hour, then an empty hour. Four records per non-empty file.
+    */
+  private def writeMultiLineLogDir(): String = {
+    val root = Files.createTempDirectory("graft_multiline").toString
+    val records = Seq(
+      "could not write to log file: No space left on device",
+      "2024-03-01 01:00:01 UTC:10.0.0.5(51234):app@prod:[12345]:LOG:  " +
+        "duration: 12.34 ms  statement: SELECT *",
+      "\tFROM users",
+      "\tWHERE id = 42 AND name = 'bob'",
+      "2024-03-01 01:00:02 UTC:10.0.0.6(40000):etl@prod:[12346]:ERROR:  " +
+        "duplicate key value violates unique constraint \"users_pkey\"",
+      "2024-03-01 01:00:02 UTC:10.0.0.6(40000):etl@prod:[12346]:DETAIL:  " +
+        "Key (id)=(7) already exists.",
+      "2024-03-01 01:00:03 UTC:10.0.0.5(51234):app@prod:[12345]:LOG:  " +
+        "duration: 1.50 ms  statement: SELECT 1")
+    def write(name: String, text: String): Unit =
+      Files.write(Paths.get(root, name), text.getBytes(UTF_8))
+    write(multiLineLf, records.mkString("", "\n", "\n"))
+    write(multiLineCrlf, records.mkString("", "\r\n", "\r\n"))
+    write(multiLineEmpty, "")
+    root
+  }
+
+  private def sectionRows(sections: Map[String, org.apache.spark.sql.DataFrame])
+      : Map[String, Seq[org.apache.spark.sql.Row]] =
+    sections.map { case (name, df) => name -> df.collect().toSeq }
+
+  test("multi-line logs: stitched records, CRLF twin, empty hour → report") {
+    import spark.implicits._
+    val logDir = writeMultiLineLogDir()
+    val out = Files.createTempDirectory("graft_multiline_doc").toString
+    assert(Graft.writeReportDocument(spark, logDir, out, "2024-03-01-04", 5))
+    val html = new String(Files.readAllBytes(
+      Paths.get(out, "report_2024-03-01-04.html")), UTF_8)
+    // query_stats holds the whole statement, continuation lines included
+    assert(html.contains("<td>select * from users where id = ? and name = ?</td>"))
+
+    def read(names: String*) =
+      Graft.readLogLines(spark, logDir, names.toDF("file_name"))
+    assert(read(multiLineLf).count() === 4) // junk dropped, lines stitched
+    assert(read(multiLineLf).filter($"level" === "DETAIL").count() === 1)
+    assert(read(multiLineEmpty).count() === 0)
+    assert(read(multiLineLf, multiLineCrlf, multiLineEmpty).count() === 8)
+    assert(sectionRows(Graft.reportSections(read(multiLineCrlf))) ===
+      sectionRows(Graft.reportSections(read(multiLineLf))))
+  }
+
+  test("report sections read one materialized parse, never the log files") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Walk extends AdaptiveSparkPlanHelper
+    def fileScans(df: org.apache.spark.sql.DataFrame) = {
+      df.collect() // the final adaptive plan
+      Walk.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s
+      }
+    }
+    val logDir = writeLogDir()
+    val selected = Graft.selectLogFiles(spark, logDir, "2024-01-15-02", 5)
+    val parsed = Graft.readLogLines(spark, logDir, selected)
+    assert(fileScans(parsed).nonEmpty) // the walk does see file scans
+    val sections = Graft.reportSections(parsed)
+    assert(sections.size === 7)
+    sections.foreach { case (name, df) =>
+      assert(fileScans(df).isEmpty, s"$name scans the log files")
+    }
+  }
+
+  test("readLogLines event_ids: distinct across files, same under any " +
+    "read partitioning") {
+    import spark.implicits._
+    val logDir = writeMultiLineLogDir()
+    val selected = Seq(multiLineLf, multiLineCrlf).toDF("file_name")
+    def withConfs[T](kv: (String, String)*)(f: => T): T = {
+      val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try f
+      finally saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    def ids(): (Int, Set[(String, Long, String)]) = {
+      val df = Graft.readLogLines(spark, logDir, selected)
+      (df.rdd.getNumPartitions, df.select("file_name", "event_id", "query")
+        .as[(String, Long, String)].collect().toSet)
+    }
+    // one file per partition, then both files packed into one partition
+    val (nSplit, split) = withConfs(
+      "spark.sql.files.maxPartitionBytes" -> "1")(ids())
+    val (nPacked, packed) = withConfs(
+      "spark.sql.files.maxPartitionBytes" -> "1g",
+      "spark.sql.files.openCostInBytes" -> "0",
+      "spark.sql.files.minPartitionNum" -> "1")(ids())
+    assert(nSplit === 2 && nPacked === 1)
+    assert(split.size === 8)
+    assert(split.map(_._2).size === 8) // the twin files share no id
+    assert(packed === split)
+  }
+
   test("full pipeline: select → read → parse → reports → idempotent publish") {
     val logDir = writeLogDir()
     val out = Files.createTempDirectory("graft_reports").toString

@@ -51,7 +51,7 @@ class LogLinesSpec extends SparkSpec {
     assert(r.getAs[String]("level") === "LOG")
   }
 
-  test("parseLogDirectory: unique event_ids and file identity across files") {
+  test("parseLogFiles: unique event_ids and file identity across files") {
     val root = java.nio.file.Files.createTempDirectory("graft_pld").toString
     val line1 = "2019-04-01 10:00:00 UTC:h:u@d:[1]:LOG:  one"
     val line2 = "2019-04-01 11:00:00 UTC:h:u@d:[2]:LOG:  two"
@@ -59,7 +59,7 @@ class LogLinesSpec extends SparkSpec {
       java.util.List.of(line1, line2))
     java.nio.file.Files.write(java.nio.file.Paths.get(root, "f2.log"),
       java.util.List.of(line1, line2))
-    val parsed = LogLines.parseLogDirectory(spark, root)
+    val parsed = LogLines.parseLogFiles(spark, root)
     assert(parsed.count() === 4)
     assert(parsed.select("event_id").distinct().count() === 4)
     assert(parsed.select("file_name").distinct().count() === 2)

@@ -55,73 +55,13 @@ class StitchSpec extends SparkSpec {
     LogLines.stitchLines(fs.toDF("file_name", "text"))
       .as[(String, Long, String)].collect().toSet
 
-  /** Per-file (file, lineIdx-as-off, raw) rows in order — a synthetic
-    * stand-in for byte offsets (the stitch only needs monotonicity).
-    */
-  private def lineRows(fs: Seq[(String, String)]): Seq[(String, Long, String)] =
-    fs.flatMap { case (f, text) =>
-      text.split("\n", -1).zipWithIndex.map { case (l, i) => (f, i.toLong, l) }
-    }
-
-  test("split-boundary stitch equals the wholetext form under " +
-    "pathological partition cuts (incl. a record spanning many splits)") {
-    // fileC: one record with SIX continuation lines — at 1-2 lines per
-    // slice the record spans 3+ partitions and middle slices are
-    // entirely headless
-    val fileC = ("2019-04-03 09:00:00 UTC:10.0.0.9(2):x@y:[7]:LOG:  duration: 5.00 ms  statement: SELECT a" +
-      (1 to 6).map(i => s"\n\tAND col$i = $i").mkString) +
-      "\n2019-04-03 09:00:05 UTC:10.0.0.9(2):x@y:[7]:LOG:  duration: 6.00 ms  statement: SELECT b"
-    val fs = Seq(("a.log", fileA), ("b.log", fileB), ("c.log", fileC))
-    val want = wholetextForm(fs)
-    val rows = lineRows(fs)
-    // every slice count from "one giant partition" down to "one line
-    // per partition" — each placement cuts records differently; all
-    // must reproduce the wholetext result bit-for-bit
-    for (slices <- Seq(1, 2, 3, 5, 7, rows.size)) {
-      val lines = spark.sparkContext.parallelize(rows, slices)
-        .toDF("file_name", "off", "raw")
-      val got = LogLines.stitchLinesFromSplits(lines)
-        .as[(String, Long, String)].collect().toSet
-      assert(got === want, s"mismatch at $slices slices")
-    }
-  }
-
-  test("CRLF logs stitch identically on both paths (and actually " +
+  test("CRLF logs stitch identically to LF logs (and actually " +
     "produce records)") {
     val crlf = fileA.replace("\n", "\r\n")
-    // wholetext form: \r must not defeat the record-start match
+    // \r must not defeat the record-start match
     val whole = wholetextForm(Seq(("a.log", crlf)))
     assert(whole.size === 3, "CRLF must yield the same record count")
     assert(whole === wholetextForm(Seq(("a.log", fileA))),
       "CRLF and LF input must stitch to identical records")
-    // split form over a REAL hadoop read of the CRLF file
-    val dir = java.nio.file.Files.createTempDirectory("graft_crlf").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.log"),
-      crlf.getBytes("UTF-8"))
-    val got = LogLines.stitchLinesFromSplits(
-      LogLines.readSplitLines(spark, dir, maxSplitBytes = 64))
-      .as[(String, Long, String)].collect().toSet
-    assert(got === whole)
-  }
-
-  test("readSplitLines + stitchSegments: a REAL multi-split hadoop read " +
-    "of one file reassembles records across split boundaries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_split").toString
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "a.log"),
-      fileA.getBytes("UTF-8"))
-    // 64-byte max splits force a genuinely multi-split read of a file
-    // whose records span those splits
-    val lines = LogLines.readSplitLines(spark, dir, maxSplitBytes = 64)
-    assert(lines.rdd.getNumPartitions > 1,
-      "fixture must actually exercise multiple input splits")
-    val got = LogLines.stitchLinesFromSplits(lines)
-      .as[(String, Long, String)].collect().toSet
-    assert(got === wholetextForm(Seq(("a.log", fileA))))
-    // and the stable distributed id surface: rec_off is the header's
-    // byte offset, unique per record without any window
-    val offs = LogLines.stitchSegments(lines)
-      .select("rec_off").as[Long].collect()
-    assert(offs.distinct.length === 3)
   }
 }
