@@ -192,6 +192,140 @@ class GraftSpec extends SparkSpec {
     assert(html.contains("&quot;"))
   }
 
+  /** The jobs the scheduler ran while a call was open, in listener-bus
+    * order (the scheduler's order): each start event, each end time, and
+    * the most jobs in flight at one moment.
+    */
+  private final class JobLog extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart}
+    val starts = scala.collection.mutable.ArrayBuffer.empty[SparkListenerJobStart]
+    val ends = scala.collection.mutable.Map.empty[Int, Long]
+    var maxInFlight = 0
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      starts += e
+      maxInFlight = math.max(maxInFlight, starts.size - ends.size)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      synchronized { ends(e.jobId) = e.time }
+  }
+
+  /** Run `f` with a [[JobLog]] attached; also returns the wall-clock
+    * millisecond at which `f` returned or threw.
+    */
+  private def jobsDuring[T](f: => T): (scala.util.Try[T], JobLog, Long) = {
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc) // earlier events are not ours
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try {
+      val result = scala.util.Try(f)
+      val returnedAt = System.currentTimeMillis()
+      org.apache.spark.ListenerBusDrain(sc)
+      (result, log, returnedAt)
+    } finally sc.removeSparkListener(log)
+  }
+
+  private def sectionsOf(logDir: String): Map[String, org.apache.spark.sql.DataFrame] =
+    Graft.reportSections(Graft.readLogLines(spark, logDir,
+      Graft.selectLogFiles(spark, logDir, "2024-01-15-02", 5)))
+
+  test("report sections render concurrently: same jobs, same document as " +
+    "one section at a time") {
+    val logDir = writeLogDir()
+    val title = "graft report 2024-01-15-02"
+    val sections = sectionsOf(logDir)
+    val (html, all, _) = jobsDuring(Graft.renderReportHtml(title, sections))
+    assert(all.maxInFlight >= 2, "no two section jobs ever overlapped")
+    // each section alone, from freshly built frames so that none has run
+    // before; bodies spliced in name order
+    val alone = sections.keys.toSeq.sorted.map { name =>
+      val df = sectionsOf(logDir)(name)
+      val (doc, log, _) = jobsDuring(Graft.renderReportHtml(title, Map(name -> df)))
+      val d = doc.get
+      (d.substring(d.indexOf("</h1>\n") + 6, d.lastIndexOf("\n</body>")),
+        log.starts.size)
+    }
+    assert(all.starts.size === alone.map(_._2).sum)
+    val empty = Graft.renderReportHtml(title, Map.empty)
+    val cut = empty.indexOf("</h1>\n") + 6
+    assert(html.get === empty.substring(0, cut) + alone.map(_._1).mkString("\n") +
+      empty.substring(cut))
+  }
+
+  test("section jobs carry the caller's job group and local properties") {
+    val sc = spark.sparkContext
+    val logDir = writeLogDir()
+    val out = Files.createTempDirectory("graft_props").toString
+    sc.setJobGroup("graft-caller", "a caller's group", interruptOnCancel = false)
+    sc.setLocalProperty("graft.test.caller", "yes")
+    try {
+      val (html, render, _) = jobsDuring(
+        Graft.renderReportHtml("t", sectionsOf(logDir)))
+      val (wrote, pipeline, _) = jobsDuring(
+        Graft.runReportPipeline(spark, logDir, out, "2024-01-15-02", 5))
+      assert(html.isSuccess && wrote.isSuccess)
+      Seq(render, pipeline).foreach { log =>
+        assert(log.starts.size > 7)
+        log.starts.foreach { e =>
+          assert(e.properties.getProperty("spark.jobGroup.id") === "graft-caller")
+          assert(e.properties.getProperty("graft.test.caller") === "yes")
+        }
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("graft.test.caller", null)
+    }
+  }
+
+  test("a failing section cancels the others and reaches the caller " +
+    "unwrapped; nothing is left running or published") {
+    import org.apache.spark.{SparkThrowable, TaskContext}
+    def condition(e: Throwable) = e match {
+      case s: SparkThrowable => s.getCondition
+      case _ => null
+    }
+    // healthy, but runs until its task is killed (or 60 s pass)
+    val slow = udf { (x: Long) =>
+      val until = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (System.nanoTime() < until && !TaskContext.get().isInterrupted())
+        Thread.sleep(10)
+      x
+    }
+    def slowSection = spark.range(0, 2, 1, 2).select(slow(col("id")).as("id"))
+    val failing = spark.range(1).select(raise_error(lit("section failed")).as("x"))
+    val sequential = intercept[Exception](
+      Graft.renderReportHtml("t", Map("b_fails" -> failing)))
+    assert(condition(sequential) === "USER_RAISED_EXCEPTION")
+
+    val t0 = System.nanoTime()
+    val (html, log, returnedAt) = jobsDuring(Graft.renderReportHtml("t",
+      Map("a_slow" -> slowSection, "b_fails" -> failing, "c_slow" -> slowSection)))
+    assert((System.nanoTime() - t0) / 1e9 < 30, "the slow sections ran out")
+    val e = html.failed.get
+    assert(e.getClass === sequential.getClass)
+    assert(condition(e) === condition(sequential))
+    assert(log.starts.nonEmpty)
+    log.starts.foreach(s => assert(log.ends.get(s.jobId).exists(_ <= returnedAt),
+      s"job ${s.jobId} still running when the render returned"))
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(_.getName.startsWith("graft-section-")))
+
+    // writeReportDocument publishes nothing when its sections fail: a
+    // duration past decimal(18,2) overflows the sections that sum it
+    val logDir = Files.createTempDirectory("graft_overflow").toString
+    Files.write(Paths.get(logDir, "postgresql.log.2024-01-15-01"),
+      ("2024-01-15 01:00:01 UTC:10.0.0.5(51234):app@prod:[12345]:LOG:  " +
+        "duration: 100000000000000000.00 ms  statement: SELECT 1\n")
+        .getBytes(UTF_8))
+    val out = Files.createTempDirectory("graft_failed_doc").toString
+    val overflow = intercept[Exception](
+      Graft.writeReportDocument(spark, logDir, out, "2024-01-15-02", 5))
+    assert(condition(overflow) === "NUMERIC_VALUE_OUT_OF_RANGE.WITH_SUGGESTION")
+    assert(Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName
+      .toString).filter(n => n.endsWith(".html") || n.contains(".tmp-"))
+      .isEmpty)
+  }
+
   test("CLI main: flags → full pipeline on a temp dir; bad args rejected") {
     val logDir = writeLogDir()
     val out = Files.createTempDirectory("graft_cli").toString
