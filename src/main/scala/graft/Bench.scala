@@ -54,7 +54,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSpark.cpus
     // "both" (default) = concurrent batch first (round-over-round comparable
     // wall), then a sequential pass whose per-query numbers carry no
     // FAIR-pool queueing noise; "concurrent" / "sequential" run one pass.
@@ -63,16 +63,8 @@ object Bench {
       s"SPARK_GRAFT_BENCH_MODE=$mode (want both|concurrent|sequential) — " +
         "a typo here would silently run both passes yet stamp the bogus " +
         "mode string into the committed record")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // UTC like Verify/ScaleSanity/SparkSpec: with inferTimestampNTZ off,
-      // tz-naive fixture timestamps surface as session-zone instants, so an
-      // unpinned zone would make hour/day groupings (and thus the committed
-      // bench record) depend on the host's timezone.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = LocalSpark.builder(cpus)
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen/file-system paths once so the first timed query
@@ -85,7 +77,7 @@ object Bench {
       }
     } catch { case _: Throwable => () }
 
-    val parallelism = math.max(2, math.min(4, cpus.toInt))
+    val parallelism = math.max(2, math.min(4, cpus))
     // Concurrent pass FIRST so its wall is measured under the same
     // conditions as rounds 1-4 (cold per-query codegen); the sequential
     // passes then benefit uniformly from the warm codegen cache — fine,

@@ -47,14 +47,9 @@ object ScaleSanity {
       s"mode '$mode' (want '', salt, or mixed<0-100>)")
     val out = s"/tmp/graft_sf_x$mult" +
       (if (salted) "s" else if (mixedPct >= 0) s"m$mixedPct" else "")
-    // default stays 4 (all recorded sweeps ran there); 32 approximates the
-    // bench box for isolating local[4] scheduling variance from real cost
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_SCALE_CPUS", "4")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = LocalSpark.builder()
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     if (!new java.io.File(s"$out/lineitem.parquet").exists()) {

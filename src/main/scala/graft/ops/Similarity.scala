@@ -165,16 +165,6 @@ object Similarity {
         .otherwise(lit(0))
     }.reduce(_ + _)
 
-  /** Axis-aligned sign bucket over the first `bits` dimensions — the
-    * historical simple form, kept for bucket-partitioned table layouts
-    * and as a cheap fixture; production blocking uses [[rpBucket]],
-    * whose planes weigh every dimension.
-    */
-  def signBucket(emb: Column, bits: Int = BucketBits): Column =
-    (1 to bits).map(i =>
-      when(element_at(emb, i) >= 0f, lit(1 << (i - 1))).otherwise(lit(0)))
-      .reduce(_ + _)
-
   /** LSH-bucketed ANN: probes only scan their own random-projection sign
     * bucket. Recall is traded for a ~2^bits candidate cut; same output
     * shape as brute force.

@@ -721,24 +721,22 @@ object TextAnalysis {
     *
     * Scale shape: one (gram, doc) shuffle for the df aggregate; the
     * boilerplate gram set (df ≥ minDf) joins back into the
-    * positional-gram stream HINT-FREE (`hotHint` defaults to identity)
-    * — at the default `minDf = 2` the "hot" frame is every
-    * corpus-repeated n-gram, which on a dup-heavy web corpus is
-    * corpus-VOCABULARY-shaped, and a forced `broadcast()` there is an
-    * OOM by construction at 100 TB whatever AQE thinks (the n73→n109
-    * lesson; the adjacent [[dupWindowPositions]] already shuffles on
-    * the gram key for the same reason). Hint-free, runtime size stats /
+    * positional-gram stream HINT-FREE — at the default `minDf = 2`
+    * the "hot" frame is every corpus-repeated n-gram, which on a
+    * dup-heavy web corpus is corpus-VOCABULARY-shaped, and a forced
+    * `broadcast()` there is an OOM by construction at 100 TB whatever
+    * AQE thinks (the n73→n109 lesson; the adjacent
+    * [[dupWindowPositions]] already shuffles on the gram key for the
+    * same reason). Hint-free, runtime size stats /
     * AQE still pick a broadcast whenever the hot frame genuinely fits
     * (high minDf, template-light corpora) and a gram-key shuffle when
     * it doesn't. Only COVERED positions then shuffle into the per-doc
-    * count, bounded by boilerplate hits, not corpus size. `hotHint =
-    * broadcast` restores the forced plan for corpora the caller KNOWS
-    * are template-shaped (TextAnalysisSpec pins both branches
-    * bit-equal with diverging plans; graft.BroadcastGuard demonstrates
-    * the hot frame a forced broadcast cannot survive).
+    * count, bounded by boilerplate hits, not corpus size.
+    * TextAnalysisSpec pins the broadcast and shuffled plans bit-equal;
+    * the BENCH_NOTES round-12 receipt records the hot frame a forced
+    * broadcast could not survive.
     */
-  def boilerplateCoverage(docs: DataFrame, n: Int = 5, minDf: Int = 2,
-                          hotHint: DataFrame => DataFrame = identity)
+  def boilerplateCoverage(docs: DataFrame, n: Int = 5, minDf: Int = 2)
       : DataFrame = {
     val base = docs.select(col("doc_id"), words(col("text")).as("ws"))
     // ONE copy of the posGrams + df + hot-join front
@@ -746,7 +744,7 @@ object TextAnalysis {
     // OOM-policy-critical exchange choice can never diverge between
     // the coverage signal and its executors (review-caught: this body
     // was an inlined second copy)
-    val covered = coveredPositionsRaw(base, n, minDf, hotHint)
+    val covered = coveredPositionsRaw(base, n, minDf)
       .groupBy(col("doc_id")).agg(countDistinct(col("p")).as("n_cov"))
     base.select(col("doc_id"), size(col("ws")).cast("long").as("n_tokens"))
       .join(covered, Seq("doc_id"), "left_outer")
@@ -781,13 +779,12 @@ object TextAnalysis {
     * an index-filter fold over the words array (split once, never
     * re-split per position).
     */
-  def boilerplateTrim(docs: DataFrame, n: Int = 5, minDf: Int = 2,
-                      hotHint: DataFrame => DataFrame = identity): DataFrame =
+  def boilerplateTrim(docs: DataFrame, n: Int = 5, minDf: Int = 2): DataFrame =
     // sortBarrier: the text-rebuild projection above the cov join is
     // exchange-free, so the presentation sort's boundary sampling
     // would re-run it per action (the containmentPairsPrefix lesson)
     graft.ops.Checkpoints.sortBarrier(
-        boilerplateTrimRaw(docs, n, minDf, hotHint), col("doc_id"))
+        boilerplateTrimRaw(docs, n, minDf), col("doc_id"))
       .orderBy(col("doc_id"))
 
   /** [[boilerplateTrim]] without the presentation sort — the composable
@@ -800,8 +797,7 @@ object TextAnalysis {
     * [[boilerplateSpans]] (which distincts before the island scan).
     * `base` is the (doc_id, ws) projection both callers already hold.
     */
-  private def coveredPositionsRaw(base: DataFrame, n: Int, minDf: Int,
-                                  hotHint: DataFrame => DataFrame = identity)
+  private def coveredPositionsRaw(base: DataFrame, n: Int, minDf: Int)
       : DataFrame = {
     val posGrams = base.select(col("doc_id"),
       posexplode(ngramsOf(col("ws"), n)).as(Seq("pos", "g")))
@@ -814,20 +810,19 @@ object TextAnalysis {
         explode(array_distinct(ngramsOf(col("ws"), n))).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf).select(col("g"))
-    // hint-free by default: at minDf = 2 `hot` is every corpus-repeated
+    // hint-free: at minDf = 2 `hot` is every corpus-repeated
     // gram — corpus-vocabulary-shaped, never a safe forced broadcast
     // (see boilerplateCoverage's Scaladoc; AQE picks broadcast at
     // runtime exactly when the frame actually fits)
-    posGrams.join(hotHint(hot), Seq("g"))
+    posGrams.join(hot, Seq("g"))
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + lit(n - 1))).as("p"))
   }
 
-  def boilerplateTrimRaw(docs: DataFrame, n: Int = 5, minDf: Int = 2,
-                         hotHint: DataFrame => DataFrame = identity)
+  def boilerplateTrimRaw(docs: DataFrame, n: Int = 5, minDf: Int = 2)
       : DataFrame = {
     val base = docs.select(col("doc_id"), words(col("text")).as("ws"))
-    val cov = coveredPositionsRaw(base, n, minDf, hotHint)
+    val cov = coveredPositionsRaw(base, n, minDf)
       .groupBy(col("doc_id")).agg(collect_set(col("p")).as("cov"))
     base.join(cov, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("ws"),
@@ -857,11 +852,10 @@ object TextAnalysis {
     * per-doc window over covered positions — bounded by doc length,
     * never corpus-wide.
     */
-  def boilerplateSpans(docs: DataFrame, n: Int = 5, minDf: Int = 2,
-                       hotHint: DataFrame => DataFrame = identity)
+  def boilerplateSpans(docs: DataFrame, n: Int = 5, minDf: Int = 2)
       : DataFrame = {
     val base = docs.select(col("doc_id"), words(col("text")).as("ws"))
-    val cov = coveredPositionsRaw(base, n, minDf, hotHint).distinct()
+    val cov = coveredPositionsRaw(base, n, minDf).distinct()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("p"))
     cov.withColumn("grp", col("p") - row_number().over(w))
@@ -1756,8 +1750,7 @@ object TextAnalysis {
     * `count()`, so the whole query stays lazy (composable, and the same
     * shape reuses on a stream where an eager action is illegal).
     */
-  def tfidfTopTerms(docs: DataFrame, k: Int,
-                    dfHint: DataFrame => DataFrame = identity): DataFrame = {
+  def tfidfTopTerms(docs: DataFrame, k: Int): DataFrame = {
     val tf = docs.select(col("doc_id"), explode(words(col("text"))).as("word"))
       .groupBy(col("doc_id"), col("word"))
       .agg(count(lit(1)).as("tf"))
@@ -1772,7 +1765,7 @@ object TextAnalysis {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"))
       .orderBy(col("tfidf").desc, col("word").asc)
-    tf.join(dfHint(df), "word")
+    tf.join(df, "word")
       .crossJoin(broadcast(n))
       .select(col("doc_id"), col("word"),
         round(col("tf") * log(col("n_total") / col("df")), 6).as("tfidf"))
@@ -2908,8 +2901,7 @@ object TextAnalysis {
     * training subtrees, and the per-doc sum keeps a map-side partial
     * phase below its one doc_id exchange.
     */
-  def bpeTokenize(docs: DataFrame, merges: DataFrame,
-                  vocabHint: DataFrame => DataFrame = identity): DataFrame = {
+  def bpeTokenize(docs: DataFrame, merges: DataFrame): DataFrame = {
     val rules = merges.orderBy(col("round")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
     val base = docs.select(col("doc_id"), words(col("text")).as("ws"))
@@ -2929,7 +2921,7 @@ object TextAnalysis {
     // when runtime stats say it fits (it does at fixture scale)
     base.select(col("doc_id"), size(col("ws")).cast("long").as("n_tokens"),
         explode(col("ws")).as("word"))
-      .join(vocabHint(vocab), Seq("word"))
+      .join(vocab, Seq("word"))
       .groupBy(col("doc_id"), col("n_tokens"))
       .agg(sum(col("n_sub")).as("n_pieces"))
       .select(col("doc_id"), col("n_tokens"), col("n_pieces"),

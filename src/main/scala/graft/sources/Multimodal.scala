@@ -993,16 +993,6 @@ object Multimodal {
       bits = 64, maxDist = maxDist, nBlocks = 8)
       .select(col("doc_id").as("media_id"), col("simhash").as("phash"))
 
-  /** Rep-level image near-dup pairs over [[imagePhashTable]] (the
-    * collapsed production form) — each planted twin is in its
-    * original's hash group or rep-connected to it; the spec proves
-    * rep pairs equal brute-force hamming over distinct signatures.
-    */
-  def imageNearDupTable(spark: SparkSession, dir: String,
-                        maxDist: Int = 4): DataFrame =
-    imageNearDupPairsCollapsed(
-      imagePhash(stagedEditedImages(spark, dir)), maxDist)
-
   /** Roll-up of [[audioFrameFeatures]] — the rows-only registry surface
     * (float rms means are not SQL-oracle material): frame/error
     * accounting plus integer-exact zcr totals.
@@ -1321,15 +1311,6 @@ object Multimodal {
         audioHash(stagedEditedAudio(spark, dir)), col("media_id"))
       .orderBy(col("media_id"))
 
-  /** Rows-only registry surface (m8): rep-level audio near-dup pairs
-    * over [[audioHashTable]] — each planted twin is in its original's
-    * hash group or rep-connected to it (spec-pinned vs brute force).
-    */
-  def audioNearDupTable(spark: SparkSession, dir: String,
-                        maxDist: Int = 4): DataFrame =
-    audioNearDupPairsCollapsed(
-      audioHash(stagedEditedAudio(spark, dir)), maxDist)
-
   /** INCREMENTAL audio dedup — the n95/m6 greedy stream policy on the
     * audio modality, via the ONE signature-generic screening core
     * ([[graft.ops.Dedup.incrementalSignatureDedupFromIndex]]): keep
@@ -1558,14 +1539,6 @@ object Multimodal {
     graft.ops.Checkpoints.sortBarrier(
         videoFrameHashes(stagedEditedVideos(spark, dir)), col("media_id"))
       .orderBy(col("media_id"), col("frame_idx"))
-
-  /** Rows-only registry surface (m11): rep-level clip near-dup pairs
-    * over [[videoFrameHashTable]]'s corpus.
-    */
-  def videoNearDupTable(spark: SparkSession, dir: String,
-                        maxDist: Int = 4): DataFrame =
-    videoNearDupClipsCollapsed(
-      videoFrameHashes(stagedEditedVideos(spark, dir)), maxDist)
 
   /** INCREMENTAL video dedup — the clip-level greedy stream policy
     * through [[graft.ops.Dedup.incrementalGroupSignatureDedupFromIndex]]
@@ -1831,36 +1804,6 @@ object Multimodal {
       .agg(count(lit(1)).as("n_frames"))
       .select(col("doc_id").as("media_id"), col("n_frames"))
       .orderBy(col("media_id"))
-
-  /** Rows-only registry surface (m16): the staged image corpus
-    * decontaminated against a deterministic test sample of its own
-    * originals (media_id ≡ 0 mod 97) — the sample, its planted edit
-    * twins, and the synthetic space's low-hamming neighbors all drop;
-    * spec pins equality with brute force.
-    */
-  def imageDecontaminationTable(spark: SparkSession, dir: String,
-                                maxDist: Int = 4): DataFrame = {
-    val ph = graft.ops.Checkpoints.cut(
-      imagePhash(stagedEditedImages(spark, dir))
-        .filter(col("phash").isNotNull))
-    imageDecontaminate(ph,
-      ph.filter(col("media_id") < EditIdOffset &&
-        pmod(col("media_id"), lit(97)) === 0), maxDist)
-  }
-
-  /** Rows-only registry surface (m17): the staged video corpus
-    * decontaminated against the clips with media_id ≡ 0 mod 97 — the
-    * multi-signature (any-frame-hits) composition.
-    */
-  def videoDecontaminationTable(spark: SparkSession, dir: String,
-                                maxDist: Int = 4): DataFrame = {
-    val fh = graft.ops.Checkpoints.cut(
-      videoFrameHashes(stagedEditedVideos(spark, dir))
-        .filter(col("fhash").isNotNull))
-    videoDecontaminate(fh,
-      fh.filter(col("media_id") < VideoEditIdOffset &&
-        pmod(col("media_id"), lit(97)) === 0), maxDist)
-  }
 
   // ======== measured collapse autos (m14) ========
   //

@@ -146,7 +146,7 @@ class PlanSpec extends SparkSpec {
       wordJoins.foreach(l =>
         assert(!l.contains("strategy=broadcast"),
           s"$name force-broadcasts a vocabulary-shaped frame (the " +
-            s"n71/BroadcastGuard OOM class):\n" + l))
+            s"n71 OOM class, BENCH_NOTES round 12):\n" + l))
     }
   }
 

@@ -966,43 +966,41 @@ class TextAnalysisSpec extends SparkSpec {
       (1L, 6L, 6L, 1.0), (2L, 6L, 6L, 1.0), (3L, 2L, 0L, 0.0)))
   }
 
-  test("boilerplate family: the hint-free default and the forced-" +
-    "broadcast branch are bit-equal across coverage/trim/spans — and " +
-    "the two exchange strategies actually plan differently") {
+  test("boilerplate family: the planner's broadcast and shuffled joins " +
+    "are bit-equal across coverage/trim/spans — and the two exchange " +
+    "strategies actually plan differently") {
+    import org.apache.spark.sql.DataFrame
     val d = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"))
-    import org.apache.spark.sql.functions.broadcast
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSeq
-    // hint-free default ≡ forced-broadcast branch, all three operators
-    val wantCov = rows(TextAnalysis.boilerplateCoverage(d, 5, 2, broadcast))
-    assert(wantCov.nonEmpty)
-    assert(rows(TextAnalysis.boilerplateCoverage(d, 5, 2)) === wantCov)
-    val wantTrim = rows(TextAnalysis.boilerplateTrim(d, 5, 2, broadcast))
-    assert(rows(TextAnalysis.boilerplateTrim(d, 5, 2)) === wantTrim)
-    val wantSpans = rows(TextAnalysis.boilerplateSpans(d, 5, 2, broadcast))
-    assert(rows(TextAnalysis.boilerplateSpans(d, 5, 2)) === wantSpans)
-    // plans diverge: the hinted branch must broadcast the hot frame;
-    // the default must NOT carry a hint — and once Spark can't
-    // auto-broadcast, it shuffles on the gram key and still agrees
-    val pB = TextAnalysis.boilerplateCoverage(d, 5, 2, broadcast)
-      .queryExecution.executedPlan.toString
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+    def plan(df: DataFrame) = df.queryExecution.executedPlan.toString
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    // the join strategy comes from the planner's size threshold: a large
+    // one lets it broadcast the hot frame, -1 forces a gram-key shuffle
+    def under[T](threshold: String)(body: => T): T = {
+      spark.conf.set(key, threshold)
+      try body finally spark.conf.set(key, prev)
+    }
+    val family = Seq[DataFrame => DataFrame](
+      TextAnalysis.boilerplateCoverage(_, 5, 2),
+      TextAnalysis.boilerplateTrim(_, 5, 2),
+      TextAnalysis.boilerplateSpans(_, 5, 2))
+    def runAll() = (family.map(op => rows(op(d))),
+      plan(TextAnalysis.boilerplateCoverage(d, 5, 2)))
+    val (wantRows, pB) = under("1g")(runAll())
+    val (gotRows, pS) = under("-1")(runAll())
+    assert(wantRows.forall(_.nonEmpty))
+    assert(gotRows === wantRows,
+      "coverage, trim and spans must agree across the two strategies")
     assert(pB.contains("BroadcastHashJoin"),
-      "the hinted branch must broadcast the hot frame:\n" + pB)
+      "under a large threshold the planner must broadcast the hot " +
+        "frame:\n" + pB)
+    assert(pS.contains("SortMergeJoin") || pS.contains("ShuffledHashJoin"),
+      "with broadcast off the table it must shuffle on the gram key:\n" + pS)
     assert(!TextAnalysis.boilerplateCoverage(d, 5, 2)
       .queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
-      "the default must be hint-free")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val pS = TextAnalysis.boilerplateCoverage(d, 5, 2)
-        .queryExecution.executedPlan.toString
-      assert(pS.contains("SortMergeJoin") || pS.contains("ShuffledHashJoin"),
-        "hint-free must shuffle on the gram key when a broadcast is " +
-          "off the table:\n" + pS)
-      assert(rows(TextAnalysis.boilerplateCoverage(d, 5, 2)) === wantCov,
-        "and still return identical coverage")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      "the optimized plan must carry no broadcast hint")
   }
 
   test("trainingDataBuildSafe: zero off-diagonal leakage in the build " +
