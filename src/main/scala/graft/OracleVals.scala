@@ -63,8 +63,6 @@ object OracleVals {
     sqls.asScala.map { case (k, thunk) => k -> thunk() }.toMap
   }
 
-  private[graft] def clear(): Unit = sqls.clear()
-
   /** `(a,b),(c,d),…` VALUES literal over integer columns (exact
     * Long/Int rendering — no floats cross this boundary by design).
     */

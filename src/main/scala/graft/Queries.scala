@@ -2758,9 +2758,8 @@ object Queries {
     // al. 2020: hash each paragraph, drop every non-first occurrence
     // corpus-wide), the cheap pre-filter ahead of the window-level
     // substring machinery (n122). Paragraphs here are 20-word blocks
-    // (the line-free-corpus adaptation, the n106 span convention);
-    // the newline form is paragraphDedup, spec-driven on planted
-    // multi-line fixtures. One paragraph-hash shuffle; first test is
+    // (the line-free-corpus adaptation, the n106 span convention).
+    // One paragraph-hash shuffle; first test is
     // the map-side-combinable min(struct) aggregate (never a window).
     ("n140_paragraph_dedup",
       (s: SparkSession, d: String) =>
@@ -2917,7 +2916,7 @@ object Queries {
     // (n78's verified pairs verbatim) → temperature mix derived over the
     // SURVIVING train corpus's cleaned token counts (n87's plan
     // machinery) → shard assignment (n60's salted key) — one row per
-    // kept train doc, the frame Sinks.writeShards materializes. The
+    // kept train doc, the frame a shard writer materializes. The
     // oracle composes the SAME shared CTE chains the component oracles
     // use, so the build provably agrees with every individual gate.
     ("n99_training_data_build",
@@ -3759,7 +3758,7 @@ object Queries {
     // Training-shard assignment: shard = salted-md5 bucket % 8 (salted
     // so shard boundaries don't correlate with n19's split buckets),
     // pos = the doc's deterministic-shuffle rank within its shard — the
-    // logical core of Sinks.writeShards' epoch-shuffle shard layout.
+    // logical core of an epoch-shuffle shard layout.
     ("n60_shard_assignment",
       (s: SparkSession, d: String) =>
         TextAnalysis.shardAssignment(docs(s, d), 8),
@@ -3771,7 +3770,7 @@ object Queries {
         |FROM k ORDER BY doc_id""".stripMargin)),
 
     // Shard BALANCE audit: per-shard doc/token accounting + share and
-    // skew-vs-ideal from the SAME shardKey the writer uses — the
+    // skew-vs-ideal from the SAME shardKey the assignment uses — the
     // pre-commit check that no training shard straggles. 1-row
     // broadcast total, numShards-sized output.
     ("n128_shard_balance",
@@ -4495,7 +4494,7 @@ object Queries {
     // + closed-form expansion), so the probe can only change the
     // candidate-generation shape, never the answer. EAGER by the
     // documented auto contract (one count-only probe job; the lazy
-    // FromInflation half reads the card via cardInflation — zero-job
+    // FromInflation half takes the card's inflation — zero-job
     // construction, listener-pinned). Registered on the AUDIO corpus:
     // its member relation is output-bounded (~1.6k distinct reachable
     // fingerprints), where the image/video member relations on this

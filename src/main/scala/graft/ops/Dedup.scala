@@ -53,23 +53,6 @@ object Dedup {
       .orderBy(col("source_a"), col("source_b"))
   }
 
-  /** Quality-aware keeper selection: given near-dup clusters, keep the
-    * best-scoring member (longest text here; any score column works) —
-    * the policy step after cluster detection. max_by keeps selection in
-    * one aggregate pass; ties break to the smaller doc_id via the
-    * (score, -id) struct ordering.
-    */
-  def keepBestPerCluster(clusters: DataFrame, docs: DataFrame): DataFrame =
-    clusters.select(col("cluster"), explode(col("members")).as("doc_id"))
-      .join(docs.select(col("doc_id"),
-        length(col("text")).cast("long").as("score")), "doc_id")
-      .groupBy(col("cluster"))
-      .agg(max(struct(col("score"), (-col("doc_id")).as("nid")))
-        .as("best"), count(lit(1)).as("n_members"))
-      .select(col("cluster"), (-col("best.nid")).as("keeper"),
-        col("best.score").as("keeper_score"), col("n_members"))
-      .orderBy(col("cluster"))
-
   /** Exact dedup: group by content digest; keeper = min doc_id. */
   def exactDupGroups(docs: DataFrame): DataFrame =
     docs.groupBy(md5(col("text")).as("text_hash"))
@@ -844,13 +827,8 @@ object Dedup {
   val SimhashWideBits = 60
 
   /** 60-bit SimHash per doc — the wide production signature (see
-    * [[graft.functions.SimHash60]] for why 60 and why wide).
-    */
-  def simhashWide(docs: DataFrame): DataFrame =
-    simhashWideRaw(docs).orderBy(col("doc_id"))
-
-  /** [[simhashWide]] without the presentation sort (see [[simhashRaw]]
-    * for why consumers must not inherit it). */
+    * [[graft.functions.SimHash60]] for why 60 and why wide). Unsorted:
+    * see [[simhashRaw]] for why consumers must not inherit a sort. */
   def simhashWideRaw(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
@@ -2257,10 +2235,11 @@ object Dedup {
         (col("sz") * col("n_clusters")).as("n_docs"))
       .orderBy(col("cluster_size"))
 
-  /** Keeper selection straight off (cluster, id) label pairs — same
-    * output as [[keepBestPerCluster]] without materializing the members
-    * arrays first (one join + one aggregate; nothing is collected and
-    * re-exploded).
+  /** Quality-aware keeper selection straight off (cluster, id) label
+    * pairs: keep each cluster's best-scoring member (longest text; ties
+    * break to the smaller doc_id via the (score, -id) struct ordering).
+    * One join + one aggregate; the members arrays are never
+    * materialized, collected or re-exploded.
     */
   def keepBestPerClusterLabels(labels: DataFrame, docs: DataFrame): DataFrame =
     labels.select(col("cluster"), col("id").as("doc_id"))

@@ -177,8 +177,8 @@ object Reports {
                       rightType: String): DataFrame =
     asofJoinImpl(events, leftType, rightType, forward = true)
 
-  /** Click attribution (batch twin of the streaming interval join,
-    * [[graft.streaming.Enrich.attributeStream]]): every click within
+  /** Click attribution (the batch form of a stream-stream interval
+    * join): every click within
     * `windowMinutes` before each purchase by the same user. Equi key on
     * user_id keeps the plan a hash/sort-merge join with a range residual
     * — never a nested loop; per-user time bands bound the pair count.

@@ -28,13 +28,6 @@ object Similarity {
 
   def dot(a: Column, b: Column): Column = VectorOps.dot(a, b)
 
-  /** Cosine over float-array columns, computed in double. */
-  def cosine(a: Column, b: Column): Column = {
-    val ad = a.cast("array<double>")
-    val bd = b.cast("array<double>")
-    dot(ad, bd) / (sqrt(dot(ad, ad)) * sqrt(dot(bd, bd)))
-  }
-
   /** (vec_id, emb as double[], norm) — norms computed once, pre-join. */
   private def withNorm(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
@@ -191,46 +184,6 @@ object Similarity {
         col("nrm").as("q_nrm"), col("bucket").as("q_bucket"))
     val scored = e.join(broadcast(p),
         col("bucket") === col("q_bucket") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosOrNull(dot(col("q_emb"), col("emb")), col("q_nrm"), col("nrm"))
-          .as("cos"))
-    rankTopK(scored, k)
-  }
-
-  /** Multi-probe variant of [[lshBucketTopK]]: each query scans its own
-    * sign bucket PLUS the `bits` buckets one hyperplane-flip away
-    * (Hamming-1 multi-probe — the standard recall repair for sign-LSH:
-    * a true neighbor lost to ONE noisy hyperplane is recovered instead
-    * of gone forever; see the multi-probe LSH literature). Candidate
-    * volume grows (bits+1)× — still a ~2^bits/(bits+1) cut over brute
-    * force — and the probe side stays a broadcast (nProbes × (bits+1)
-    * rows), so the corpus still never shuffles. [[annRecallCurve]] with
-    * `probeRadius = 1` is this operator's evaluation harness; on an
-    * unclustered (near-uniform) corpus single-probe recall collapses at
-    * production widths and this is the difference between a usable ANN
-    * and a random sample — measure, don't assume.
-    */
-  def lshBucketTopKMultiProbe(emb: DataFrame, nProbes: Int, k: Int,
-                              bucketBits: Int = 0): DataFrame = {
-    val bits = if (bucketBits > 0) bucketBits else deriveBucketBits(emb)
-    val e = emb.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("emb"))
-      .withColumn("bucket",
-        rpBucket(col("emb"), bits, probeDims(emb)))
-      .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
-    val p = e.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"), col("bucket").as("q_bucket"))
-      .withColumn("probe_bucket", explode(concat(
-        array(col("q_bucket")),
-        transform(sequence(lit(0), lit(bits - 1)), i =>
-          // shiftleft needs a literal count; 2^i is exact ≤ 2^24
-          col("q_bucket").bitwiseXOR(pow(lit(2d), i).cast("int"))))))
-    // a corpus vector's bucket is ONE value and the probe buckets are
-    // pairwise distinct, so each (q, vec) candidate appears exactly once
-    val scored = e.join(broadcast(p),
-        col("bucket") === col("probe_bucket") &&
-          col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         cosOrNull(dot(col("q_emb"), col("emb")), col("q_nrm"), col("nrm"))
           .as("cos"))

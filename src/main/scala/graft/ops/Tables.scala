@@ -40,7 +40,6 @@ object Tables {
   def nation(s: SparkSession, dir: String): DataFrame    = reader(s).parquet(s"$dir/nation.parquet")
   def customer(s: SparkSession, dir: String): DataFrame  = reader(s).parquet(s"$dir/customer.parquet")
   def supplier(s: SparkSession, dir: String): DataFrame  = reader(s).parquet(s"$dir/supplier.parquet")
-  def part(s: SparkSession, dir: String): DataFrame      = reader(s).parquet(s"$dir/part.parquet")
   def orders(s: SparkSession, dir: String): DataFrame    = reader(s).parquet(s"$dir/orders.parquet")
   def lineitem(s: SparkSession, dir: String): DataFrame  = reader(s).parquet(s"$dir/lineitem.parquet")
   /** `ts` arrives as µs TimestampType via [[reader]]; a nano-long `ts`

@@ -252,6 +252,19 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("lang"), col("split"))
 
+  /** The salted md5 shard key — the SINGLE definition
+    * [[shardAssignment]], [[shardBalance]] and [[trainingDataBuild]]
+    * derive their shard from, so the audit and the build can never
+    * drift from the logical assignment.
+    */
+  def shardKey: Column =
+    md5(concat(lit("shard|"), col("doc_id").cast("string")))
+
+  /** Shard id from [[shardKey]]'s first 8 hex chars mod `numShards`. */
+  def shardOf(numShards: Int): Column =
+    pmod(conv(substring(shardKey, 1, 8), 16, 10).cast("long"),
+      lit(numShards))
+
   /** Training-shard assignment — the logical core of the epoch-shuffle
     * shard writer (the pipeline's last step: emit the corpus as N shards
     * in a deterministic pseudo-random order). shard = md5-bucket of the
@@ -262,21 +275,7 @@ object TextAnalysis {
     * deterministic shuffle. Deliberately NO global row_number: a global
     * sort is a total-order barrier at 100 TB, while this shape is one
     * hash shuffle into numShards window partitions, each sorted locally.
-    * [[graft.sources.Sinks.writeShards]] materializes the physical files.
     */
-  /** The salted md5 shard key — the SINGLE definition both
-    * [[shardAssignment]] and [[graft.sources.Sinks.writeShards]] derive
-    * their shard from, so the physical layout can never drift from the
-    * logical assignment (the contract SinksSpec pins).
-    */
-  def shardKey: Column =
-    md5(concat(lit("shard|"), col("doc_id").cast("string")))
-
-  /** Shard id from [[shardKey]]'s first 8 hex chars mod `numShards`. */
-  def shardOf(numShards: Int): Column =
-    pmod(conv(substring(shardKey, 1, 8), 16, 10).cast("long"),
-      lit(numShards))
-
   def shardAssignment(docs: DataFrame, numShards: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("key"), col("doc_id"))
@@ -292,7 +291,7 @@ object TextAnalysis {
     * training-data file): per shard, docs, tokens, and each shard's
     * token share vs the ideal 1/numShards, from [[shardKey]]'s
     * assignment VERBATIM so the audit can never disagree with the
-    * layout [[graft.sources.Sinks.writeShards]] produces. One
+    * shards [[trainingDataBuild]] assigns. One
     * (shard)-keyed combinable aggregate + a 1-row broadcast total —
     * numShards-sized output.
     */
@@ -1108,35 +1107,20 @@ object TextAnalysis {
     * is the whole signal — an occurrence in a LATER batch is non-first
     * the moment its window text exists in any earlier batch, whatever
     * the position — so the index stores one row per distinct gram,
-    * never positions or texts. Grow it with [[dupSubstringIndexDelta]]
-    * (anti-join append: O(new grams) per batch, the SimhashIngest
-    * append discipline), not by rebuilding.
+    * never positions or texts. A streaming ingest grows it by
+    * appending only the grams a batch adds (O(new grams) per batch, the
+    * SimhashIngest append discipline), never by rebuilding.
     */
   def dupSubstringIndex(docs: DataFrame, k: Int = 5): DataFrame =
     docs.select(words(col("text")).as("ws"))
       .select(explode(ngramsOf(col("ws"), k)).as("g"))
       .distinct()
 
-  /** The grams a new batch adds to an existing [[dupSubstringIndex]] —
-    * the O(batch-OUTPUT) append payload (write these rows, inherit the
-    * rest by reference), as an anti join on the gram key. This is the
-    * OFFLINE form (both sides legitimately exchange on `g` — a
-    * left-anti cannot broadcast its left side, so a corpus-sized index
-    * here shuffles or broadcasts whole); the streaming ingest
-    * ([[graft.streaming.SubstringIngest]]) instead derives its delta
-    * as batchGrams ∖ hitGrams where hitGrams came from an index-side
-    * LEFT SEMI against the BROADCAST batch set — the trigger-bounded
-    * shape in which the index truly streams map-side.
-    */
-  def dupSubstringIndexDelta(index: DataFrame, batch: DataFrame,
-                             k: Int = 5): DataFrame =
-    dupSubstringIndex(batch, k).join(index, Seq("g"), "left_anti")
-
   /** INCREMENTAL keep-first substring dedup (the n49/n95 move on
     * [[dupSubstringDedup]]): dedup a new batch against the accumulated
     * gram index of every earlier batch PLUS the batch's own internal
     * firsts. When batches partition the corpus in doc_id order, folding
-    * them through this + [[dupSubstringIndexDelta]] is EXACTLY the
+    * them through this, growing the index batch by batch, is EXACTLY the
     * batch-mode [[dupSubstringDedup]] restricted to each batch's rows
     * (spec-pinned): an occurrence is globally non-first iff an earlier
     * occurrence exists, and "earlier" is either a prior batch (gram ∈
@@ -1285,12 +1269,17 @@ object TextAnalysis {
     * (n122): one md5-per-paragraph shuffle removes the whole-unit
     * copies (mirrored pages, quoted mails, boilerplate lines) so the
     * positional gram stage only pays for the partial overlaps it alone
-    * can see. Paragraph = `delim`-separated segment (default newline,
-    * CCNet's definition); `delim` is used as the split regex AND the
-    * rebuild joiner, so pass a literal. Empty segments dedup like any
-    * other paragraph (all-but-the-first blank line goes — CCNet
-    * behavior, stated not hidden). Within-doc repetition is in scope:
-    * occurrences are per (doc_id, pidx), not per document.
+    * can see. Within-doc repetition is in scope: occurrences are per
+    * (doc_id, pidx), not per document.
+    *
+    * The corpus has no line structure (the testdata corpus — the same
+    * adaptation [[boilerplateCoverage]] documents for spans), so
+    * "paragraphs" are non-overlapping `k`-word blocks of the words
+    * array, rebuilt space-joined. Block boundaries are
+    * position-deterministic, so two docs sharing a copied region dedup
+    * exactly when the copy is block-aligned — the honest limitation vs
+    * the window-level n122 (which is alignment-free); TextAnalysisSpec
+    * reconciles the two on a planted aligned fixture.
     *
     * Output: (doc_id, n_paras, n_removed, text_dedup) — n_paras counts
     * the doc's paragraphs, n_removed the dropped ones.
@@ -1307,23 +1296,6 @@ object TextAnalysis {
     * doc-keyed rebuild) — the same count the substring family pays,
     * with far fewer rows (paragraphs, not k-windows).
     */
-  def paragraphDedup(docs: DataFrame, delim: String = "\n"): DataFrame =
-    paragraphDedupCore(
-      docs.select(col("doc_id"),
-        posexplode(split(col("text"), java.util.regex.Pattern.quote(delim)))
-          .as(Seq("pidx", "para"))),
-      delim)
-      .orderBy(col("doc_id"))
-
-  /** [[paragraphDedup]] for a corpus WITHOUT line structure (the
-    * testdata corpus — the same adaptation [[boilerplateCoverage]]
-    * documents for spans): "paragraphs" are non-overlapping `k`-word
-    * blocks of the words array, rebuilt space-joined. Block boundaries
-    * are position-deterministic, so two docs sharing a copied region
-    * dedup exactly when the copy is block-aligned — the honest
-    * limitation vs the window-level n122 (which is alignment-free);
-    * TextAnalysisSpec reconciles the two on a planted aligned fixture.
-    */
   def paragraphDedupBlocks(docs: DataFrame, k: Int = 20): DataFrame =
     paragraphDedupBlocksRaw(docs, k).orderBy(col("doc_id"))
 
@@ -1332,12 +1304,14 @@ object TextAnalysis {
     * sorts once at its own tail).
     */
   private def paragraphDedupBlocksRaw(docs: DataFrame, k: Int): DataFrame =
-    paragraphDedupCore(blockParagraphs(docs, k), " ")
+    paragraphDedupAcc(blockParagraphs(docs, k))
+      .select(col("doc_id"), col("n_paras"), col("n_removed"),
+        col("text_dedup"))
 
   /** The (doc_id, pidx, para) frame of non-overlapping `k`-word blocks
-    * — the block form's segmentation, shared by [[paragraphDedupBlocks]],
-    * the incremental form, and the streaming ingest (one definition of
-    * the block boundary, the cleanCorpusWith convention).
+    * — the block form's segmentation, shared by [[paragraphDedupBlocks]]
+    * and the incremental form (one definition of the block boundary,
+    * the cleanCorpusWith convention).
     */
   private[graft] def blockParagraphs(docs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -1352,26 +1326,18 @@ object TextAnalysis {
         .as(Seq("pidx", "para")))
   }
 
-  /** ONE keep-first core over an arbitrary (doc_id, pidx, para) frame —
-    * the newline and block forms differ only in segmentation, so they
-    * can never drift on policy (the cleanCorpusWith convention).
+  /** ONE keep-first core over a (doc_id, pidx, para) block frame,
+    * shared by [[paragraphDedupBlocks]] and the n83-shaped cleaner so
+    * they can never drift on policy (the cleanCorpusWith convention).
+    * Kept blocks rejoin space-separated, as they were split. Carries
+    * TOKEN accounting too (`n_tok_removed` = Σ word counts of the
+    * dropped paragraphs — what the cleaner reports, where the public
+    * dedup form reports paragraph counts): one aggregate serves both,
+    * and the public form projects the extra column away. An empty
+    * paragraph counts one token (split("") = [""] on both engines — the
+    * same convention everywhere words() touches empty text).
     */
-  private def paragraphDedupCore(paras: DataFrame,
-                                 joiner: String): DataFrame =
-    paragraphDedupAcc(paras, joiner)
-      .select(col("doc_id"), col("n_paras"), col("n_removed"),
-        col("text_dedup"))
-
-  /** [[paragraphDedupCore]] plus TOKEN accounting (`n_tok_removed` =
-    * Σ word counts of the dropped paragraphs — what the n83-shaped
-    * cleaner reports, where the public dedup forms report paragraph
-    * counts). One aggregate serves both; the public forms project the
-    * extra column away. An empty paragraph counts one token (split("")
-    * = [""] on both engines — the same convention everywhere words()
-    * touches empty text).
-    */
-  private def paragraphDedupAcc(paras: DataFrame,
-                                joiner: String): DataFrame = {
+  private def paragraphDedupAcc(paras: DataFrame): DataFrame = {
     val withH = paras.select(col("doc_id"), col("pidx"),
       col("para"), md5(col("para")).as("h"))
     val firsts = withH
@@ -1388,7 +1354,7 @@ object TextAnalysis {
         sum(when(col("keep"), 0L)
           .otherwise(size(split(col("para"), " ")).cast("long")))
           .as("n_tok_removed"),
-        concat_ws(joiner, transform(
+        concat_ws(" ", transform(
           array_sort(collect_list(when(col("keep"),
             struct(col("pidx"), col("para"))))),
           x => x("para"))).as("text_dedup"))
@@ -1428,26 +1394,11 @@ object TextAnalysis {
       .select(md5(col("para")).as("h"))
       .distinct()
 
-  /** The hashes a new batch adds to an existing [[paragraphIndex]] —
-    * the O(batch-OUTPUT) append payload, as an anti join on the hash
-    * key. This is the OFFLINE form (both sides legitimately exchange
-    * on `h` — a left-anti cannot broadcast its left side, so a
-    * corpus-sized index here shuffles or broadcasts whole); the
-    * streaming ingest ([[graft.streaming.ParagraphIngest]]) instead
-    * derives its delta as batchHashes ∖ hitHashes where hitHashes came
-    * from an index-side LEFT SEMI against the BROADCAST batch set —
-    * the trigger-bounded shape in which the index truly streams
-    * map-side.
-    */
-  def paragraphIndexDelta(index: DataFrame, batch: DataFrame,
-                          k: Int = 20): DataFrame =
-    paragraphIndex(batch, k).join(index, Seq("h"), "left_anti")
-
   /** INCREMENTAL paragraph dedup (the n124 move at paragraph
     * granularity): dedup a new batch against the accumulated paragraph
     * index of every earlier batch PLUS the batch's own internal
     * firsts. When batches partition the corpus in doc_id order,
-    * folding them through this + [[paragraphIndexDelta]] is EXACTLY
+    * folding them through this, growing the index batch by batch, is EXACTLY
     * batch-mode [[paragraphDedupBlocks]] restricted to each batch's
     * rows (spec-pinned): a paragraph is globally non-first iff an
     * earlier occurrence exists — a prior batch (hash ∈ index, any
@@ -1512,7 +1463,7 @@ object TextAnalysis {
     */
   def cleanCorpusParagraphRaw(docs: DataFrame, k: Int = 20): DataFrame =
     cleanCorpusWith(docs, keepers =>
-      paragraphDedupAcc(blockParagraphs(keepers, k), " ")
+      paragraphDedupAcc(blockParagraphs(keepers, k))
         .select(col("doc_id"), col("n_tok_removed").as("n_removed"),
           col("text_dedup").as("cleaned")))
 
@@ -1564,8 +1515,7 @@ object TextAnalysis {
     *      sources the trim shrank), executed with the same integer
     *      md5-bucket keep test;
     *   4. shard assignment ([[shardKey]]/[[shardOf]], n60) over the kept
-    *      docs — the frame [[graft.sources.Sinks.writeShards]]
-    *      materializes.
+    *      docs — the frame a shard writer materializes.
     *
     * Output: one row per kept TRAIN doc — (doc_id, source, shard, pos,
     * n_tokens, n_removed, text_clean). Val/test survivors are cleaning
@@ -2069,6 +2019,12 @@ object TextAnalysis {
       .filter(col("n_docs") > 1)
       .orderBy(col("fingerprint"))
 
+  /** The stable per-doc sampling key shared by [[sourceCap]] and
+    * [[tokenBudgetMix]] — both MUST walk sources in the same order, so
+    * the key expression lives exactly once.
+    */
+  def sampKey: Column = md5(concat(lit("cap|"), col("doc_id").cast("string")))
+
   /** Per-source corpus cap: keep at most `k` docs per source, chosen by
     * a deterministic md5 order (a stable "uniform sample" — unlike
     * `sample()`, identical across runs, engines, and partitionings).
@@ -2080,14 +2036,8 @@ object TextAnalysis {
     * dominant source makes one reducer hot; the fix at that scale is a
     * per-partition pre-cap of k rows before the shuffle (same output,
     * since any global top-k is contained in the union of partition
-    * top-ks), which [[graft.ops.Skew]] demonstrates for aggregation.
+    * top-ks) — the move a two-stage salted aggregation makes for sums.
     */
-  /** The stable per-doc sampling key shared by [[sourceCap]] and
-    * [[tokenBudgetMix]] — both MUST walk sources in the same order, so
-    * the key expression lives exactly once.
-    */
-  def sampKey: Column = md5(concat(lit("cap|"), col("doc_id").cast("string")))
-
   def sourceCap(docs: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"))

@@ -692,7 +692,7 @@ object Multimodal {
     * payload hashes identically on every JVM, and a re-encoded lossless
     * PNG round-trips to the same hash (spec-pinned). Near-identical
     * images (small edits, re-encodes) land within a small hamming
-    * distance — the signal [[imageNearDupPairs]] pairs on.
+    * distance — the signal [[mediaSignaturePairsPlain]] pairs on.
     */
   def dHash(img: java.awt.image.BufferedImage): Long = {
     val (w, h) = (img.getWidth, img.getHeight)
@@ -761,31 +761,7 @@ object Multimodal {
       }(enc)
   }
 
-  /** Image near-dup pairs at hamming ≤ `maxDist` over the dHash
-    * signatures — the n93/n94 pigeonhole machinery REUSED verbatim on
-    * the 64-bit image signature (8 blocks of 8 bits, keep-4 permuted
-    * tables: exact recall by the pigeonhole argument, C(8,4) = 70
-    * tables of 32-bit keys so no single hot block buckets the corpus).
-    * Input is the [[imagePhash]] frame (or its persisted index) — at
-    * 100 TB the pairing never re-reads or re-decodes a payload, it
-    * joins 16-byte signature rows. Null hashes (corrupt/absent
-    * payloads) are excluded by definition. The spec pins the pair set
-    * EQUAL to brute-force hamming over the decoded corpus.
-    *
-    * This is the ANCHOR form: output is every member pair, which is
-    * quadratic in exact-dup (identical-hash) group size BY DEFINITION
-    * of the ask — on a corpus with massive identical-signature groups
-    * (re-hosted thumbnails; this repo's periodic synthetic formula at
-    * scale multipliers) run [[imageNearDupPairsCollapsed]], whose
-    * volume is bounded by DISTINCT-signature structure (the n118/n123
-    * collapse discipline — the 10× sweep that motivated it spilled for
-    * half an hour here before the collapsed twin replaced it in the
-    * registry).
-    */
-  def imageNearDupPairs(phash: DataFrame, maxDist: Int = 4): DataFrame =
-    mediaSignaturePairsPlain(phash, "phash", maxDist)
-
-  /** [[imageNearDupPairs]] with the exact-dup pre-collapse — the
+  /** Image near-dup pairs with the exact-dup pre-collapse — the
     * production form (the n118/n123 move on the image signature):
     * identical hashes form a GROUP (rep = min media_id, the n2 keeper
     * policy); the pigeonhole front runs over one rep per DISTINCT
@@ -1268,17 +1244,7 @@ object Multimodal {
     base.unionAll(edited)
   }
 
-  /** Audio near-dup pairs at hamming ≤ `maxDist` — the n93/n94
-    * permuted-pigeonhole machinery reused VERBATIM at 64 bits (8
-    * blocks / keep 4, exact recall for maxDist ≤ 4), exactly as the
-    * image signature (m5) did: the pairing joins 16-byte signature
-    * rows and never re-reads a payload. ANCHOR all-pairs form — see
-    * [[audioNearDupPairsCollapsed]] for the production collapse.
-    */
-  def audioNearDupPairs(ahash: DataFrame, maxDist: Int = 4): DataFrame =
-    mediaSignaturePairsPlain(ahash, "ahash", maxDist)
-
-  /** [[audioNearDupPairs]] with the exact-dup pre-collapse (the
+  /** Audio near-dup pairs with the exact-dup pre-collapse (the
     * n118/m5 discipline): identical fingerprints group under a min-id
     * rep, the pigeonhole front pairs one rep per DISTINCT hash, and
     * member expansion is closed-form exact — pair volume is bounded by
@@ -1658,27 +1624,6 @@ object Multimodal {
         (size(flags) === 0).as("pass"))
   }
 
-  /** The GATE form: media rows whose audit passes (payloads and
-    * metadata intact — the filter a build pipeline composes ahead of
-    * its dedup stages). One semi join on (media_id, KIND) — the
-    * codebase's media key contract (MixedBuild's stores legitimately
-    * hold the same id under two kinds, and a failing image must never
-    * ride through on a passing same-id audio row); the audit side
-    * carries no payloads. A null kind never matches a semi join, which
-    * is the right failure mode: the audit flags those rows
-    * `unknown_kind` (pass = false) anyway.
-    */
-  def mediaQualityGate(media: DataFrame,
-                       minPixels: Int = 16, minContrast: Double = 8.0,
-                       minSamples: Int = 64, rmsFloor: Double = 50.0,
-                       clipCeil: Int = 32700, minFrames: Int = 2,
-                       minMotion: Double = 0.5): DataFrame =
-    media.join(
-      mediaQualityAudit(media, minPixels, minContrast, minSamples,
-        rmsFloor, clipCeil, minFrames, minMotion)
-        .filter(col("pass")).select(col("media_id"), col("kind")),
-      Seq("media_id", "kind"), "left_semi")
-
   /** Base media_id of the m15 fixture's planted DEGENERATES — above
     * every other planted family's range.
     */
@@ -1693,7 +1638,7 @@ object Multimodal {
     * MediaQualitySpec on its own fixture.
     */
   /** A real PNG of one constant RGB — the 'flat' degenerate fixture,
-    * shared by the m15 registry plant and the gate specs (one
+    * shared by the m15 registry plant and the quality specs (one
     * definition, so a threshold change can't silently strand a copy).
     */
   def constantPng(w: Int, h: Int, rgb: Int): Array[Byte] = {
@@ -1818,13 +1763,30 @@ object Multimodal {
   // identical member relation (spec-pinned bit-equal per modality and
   // regime), so the choice can never change an answer, only the
   // candidate-generation shape. EAGER auto + lazy FromInflation halves,
-  // the n139 measure()/build discipline; [[cardInflation]] is the seam
-  // that feeds the lazy halves from a card a pipeline already computed.
+  // the n139 measure()/build discipline: a pipeline that already holds
+  // the card passes its per-kind inflation straight to the lazy half.
 
-  /** Member-level media near-dup pairs, PLAIN front: the permuted
-    * pigeonhole over every (media_id, signature) row directly —
-    * [[imageNearDupPairs]]/[[audioNearDupPairs]] generalized over the
-    * signature column. Null signatures excluded by definition.
+  /** Member-level media near-dup pairs at hamming ≤ `maxDist`, PLAIN
+    * front: the n93/n94 pigeonhole machinery REUSED verbatim on a 64-bit
+    * media signature (the image dHash, the audio fingerprint) — 8
+    * blocks of 8 bits, keep-4 permuted tables: exact recall by the
+    * pigeonhole argument, C(8,4) = 70 tables of 32-bit keys so no
+    * single hot block buckets the corpus. Input is a (media_id,
+    * signature) frame ([[imagePhash]], [[audioHash]] or a persisted
+    * index) — at 100 TB the pairing never re-reads or re-decodes a
+    * payload, it joins 16-byte signature rows. Null signatures are
+    * excluded by definition. The spec pins the pair set EQUAL to
+    * brute-force hamming over the decoded corpus, per modality.
+    *
+    * This is the ANCHOR form: output is every member pair, which is
+    * quadratic in exact-dup (identical-hash) group size BY DEFINITION
+    * of the ask — on a corpus with massive identical-signature groups
+    * (re-hosted thumbnails; this repo's periodic synthetic formula at
+    * scale multipliers) run [[imageNearDupPairsCollapsed]] /
+    * [[audioNearDupPairsCollapsed]], whose volume is bounded by
+    * DISTINCT-signature structure (the n118/n123 collapse discipline —
+    * the 10× sweep that motivated it spilled for half an hour here
+    * before the collapsed twin replaced it in the registry).
     */
   def mediaSignaturePairsPlain(sigs: DataFrame, sigCol: String,
                                maxDist: Int = 4): DataFrame =
@@ -1852,7 +1814,7 @@ object Multimodal {
   /** The LAZY measure()/build half (the n139 discipline): the caller
     * supplies the signature inflation — from
     * [[graft.ops.Dedup.groupInflation]] run at a moment of its
-    * choosing, or from the m13 card via [[cardInflation]] — and this
+    * choosing, or the m13 card's per-kind inflation — and this
     * picks the front with ZERO construction-time jobs (spec-pinned via
     * the job-count listener).
     */
@@ -1878,150 +1840,6 @@ object Multimodal {
       graft.ops.Dedup.groupInflation(
         sigs.filter(col(sigCol).isNotNull), col(sigCol)),
       maxDist, minInflation)
-
-  /** The per-kind inflation from a COLLECTED [[mediaDedupCard]] — the
-    * seam between the card and the lazy FromInflation halves: a
-    * pipeline that already paid for the card feeds its measured number
-    * straight into the front choice instead of re-probing the corpus.
-    * A kind with nothing decoded carries a null inflation → 1.0 (no
-    * duplication evidence, plain front).
-    */
-  def cardInflation(card: DataFrame, kind: String): Double = {
-    val rows = card.filter(col("kind") === kind)
-      .select(col("inflation")).collect()
-    require(rows.nonEmpty, s"no '$kind' row in the media dedup card")
-    if (rows.head.isNullAt(0)) 1.0 else rows.head.getDouble(0)
-  }
-
-  /** Clip-level near-dup pairs over ALL clips — the PLAIN front of the
-    * video auto: the m11 pairing WITHOUT the clip-key collapse. Output
-    * (media_a, media_b, n_frame_pairs, min_hamming) — n_frame_pairs
-    * counts frame-index combinations (i of a, j of b) within `maxDist`,
-    * within-clip pairs excluded.
-    */
-  def videoClipPairsPlain(frameHashes: DataFrame,
-                          maxDist: Int = 4): DataFrame = {
-    val fh = frameHashes.filter(col("fhash").isNotNull)
-    graft.ops.Dedup.simhashNearDupPairsPermutedFromIndex(
-      fh.select(frameKey(col("media_id"), col("frame_idx")).as("doc_id"),
-        col("fhash").as("simhash")),
-      bits = 64, maxDist = maxDist, nBlocks = 8, nKeep = 4)
-      .select(expr("doc_a div 64").as("ma"), expr("doc_b div 64").as("mb"),
-        col("hamming"))
-      .filter(col("ma") =!= col("mb"))
-      .select(least(col("ma"), col("mb")).as("media_a"),
-        greatest(col("ma"), col("mb")).as("media_b"), col("hamming"))
-      .groupBy(col("media_a"), col("media_b"))
-      .agg(count(lit(1)).as("n_frame_pairs"),
-        min(col("hamming")).as("min_hamming"))
-      .orderBy(col("media_a"), col("media_b"))
-  }
-
-  /** Clip-level near-dup pairs, COLLAPSED front expanded back —
-    * bit-equal to [[videoClipPairsPlain]]: clips group by exact
-    * frame-hash sequence ([[clipKeyAgg]]), the m11 front pairs REP
-    * clips, every rep pair expands to its groups' member cross product
-    * (inheriting (n_frame_pairs, min_hamming) verbatim — identical
-    * frame sequences ⇒ identical pair stats), and every ≥ 2-member
-    * group contributes its within-group pairs carrying the rep's SELF
-    * pair stats (ordered frame-index combinations of the rep against
-    * itself within `maxDist`, i = j included — exactly what the plain
-    * front counts between two identical clips). Candidate volume is
-    * bounded by DISTINCT-clip structure; the output is the member
-    * relation by definition (m11 stays the registry encoding for this
-    * corpus — its group table is the bounded form).
-    */
-  def videoClipPairsExpanded(frameHashes: DataFrame,
-                             maxDist: Int = 4): DataFrame = {
-    // no checkpoints: the shared aggregate subtrees end in exchanges
-    // Catalyst reuses within the query, and a lazy localCheckpoint
-    // would materialize shuffle stages at construction under AQE
-    // (the signaturePairsCollapsedExpanded sharing note). `frameHashes`
-    // itself feeds several DISTINCT exchanges — callers whose frame is
-    // expensive to derive (a codec decode) pass it CUT, the m12
-    // registry convention.
-    val fh = frameHashes.filter(col("fhash").isNotNull)
-      .select(col("media_id"), col("frame_idx"), col("fhash"))
-    val clipKeys = fh.groupBy(col("media_id")).agg(clipKeyAgg.as("ck"))
-    val groups = clipKeys.groupBy(col("ck"))
-      .agg(min(col("media_id")).as("rep"),
-        sort_array(collect_list(col("media_id"))).as("ids"))
-    val repFrames =
-      fh.join(groups.select(col("rep").as("media_id")), Seq("media_id"))
-    val rp = graft.ops.Dedup.simhashNearDupPairsPermutedFromIndex(
-      repFrames.select(
-        frameKey(col("media_id"), col("frame_idx")).as("doc_id"),
-        col("fhash").as("simhash")),
-      bits = 64, maxDist = maxDist, nBlocks = 8, nKeep = 4)
-      .select(expr("doc_a div 64").as("ma"), expr("doc_b div 64").as("mb"),
-        col("hamming"))
-      .filter(col("ma") =!= col("mb"))
-      .select(least(col("ma"), col("mb")).as("media_a"),
-        greatest(col("ma"), col("mb")).as("media_b"), col("hamming"))
-      .groupBy(col("media_a"), col("media_b"))
-      .agg(count(lit(1)).as("n_frame_pairs"),
-        min(col("hamming")).as("min_hamming"))
-    val gids = groups.select(col("rep"), col("ids"))
-    val cross = rp
-      .join(gids.as("ga"), col("media_a") === col("ga.rep"))
-      .join(gids.as("gb"), col("media_b") === col("gb.rep"))
-      .select(col("n_frame_pairs"), col("min_hamming"),
-        explode(flatten(transform(col("ga.ids"), a =>
-          transform(col("gb.ids"), b =>
-            struct(least(a, b).as("ma"), greatest(a, b).as("mb"))))))
-          .as("p"))
-      .select(col("p.ma").as("media_a"), col("p.mb").as("media_b"),
-        col("n_frame_pairs"), col("min_hamming"))
-    // per-rep SELF stats: ordered frame-index combinations of the rep
-    // against itself within maxDist (i = j included — two identical
-    // clips pair every frame with its own copy at hamming 0)
-    val self = repFrames.as("a")
-      .join(repFrames.as("b"), col("a.media_id") === col("b.media_id"))
-      .select(col("a.media_id").as("rep"),
-        bit_count(col("a.fhash").bitwiseXOR(col("b.fhash"))).as("d"))
-      .filter(col("d") <= maxDist)
-      .groupBy(col("rep"))
-      .agg(count(lit(1)).as("n_frame_pairs"),
-        min(col("d")).as("min_hamming"))
-    val within = groups
-      .filter(size(col("ids")) > 1)
-      .select(col("rep"), explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(slice(ids, i + 2, size(ids)),
-          |    y -> named_struct('ma', x, 'mb', y))))""".stripMargin))
-        .as("p"))
-      .join(self, Seq("rep"))
-      .select(col("p.ma").as("media_a"), col("p.mb").as("media_b"),
-        col("n_frame_pairs"), col("min_hamming"))
-    cross.unionAll(within)
-      .orderBy(col("media_a"), col("media_b"))
-  }
-
-  /** The video auto's lazy half — inflation over CLIP KEYS (the m13
-    * card's video number): both fronts bit-equal, zero construction
-    * jobs here.
-    */
-  def videoClipPairsFromInflation(
-      frameHashes: DataFrame, inflation: Double, maxDist: Int = 4,
-      minInflation: Double = graft.ops.Dedup.MinCollapseInflation)
-      : DataFrame =
-    if (inflation >= minInflation) videoClipPairsExpanded(frameHashes,
-      maxDist)
-    else videoClipPairsPlain(frameHashes, maxDist)
-
-  /** The video MEASURED front switch — EAGER (one clip-key inflation
-    * probe: a count-only aggregate over 16-byte key rows).
-    */
-  def videoClipPairsAuto(
-      frameHashes: DataFrame, maxDist: Int = 4,
-      minInflation: Double = graft.ops.Dedup.MinCollapseInflation)
-      : DataFrame = {
-    val fh = frameHashes.filter(col("fhash").isNotNull)
-    videoClipPairsFromInflation(frameHashes,
-      graft.ops.Dedup.groupInflation(
-        fh.groupBy(col("media_id")).agg(clipKeyAgg.as("ck")), col("ck")),
-      maxDist, minInflation)
-  }
 
   // ======== cross-modality dedup card (m13) ========
 

@@ -44,8 +44,6 @@ object Sinks {
     * of the (length, mtime) pair. That is a full read of the corpus, so
     * it only pays off when training costs much more than one scan (it
     * usually does: k-means is `iters` scans plus driver round-trips).
-    * Tables with real change tracking should skip both modes and key on
-    * the snapshot id via [[modelPathForSnapshot]] — O(1) and exact.
     */
   def modelPath(spark: org.apache.spark.sql.SparkSession,
                 corpusTable: String, modelName: String,
@@ -76,18 +74,6 @@ object Sinks {
     s"${sys.props("java.io.tmpdir")}/graft_models/${modelName}_$key"
   }
 
-  /** Model-cache key for corpora with real change tracking (Iceberg/Delta
-    * snapshot ids, a partition watermark, an ingest batch id): exact and
-    * O(1) where the listing/digest modes of [[modelPath]] are heuristic
-    * or a full scan. The caller owns producing a snapshot id that changes
-    * iff the data does.
-    */
-  def modelPathForSnapshot(modelName: String, snapshotId: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(snapshotId.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"${sys.props("java.io.tmpdir")}/graft_models/${modelName}_snap_$key"
-  }
-
   /** Train-once/score-many: return the model persisted at `path`,
     * training and publishing it first only if absent. The existence
     * check comes BEFORE `train` is evaluated — training may do eager
@@ -103,8 +89,8 @@ object Sinks {
     * from the old direct-write scheme (or a crash) is deleted and
     * re-trained. Concurrent trainers race to a single winner: the loser's
     * rename fails against the existing dir and its temp is discarded.
-    * (On object stores without atomic dir rename, publish through a
-    * manifest/pointer instead — same caveat as [[compact]].)
+    * (On object stores without atomic dir rename, where "rename" is a
+    * non-atomic copy+delete, publish through a manifest/pointer instead.)
     */
   def materializeModel(spark: org.apache.spark.sql.SparkSession,
                        path: String)(train: => DataFrame): DataFrame = {
@@ -146,7 +132,7 @@ object Sinks {
           // back. A transient rename-back failure must NOT discard a
           // finished training run — retry, and if the path is still
           // free but the rename keeps failing, LEAVE the aside dir for
-          // sweepModelTemps-style recovery (liveness: the train branch
+          // an age-gated sweep (liveness: the train branch
           // below republishes; the aside copy ages out or is recovered
           // by an operator).
           var restored = fs.exists(p)
@@ -208,103 +194,6 @@ object Sinks {
     spark.read.parquet(path)
   }
 
-  /** Janitor for [[materializeModel]]'s temp dirs: a hard-killed trainer
-    * (OOM, SIGKILL) skips the catch-block cleanup and leaves its
-    * uniquely-named `.<name>.train-<nanos>` dir behind — model-sized,
-    * accumulating across crashes. They can NOT be swept inside
-    * [[materializeModel]] itself: concurrent trainers are supported
-    * there ("race to a single winner"), and another trainer's in-flight
-    * temp is indistinguishable from a dead one's by name alone. So the
-    * sweep is explicit and age-gated: dirs whose modification time
-    * predates `olderThanMs` (default 24 h — far beyond any live
-    * training run) are deleted. Run it from the same scheduled context
-    * that owns model refreshes. Returns the number of dirs removed.
-    */
-  def sweepModelTemps(spark: org.apache.spark.sql.SparkSession,
-                      modelPath: String,
-                      olderThanMs: Long = 24L * 3600 * 1000): Int = {
-    val p = new org.apache.hadoop.fs.Path(modelPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parent = p.getParent
-    if (parent == null || !fs.exists(parent)) 0
-    else {
-      val cutoff = System.currentTimeMillis() - olderThanMs
-      // .train-: a hard-killed trainer's temp; .torn-: a hard-killed
-      // torn-dir REPAIR's aside dir (moved out of the model path but not
-      // yet judged/deleted) — both uniquely named, both model-sized
-      val stale = fs.listStatus(parent).toSeq.filter(s =>
-        (s.getPath.getName.startsWith(s".${p.getName}.train-") ||
-          s.getPath.getName.startsWith(s".${p.getName}.torn-")) &&
-          s.getModificationTime < cutoff)
-      stale.foreach(s => fs.delete(s.getPath, true))
-      stale.size
-    }
-  }
-
-  /** Globally key-clustered write: range-repartition then sort within
-    * partitions, so every output file covers a disjoint key range and
-    * parquet min/max row-group stats prune point/range reads — the
-    * sorted-layout half of the bucketing story.
-    */
-  def writeClusteredBy(df: DataFrame, keyCol: String, numFiles: Int,
-                       path: String): Unit =
-    df.repartitionByRange(numFiles, col(keyCol))
-      .sortWithinPartitions(col(keyCol))
-      .write.mode(SaveMode.Overwrite).parquet(path)
-
-  /** Bucketed managed-table write — the CO-LOCATED JOIN half of the
-    * bucketing story ([[writeClusteredBy]] is the sorted-layout half):
-    * rows are hash-partitioned into `numBuckets` buckets on `key` and
-    * sorted within each bucket AT WRITE TIME, so every later equi-join
-    * or aggregation on the key between tables sharing the bucketing
-    * plans with ZERO shuffle exchange — the big-fact ⋈ big-fact shape
-    * where the shuffle IS the job at 100 TB, paid once at write instead
-    * of per query. (A within-partition sort remains under default
-    * config: Spark ≥3.0 trades the scan's reported ordering for
-    * multi-file bucket reads — re-enable via spark.sql.legacy
-    * .bucketedTableScan.outputOrdering if the local sort matters; the
-    * write-time sortBy still buys compression and row-group pruning
-    * either way.) Bucket
-    * metadata lives in the session catalog, so this writes a MANAGED
-    * table via saveAsTable, not a bare path; size `numBuckets` so one
-    * bucket ≈ one task's worth of data at the target scale.
-    * BucketedJoinSpec pins the exchange-free join and aggregate plans.
-    */
-  def writeBucketedBy(df: DataFrame, key: String, numBuckets: Int,
-                      table: String): Unit =
-    // pre-repartition on the SAME hash the bucketing uses, so each
-    // bucket lands in exactly one file: Spark only honors the write-time
-    // sort on read when a bucket is single-file (multi-file buckets
-    // interleave, and the SMJ above the scan re-sorts — the silent way
-    // bucketed tables lose half their benefit)
-    df.repartition(numBuckets, col(key))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, key).sortBy(key)
-      .format("parquet").saveAsTable(table)
-
-  /** Training-shard writer — materializes the layout whose logical core
-    * is [[graft.ops.TextAnalysis.shardAssignment]]: every doc lands in
-    * shard md5('shard|'||doc_id) % numShards, written as one parquet
-    * partition dir per shard with rows in the deterministic md5-key
-    * order (the epoch shuffle — stable across runs and engines, unlike
-    * orderBy(rand)). The shard column is computed ON the scan row from
-    * the SAME [[graft.ops.TextAnalysis.shardOf]] expression the logical
-    * assignment uses (one definition — the layout cannot drift), and the
-    * frame RANGE-repartitions on it: equal shard values always land in
-    * one partition, so each shard stays a single sorted file, and range
-    * boundaries give ~one shard per task (a hash repartition collides
-    * distinct shard values birthday-style — ~1/e of tasks idle while
-    * others write 2-3 shards serially, the wall-clock gate at scale).
-    * No join back to an assignment table (that would shuffle the corpus
-    * twice). Trainers read shard=K dirs round-robin.
-    */
-  def writeShards(docs: DataFrame, numShards: Int, path: String): Unit =
-    docs.withColumn("shard", graft.ops.TextAnalysis.shardOf(numShards))
-      .repartitionByRange(numShards, col("shard"))
-      .sortWithinPartitions(col("shard"), graft.ops.TextAnalysis.shardKey,
-        col("doc_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(path)
-
   /** Publish a [[graft.ops.TextAnalysis.trainingDataBuild]] result as a
     * versioned DATASET RELEASE: the build rows become the next full
     * version of `table` with the build parameters AND the realized
@@ -333,155 +222,8 @@ object Sinks {
         "n_tokens" -> r.getLong(1).toString))
   }
 
-  /** Diff two RELEASES of a published training dataset (the n50
-    * snapshot-diff shape over [[Versioned.readVersion]]): per source,
-    * how many docs were added, removed, changed (same doc_id, different
-    * cleaned text), and unchanged between version `vA` and version `vB`
-    * — the release-notes number a data owner reads before pointing a
-    * training run at a new version, and the audit that a "small" corpus
-    * refresh didn't silently rewrite a source. Works on any frame pair
-    * with (doc_id, source, text_clean) — the [[publishTrainingBuild]]
-    * schema. A doc whose SOURCE moved between releases counts as
-    * changed at the new source; presence comes from the source column,
-    * so a null cleaned text never reads as an absent row.
-    *
-    * Reconciliation contract (per source `s`):
-    *   rows_vB(s) = n_added + n_changed + n_unchanged
-    *   rows_vA(s) = n_removed + n_unchanged + (n_changed − n_moved_in)
-    *                + n_moved_away
-    * — `n_moved_in` counts the subset of `n_changed` that ARRIVED from
-    * another source, and `n_moved_away` counts docs this source LOST to
-    * a move (they appear nowhere else in its row — without this column
-    * a source quietly drained by re-attribution reads clean). A source
-    * whose every doc moved away still gets a row (all-zero except
-    * n_moved_away).
-    *
-    * Scale shape: each side reduces to (doc_id, source, md5) before the
-    * ONE full-outer doc_id join — the text never joins; the move columns
-    * ride an inner join of the SAME two id+source projections; every
-    * roll-up is a sources-sized aggregate.
-    */
-  def releaseDiff(spark: org.apache.spark.sql.SparkSession, table: String,
-                  vA: Long, vB: Long): DataFrame = {
-    // ONE definition of diff semantics: graft.ops.Dedup.snapshotDiff
-    // (n50's oracled operator) — presence from the source column, a
-    // source MOVE counts as changed at the NEW source, null-safe hash
-    // compare. This is readVersion → snapshotDiff → a wide pivot, plus
-    // the two move columns derived from the same side frames. Each side
-    // reduces to (doc_id, source, md5) and is materialized ONCE
-    // (Checkpoints.cut) — the pivot and the move columns would
-    // otherwise each re-read the versioned release; snapshotDiff
-    // re-hashing the 32-char digest is equality-preserving (md5 is
-    // deterministic: md5(da) = md5(db) iff da = db here).
-    def side(v: Long) = graft.ops.Checkpoints.cut(
-      Versioned.readVersion(spark, table, v)
-        .select(col("doc_id"), col("source"),
-          md5(col("text_clean")).as("text")))
-    val sideA = side(vA)
-    val sideB = side(vB)
-    val pivot = graft.ops.Dedup.snapshotDiff(sideA, sideB)
-      .groupBy(col("source"))
-      .agg(
-        coalesce(sum(when(col("status") === "added", col("n_docs"))),
-          lit(0L)).as("n_added"),
-        coalesce(sum(when(col("status") === "removed", col("n_docs"))),
-          lit(0L)).as("n_removed"),
-        coalesce(sum(when(col("status") === "changed", col("n_docs"))),
-          lit(0L)).as("n_changed"),
-        coalesce(sum(when(col("status") === "unchanged", col("n_docs"))),
-          lit(0L)).as("n_unchanged"))
-    // a NULL source means ABSENT on that side (the snapshotDiff
-    // presence rule) — such rows are added/removed, never moves; the
-    // non-null filters keep the two accountings consistent so the
-    // reconciliation identity can't over-count
-    val moved = sideA.select(col("doc_id"), col("source").as("osource"))
-      .join(sideB.select(col("doc_id"), col("source").as("nsource")),
-        Seq("doc_id"))
-      .filter(col("osource").isNotNull && col("nsource").isNotNull &&
-        col("osource") =!= col("nsource"))
-    val movedIn = moved.groupBy(col("nsource").as("source"))
-      .agg(count(lit(1)).as("n_moved_in"))
-    val movedAway = moved.groupBy(col("osource").as("source"))
-      .agg(count(lit(1)).as("n_moved_away"))
-    // full outer on moved_away: a source that lost ALL its docs to moves
-    // has no pivot row at all — it must still surface here
-    pivot.join(movedIn, Seq("source"), "left_outer")
-      .join(movedAway, Seq("source"), "full_outer")
-      .select(col("source") +:
-        Seq("n_added", "n_removed", "n_changed", "n_unchanged",
-          "n_moved_in", "n_moved_away")
-          .map(c => coalesce(col(c), lit(0L)).as(c)): _*)
-      .orderBy(col("source"))
-  }
-
-  /** Small-file compaction: rewrite a parquet directory into
-    * `targetFiles` files (the operational fix for accumulating tiny
-    * micro-batch outputs — at scale, run per partition with dynamic
-    * overwrite so history is untouched).
-    *
-    * Consistency contract: the rename-swap assumes single-writer and
-    * NO concurrent readers — the table path is briefly absent between the
-    * two renames, and a crash in that window leaves the data at
-    * `_precompact` (recover by renaming it back). On object stores (s3a)
-    * "rename" is a non-atomic copy+delete, widening that window to the
-    * copy duration; for concurrently-read tables on object stores use a
-    * versioned directory + pointer file (or a table format with atomic
-    * commits) instead of this swap.
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-              targetFiles: Int): Unit = {
-    // self-heal first: a predecessor crashed inside its swap window leaves
-    // the table at _precompact (or a finished rewrite at _compacting) and
-    // the bare read below would fail with "path does not exist"
-    recoverCompact(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "_compacting")
-    val old = new org.apache.hadoop.fs.Path(path + "_precompact")
-    val dst = new org.apache.hadoop.fs.Path(path)
-    // the path's own filesystem (s3a/hdfs/local), not the default FS
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(path).repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // swap via renames so a crash never leaves the table missing: the old
-    // data stays readable (at dst or at _precompact) until the new copy is
-    // in place; only then is the backup removed
-    fs.delete(old, true)
-    require(fs.rename(dst, old), s"compact: could not stash $dst")
-    if (!fs.rename(tmp, dst)) { // restore on failure
-      fs.rename(old, dst)
-      throw new java.io.IOException(s"compact: rename into $dst failed")
-    }
-    fs.delete(old, true)
-  }
-
-  /** Recover a [[compact]] that crashed inside its swap window: the table
-    * path is absent but the data survives at `_precompact` (and possibly a
-    * complete rewrite at `_compacting`). Prefers the finished rewrite when
-    * its `_SUCCESS` marker proves it complete, else restores the backup.
-    * No-op (false) when the table path exists. Run it before reads/writes
-    * after an unclean compaction shutdown — the single-writer contract
-    * makes this safe to call unconditionally.
-    */
-  def recoverCompact(spark: org.apache.spark.sql.SparkSession,
-                     path: String): Boolean = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "_precompact")
-    val tmp = new org.apache.hadoop.fs.Path(path + "_compacting")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dst)) false
-    else {
-      val tmpComplete =
-        fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
-      val src = if (tmpComplete) tmp else old
-      require(fs.exists(src),
-        s"recoverCompact: neither $dst nor a recovery source exists")
-      require(fs.rename(src, dst), s"recoverCompact: rename $src → $dst failed")
-      fs.delete(if (tmpComplete) old else tmp, true)
-      true
-    }
-  }
-
-  /** Versioned-pointer table layout — the concurrent-reader-safe
-    * compaction the [[compact]] Scaladoc points at. A one-line
+  /** Versioned-pointer table layout — concurrent-reader-safe
+    * publication and compaction without a rename-swap window. A one-line
     * `_current` file names the live version `v-<n>`; every version dir
     * carries a tiny `_MANIFEST` naming the DATA directories (relative to
     * the table root) that make up that snapshot, plus string metadata.
@@ -709,7 +451,7 @@ object Sinks {
       val fs = fsOf(spark, tableP)
       fs.mkdirs(tableP)
       val lock = new org.apache.hadoop.fs.Path(tableP, "_publish.lock")
-      // break a dead publisher's lease: age-gated, like sweepModelTemps —
+      // break a dead publisher's lease: age-gated —
       // a LIVE publisher's lock is younger than lockLeaseMs by contract.
       // The break is rename-then-delete, NOT delete-in-place: two racing
       // breakers each running delete-then-create could interleave so the
@@ -931,7 +673,7 @@ object Sinks {
 
     /** Reader-safe compaction: rewrite the live version into
       * `targetFiles` files as a NEW FULL version and repoint — the table
-      * never vanishes mid-swap, unlike [[Sinks.compact]]'s rename
+      * never vanishes mid-swap, unlike a rename-swap compaction's
       * window. For an append-built table this is the manifest-rewrite
       * half of the contract: the new version's manifest references only
       * the fresh data, and the old commit dirs are GC'd as their
@@ -945,20 +687,6 @@ object Sinks {
         keepVersions, meta = kv)
     }
   }
-
-  /** Re-runnable partitioned write: overwrites only the partitions present
-    * in `df` (the hour being re-processed), leaves the rest of the table
-    * untouched. This is the 100 TB-safe idempotence story: a failed hourly
-    * job re-runs without rewriting history.
-    */
-  def writePartitionedByDay(df: DataFrame, tsCol: String, path: String): Unit =
-    // dynamic overwrite as a PER-WRITE option — mutating the session conf
-    // would silently change every later partitioned write on the session
-    df.withColumn("p_day", date_format(col(tsCol), "yyyy-MM-dd"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("p_day")
-      .parquet(path)
 
   /** Luigi-style memoized ATOMIC string artifact (the reference's
     * `LocalTarget.temporary_path()` + rename for its HTML reports,

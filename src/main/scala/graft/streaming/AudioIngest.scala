@@ -22,19 +22,10 @@ import graft.sources.Multimodal
   */
 object AudioIngest {
 
-  def maxPublished(spark: SparkSession, table: String): Long =
-    VersionedIngest.maxPublished(spark, table)
-
   private def emptyIndex(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Long, Long)].toDF("media_id", "ahash", "batch_id")
   }
-
-  /** The published fingerprint index (media_id, ahash, batch_id),
-    * empty-but-typed before the first publish.
-    */
-  def readIndex(spark: SparkSession, table: String): DataFrame =
-    VersionedIngest.readIndexOr(spark, table, emptyIndex(spark))
 
   /** Process ONE batch of media rows — [[MediaDedupIngest.ingestBatch]]
     * with the audio modality triple. Idempotent per (batch contents,

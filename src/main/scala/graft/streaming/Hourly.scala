@@ -28,24 +28,6 @@ object Hourly {
     * plan is the batch oracle for the streaming test.
     */
   def hourlyAgg(events: DataFrame): DataFrame =
-    hourlyAggImpl(events)
-
-  /** [[hourlyAgg]]'s OUTPUT schema, derived by running the real plan over
-    * an empty events-shaped frame — never restated by hand, so a renamed
-    * or added aggregate column flows into every consumer (the explicit-
-    * schema sink read below would otherwise silently drift).
-    */
-  def hourlyAggSchema(spark: SparkSession): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("ts", TimestampType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType))))
-    hourlyAggImpl(empty).schema
-  }
-
-  private def hourlyAggImpl(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -92,44 +74,4 @@ object Hourly {
     }
   }
 
-  /** File-source streaming variant over the events parquet directory —
-    * `AvailableNow` replays the whole directory as micro-batches, the
-    * streaming analog of the reference's scheduled hourly run.
-    */
-  def streamFromParquet(spark: SparkSession, dir: String,
-                        checkpoint: String, out: String): Unit =
-    startFromParquet(spark, dir, checkpoint, out).awaitTermination()
-
-  /** Streaming twin of `Graft.writeReportDocument` (SURVEY §2.9 meets the
-    * S7 idempotence contract, rds_pgbadger.py:25-31,44-49): drain whatever
-    * the source directory holds through the checkpointed sink (committed
-    * batches are never recomputed — the stream's memo), then render the
-    * sink's COMMITTED view into the one memoized atomic HTML artifact.
-    * Re-running after any interruption resumes the stream where its
-    * checkpoint stopped and republishes the report only if absent.
-    * Returns true when the HTML artifact was written this call.
-    */
-  def writeStreamingReport(spark: SparkSession, dir: String,
-                           checkpoint: String, out: String,
-                           reportPath: String): Boolean = {
-    startFromParquet(spark, dir, checkpoint, out).awaitTermination()
-    // Bounded by construction: one row per closed (hour, event_type).
-    // The sink may legitimately hold ZERO committed files (every window
-    // still open under the watermark) — bare `read.parquet` would fail
-    // SCHEMA INFERENCE on that, and catching its AnalysisException would
-    // also swallow GENUINE read failures (corrupt footer, bad metadata)
-    // into a wrong-but-sticky memoized header-only report. Supplying the
-    // schema (derived from the real aggregation plan) removes inference
-    // entirely: an empty committed view reads as an empty frame, and any
-    // exception left is a real error that must propagate before the
-    // memoized artifact is published.
-    val committed = spark.read.schema(hourlyAggSchema(spark)).parquet(out)
-      // report sections are deterministic everywhere else (every batch
-      // section in Reports ends in a total orderBy); without this the
-      // HTML row order tracks file-enumeration order and differs run to run
-      .orderBy(col("hour_start"), col("event_type"))
-    graft.sources.Sinks.writeStringIfAbsent(spark, reportPath,
-      graft.Graft.renderReportHtml("graft streaming hourly report",
-        Map("hourly" -> committed)))
-  }
 }

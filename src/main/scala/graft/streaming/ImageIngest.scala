@@ -31,19 +31,10 @@ import graft.sources.Multimodal
   */
 object ImageIngest {
 
-  def maxPublished(spark: SparkSession, table: String): Long =
-    VersionedIngest.maxPublished(spark, table)
-
   private def emptyIndex(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Long, Long)].toDF("media_id", "phash", "batch_id")
   }
-
-  /** The published signature index (media_id, phash, batch_id),
-    * empty-but-typed before the first publish.
-    */
-  def readIndex(spark: SparkSession, table: String): DataFrame =
-    VersionedIngest.readIndexOr(spark, table, emptyIndex(spark))
 
   /** Process ONE batch of media rows: dHash the images, screen against
     * the index + the batch itself, append the survivors' signatures,

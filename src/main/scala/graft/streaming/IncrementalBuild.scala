@@ -39,8 +39,8 @@ import graft.sources.Sinks
   *     through [[Sinks.publishTrainingBuild]] — so release ≡ one-shot
   *     build BY CONSTRUCTION (IncrementalBuildSpec pins it bit-for-bit
   *     against batch-mode n99 on the same static corpus), release
-  *     cost is paid once per release (not per batch), and release
-  *     diffs ([[Sinks.releaseDiff]]) read across versions.
+  *     cost is paid once per release (not per batch), and every
+  *     retained version stays readable ([[Sinks.Versioned.readVersion]]).
   *
   * Arrival order is part of the contract (the [[SimhashIngest]]
   * policy): the greedy keeper keeps FIRST arrival, which equals n99's
@@ -81,9 +81,9 @@ object IncrementalBuild {
     * [[Sinks.publishTrainingBuild]]. Returns the published build.
     *
     * `keepVersions` is the retention knob: releases past it are pruned
-    * and [[Sinks.releaseDiff]] can only read retained versions — size
-    * it to the diff horizon the release cadence needs (the default 2
-    * covers adjacent-release diffs only).
+    * and only retained versions can be read back — size it to the
+    * horizon the release cadence needs (the default 2 keeps the
+    * current release and its predecessor).
     */
   def publishRelease(spark: SparkSession, base: String, table: String,
                      n: Int = 5, minDf: Int = 2, tau: Double = 0.5,
@@ -139,8 +139,8 @@ object IncrementalBuild {
     *
     * Cadence releases fire on batch-count multiples, so a run whose
     * batch count is NOT a multiple of `releaseEvery` ends with TAIL
-    * batches ingested but unreleased — use [[runAvailableNow]], which
-    * awaits termination and flushes exactly when a tail exists.
+    * batches ingested but unreleased — the caller covers them with one
+    * [[publishRelease]] after the query terminates.
     */
   def startFromParquet(spark: SparkSession, dir: String, checkpoint: String,
                        base: String, table: String, maxDist: Int = 3,
@@ -176,63 +176,5 @@ object IncrementalBuild {
         ()
       }
       .start()
-  }
-
-  /** [[startFromParquet]], awaited, with the TAIL flush: when the run's
-    * final batch id is not on the release cadence, everything after the
-    * last cadence release is ingested but absent from the newest
-    * version — this cuts one more release exactly in that case, so "the
-    * latest release of a completed run" always covers every ingested
-    * batch. Returns the final release when one was cut here.
-    */
-  def runAvailableNow(spark: SparkSession, dir: String, checkpoint: String,
-                      base: String, table: String, maxDist: Int = 3,
-                      glob: String = "*.parquet",
-                      maxFilesPerTrigger: Option[Int] = None,
-                      schema: Option[org.apache.spark.sql.types.StructType] =
-                        None,
-                      releaseEvery: Int = 0,
-                      keepVersions: Int = 2,
-                      compactEvery: Int = 0,
-                      compactTargetFiles: Int = 8,
-                      timeoutMs: Long = 600000L): Option[DataFrame] = {
-    val q = startFromParquet(spark, dir, checkpoint, base, table, maxDist,
-      glob, maxFilesPerTrigger, schema, releaseEvery, keepVersions,
-      compactEvery, compactTargetFiles)
-    // the Boolean matters: a still-active stream past the timeout would
-    // make the tail flush below a SECOND writer on the same Versioned
-    // tables (the stream's own cadence release could race it) and let it
-    // snapshot a partially-ingested survivor store — stop the query and
-    // refuse rather than publish concurrently
-    val done = q.awaitTermination(timeoutMs)
-    q.exception.foreach(throw _)
-    if (!done) {
-      q.stop()
-      throw new IllegalStateException(
-        s"incremental build still active after ${timeoutMs}ms — tail " +
-          "flush refused (it would run concurrently with the stream's " +
-          "own cadence releases); raise timeoutMs or release manually")
-    }
-    val lastBatch = SimhashIngest.maxPublished(spark, sigIndexTable(base))
-    // every release stamps the last batch it covers into its manifest
-    // meta; a re-invocation of a COMPLETED run (no new files) then sees
-    // the live release already covering lastBatch and publishes nothing,
-    // instead of re-cutting an identical version per call. Guard the
-    // existence first (the maxPublished convention): a run that never
-    // cut a cadence release (releaseEvery = 0, or fewer batches than
-    // the cadence) has no _current pointer yet, and an unguarded meta
-    // read would crash exactly the path whose tail flush publishes the
-    // FIRST release.
-    val ptr = new org.apache.hadoop.fs.Path(table, "_current")
-    val covered = ptr.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(ptr) &&
-      Sinks.Versioned.meta(spark, table).get("lastBatch")
-        .exists(_.toLong >= lastBatch)
-    val tail = releaseEvery > 0 && lastBatch >= 0 &&
-      (lastBatch + 1) % releaseEvery != 0 && !covered
-    if (tail)
-      Some(publishRelease(spark, base, table, keepVersions = keepVersions,
-        params = Map("lastBatch" -> lastBatch.toString)))
-    else None
   }
 }

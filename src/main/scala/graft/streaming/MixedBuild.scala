@@ -108,7 +108,8 @@ object MixedBuild {
     * returned accounting); and the gate setting is part of the stream's
     * IDENTITY, like a state schema — a batch replayed under a flipped
     * setting disagrees with what its stores hold, so flipping requires
-    * a fresh checkpoint + base (the Sessions state-schema precedent).
+    * a fresh checkpoint + base, as a changed streaming state schema
+    * does.
     * As a guard rail the gate-off path still CLEARS the batch's
     * rejects partition (dynamic overwrite cannot rewrite a partition
     * absent from empty data): an on → off replay then at least cannot
@@ -331,8 +332,8 @@ object MixedBuild {
     * deterministic and engine-stable, deliberately payload-agnostic).
     *
     * Layout discipline (round-14 verdict #1): the frame HASH-clusters
-    * on (kind, shard) and sorts WITHIN partitions — the
-    * [[Sinks.writeShards]] discipline, NOT a global orderBy. A global
+    * on (kind, shard) and sorts WITHIN partitions, NOT a global
+    * orderBy. A global
     * sort is a RangePartitioning exchange: it SAMPLES the child to
     * pick range boundaries (a second pass over the release subtree)
     * and funnels every payload byte through skew-prone range buckets —
@@ -340,11 +341,11 @@ object MixedBuild {
     * Hash clustering shuffles each payload byte exactly once with no
     * sampling pass, assignment is murmur3(kind, shard) — deterministic
     * — and each output file is internally sorted by (kind, shard,
-    * doc_id), so file content is run-stable (the epoch-shuffle
-    * determinism [[Sinks.writeShards]] pins). The tradeoff, stated:
-    * distinct (kind, shard) cells can collide birthday-style into one
-    * partition (writeShards avoids that with a range partition — fine
-    * there, its rows are payload-free text), costing some write-task
+    * doc_id), so file content is run-stable (epoch-shuffle
+    * determinism). The tradeoff, stated: distinct (kind, shard) cells
+    * can collide birthday-style into one partition (a range partition
+    * avoids that — fine for payload-free text rows, not for media
+    * payloads, for the reasons above), costing some write-task
     * balance; with cells ≈ tasks that is bounded and the release
     * reader filters on the shard COLUMN, not file layout. Plan pin:
     * MixedBuildSpec asserts no RangePartitioning exchange carries the

@@ -27,20 +27,11 @@ import graft.sources.Multimodal
   */
 object VideoIngest {
 
-  def maxPublished(spark: SparkSession, table: String): Long =
-    VersionedIngest.maxPublished(spark, table)
-
   private def emptyIndex(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Int, Long, Long)]
       .toDF("media_id", "frame_idx", "fhash", "batch_id")
   }
-
-  /** The published per-frame index (media_id, frame_idx, fhash,
-    * batch_id), empty-but-typed before the first publish.
-    */
-  def readIndex(spark: SparkSession, table: String): DataFrame =
-    VersionedIngest.readIndexOr(spark, table, emptyIndex(spark))
 
   /** Process ONE batch of media rows — [[MediaDedupIngest.ingestBatch]]
     * with the video modality triple. Idempotent per (batch contents,

@@ -7,23 +7,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Minimal accessor for the `private[sql]` Column ↔ Expression conversions
   * (Spark 4 moved Column onto ColumnNode; `ExpressionUtils` is the classic
   * bridge). Lives under `org.apache.spark.sql` purely for access — the
-  * standard pattern for libraries that register custom Catalyst
+  * standard pattern for libraries that build custom Catalyst
   * expressions.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a builder under `name` in the session's function registry. */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
-
-  /** Extract an integer literal argument (e.g. the seed/window counts). */
-  def intLiteral(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other => other.eval(null).asInstanceOf[Number].intValue()
-  }
 }

@@ -333,16 +333,6 @@ class DedupSpec extends SparkSpec {
     } finally spark.conf.unset(graft.ops.Checkpoints.ReliableConf)
   }
 
-  test("custom ShingleGenerator (UDTF) ≡ transform+explode composition") {
-    val viaGen = docs.select(col("doc_id"),
-        graft.functions.ShingleGenerator.shingles(col("text")).as("sh"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).sorted
-    val viaExplode = docs.select(col("doc_id"),
-        explode(graft.ops.Dedup.shingles).as("sh"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).sorted
-    assert(viaGen.toSeq === viaExplode.toSeq)
-  }
-
   test("property: large-star/small-star CC ≡ min-label propagation") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val edgesGen = Gen.listOfN(15, for {
@@ -973,7 +963,7 @@ class DedupSpec extends SparkSpec {
       .agg(bitSums.head, bitSums.tail: _*)
       .select(col("doc_id"), sig.as("simhash"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaExpr = Dedup.simhashWide(tricky).collect()
+    val viaExpr = Dedup.simhashWideRaw(tricky).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaExpr === compositional)
   }
@@ -983,7 +973,7 @@ class DedupSpec extends SparkSpec {
     val d = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
     val got = Dedup.simhashNearDupPairsWide(d).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val h = Dedup.simhashWide(d).collect()
+    val h = Dedup.simhashWideRaw(d).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val brute = (for {
       (ida, ha) <- h; (idb, hb) <- h if ida < idb
@@ -1017,9 +1007,9 @@ class DedupSpec extends SparkSpec {
     val all = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
     val b = all.filter(col("doc_id") % 5 === 0)
     val c = all.filter(col("doc_id") % 5 =!= 0)
-    val hb = Dedup.simhashWide(b).collect()
+    val hb = Dedup.simhashWideRaw(b).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    val hc = Dedup.simhashWide(c).collect()
+    val hc = Dedup.simhashWideRaw(c).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val want = hb.filter { case (id, h) =>
       !hc.exists { case (_, h2) => java.lang.Long.bitCount(h ^ h2) <= 3 } &&
@@ -1048,7 +1038,7 @@ class DedupSpec extends SparkSpec {
       }
     }
     val h32 = Dedup.simhash(d).collect().map(_.getLong(1)).toSeq
-    val h60 = Dedup.simhashWide(d).collect().map(_.getLong(1)).toSeq
+    val h60 = Dedup.simhashWideRaw(d).collect().map(_.getLong(1)).toSeq
     for ((b, st) <- brute(h32, 32)) assert(got((32, b)) === st)
     for ((b, st) <- brute(h60, 60)) assert(got((60, b)) === st)
     // the decision the harness exists to surface, as data

@@ -51,35 +51,6 @@ class IncrementalBuildSpec extends SparkSpec {
       === asRows(oneShot))
   }
 
-  test("runAvailableNow with no cadence release (releaseEvery=0, never-" +
-    "published table) completes and returns None — the covered check " +
-    "must not crash on a missing _current pointer; and the FIRST " +
-    "release of a short run comes from the tail flush") {
-    val tmp = Files.createTempDirectory("graft_incbuild_tail").toString
-    val docs = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("text"), col("source")).limit(120)
-    new java.io.File(s"$tmp/in").mkdirs()
-    stageParquetFile(docs, s"$tmp/stage", s"$tmp/in", "b0", 1000000L)
-    // releaseEvery = 0: no release table ever exists — must not throw
-    val none = IncrementalBuild.runAvailableNow(spark, s"$tmp/in",
-      s"$tmp/ck0", s"$tmp/state0", s"$tmp/rel0", maxDist = 0,
-      releaseEvery = 0)
-    assert(none.isEmpty)
-    // one batch, cadence 3: no cadence release fires — the tail flush
-    // must publish the FIRST release (the pre-guard code crashed here)
-    val tail = IncrementalBuild.runAvailableNow(spark, s"$tmp/in",
-      s"$tmp/ck1", s"$tmp/state1", s"$tmp/rel1", maxDist = 0,
-      releaseEvery = 3)
-    assert(tail.isDefined)
-    assert(Sinks.Versioned.versions(spark, s"$tmp/rel1") === Seq(1L))
-    // re-invoking the completed run publishes nothing new
-    val again = IncrementalBuild.runAvailableNow(spark, s"$tmp/in",
-      s"$tmp/ck1", s"$tmp/state1", s"$tmp/rel1", maxDist = 0,
-      releaseEvery = 3)
-    assert(again.isEmpty)
-    assert(Sinks.Versioned.versions(spark, s"$tmp/rel1") === Seq(1L))
-  }
-
   test("safeSplits release equals batch-mode trainingDataBuildSafe " +
     "(n142) over the same survivor store, and stamps the mode") {
     val tmp = Files.createTempDirectory("graft_incbuild_safe").toString
@@ -126,15 +97,15 @@ class IncrementalBuildSpec extends SparkSpec {
         docs.filter(col("doc_id") =!= 200L))))
   }
 
-  test("runAvailableNow end-to-end: stream over batch files ingests " +
-    "everything, releases at cadence, flushes the TAIL batch, and the " +
-    "final release equals batch-mode n99") {
+  test("stream over batch files ingests everything, releases at " +
+    "cadence, and a release cut after the TAIL batch equals batch-mode " +
+    "n99") {
     val tmp = Files.createTempDirectory("graft_incbuild_st").toString
     val docs = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"), col("source"))
     // FIVE batch files at releaseEvery=2: cadence releases fire after
-    // batches 1 and 3, batch 4 is the tail the flush must cover —
-    // without it the newest release would silently exclude it
+    // batches 1 and 3, batch 4 is the tail only a caller's release
+    // covers
     val ids = docs.select("doc_id").as[Long].collect().sorted
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$tmp/in"))
@@ -143,19 +114,24 @@ class IncrementalBuildSpec extends SparkSpec {
         stageParquetFile(docs.filter(col("doc_id").isin(chunk: _*)),
           s"$tmp/stage_b$i", s"$tmp/in", s"b$i", (i + 1) * 1000000L)
       }
-    val flushed = graft.streaming.IncrementalBuild.runAvailableNow(spark,
+    val q = graft.streaming.IncrementalBuild.startFromParquet(spark,
       s"$tmp/in", s"$tmp/ckpt", s"$tmp/state", s"$tmp/release",
       maxDist = 0, maxFilesPerTrigger = Some(1), releaseEvery = 2,
       keepVersions = 4)
-    assert(flushed.isDefined, "5 batches at cadence 2 must leave a tail")
+    assert(q.awaitTermination(600000), "ingest stream still running")
+    assert(q.exception.isEmpty, s"ingest stream failed: ${q.exception}")
+    assert(Sinks.Versioned.versions(spark, s"$tmp/release").size === 2,
+      "5 batches at cadence 2: two cadence releases")
+    graft.streaming.IncrementalBuild.publishRelease(spark, s"$tmp/state",
+      s"$tmp/release", keepVersions = 4)
     val versions = Sinks.Versioned.versions(spark, s"$tmp/release")
     assert(versions.size === 3,
-      s"two cadence releases + the tail flush: $versions")
+      s"two cadence releases + the tail release: $versions")
     val last = Sinks.Versioned.readVersion(spark, s"$tmp/release",
       versions.max)
     assert(asRows(last) === asRows(TextAnalysis.trainingDataBuild(docs)))
-    // the pre-flush cadence release must NOT already cover the tail —
-    // the flush is load-bearing, not a duplicate version
+    // the last cadence release must NOT already cover the tail — the
+    // tail release is load-bearing, not a duplicate version
     assert(asRows(Sinks.Versioned.readVersion(spark, s"$tmp/release",
         versions.sorted.apply(1)))
       !== asRows(last))
@@ -178,12 +154,13 @@ class IncrementalBuildSpec extends SparkSpec {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(table, "_publish.lock"),
       "dead-owner".getBytes("UTF-8"))
-    val flushed = graft.streaming.IncrementalBuild.runAvailableNow(spark,
+    val q = graft.streaming.IncrementalBuild.startFromParquet(spark,
       s"$tmp/in", s"$tmp/ckpt", s"$tmp/state", table,
       maxDist = 0, maxFilesPerTrigger = Some(1), releaseEvery = 1)
+    assert(q.awaitTermination(600000), "ingest stream still running")
+    assert(q.exception.isEmpty, s"ingest stream failed: ${q.exception}")
     // one batch at cadence 1: the cadence release fired THROUGH the
-    // broken lease, no tail remains
-    assert(flushed.isEmpty)
+    // broken lease
     assert(Sinks.Versioned.versions(spark, table) === Seq(1L))
     assert(Sinks.Versioned.readVersion(spark, table, 1L).count() ===
       TextAnalysis.trainingDataBuild(docs).count())

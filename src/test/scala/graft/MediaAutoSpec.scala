@@ -8,9 +8,9 @@ import graft.sources.Multimodal
 
 /** The measured media collapse autos (m14 family): both fronts of the
   * member-level pair relation bit-equal per modality and dup regime,
-  * branch choice pinned per regime, the lazy FromInflation halves
-  * constructing with ZERO Spark jobs, and the cardInflation seam
-  * feeding them from the m13 card's measured number.
+  * branch choice pinned per regime, and the lazy FromInflation half
+  * constructing with ZERO Spark jobs from the m13 card's measured
+  * number.
   */
 class MediaAutoSpec extends SparkSpec {
 
@@ -76,24 +76,19 @@ class MediaAutoSpec extends SparkSpec {
       d, "sig")))
   }
 
-  test("the lazy FromInflation halves (signature AND video clip forms) " +
-    "construct and plan with ZERO Spark jobs; cardInflation feeds them " +
-    "the m13 card's measured number and the answers equal the fronts") {
+  test("the lazy FromInflation half constructs and plans with ZERO Spark " +
+    "jobs; fed the m13 card's measured number, its answer equals the " +
+    "plain front") {
     val ph = graft.ops.Checkpoints.cut(Multimodal.imagePhash(
       Multimodal.mediaWithEditedImages(spark, dir)))
-    val fh = graft.ops.Checkpoints.cut(Multimodal.videoFrameHashes(
-      Multimodal.mediaWithEditedVideos(spark, dir)))
-    // the EAGER reads, paid BEFORE the listener: the card is the m13
-    // artifact a pipeline already has; cardInflation collects one row
-    val card = Multimodal.mediaDedupCard(
+    // the EAGER read, paid BEFORE the listener: the card is the m13
+    // artifact a pipeline already has
+    val infl = Multimodal.mediaDedupCard(
       Multimodal.mediaWithEditedImages(spark, dir)
-        .filter(col("kind") === "image")
-        .unionByName(Multimodal.mediaWithEditedVideos(spark, dir)))
-      .cache()
-    val inflImg = Multimodal.cardInflation(card, "image")
-    val inflVid = Multimodal.cardInflation(card, "video")
-    assert(inflImg >= 2.0 && inflVid >= 2.0,
-      s"planted corpora must measure dup-heavy, got $inflImg / $inflVid")
+        .filter(col("kind") === "image"))
+      .filter(col("kind") === "image").select(col("inflation"))
+      .head().getDouble(0)
+    assert(infl >= 2.0, s"planted corpus must measure dup-heavy, got $infl")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -101,78 +96,17 @@ class MediaAutoSpec extends SparkSpec {
         jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
-    val (lazySig, lazyVid) = try {
-      def gated[T](label: String)(build: => T): T = {
-        val before = jobs.get()
-        val r = build
-        Thread.sleep(1000) // async listener delivery; zero expected, so
-                           // the sleep can only catch a regression
-        assert(jobs.get() === before,
-          s"building the lazy $label form ran Spark jobs")
-        r
-      }
-      val s = gated("media signature pairs") {
-        val df = Multimodal.mediaNearDupPairsFromInflation(
-          ph, "phash", inflImg)
-        df.queryExecution.executedPlan; df
-      }
-      val v = gated("video clip pairs") {
-        val df = Multimodal.videoClipPairsFromInflation(fh, inflVid)
-        df.queryExecution.executedPlan; df
-      }
-      (s, v)
+    val lazySig = try {
+      val df = Multimodal.mediaNearDupPairsFromInflation(ph, "phash", infl)
+      df.queryExecution.executedPlan
+      Thread.sleep(1000) // async listener delivery; zero expected, so
+                         // the sleep can only catch a regression
+      assert(jobs.get() === 0,
+        "building the lazy media signature pairs form ran Spark jobs")
+      df
     } finally spark.sparkContext.removeSparkListener(listener)
     // the card-fed choice cannot change any answer
     assert(rows(lazySig) ===
       rows(Multimodal.mediaSignaturePairsPlain(ph, "phash")))
-    assert(rows(lazyVid) === rows(Multimodal.videoClipPairsPlain(fh)))
-    card.unpersist()
-  }
-
-  test("videoClipPairs: expanded ≡ plain on a gradient fixture with " +
-    "RE-POSTED clips (identical frame sequences), a 2-bit near twin, a " +
-    "partial overlap, and a far clip — within-group self stats count " +
-    "ordered frame combinations exactly as the plain front does") {
-    import org.apache.spark.sql.Row
-    def clip(patterns: Long*): Array[Byte] =
-      Multimodal.packGfv(patterns.map(Multimodal.gradientPng))
-    val P = Seq(0x0000000000000000L, 0xFFFFFFFFFFFFFFFFL,
-      0x00000000FFFFFFFFL, 0xFFFFFFFF00000000L, 0x0F0F0F0F0F0F0F0FL)
-    val media = spark.createDataFrame(java.util.Arrays.asList(
-      Row(1L, "video", clip(P(0), P(1)), Row(9, 8, null)),
-      Row(2L, "video", clip(P(0), P(1)), Row(9, 8, null)), // re-post of 1
-      Row(3L, "video", clip(P(0), P(1)), Row(9, 8, null)), // re-post of 1
-      Row(4L, "video", clip(P(0) ^ 0x3L, P(2)), Row(9, 8, null)), // 2-bit
-      Row(5L, "video", clip(P(3), P(1)), Row(9, 8, null)), // shares P(1)
-      Row(6L, "video", clip(P(4)), Row(9, 8, null))), // far, 1 frame
-      Multimodal.mediaSchema)
-    val fh = Multimodal.videoFrameHashes(media)
-    val plain = rows(Multimodal.videoClipPairsPlain(fh))
-    assert(rows(Multimodal.videoClipPairsExpanded(fh)) === plain)
-    // sanity on the fixture itself: the re-post group pairs within
-    // itself (2 frame-combos each at hamming 0: (0,0) and (1,1) — the
-    // ordered-combination count the self join must reproduce), and the
-    // far clip pairs with nothing
-    val byPair = Multimodal.videoClipPairsPlain(fh).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        (r.getLong(2), r.getInt(3))).toMap
-    assert(byPair((1L, 2L)) === ((2L, 0)))
-    assert(byPair((1L, 3L)) === ((2L, 0)))
-    assert(byPair((2L, 3L)) === ((2L, 0)))
-    assert(byPair((1L, 4L))._2 === 2) // the near twin's min hamming
-    assert(!byPair.keys.exists(p => p._1 == 6L || p._2 == 6L))
-    // the auto on this dup-heavy fixture picks the collapse and agrees
-    val auto = Multimodal.videoClipPairsAuto(fh)
-    assert(auto.queryExecution.optimizedPlan.toString.contains(
-      "collect_list"))
-    assert(rows(auto) === plain)
-  }
-
-  test("videoClipPairs: expanded ≡ plain on the real sf0.001 planted " +
-    "video corpus") {
-    val fh = graft.ops.Checkpoints.cut(Multimodal.videoFrameHashes(
-      Multimodal.mediaWithEditedVideos(spark, dir)))
-    assert(rows(Multimodal.videoClipPairsExpanded(fh)) ===
-      rows(Multimodal.videoClipPairsPlain(fh)))
   }
 }

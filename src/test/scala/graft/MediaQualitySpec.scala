@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Multimodal
 
-/** Media quality gating (m15) and media decontamination (m16/m17):
-  * planted degenerate media trip exactly their flags, the gate ships
-  * exactly the passing rows, the audit plans with no exchange (pure
-  * map-side column work over the decode pass), and the decontamination
+/** Media quality audit (m15) and media decontamination (m16/m17):
+  * planted degenerate media trip exactly their flags, the audit plans
+  * with no exchange (pure map-side column work over the decode pass),
+  * and the decontamination
   * kept-sets equal brute force at both signature granularities.
   */
 class MediaQualitySpec extends SparkSpec {
@@ -66,8 +66,7 @@ class MediaQualitySpec extends SparkSpec {
     Row(14L, null, Multimodal.pngBytes(3L), null))
 
   test("mediaQualityAudit: planted degenerates trip exactly their " +
-    "flags; healthy rows of every kind pass; the gate ships exactly " +
-    "the passing rows") {
+    "flags; healthy rows of every kind pass") {
     val audit = Multimodal.mediaQualityAudit(media(degenerates))
     val got = audit.collect().map(r => r.getLong(0) ->
       (r.getSeq[String](2).toSet, r.getBoolean(3))).toMap
@@ -82,29 +81,6 @@ class MediaQualitySpec extends SparkSpec {
       assert(got(id)._1 === flags, s"media_id $id")
       assert(got(id)._2 === flags.isEmpty, s"pass for media_id $id")
     }
-    val kept = Multimodal.mediaQualityGate(media(degenerates))
-      .select(col("media_id")).collect().map(_.getLong(0)).toSet
-    assert(kept === Set(1L, 7L, 10L))
-  }
-
-  test("the gate keys on (media_id, KIND): a failing row never rides " +
-    "through on a passing same-id row of another kind (ids are only " +
-    "unique per kind across the mixed stores — the MixedBuild " +
-    "contract)") {
-    val rows = Seq(
-      // id 21 as a healthy image AND as a silent (failing) audio clip
-      Row(21L, "image", Multimodal.pngBytes(0L), Row(4, 4, null)),
-      Row(21L, "audio", Multimodal.pcmToWav(new Array[Short](512),
-        Multimodal.WavRate), Row(null, null, Multimodal.WavRate)),
-      // and the mirror: failing image, healthy audio, same id
-      Row(22L, "image", png(8, 8)((_, _) => 0x808080), Row(8, 8, null)),
-      Row(22L, "audio", Multimodal.pcmToWav(
-        Multimodal.ladderPcm(Multimodal.AudioSurvivorBits),
-        Multimodal.WavRate), Row(null, null, Multimodal.WavRate)))
-    val kept = Multimodal.mediaQualityGate(media(rows))
-      .select(col("media_id"), col("kind")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(kept === Set((21L, "image"), (22L, "audio")))
   }
 
   test("the audit is map-side pure: no exchange anywhere in its plan " +

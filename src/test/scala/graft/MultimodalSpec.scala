@@ -103,7 +103,7 @@ class MultimodalSpec extends SparkSpec {
       (a, ha) <- sig; (b, hb) <- sig if a < b
       if java.lang.Long.bitCount(ha ^ hb) <= 4
     } yield (a, b, java.lang.Long.bitCount(ha ^ hb))).toSet
-    val got = Multimodal.imageNearDupPairs(phash, 4).collect()
+    val got = Multimodal.mediaSignaturePairsPlain(phash, "phash", 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got === brute,
       "the permuted pigeonhole front must have exact recall at <= 4")
@@ -278,7 +278,7 @@ class MultimodalSpec extends SparkSpec {
       (a, ha) <- sig; (b, hb) <- sig if a < b
       if java.lang.Long.bitCount(ha ^ hb) <= 4
     } yield (a, b, java.lang.Long.bitCount(ha ^ hb))).toSet
-    val got = Multimodal.audioNearDupPairs(ah, 4).collect()
+    val got = Multimodal.mediaSignaturePairsPlain(ah, "ahash", 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got === brute,
       "the permuted pigeonhole front must have exact recall at <= 4")

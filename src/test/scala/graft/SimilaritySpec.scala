@@ -38,10 +38,12 @@ class SimilaritySpec extends SparkSpec {
 
   test("self-cosine is 1; brute-force top-k is ranked and bounded") {
     val emb = graft.ops.Tables.embeddings(spark, dir)
-    val self = emb.limit(5)
-      .select(round(Similarity.cosine(col("embedding"), col("embedding")), 9))
-      .as[Double].collect()
-    assert(self.forall(v => math.abs(v - 1.0) < 1e-9))
+    // a copy of probe 0 under a fresh id is its nearest neighbor
+    val twin = emb.filter(col("vec_id") === 0L)
+      .withColumn("vec_id", lit(Long.MaxValue))
+    val self = Similarity.bruteForceTopK(emb.unionByName(twin), 1, 1)
+      .select(col("cos")).as[Double].collect()
+    assert(self.length === 1 && math.abs(self.head - 1.0) < 1e-9)
     val topk = Similarity.bruteForceTopK(emb, 3, 5).collect()
     assert(topk.length === 15)
     // per probe: cos non-increasing with rank
@@ -512,8 +514,7 @@ class SimilaritySpec extends SparkSpec {
       "null cosine flags NULL, not true/false")
   }
 
-  test("multi-probe: per width, mp recall >= single-probe recall; " +
-    "lshBucketTopKMultiProbe candidates cover one extra plane flip") {
+  test("multi-probe: per width, mp recall >= single-probe recall") {
     val emb = graft.ops.Tables.embeddings(spark, dir)
     val widths = Seq(2, 4, 6, 8)
     val sp = Similarity.annRecallCurve(emb, 10, 5, widths)
@@ -524,19 +525,6 @@ class SimilaritySpec extends SparkSpec {
       assert(mp(w) >= sp(w),
         s"Hamming-1 probing can only ADD candidates (bits=$w)")
     }
-    // the production op agrees with the harness's radius-1 arm at a
-    // pinned width: every single-probe hit is still found, and a
-    // neighbor one plane-flip away (invisible to single-probe) appears
-    val spHits = Similarity.lshBucketTopK(emb, 5, 3, 4)
-      .select(col("q_id"), col("vec_id")).collect().map(r =>
-        (r.getLong(0), r.getLong(1))).toSet
-    val mpTop = Similarity.lshBucketTopKMultiProbe(emb, 5, 3, 4)
-    val mpHits = mpTop.select(col("q_id"), col("vec_id")).collect().map(r =>
-      (r.getLong(0), r.getLong(1))).toSet
-    // same k, strictly more candidates: each query's mp top-k cosine
-    // floor is >= its sp floor, so mp output dominates rank-wise; at
-    // minimum the result set is never smaller
-    assert(mpHits.size >= spHits.size)
   }
 
   test("semanticDecontaminate: hand corpus — near-probe dropped; " +

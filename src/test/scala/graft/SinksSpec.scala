@@ -20,8 +20,8 @@ class QuotaFailLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     else super.create(f, overwrite)
 }
 
-/** S5-S7 sink semantics: memoized write (Luigi `output().exists()` skip)
-  * and dynamic-partition idempotent re-run.
+/** S5-S7 sink semantics: memoized write (Luigi `output().exists()` skip),
+  * memoized model materialization, and the versioned-pointer tables.
   */
 class SinksSpec extends SparkSpec {
   import spark.implicits._
@@ -117,78 +117,6 @@ class SinksSpec extends SparkSpec {
     // and the repaired model is now served without re-training
     Sinks.materializeModel(spark, dir)(train)
     assert(trained === 1)
-  }
-
-  test("clustered write produces disjoint per-file key ranges") {
-    val dir = Files.createTempDirectory("graft_cluster").toString + "/t"
-    val li = graft.ops.Tables.lineitem(spark, "/root/testdata/sf0.001")
-    Sinks.writeClusteredBy(li, "l_orderkey", 4, dir)
-    // per-file min/max must not overlap across files
-    val ranges = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map { f =>
-        val r = spark.read.parquet(f.getAbsolutePath)
-          .agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        (r.getLong(0), r.getLong(1))
-      }.sortBy(_._1)
-    assert(ranges.length === 4)
-    ranges.sliding(2).foreach { case Array((_, hi), (lo, _)) =>
-      assert(hi <= lo, s"overlapping ranges: $hi vs $lo")
-    }
-    assert(spark.read.parquet(dir).count() === li.count())
-  }
-
-  test("compaction collapses many small files without changing data") {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
-    spark.range(1000).repartition(50).write.parquet(dir)
-    val before = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(before >= 40)
-    Sinks.compact(spark, dir, 2)
-    val after = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(after <= 2)
-    assert(spark.read.parquet(dir).count() === 1000L)
-  }
-
-  test("recoverCompact restores a compaction crashed between its renames") {
-    val dir = Files.createTempDirectory("graft_recover").toString + "/t"
-    spark.range(500).write.parquet(dir)
-    // simulate the crash window: the stash rename happened, the rename
-    // into place did not — the table path is absent, data at _precompact
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + "_precompact")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir)))
-    assert(Sinks.recoverCompact(spark, dir), "recovery must restore")
-    assert(spark.read.parquet(dir).count() === 500L)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "_precompact")))
-    assert(!Sinks.recoverCompact(spark, dir), "healthy table is a no-op")
-  }
-
-  test("compact self-heals after a predecessor crashed mid-swap") {
-    val dir = Files.createTempDirectory("graft_heal").toString + "/t"
-    spark.range(400).repartition(10).write.parquet(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash window: table stashed, rewrite never landed
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + "_precompact")))
-    Sinks.compact(spark, dir, 2) // must recover, then compact
-    assert(spark.read.parquet(dir).count() === 400L)
-    assert(new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet")) <= 2)
-  }
-
-  test("recoverCompact prefers a COMPLETE rewrite over the backup") {
-    val dir = Files.createTempDirectory("graft_recover2").toString + "/t"
-    // crash after the rewrite finished (with _SUCCESS) and the old data
-    // was stashed, but before the rewrite was renamed into place
-    spark.range(300).repartition(2).write.parquet(dir + "_compacting")
-    spark.range(999).write.parquet(dir + "_precompact")
-    assert(Sinks.recoverCompact(spark, dir))
-    assert(spark.read.parquet(dir).count() === 300L,
-      "the finished rewrite is the freshest complete state")
   }
 
   test("versioned-pointer table: publish/read round-trips and prunes") {
@@ -492,24 +420,6 @@ class SinksSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
-  test("sweepModelTemps removes only this model's STALE train temps") {
-    val base = Files.createTempDirectory("graft_sweep").toString
-    val model = s"$base/m"
-    def mk(name: String, ageMs: Long): java.io.File = {
-      val d = new java.io.File(base, name)
-      assert(d.mkdir())
-      assert(d.setLastModified(System.currentTimeMillis() - ageMs))
-      d
-    }
-    val dead = mk(".m.train-111", 48L * 3600 * 1000)   // crashed yesterday
-    val live = mk(".m.train-222", 60 * 1000)           // in-flight trainer
-    val other = mk(".other.train-333", 48L * 3600 * 1000) // different model
-    assert(Sinks.sweepModelTemps(spark, model) === 1)
-    assert(!dead.exists(), "the stale temp must be removed")
-    assert(live.exists(), "an in-flight trainer's temp must survive")
-    assert(other.exists(), "another model's temp is not ours to sweep")
-  }
-
   test("materializeModel completeness does not depend on the committer's " +
     "_SUCCESS marker config") {
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -575,29 +485,6 @@ class SinksSpec extends SparkSpec {
     assert(merged.filter(col("v2_added").isNull).count() === 1)
   }
 
-  test("writeShards: one file per shard, rows preserved, layout matches " +
-    "the logical assignment") {
-    val dir = Files.createTempDirectory("graft_shards").toString + "/s"
-    val docs = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
-    Sinks.writeShards(docs, 4, dir)
-    val back = spark.read.parquet(dir)
-    assert(back.count() === docs.count())
-    assert(back.select("doc_id").as[Long].collect().sorted ===
-      docs.select("doc_id").as[Long].collect().sorted)
-    val shardDirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("shard="))
-    assert(shardDirs.nonEmpty && shardDirs.length <= 4)
-    shardDirs.foreach { sd =>
-      assert(sd.listFiles().count(_.getName.endsWith(".parquet")) === 1)
-    }
-    // the physical shard a doc landed in IS its logical assignment
-    val assign = graft.ops.TextAnalysis.shardAssignment(docs, 4)
-      .select("doc_id", "shard").as[(Long, Long)].collect().toMap
-    val phys = back.select(col("doc_id"), col("shard").cast("long"))
-      .as[(Long, Long)].collect().toMap
-    assert(phys === assign)
-  }
-
   test("publishTrainingBuild: a build becomes a versioned dataset " +
     "release — pinned rows, params + realized counts in the manifest") {
     val table = Files.createTempDirectory("graft_release").toString + "/ds"
@@ -625,93 +512,5 @@ class SinksSpec extends SparkSpec {
     // the live read is the newest release
     assert(Sinks.Versioned.read(spark, table).count() ===
       Sinks.Versioned.readVersion(spark, table, 2L).count())
-  }
-
-  test("releaseDiff: per-source added/removed/changed/unchanged plus " +
-    "moved_in/moved_away between two pinned releases — per-source " +
-    "deltas reconcile") {
-    val table = Files.createTempDirectory("graft_reldiff").toString + "/ds"
-    def rel(rows: Seq[(Long, String, Long, String)]) =
-      rows.toDF("doc_id", "source", "n_tokens", "text_clean")
-    val v1 = Seq(
-      (1L, "s0", 3L, "a b c"), (2L, "s0", 2L, "d e"),
-      (3L, "s1", 1L, "f"), (5L, "s0", 2L, "m m"),
-      (6L, "s2", 3L, "z z z"))
-    val v2 = Seq(
-      (2L, "s0", 2L, "d CHANGED"), (3L, "s1", 1L, "f"),
-      (4L, "s1", 4L, "new doc here now"),
-      (5L, "s1", 2L, "m m"), (6L, "s0", 3L, "z z z"))
-    Sinks.publishTrainingBuild(rel(v1), table, Map("rel" -> "1")) // v-1
-    Sinks.publishTrainingBuild(rel(v2), table, Map("rel" -> "2")) // v-2
-    val got = Sinks.releaseDiff(spark, table, 1L, 2L).collect()
-      .map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-          r.getLong(5), r.getLong(6)))).toMap
-    // s0: doc 1 removed, doc 2 changed in place, doc 6 moved IN from
-    // s2 (changed at the new source), doc 5 moved AWAY to s1.
-    // s1: doc 3 unchanged, doc 4 added, doc 5 moved in (changed).
-    // s2 lost its ONLY doc to a move — it still gets a row, all-zero
-    // except n_moved_away (the silently-drained-source audit).
-    assert(got === Map(
-      "s0" -> ((0L, 1L, 2L, 0L, 1L, 1L)),
-      "s1" -> ((1L, 0L, 1L, 1L, 1L, 0L)),
-      "s2" -> ((0L, 0L, 0L, 0L, 0L, 1L))))
-    // reconciliation contract from the Scaladoc, checked per source:
-    //   rows_vB = added + changed + unchanged
-    //   rows_vA = removed + unchanged + (changed − moved_in) + moved_away
-    val sources = (v1.map(_._2) ++ v2.map(_._2)).distinct
-    sources.foreach { s =>
-      val (na, nr, nc, nu, nmi, nma) = got(s)
-      assert(v2.count(_._2 == s).toLong === na + nc + nu, s"vB rows $s")
-      assert(v1.count(_._2 == s).toLong === nr + nu + (nc - nmi) + nma,
-        s"vA rows $s")
-    }
-  }
-
-  test("writeShards over trainingDataBuild: the one-call build's logical " +
-    "(shard, pos) IS the physical training-shard layout") {
-    val dir = Files.createTempDirectory("graft_build").toString + "/t"
-    val docs = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
-    val built = graft.ops.TextAnalysis
-      .trainingDataBuild(docs, 5, 2, 0.5, 0.5, 20000L, 8)
-    // the writer re-derives shard from doc_id (no join back) — drop the
-    // build's own columns and let the physical path recompute them
-    Sinks.writeShards(built.drop("shard", "pos"), 8, dir)
-    val back = spark.read.parquet(dir)
-    assert(back.count() === built.count() && built.count() > 0)
-    val logical = built
-      .select(col("doc_id"), col("shard"), col("pos")).as[(Long, Long, Int)]
-      .collect().map(t => t._1 -> ((t._2, t._3))).toMap
-    // physical shard dir must equal the logical shard for every doc
-    val phys = back.select(col("doc_id"), col("shard").cast("long"))
-      .as[(Long, Long)].collect().toMap
-    assert(phys === logical.map { case (id, (s, _)) => id -> s })
-    // and within each shard file, the on-disk row order IS the pos order
-    // (single sorted file per shard — trainers stream it sequentially)
-    val shardDirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("shard="))
-    shardDirs.foreach { sd =>
-      val s = sd.getName.stripPrefix("shard=").toLong
-      val file = sd.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(file.length === 1)
-      val onDisk = spark.read.parquet(file.head.getPath)
-        .select("doc_id").as[Long].collect()
-      val expected = logical.collect { case (id, (`s`, p)) => (p, id) }
-        .toSeq.sorted.map(_._2)
-      assert(onDisk.toSeq === expected)
-    }
-  }
-
-  test("partitioned overwrite replaces only the re-run day (S5/S7)") {
-    val dir = Files.createTempDirectory("graft_sink").toString + "/p"
-    val day1 = Seq(("2024-01-01 10:00:00", 1), ("2024-01-02 10:00:00", 2))
-      .toDF("ts", "x").withColumn("ts", col("ts").cast("timestamp"))
-    Sinks.writePartitionedByDay(day1, "ts", dir)
-    // re-run day 2 with corrected data; day 1 must survive untouched
-    val rerun = Seq(("2024-01-02 11:00:00", 20))
-      .toDF("ts", "x").withColumn("ts", col("ts").cast("timestamp"))
-    Sinks.writePartitionedByDay(rerun, "ts", dir)
-    val got = spark.read.parquet(dir).select("x").as[Int].collect().sorted
-    assert(got === Array(1, 20))
   }
 }

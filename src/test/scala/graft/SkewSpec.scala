@@ -1,24 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Skew, Tables}
+import graft.ops.Tables
 
-/** Salted forms must be result-identical to their naive twins. */
+/** Skew-aware forms must be result-identical to their naive twins. */
 class SkewSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  test("two-stage salted sum/count equals direct groupBy") {
-    val ev = Tables.events(spark, dir)
-    val direct = ev.groupBy(col("event_type").as("k"))
-      .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("total"),
-        count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSet
-    val salted = Skew.saltedSumCount(ev, col("event_type"), col("value"),
-        Skew.saltOf(8, col("event_id")), 8)
-      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSet
-    assert(salted === direct)
-  }
 
   test("skew-aware running-sum twins equal the one-window forms") {
     import graft.ops.{TextAnalysis => TA}
@@ -41,20 +29,5 @@ class SkewSpec extends SparkSpec {
         .toSet
       assert(pack1 === pack0)
     }
-  }
-
-  test("salted broadcast join equals plain join") {
-    val o = Tables.orders(spark, dir)
-    val c = Tables.customer(spark, dir)
-    val plain = o.join(c, o("o_custkey") === c("c_custkey"))
-      .select("o_orderkey", "c_name")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val salted = Skew.saltedBroadcastJoin(
-        o.withColumnRenamed("o_custkey", "ck"),
-        c.withColumnRenamed("c_custkey", "ck"), "ck",
-        col("o_orderkey"), 4)
-      .select("o_orderkey", "c_name")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(salted === plain)
   }
 }

@@ -64,8 +64,8 @@ class StreamingSpec extends SparkSpec {
 
   test("file-source AvailableNow stream over the events parquet emits closed windows") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    Hourly.streamFromParquet(spark, "/root/testdata/sf0.001",
-      s"$tmp/ckpt", s"$tmp/out")
+    Hourly.startFromParquet(spark, "/root/testdata/sf0.001",
+      s"$tmp/ckpt", s"$tmp/out").awaitTermination()
     val out = spark.read.parquet(s"$tmp/out")
     val batch = Hourly.hourlyAgg(
       graft.ops.Tables.events(spark, "/root/testdata/sf0.001"))
@@ -147,60 +147,6 @@ class StreamingSpec extends SparkSpec {
     assertTornInvisible(torn)
   }
 
-  test("streaming report artifact: checkpointed sink + memoized atomic HTML") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sreport").toString
-    val report = s"$tmp/report.html"
-    val first = Hourly.writeStreamingReport(spark, "/root/testdata/sf0.001",
-      s"$tmp/ckpt", s"$tmp/out", report)
-    assert(first, "first run must publish the report")
-    val html = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(report)), "UTF-8")
-    assert(html.contains("<section id=\"hourly\""))
-    assert(html.contains("hour_start"))
-    // the published table must be deterministically ordered — without the
-    // orderBy its row order tracks sink-file enumeration, which varies
-    // run to run while every batch report section is totally ordered
-    val rendered = "<tr><td>([^<]*)</td><td>([^<]*)</td>".r
-      .findAllMatchIn(html).map(m => (m.group(1), m.group(2))).toSeq
-    assert(rendered.nonEmpty)
-    assert(rendered === rendered.sorted,
-      "report rows must be sorted by (hour_start, event_type)")
-    // Re-run: the stream resumes from its checkpoint (nothing new to do)
-    // and the artifact is memoized — S7, both halves.
-    val rowsBefore = spark.read.parquet(s"$tmp/out").count()
-    val second = Hourly.writeStreamingReport(spark, "/root/testdata/sf0.001",
-      s"$tmp/ckpt", s"$tmp/out", report)
-    assert(!second, "second run must be the memoized no-op")
-    assert(spark.read.parquet(s"$tmp/out").count() === rowsBefore,
-      "resumed stream must not recompute committed batches")
-  }
-
-  test("streaming report with zero closed windows publishes a header-only " +
-    "report instead of crashing on the empty sink") {
-    import java.nio.file.{Files => JFiles, StandardCopyOption}
-    val tmp = JFiles.createTempDirectory("graft_sreport_empty").toString
-    val in = s"$tmp/in"
-    JFiles.createDirectories(java.nio.file.Paths.get(in))
-    // every event inside ONE hour → the 1h watermark closes nothing →
-    // the sink commits zero data files
-    val stage = s"$tmp/stage"
-    Seq((ts("2024-01-01 10:05:00"), "click", 1.0),
-        (ts("2024-01-01 10:45:00"), "view", 2.0))
-      .toDF("ts", "event_type", "value").coalesce(1).write.parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    JFiles.copy(part.toPath,
-      java.nio.file.Paths.get(in, "events.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    val report = s"$tmp/report.html"
-    val wrote = Hourly.writeStreamingReport(spark, in,
-      s"$tmp/ckpt", s"$tmp/out", report)
-    assert(wrote, "the empty-sink run must still publish the artifact")
-    val html = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(report)), "UTF-8")
-    assert(html.contains("hour_start") && html.contains("<section"))
-  }
-
   test("explicit source schema lets the pipeline start AHEAD of data: " +
     "empty input dir runs clean with schema, throws without") {
     import java.nio.file.{Files => JFiles}
@@ -218,26 +164,14 @@ class StreamingSpec extends SparkSpec {
     q.awaitTermination(60000)
     assert(!q.isActive)
     assert(q.exception.isEmpty, s"ahead-of-data start failed: ${q.exception}")
-    // the sink holds zero committed files; the derived-schema read is empty
-    assert(spark.read.schema(Hourly.hourlyAggSchema(spark))
+    // the sink holds zero committed files; a schema-given read is empty
+    assert(spark.read
+      .schema("hour_start timestamp, event_type string, n long, sum_value double")
       .parquet(s"$tmp/out").count() === 0L)
     // without the explicit schema the inference fallback still throws —
     // the documented pre-existing behavior the schema param exists to fix
     intercept[org.apache.spark.sql.AnalysisException](
       Hourly.startFromParquet(spark, in, s"$tmp/ckpt2", s"$tmp/out2"))
-  }
-
-  test("graft.streaming.Sessions.stateSchemaMigrationHint maps the state-store schema " +
-    "error (any depth) to the drain-or-discard instructions") {
-    val deep = new RuntimeException("outer",
-      new RuntimeException(
-        "[STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE] Provided value schema " +
-          "does not match existing state value schema"))
-    assert(graft.streaming.Sessions.stateSchemaMigrationHint(deep)
-      .exists(_.contains("DRAIN")), "nested error must map to instructions")
-    assert(graft.streaming.Sessions.stateSchemaMigrationHint(
-      new RuntimeException("unrelated")).isEmpty,
-      "unrelated failures must not be relabeled as migration breaks")
   }
 
   test("per-row text operators run UNCHANGED on a stream: " +
@@ -288,5 +222,26 @@ class StreamingSpec extends SparkSpec {
         .exceptAll(graft.ops.TextAnalysis.piiRedactRaw(batchDocs)).isEmpty)
       assert(spark.table("pii_stream").count() === 2)
     } finally { q.stop() }
+  }
+
+  test("maxFilesPerTrigger paces one log file per micro-batch (S1 pagination analog)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pace").toString
+    Seq("a").toDF("v").write.parquet(s"$dir/f1")
+    Seq("b").toDF("v").write.parquet(s"$dir/f2")
+    Seq("c").toDF("v").write.parquet(s"$dir/f3")
+    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
+    val q = spark.readStream
+      .schema("v string")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$dir/f*")
+      .writeStream.outputMode("append")
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => {
+        if (b.count() > 0) batches.incrementAndGet(); ()
+      })
+      .start()
+    try {
+      q.processAllAvailable()
+      assert(batches.get() === 3) // one file per micro-batch
+    } finally q.stop()
   }
 }

@@ -350,8 +350,8 @@ class TextAnalysisSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getLong(2)).toMap
       crossBatchRemovals +=
         got.map { case (id, (_, rem, _)) => rem - alone(id) }.sum
-      index = index.unionByName(
-        TextAnalysis.dupSubstringIndexDelta(index, batch, 5))
+      index = index.unionByName(TextAnalysis.dupSubstringIndex(batch, 5))
+        .distinct()
     }
     assert(crossBatchRemovals > 0L,
       "fixture should exercise the index-hit path across batches")
@@ -402,8 +402,8 @@ class TextAnalysisSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getLong(2)).toMap
       crossBatchRemovals +=
         got.map { case (id, (_, rem, _)) => rem - alone(id) }.sum
-      index = index.unionByName(
-        TextAnalysis.paragraphIndexDelta(index, batch, 20))
+      index = index.unionByName(TextAnalysis.paragraphIndex(batch, 20))
+        .distinct()
     }
     assert(crossBatchRemovals > 0L,
       "fixture should exercise the index-hit path across batches")
@@ -1140,23 +1140,6 @@ class TextAnalysisSpec extends SparkSpec {
     built.foreach { case (id, _, _, _) =>
       assert(asg(id) === "train", s"doc $id shipped from ${asg(id)}")
     }
-  }
-
-  test("paragraphDedup: keep-first across docs AND within a doc; empty " +
-    "segments dedup like any other paragraph") {
-    // doc 1: [A, B, A] — the second A is a within-doc repeat (removed);
-    // doc 2: [B, C] — B's first occurrence is (1,1), so doc 2 keeps
-    // only C; doc 3: ["", "", D] — the second blank line goes too
-    val docs = Seq(
-      (1L, "para A\npara B\npara A"),
-      (2L, "para B\npara C"),
-      (3L, "\n\npara D")).toDF("doc_id", "text")
-    val got = TextAnalysis.paragraphDedup(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-    assert(got.toSeq === Seq(
-      (1L, 3L, 1L, "para A\npara B"),
-      (2L, 2L, 1L, "para C"),
-      (3L, 3L, 1L, "\npara D")))
   }
 
   test("paragraphDedupBlocks: k-word blocks dedup keep-first; the " +
