@@ -33,12 +33,33 @@ object Graft {
 
   /** The §3.2 planner over a real log directory: list files, keep the
     * newest `maxRecords` closed hours for `referenceDateHour`.
+    *
+    * The catalog is file metadata only, as in the reference
+    * (`describe_db_log_files`): one Hadoop `FileSystem.listStatus` of
+    * `logDir` through the session's Hadoop conf, so s3a and hdfs list as a
+    * local directory does. It keeps regular files and skips the names
+    * Spark's file sources skip: `_`/`.`-prefixed (`_SUCCESS`, `.crc`) and
+    * in-flight `._COPYING_` uploads. The names form a local relation, so
+    * the planner's filters fold on the driver and no job reads the
+    * directory. The relation is one partition, so ordering the survivors
+    * is one job with one task (see [[LogCatalog]]). The listing runs when
+    * the frame is built; a missing `logDir` throws `FileNotFoundException`
+    * naming it.
     */
   def selectLogFiles(spark: SparkSession, logDir: String,
                      referenceDateHour: String, maxRecords: Int): DataFrame = {
-    val catalog = spark.read.format("binaryFile").load(logDir)
-      .select(element_at(split(col("path"), "/"), -1).as("file_name"))
-    LogCatalog.selectLogFiles(catalog, referenceDateHour, maxRecords)
+    import spark.implicits._
+    val dir = new org.apache.hadoop.fs.Path(logDir)
+    val names = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(dir).toSeq
+      .filter(_.isFile).map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".") ||
+        n.endsWith("._COPYING_"))
+    // one partition: when at most maxRecords names survive, Catalyst drops
+    // the limit, and a global sort over several partitions would add a
+    // range exchange and two more jobs
+    LogCatalog.selectLogFiles(names.toDF("file_name").coalesce(1),
+      referenceDateHour, maxRecords)
   }
 
   /** Ingest the selected files as parsed log records (file identity

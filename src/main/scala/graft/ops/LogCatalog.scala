@@ -19,8 +19,18 @@ import org.apache.spark.sql.functions._
   *   4. sort descending by the trailing `YYYY-MM-DD-HH` (13 chars) of the
   *      name (O1, F6, line 120) and take the newest `k` (O2, line 124).
   *
-  * Catalyst plans 3+4 as `TakeOrderedAndProject` — no full sort, no
-  * driver-side loop; the day-contains filters push into the parquet scan.
+  * The plan depends on the catalog:
+  *   - over the one-partition local relation that
+  *     [[graft.Graft.selectLogFiles]] builds from a directory listing,
+  *     Catalyst folds the filters of steps 1-3 into the relation on the
+  *     driver. When more than `k` names survive, 3+4 run as one
+  *     `TakeOrderedAndProject` job. When at most `k` survive (with `k = 5`,
+  *     reference hour 05 of every day), Catalyst drops the limit and a
+  *     global sort runs in the one partition, with no exchange, also one
+  *     job. GraftSpec pins both cases.
+  *   - over any other catalog (the registry's [[catalogFromEvents]],
+  *     LogCatalogSpec's fixture) the filters stay in the plan and 3+4 are
+  *     one `TakeOrderedAndProject`, with no full sort.
   * At 100 TB the catalog would be a date-partitioned listing table and the
   * same `contains(day)` predicates become partition pruning.
   */

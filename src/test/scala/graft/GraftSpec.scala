@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
-import graft.ops.{LogLines, Tables}
+import graft.ops.{LogCatalog, LogLines, Reports, Tables}
 
 /** The facade end to end: a directory of hourly `postgresql.log.*` files →
   * select → ingest → parse → report sections → memoized publish; re-run is
@@ -29,6 +29,40 @@ class GraftSpec extends SparkSpec {
     }
     root
   }
+
+  /** Three days of hourly files, 2024-01-14-00 … 2024-01-16-23, one
+    * record each, plus the entries a log directory collects beside its
+    * logs: a `_SUCCESS` marker, hidden `_`/`.`-prefixed copies of hour
+    * names, a `.crc` checksum sibling, an in-flight `._COPYING_` upload, a
+    * malformed name, and a subdirectory named like hour 2024-01-15-12 (in
+    * place of that hour's file) holding one file.
+    */
+  private def writeHourlyDir(): String = {
+    val root = Files.createTempDirectory("graft_listing")
+    def write(name: String, text: String): Unit =
+      Files.write(root.resolve(name), text.getBytes(UTF_8))
+    for (d <- 14 to 16; h <- 0 to 23 if !(d == 15 && h == 12))
+      write(f"postgresql.log.2024-01-$d%02d-$h%02d",
+        f"2024-01-$d%02d $h%02d:00:01 UTC:10.0.0.5(51234):app@prod:" +
+          "[12345]:LOG:  duration: 1.50 ms  statement: SELECT 1\n")
+    write("_SUCCESS", "")
+    write("_postgresql.log.2024-01-15-09", "")
+    write(".postgresql.log.2024-01-15-07", "")
+    write(".postgresql.log.2024-01-15-08.crc", "")
+    write("postgresql.log.2024-01-16-05._COPYING_", "")
+    write("postgresql.log.badname", "")
+    val sub = Files.createDirectory(root.resolve("postgresql.log.2024-01-15-12"))
+    Files.write(sub.resolve("README"), "not a log".getBytes(UTF_8))
+    root.toString
+  }
+
+  /** The selection as it was computed before the listing: a `binaryFile`
+    * scan of the directory for file names, then the same planner.
+    */
+  private def scannedSelection(logDir: String, ref: String, k: Int) =
+    LogCatalog.selectLogFiles(spark.read.format("binaryFile").load(logDir)
+      .select(element_at(split(col("path"), "/"), -1).as("file_name")),
+      ref, k)
 
   private val multiLineLf = "postgresql.log.2024-03-01-01"
   private val multiLineCrlf = "postgresql.log.2024-03-01-02"
@@ -85,16 +119,18 @@ class GraftSpec extends SparkSpec {
       sectionRows(Graft.reportSections(read(multiLineLf))))
   }
 
-  test("report sections read one materialized parse, never the log files") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    object Walk extends AdaptiveSparkPlanHelper
-    def fileScans(df: org.apache.spark.sql.DataFrame) = {
-      df.collect() // the final adaptive plan
-      Walk.collectWithSubqueries(df.queryExecution.executedPlan) {
-        case s: FileSourceScanExec => s
-      }
+  private object Walk
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The file scans in `df`'s final (post-AQE) plan, subqueries included. */
+  private def fileScans(df: org.apache.spark.sql.DataFrame) = {
+    df.collect() // the final adaptive plan
+    Walk.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
     }
+  }
+
+  test("report sections read one materialized parse, never the log files") {
     val logDir = writeLogDir()
     val selected = Graft.selectLogFiles(spark, logDir, "2024-01-15-02", 5)
     val parsed = Graft.readLogLines(spark, logDir, selected)
@@ -194,19 +230,25 @@ class GraftSpec extends SparkSpec {
 
   /** The jobs the scheduler ran while a call was open, in listener-bus
     * order (the scheduler's order): each start event, each end time, and
-    * the most jobs in flight at one moment.
+    * the most jobs in flight at one moment; also the input bytes that
+    * ended tasks read.
     */
   private final class JobLog extends org.apache.spark.scheduler.SparkListener {
-    import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart,
+      SparkListenerTaskEnd}
     val starts = scala.collection.mutable.ArrayBuffer.empty[SparkListenerJobStart]
     val ends = scala.collection.mutable.Map.empty[Int, Long]
     var maxInFlight = 0
+    var inputBytes = 0L
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       starts += e
       maxInFlight = math.max(maxInFlight, starts.size - ends.size)
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       synchronized { ends(e.jobId) = e.time }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      inputBytes += Option(e.taskMetrics).fold(0L)(_.inputMetrics.bytesRead)
+    }
   }
 
   /** Run `f` with a [[JobLog]] attached; also returns the wall-clock
@@ -367,6 +409,90 @@ class GraftSpec extends SparkSpec {
     val third = Graft.backfill(spark, logDir, out,
       "2024-01-15-01", "2024-01-15-04")
     assert(third === Seq("2024-01-15-04"))
+    // each hour's parquet holds that hour's level counts, row for row,
+    // over the files the directory scan selects for it
+    (first ++ third).foreach { h =>
+      val want = Reports.levelCounts(Graft.readLogLines(spark, logDir,
+          scannedSelection(logDir, h, 5)).select(col("level").as("event_type")))
+        .collect().toSeq
+      assert(want.map(_.getLong(1)).sum > 0, h)
+      assert(spark.read.parquet(s"$out/hour=$h").orderBy("level")
+        .collect().toSeq === want, h)
+    }
+  }
+
+  test("selectLogFiles over the listing ≡ the directory scan it replaced, " +
+    "every hour, hidden and non-file entries skipped; empty and missing " +
+    "directories") {
+    val logDir = writeHourlyDir()
+    val refs = (0 to 72).map(i => java.time.LocalDateTime.of(2024, 1, 14, 0, 0)
+      .plusHours(i).format(java.time.format.DateTimeFormatter
+        .ofPattern("yyyy-MM-dd-HH")))
+    def names(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getString(0)).toSeq
+    val cases = refs.map(_ -> 5) ++ Seq("2024-01-16-10", "2024-01-17-00")
+      .map(_ -> 48)
+    cases.foreach { case (ref, k) =>
+      val got = names(Graft.selectLogFiles(spark, logDir, ref, k))
+      assert(got === names(scannedSelection(logDir, ref, k)), s"$ref k=$k")
+    }
+    // the edge entries sit inside these windows and stay out of them
+    def hours(ref: String, day: String, hs: Int*) =
+      assert(names(Graft.selectLogFiles(spark, logDir, ref, 5)) ===
+        hs.map(h => f"postgresql.log.$day-$h%02d"), ref)
+    hours("2024-01-15-13", "2024-01-15", 11, 10, 9, 8, 7)
+    hours("2024-01-16-07", "2024-01-16", 6, 5, 4, 3, 2)
+    hours("2024-01-14-00", "2024-01-14")
+
+    val empty = Files.createTempDirectory("graft_listing_empty").toString
+    assert(names(Graft.selectLogFiles(spark, empty, "2024-01-15-02", 5))
+      .isEmpty)
+    assert(names(scannedSelection(empty, "2024-01-15-02", 5)).isEmpty)
+    val missing = s"$empty/no_such_dir"
+    val e = intercept[java.io.FileNotFoundException](
+      Graft.selectLogFiles(spark, missing, "2024-01-15-02", 5))
+    assert(e.getMessage.contains(missing))
+  }
+
+  test("selection plans: no file scan and no input bytes; the day filters " +
+    "fold into the listing's local relation; top-k is TakeOrderedAndProject, " +
+    "and at ≤ k survivors the limit goes and a global sort runs without an " +
+    "exchange; one job either way") {
+    import org.apache.spark.sql.catalyst.plans.logical
+    import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val logDir = writeHourlyDir()
+    def run(ref: String) = {
+      val df = Graft.selectLogFiles(spark, logDir, ref, 5)
+      val (rows, log, _) = jobsDuring(df.collect())
+      assert(rows.isSuccess)
+      assert(log.inputBytes === 0L, s"$ref: selection read input bytes")
+      assert(fileScans(df).isEmpty, s"$ref: selection scans files")
+      val optimized = df.queryExecution.optimizedPlan
+      assert(optimized.collect { case f: logical.Filter => f }.isEmpty)
+      val local = optimized.collect { case l: logical.LocalRelation => l }
+      assert(local.size === 1)
+      (df, rows.get.length, local.head.data.size, log)
+    }
+
+    // 2024-01-16-10: hours 00 … 09 survive the filters, 10 > k
+    val (topK, nTop, survivorsTop, logTop) = run("2024-01-16-10")
+    assert(nTop === 5 && survivorsTop === 10)
+    assert(Walk.collect(topK.queryExecution.executedPlan) {
+      case t: TakeOrderedAndProjectExec => t }.size === 1)
+    assert(logTop.starts.size === 1)
+
+    // 2024-01-14-05, the first hour with k closed predecessors: exactly
+    // k survive, so the limit is dropped and the one partition is sorted
+    val (sorted, nSorted, survivorsSorted, logSorted) = run("2024-01-14-05")
+    assert(nSorted === 5 && survivorsSorted === 5)
+    assert(sorted.queryExecution.optimizedPlan.collect {
+      case l: logical.GlobalLimit => l; case l: logical.LocalLimit => l
+    }.isEmpty)
+    val plan = sorted.queryExecution.executedPlan
+    assert(Walk.collect(plan) { case s: SortExec if s.global => s }.size === 1)
+    assert(Walk.collect(plan) { case x: ShuffleExchangeExec => x }.isEmpty)
+    assert(logSorted.starts.size === 1)
   }
 
   test("observe() metrics ride along with the pipeline run") {

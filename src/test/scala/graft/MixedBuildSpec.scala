@@ -263,7 +263,7 @@ class MixedBuildSpec extends SparkSpec {
 
   test("releaseFrame plan: no RangePartitioning exchange carries the " +
     "payload column — the release clusters by HASH on (kind, shard) " +
-    "and sorts within partitions (the writeShards discipline); a " +
+    "and sorts within partitions; a " +
     "global orderBy would range-shuffle every payload byte through " +
     "sampled boundaries (the round-14 scale-killer)") {
     val tmp = Files.createTempDirectory("graft_mixed_plan").toString

@@ -91,7 +91,7 @@ class MultimodalSpec extends SparkSpec {
     assert(got(2)._3.exists(f => f.length == 8 && f.forall(_ == 0f)))
   }
 
-  test("imageNearDupPairs: EXACTLY the brute-force hamming <= 4 pairs " +
+  test("mediaSignaturePairsPlain over image hashes: EXACTLY the brute-force hamming <= 4 pairs " +
     "over the decoded corpus, and every planted one-pixel edit pairs " +
     "with its original") {
     val phash = Multimodal.imagePhash(
@@ -266,7 +266,7 @@ class MultimodalSpec extends SparkSpec {
     assert(got(2)._2.isEmpty && got(2)._3.isEmpty)
   }
 
-  test("audioNearDupPairs: EXACTLY the brute-force hamming <= 4 pairs " +
+  test("mediaSignaturePairsPlain over audio hashes: EXACTLY the brute-force hamming <= 4 pairs " +
     "over the decoded corpus, and every planted twin pairs with (or " +
     "hashes identically to) its original") {
     val ah = Multimodal.audioHash(

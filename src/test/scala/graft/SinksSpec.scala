@@ -387,9 +387,6 @@ class SinksSpec extends SparkSpec {
       Files.createTempDirectory("graft_vioerr").toString + "/t"
     val e = intercept[java.io.IOException](
       Sinks.Versioned.publish(spark.range(3).toDF("id"), table))
-    assert(!e.isInstanceOf[java.util.ConcurrentModificationException],
-      s"an infrastructure IOException must not be reported as lease " +
-        s"contention (got $e)")
     assert(e.getMessage.contains("simulated quota exceeded"),
       s"expected the underlying IO failure to surface, got $e")
   }

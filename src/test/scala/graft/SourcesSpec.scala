@@ -56,13 +56,4 @@ class SourcesSpec extends SparkSpec {
     val want = ev.filter(col("p_day") === "2024-01-15").count()
     assert(pruned.count() === want && want > 0)
   }
-
-  test("binaryFile source lists file metadata (S1 catalog analog)") {
-    val root = Files.createTempDirectory("graft_bin").toString
-    Seq("x").toDF("v").coalesce(1).write.mode("overwrite").text(root + "/f1")
-    val listed = spark.read.format("binaryFile")
-      .load(root + "/f1")
-      .select(col("path"), col("length"))
-    assert(listed.count() >= 1)
-  }
 }
