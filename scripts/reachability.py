@@ -11,7 +11,7 @@ constant pool and bootstrap table, which name the lambda bodies that
 `invokedynamic` call sites create), builds a method-level call graph and
 walks it from the roots:
 
-- the five mains (Bench, Graft, Profile, ScaleSanity, Verify);
+- the mains in MAINS below;
 - every method of SparkEntry, and Queries.all (the registry builders);
 - every program method the benchmark harness names
   (perfbench/src/main/scala/perfbench/Harness.scala, read as text);
@@ -26,8 +26,8 @@ method reached once it is loaded.
 
 Prints the unreached top-level objects and classes, then the unreached
 defs of the reached ones (Scala source names; synthetic and lambda
-methods are not listed). Exits 1 if any top-level object or class is
-unreached.
+methods are not listed), then KEEP entries that name no def. Exits 1 if
+it prints any of them.
 """
 import os
 import re
@@ -42,7 +42,6 @@ MAINS = ["Bench", "Graft", "Profile", "ScaleSanity", "Verify"]
 
 # (object, def): reason. The walk treats these as roots.
 KEEP = {
-    ("graft.Graft", "runPerFileReports"): "public library facade (README usage)",
     ("graft.Graft", "parsedWithMetrics"): "public library facade; the per-query profile wires its metrics",
     ("graft.ops.TextAnalysis", "bpeSegmentHof"): "reference implementation PropertiesSpec compares bpeSegment against",
     ("graft.ops.Dedup", "shingles"): "compositional reference DedupSpec compares MinHashSignature against",
@@ -51,11 +50,6 @@ KEEP = {
     ("graft.sources.Sinks$Versioned", "readVersion"): "read side of the versioned table format; specs check live publishes through it",
     ("graft.sources.Sinks$Versioned", "metaOf"): "read side of the versioned table format; specs check live publishes through it",
 }
-# Streaming ingest entry points: the library's streaming API, each run
-# end to end by its spec; no main starts a stream.
-KEEP.update({("graft.streaming." + o, "startFromParquet"): "streaming ingest entry point"
-             for o in ["Hourly", "AudioIngest", "ImageIngest", "VideoIngest", "SemanticIngest",
-                       "SimhashIngest", "SubstringIngest", "IncrementalBuild"]})
 
 # Compiler-generated members of a case class companion.
 CASE_COMPANION = {"apply", "unapply", "writeReplace", "readResolve", "toString"}
@@ -379,7 +373,7 @@ def main():
         print(f"keep-list entries naming no def: {len(stale)}")
         for k in stale:
             print("  " + k)
-    sys.exit(1 if dead_top else 0)
+    sys.exit(1 if dead_top or dead_defs or stale else 0)
 
 
 if __name__ == "__main__":

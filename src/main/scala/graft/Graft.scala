@@ -39,12 +39,13 @@ object Graft {
     * `logDir` through the session's Hadoop conf, so s3a and hdfs list as a
     * local directory does. It keeps regular files and skips the names
     * Spark's file sources skip: `_`/`.`-prefixed (`_SUCCESS`, `.crc`) and
-    * in-flight `._COPYING_` uploads. The names form a local relation, so
-    * the planner's filters fold on the driver and no job reads the
-    * directory. The relation is one partition, so ordering the survivors
-    * is one job with one task (see [[LogCatalog]]). The listing runs when
-    * the frame is built; a missing `logDir` throws `FileNotFoundException`
-    * naming it.
+    * in-flight `._COPYING_` uploads. It also skips names that do not end
+    * in an hour ([[LogCatalog.hasHourSuffix]]), such as rotated `.gz`
+    * copies. The names form a local relation, so the planner's filters
+    * fold on the driver and no job reads the directory. The relation is
+    * one partition, so ordering the survivors is one job with one task
+    * (see [[LogCatalog]]). The listing runs when the frame is built; a
+    * missing `logDir` throws `FileNotFoundException` naming it.
     */
   def selectLogFiles(spark: SparkSession, logDir: String,
                      referenceDateHour: String, maxRecords: Int): DataFrame = {
@@ -55,6 +56,7 @@ object Graft {
       .filter(_.isFile).map(_.getPath.getName)
       .filterNot(n => n.startsWith("_") || n.startsWith(".") ||
         n.endsWith("._COPYING_"))
+      .filter(LogCatalog.hasHourSuffix)
     // one partition: when at most maxRecords names survive, Catalyst drops
     // the limit, and a global sort over several partitions would add a
     // range exchange and two more jobs
@@ -230,24 +232,6 @@ object Graft {
     val html = renderReportHtml(s"graft report $referenceDateHour",
       reportSections(parsed))
     Sinks.writeStringIfAbsent(spark, target, html)
-  }
-
-  /** Reference-faithful per-file granularity: every report section keyed
-    * and partitioned by source file, one output partition per log file —
-    * the Spark shape of "one pgbadger HTML per downloaded log"
-    * (rds_pgbadger.py:44-45). Downstream reads of a single file's report
-    * prune to its partition.
-    */
-  def runPerFileReports(spark: SparkSession, logDir: String, outDir: String,
-                        referenceDateHour: String, maxRecords: Int = 5): Unit = {
-    val selected = selectLogFiles(spark, logDir, referenceDateHour, maxRecords)
-    val perFile = readLogLines(spark, logDir, selected)
-      .groupBy(col("file_name"), col("level"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("duration_ms").cast("decimal(18,2)")).cast("double")
-          .as("total_ms"))
-    perFile.write.mode("overwrite").partitionBy("file_name")
-      .parquet(s"$outDir/per_file_level_stats")
   }
 
   /** Windowed backfill — the reference's MainTask over a date range: run

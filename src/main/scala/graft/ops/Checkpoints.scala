@@ -75,37 +75,6 @@ object Checkpoints {
     } else df.localCheckpoint(eager = true)
   }
 
-  /** [[cut]] WITHOUT the construction-time job: the checkpoint
-    * materializes at the frame's FIRST action and is reused from blocks
-    * after that — the same share-once semantics, deferred. This is the
-    * form for share-inside-one-query cuts (a subtree read N times by
-    * one plan), where eagerness buys nothing and costs plan-build
-    * neutrality: operators built on cutLazy can be constructed and
-    * plan-inspected with zero Spark jobs (spec-pinned). Keep the EAGER
-    * [[cut]] for (a) iterative loops (lineage must truncate each round
-    * BEFORE the next builds on it), (b) read-modify-write cycles (the
-    * read must materialize before the write overwrites its input), and
-    * (c) measure-then-choose reads (the count IS the point).
-    *
-    * AQE caveat (measured, round 14 — MediaAutoSpec's zero-job
-    * listener caught it): when the subtree being cut CONTAINS AN
-    * EXCHANGE and adaptive execution is on, building the checkpoint
-    * RDD materializes the plan's shuffle stages at construction — the
-    * "lazy" checkpoint still runs those jobs up front (only the final
-    * stage defers). Zero-job construction holds for exchange-free
-    * subtrees (a checkpointed input's filter/select, the card's
-    * decode union). An operator whose job-free construction is part
-    * of its CONTRACT must not cutLazy an exchanging subtree — share
-    * it through Catalyst's exchange reuse instead
-    * ([[graft.ops.Dedup.signaturePairsCollapsedExpanded]]'s sharing
-    * note).
-    *
-    * Reliable mode note: a reliable checkpoint needs the persist dance
-    * around an eager materialization, so in that mode this falls back
-    * to the eager [[cut]] — correctness is identical, only plan-build
-    * neutrality is local-mode (the registry autos are eager on a
-    * cluster anyway, per their documented contract).
-    */
   /** Barrier between an expensive EXCHANGE-FREE segment and a global
     * (presentation) sort. A range sort SAMPLES its child to pick
     * partition boundaries, then executes the child again for the real
@@ -159,6 +128,37 @@ object Checkpoints {
     (out, obs.get)
   }
 
+  /** [[cut]] WITHOUT the construction-time job: the checkpoint
+    * materializes at the frame's FIRST action and is reused from blocks
+    * after that — the same share-once semantics, deferred. This is the
+    * form for share-inside-one-query cuts (a subtree read N times by
+    * one plan), where eagerness buys nothing and costs plan-build
+    * neutrality: operators built on cutLazy can be constructed and
+    * plan-inspected with zero Spark jobs (spec-pinned). Keep the EAGER
+    * [[cut]] for (a) iterative loops (lineage must truncate each round
+    * BEFORE the next builds on it), (b) read-modify-write cycles (the
+    * read must materialize before the write overwrites its input), and
+    * (c) measure-then-choose reads (the count IS the point).
+    *
+    * AQE caveat (measured, round 14 — MediaAutoSpec's zero-job
+    * listener caught it): when the subtree being cut CONTAINS AN
+    * EXCHANGE and adaptive execution is on, building the checkpoint
+    * RDD materializes the plan's shuffle stages at construction — the
+    * "lazy" checkpoint still runs those jobs up front (only the final
+    * stage defers). Zero-job construction holds for exchange-free
+    * subtrees (a checkpointed input's filter/select, the card's
+    * decode union). An operator whose job-free construction is part
+    * of its CONTRACT must not cutLazy an exchanging subtree — share
+    * it through Catalyst's exchange reuse instead
+    * ([[graft.ops.Dedup.signaturePairsCollapsedExpanded]]'s sharing
+    * note).
+    *
+    * Reliable mode note: a reliable checkpoint needs the persist dance
+    * around an eager materialization, so in that mode this falls back
+    * to the eager [[cut]] — correctness is identical, only plan-build
+    * neutrality is local-mode (the registry autos are eager on a
+    * cluster anyway, per their documented contract).
+    */
   def cutLazy(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val reliable =

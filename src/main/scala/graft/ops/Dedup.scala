@@ -1766,9 +1766,8 @@ object Dedup {
     * (salted md5 rank, doc_id) — a deterministic uniform subset of
     * FIXED size at any corpus scale, taken by a distributed
     * TakeOrdered top-k (one scan, no window). Pair space = sample² by
-    * construction, so calibration cost is FLAT as the corpus grows —
-    * the measured-FLAT path ScaleSanity's fixed-sample sweeps record,
-    * now runnable without the pct-divisor gymnastics. Histogram math
+    * construction, so calibration cost is FLAT as the corpus grows,
+    * with no pct to re-derive per corpus size. Histogram math
     * identical to the pct form (one definition of the buckets); own
     * salt (`jbgs|`) keeps it pairwise-uncorrelated with every other
     * sampler.

@@ -54,6 +54,19 @@ object LogCatalog {
   def parsedTs(fileName: org.apache.spark.sql.Column) =
     to_timestamp(substring(fileName, -13, 13), "yyyy-MM-dd-HH")
 
+  private val HourSuffix = java.time.format.DateTimeFormatter
+    .ofPattern("uuuu-MM-dd-HH")
+    .withResolverStyle(java.time.format.ResolverStyle.STRICT)
+
+  /** Whether a file name ends in a valid `yyyy-MM-dd-HH` hour, i.e.
+    * whether [[parsedTs]] parses it. A name that does not (a rotated
+    * `postgresql.log.2024-01-15-03.gz`) would fail the whole selection
+    * with `CANNOT_PARSE_TIMESTAMP` once a day filter lets it through.
+    */
+  def hasHourSuffix(fileName: String): Boolean =
+    fileName.length >= 13 &&
+      scala.util.Try(HourSuffix.parse(fileName.takeRight(13))).isSuccess
+
   /** Steps 1-4 above over an arbitrary `file_name` catalog.
     *
     * @param referenceDateHour `yyyy-MM-dd-HH` literal (never wall-clock —

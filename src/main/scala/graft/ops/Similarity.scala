@@ -461,7 +461,7 @@ object Similarity {
       struct((lit(cc) - lit(2.0) * dot(col("emb"), typedLit(v.toSeq)))
         .as("d2"), lit(cid).as("cid"))
     }
-    transform(slice(array_sort(array(structs: _*)), 1, take),
+    transform(slice(array_sort(array(structs.toIndexedSeq: _*)), 1, take),
       s => s.getField("cid"))
   }
 

@@ -2755,7 +2755,7 @@ object TextAnalysis {
     // characters (one tiny distinct job) + one entry per accepted merge
     val vocab = scala.collection.mutable.Set[String](
       wordTable.select(explode(col("syms")).as("s")).distinct()
-        .collect().map(_.getString(0)): _*)
+        .collect().map(_.getString(0)).toIndexedSeq: _*)
     val rules = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long)]
     var exhausted = false
@@ -2907,66 +2907,6 @@ object TextAnalysis {
     docs.select(col("source"), col("doc_id"),
       functions.size(words(col("text"))).cast("long").as("n_tok"),
       sampKey.as("samp_key"))
-
-  /** Skew-proof per-source running token sum — the scale fix the
-    * one-window form's comment names: a single window per source puts a
-    * dominant source's every row on ONE reducer. Here the running sum is
-    * computed in two stages over ORDERED sub-source buckets (the first
-    * hex nibble of the stable md5 walk key, so bucket order IS key
-    * order — digits sort before a-f in ASCII and in conv()):
-    *
-    *   1. cumsum within (source, bucket) — sources × 16 reducers;
-    *   2. add each bucket's exclusive prefix total, computed on the tiny
-    *      (sources × 16)-row aggregate and broadcast back.
-    *
-    * Output column set and values are identical to the one-window form
-    * (SkewSpec proves it, skewed and uniform); only the shuffle shape
-    * changes.
-    */
-  private def skewAwareCumTok(docs: DataFrame): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val wLocal = W.partitionBy(col("source"), col("bucket"))
-      .orderBy(col("samp_key").asc, col("doc_id").asc)
-      .rowsBetween(W.unboundedPreceding, W.currentRow)
-    val base = tokenWalk(docs)
-      .withColumn("bucket",
-        conv(substring(col("samp_key"), 1, 1), 16, 10).cast("int"))
-    val wBuckets = W.partitionBy(col("source")).orderBy(col("bucket"))
-      .rowsBetween(W.unboundedPreceding, -1)
-    val offsets = base.groupBy(col("source"), col("bucket"))
-      .agg(sum(col("n_tok")).as("btot"))
-      .withColumn("offset",
-        coalesce(sum(col("btot")).over(wBuckets), lit(0L)))
-      .select(col("source"), col("bucket"), col("offset"))
-    base.withColumn("local_cum", sum(col("n_tok")).over(wLocal))
-      .join(broadcast(offsets), Seq("source", "bucket"))
-      .select(col("source"), col("doc_id"), col("n_tok"), col("samp_key"),
-        (col("local_cum") + col("offset")).as("cum_tok"))
-  }
-
-  /** [[tokenBudgetMix]] over the skew-proof two-stage running sum —
-    * identical output, sources × 16 reducers instead of one per source.
-    */
-  def tokenBudgetMixSkewAware(docs: DataFrame,
-                              budgetPerSource: Long): DataFrame =
-    skewAwareCumTok(docs)
-      .filter(col("cum_tok") - col("n_tok") < budgetPerSource)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs_kept"),
-        sum(col("n_tok")).as("tokens_kept"))
-      .orderBy(col("source"))
-
-  /** [[sequencePacking]] over the skew-proof two-stage running sum. */
-  def sequencePackingSkewAware(docs: DataFrame, capacity: Long): DataFrame = {
-    require(capacity >= 1, s"capacity must be >= 1, got $capacity")
-    skewAwareCumTok(docs)
-      .withColumn("seq_id",
-        ((col("cum_tok") - col("n_tok")) / capacity).cast("long"))
-      .groupBy(col("source"), col("seq_id"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tok")).as("n_tokens"))
-      .orderBy(col("source"), col("seq_id"))
-  }
 
   /** Text normalization + scrubbing — the cleanup pass before any hash,
     * dedup, or tokenizer sees the text: lowercase, digit runs redacted to

@@ -102,8 +102,8 @@ object MediaStage {
   /** One directory per (sfDir, corpus, tag, data fingerprint) — the sf
     * dir's full path is folded into the key (short sanitized prefix
     * for a human-readable listing + an md5 of the full path so
-    * distinct dirs with colliding sanitized names — the ScaleSanity
-    * scratch corpora — never share a stage), and the source-data
+    * distinct dirs with colliding sanitized names — the scaled-up
+    * fixtures under /tmp — never share a stage), and the source-data
     * fingerprint guards against in-place regeneration.
     */
   private def destFor(spark: SparkSession, sfDir: String,

@@ -125,10 +125,9 @@ object Multimodal {
   val GfvFrames = 2
 
   /** Every modality with a signature pass. A NEW modality pass MUST be
-    * added here: [[mediaDedupCard]]'s `other` bucket counts the
-    * complement of this list, so a pass missing from it would
-    * double-count its rows (once by the pass, once as `other`) and
-    * silently break the card's covers-every-row invariant.
+    * added here: a kind missing from it counts as unknown, so the mixed
+    * build routes its rows to the `other` store and the quality gate
+    * flags them `unknown_kind`.
     */
   val MediaKinds: Seq[String] = Seq("image", "audio", "video")
 
@@ -1846,8 +1845,11 @@ object Multimodal {
   /** The media table's DEDUP CARD — the n70 dataset-card move on the
     * modality × dedup matrix: per kind, the decode health and the
     * exact-signature duplication structure every downstream dedup
-    * decision reads. One row per kind with
-    * (n_media, n_decoded, n_err, n_distinct_sig, n_dup_groups,
+    * decision reads, aggregated over a unit frame (kind, media_id, sig,
+    * has_err): one unit per media row, `sig` its perceptual signature
+    * (hex phash / ahash, or the m11 clip key for a video, null iff
+    * nothing decoded) and `has_err` any decode error. One row per kind
+    * with (n_media, n_decoded, n_err, n_distinct_sig, n_dup_groups,
     * max_group, inflation): units whose perceptual signature exists /
     * errored, the DISTINCT signature count (phash / ahash / the m11
     * clip key over healthy frames), identical-signature group
@@ -1857,56 +1859,24 @@ object Multimodal {
     * pairing job commits.
     *
     * Rows the three modality passes cannot touch — a NULL kind or an
-    * unknown kind string — land in an `other` row (never decoded, no
+    * unknown kind string — come in as `other` units (never decoded, no
     * signature), so Σ n_media equals the media table's row count: the
     * card covers EVERY row, the same never-lose-a-row-silently
     * discipline the ingest pass-through arms follow.
     *
-    * Scale shape: each signature pass decodes only its own kind (the
-    * passes partition the table — the corpus is decoded once in
-    * total), group stats are two map-side-combinable aggregates over
-    * 16-byte signature rows, and the final join is 1-row-per-kind
+    * Taking units rather than payloads lets a pipeline holding persisted
+    * signature tables stamp its card without re-touching a codec
+    * ([[mediaDedupCardTable]] runs it over the staged hash tables).
+    * Scale shape: group stats are two map-side-combinable aggregates
+    * over 16-byte signature rows, and the final join is 1-row-per-kind
     * frames. Payloads never shuffle.
-    */
-  def mediaDedupCard(media: DataFrame): DataFrame = {
-    // unit = (kind, media_id, sig, has_err): image/audio carry their
-    // 64-bit hash as a hex string; a video clip's sig is the m11 clip
-    // key ([[clipKeyAgg]] — ONE definition with the pairing front),
-    // null iff NO frame decoded; has_err = any decode error at either
-    // granularity
-    val img = imagePhash(media).select(lit("image").as("kind"),
-      col("media_id"), hex(col("phash")).as("sig"),
-      col("decode_err").isNotNull.as("has_err"))
-    val aud = audioHash(media).select(lit("audio").as("kind"),
-      col("media_id"), hex(col("ahash")).as("sig"),
-      col("decode_err").isNotNull.as("has_err"))
-    val vid = videoFrameHashes(media).groupBy(col("media_id"))
-      .agg(count(col("fhash")).as("n_ok"), clipKeyAgg.as("ck"),
-        (count(col("decode_err")) > 0).as("has_err"))
-      .select(lit("video").as("kind"), col("media_id"),
-        when(col("n_ok") > 0, col("ck")).as("sig"), col("has_err"))
-    val other = media
-      .filter(col("kind").isNull || !col("kind").isin(MediaKinds: _*))
-      .select(lit("other").as("kind"), col("media_id"),
-        lit(null).cast("string").as("sig"), lit(false).as("has_err"))
-    mediaDedupCardFromUnits(
-      img.unionByName(aud).unionByName(vid).unionByName(other))
-  }
-
-  /** The m13 card aggregation over a PRE-BUILT unit frame
-    * (kind, media_id, sig, has_err — [[mediaDedupCard]]'s unit
-    * semantics): the seam that lets a pipeline holding persisted
-    * signature tables stamp its card without re-touching a codec (the
-    * staged-signature discipline; [[mediaDedupCardTable]] uses it over
-    * the staged hash tables).
     */
   def mediaDedupCardFromUnits(unitFrame: DataFrame): DataFrame = {
     // cut: perUnit and the group stats are two aggregations over the
     // SAME unit frame — uncut, each would re-run the unit derivation
-    // (for the live [[mediaDedupCard]] form, three codec decode passes
-    // over the whole corpus — review-caught: the card was codec-bound,
-    // so the double decode doubled its dominant cost); lazy
-    // (share-inside-one-query, the n139 measure()/build lesson)
+    // (over raw payloads, three codec decode passes over the whole
+    // corpus); lazy (share-inside-one-query, the n139 measure()/build
+    // lesson)
     val units = graft.ops.Checkpoints.cutLazy(unitFrame)
     val perUnit = units.groupBy(col("kind"))
       .agg(count(lit(1)).as("n_media"),
@@ -1957,11 +1927,11 @@ object Multimodal {
     * in the driver's receipt, not just in spec.
     */
   def mediaDedupCardTable(spark: SparkSession, dir: String): DataFrame = {
-    // units from the STAGED signature tables — bit-identical to
-    // running [[mediaDedupCard]] over the payload corpora (the staged
-    // tables ARE those corpora's hash relations: imagePhash scopes to
-    // kind = image internally, and the audio/video corpora are
-    // kind-scoped by construction), minus the per-query codec decode.
+    // units from the STAGED signature tables — bit-identical to units
+    // derived from the payload corpora (the staged tables ARE those
+    // corpora's hash relations: imagePhash scopes to kind = image
+    // internally, and the audio/video corpora are kind-scoped by
+    // construction), minus the per-query codec decode.
     // The `other` bucket is the planted NULL-kind probe — the card's
     // covers-every-row invariant, as a literal unit.
     val img = stagedImagePhash(spark, dir)

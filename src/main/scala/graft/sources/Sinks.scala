@@ -223,14 +223,14 @@ object Sinks {
   }
 
   /** Versioned-pointer table layout — concurrent-reader-safe
-    * publication and compaction without a rename-swap window. A one-line
+    * publication without a rename-swap window. A one-line
     * `_current` file names the live version `v-<n>`; every version dir
     * carries a tiny `_MANIFEST` naming the DATA directories (relative to
     * the table root) that make up that snapshot, plus string metadata.
     * Two commit shapes share the layout:
     *
     *   - [[publish]] (full): data is written INTO `v-<n>/` and the
-    *     manifest references only it — O(df), the rewrite/compact shape;
+    *     manifest references only it — O(df), the rewrite shape;
     *   - [[append]] (incremental): ONLY the new rows are written, to
     *     `data/c-<n>-<nanos>/`, and the manifest = the previous
     *     version's directory list + the new commit dir — O(batch)
@@ -654,37 +654,6 @@ object Sinks {
           .foreach(s => fs.delete(s.getPath, true))
       }
       vPath.toString
-    }
-
-    /** Forcibly release the publish lease. For a deployment whose OWNER
-      * is the single writer by construction (a streaming foreachBatch
-      * ingest, a cron slot): restarting after a crash that died holding
-      * the lease would otherwise stall publishes until the lease ages
-      * out. Call once at owner startup — NEVER from a deployment with
-      * independent concurrent publishers, where a live holder's lease
-      * would be broken. Returns true when a lease file was removed.
-      */
-    def breakLease(spark: org.apache.spark.sql.SparkSession,
-                   table: String): Boolean = {
-      val lock = new org.apache.hadoop.fs.Path(table, "_publish.lock")
-      val fs = fsOf(spark, lock)
-      fs.exists(lock) && fs.delete(lock, false)
-    }
-
-    /** Reader-safe compaction: rewrite the live version into
-      * `targetFiles` files as a NEW FULL version and repoint — the table
-      * never vanishes mid-swap, unlike a rename-swap compaction's
-      * window. For an append-built table this is the manifest-rewrite
-      * half of the contract: the new version's manifest references only
-      * the fresh data, and the old commit dirs are GC'd as their
-      * manifests age out of retention. The live version's metadata
-      * (e.g. the ingest's high-water batch id) is carried forward.
-      */
-    def compact(spark: org.apache.spark.sql.SparkSession, table: String,
-                targetFiles: Int, keepVersions: Int = 2): String = {
-      val kv = meta(spark, table)
-      publish(read(spark, table).repartition(targetFiles), table,
-        keepVersions, meta = kv)
     }
   }
 

@@ -39,21 +39,4 @@ object AudioIngest {
       emptyIndex = emptyIndex,
       screen = (index, sigs) =>
         Multimodal.audioHashDedupFromIndex(index, sigs, maxDist))
-
-  /** Checkpointed streaming ingest over a parquet directory of media
-    * rows — [[ingestBatch]] in the shared [[VersionedIngest]] wiring.
-    */
-  def startFromParquet(spark: SparkSession, dir: String, checkpoint: String,
-                       indexTable: String, out: String, maxDist: Int = 4,
-                       glob: String = "*.parquet",
-                       maxFilesPerTrigger: Option[Int] = None,
-                       schema: Option[org.apache.spark.sql.types.StructType] =
-                         None,
-                       compactEvery: Int = 0,
-                       compactTargetFiles: Int = 8)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    VersionedIngest.runStream(spark, dir, checkpoint, indexTable, glob,
-      maxFilesPerTrigger, schema, compactEvery, compactTargetFiles) {
-      (batch, id) => ingestBatch(batch, id, indexTable, out, maxDist); ()
-    }
 }

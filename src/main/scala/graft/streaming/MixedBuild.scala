@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,8 +18,8 @@ import graft.sources.{Multimodal, Sinks}
   *   - '''text''' → [[IncrementalBuild.ingestBatch]] (SimhashIngest
   *     screening, exactly-once replay, flat per-batch shape); the
   *     release re-derives the corpus-global n99 stages over the
-  *     survivor store ([[IncrementalBuild.publishRelease]]'s argument,
-  *     applied verbatim).
+  *     survivor store (the [[IncrementalBuild]] argument, applied
+  *     verbatim).
   *   - '''image/audio/video''' → the modality's versioned ingest
   *     ([[ImageIngest]]/[[AudioIngest]]/[[VideoIngest]] — ONE
   *     [[MediaDedupIngest]] policy: decode-once signatures, screening
@@ -35,12 +35,10 @@ import graft.sources.{Multimodal, Sinks}
   * mix/shard assignment and cleaned text; media rows carry payloads,
   * byte counts, and a deterministic xxhash64 shard), published through
   * [[Sinks.publishTrainingBuild]] with per-kind counts stamped into the
-  * manifest. [[releaseCard]] is the dataset-card stamp: the m13
-  * cross-modality dedup card over everything the release ships (plus
-  * the pass-through store, so the card's `other` bucket covers the
-  * rows no modality owns). MixedBuildSpec proves release-over-batches
-  * ≡ release-over-one-batch (batch composition) and reconciles the
-  * per-kind counts against both the manifest and the card.
+  * manifest. MixedBuildSpec proves release-over-batches ≡
+  * release-over-one-batch (batch composition) and reconciles the
+  * per-kind counts against the manifest and the m13 dedup card over
+  * the survivor stores.
   *
   * Scale shape: each batch pays batch-sized + index-stream work per
   * kind (the component ingests' proven shapes); payloads never shuffle
@@ -304,25 +302,6 @@ object MixedBuild {
                      kind: String): DataFrame =
     readOrEmpty(spark, mediaOut(base, kind), withBatchId(mediaStoreSchema))
       .drop("batch_id")
-
-  /** The dataset-card stamp over everything this build ships: the m13
-    * cross-modality dedup card on the three survivor stores UNIONED
-    * with the pass-through store — so Σ n_media equals every media/
-    * unknown row the release covers and the `other` bucket is the
-    * never-lost rows.
-    */
-  def releaseCard(spark: SparkSession, base: String): DataFrame = {
-    val media = Multimodal.MediaKinds
-      .map(k => mediaSurvivors(spark, base, k))
-      .reduce(_ unionByName _)
-      .unionByName(readOrEmpty(spark, otherOut(base),
-        withBatchId(mixedSchema))
-        .drop("batch_id")
-        .select(col("doc_id").as("media_id"), col("kind"), col("source"),
-          col("payload"), col("meta")))
-      .select(col("media_id"), col("kind"), col("payload"), col("meta"))
-    Multimodal.mediaDedupCard(media)
-  }
 
   /** The release frame [[publishRelease]] publishes, pre-publish and
     * lineage-intact — split out so the plan is testable: the text half

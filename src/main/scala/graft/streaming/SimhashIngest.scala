@@ -1,46 +1,42 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
-import graft.sources.Sinks
 
-/** Streaming near-dup-suppressed TEXT ingest — [[SemanticIngest]]'s
-  * text-side twin over the 60-bit simhash pigeonhole index: each
-  * micro-batch of documents is screened against the PUBLISHED SIGNATURE
-  * INDEX (plus itself, smaller-id-first greedy) via
+/** Near-dup-suppressed TEXT ingest over the 60-bit simhash pigeonhole
+  * index: each batch of documents is screened against the PUBLISHED
+  * SIGNATURE INDEX (plus itself, smaller-id-first greedy) via
   * [[Dedup.incrementalSimhashDedupFromIndex]], the survivors' signatures
-  * are appended to the index — a [[Sinks.Versioned]] table — and the
-  * surviving documents are emitted to the sink partitioned by batch id.
+  * are appended to the index — a [[graft.sources.Sinks.Versioned]]
+  * table — and the surviving documents are emitted to the sink
+  * partitioned by batch id.
   *
   * The index stores (doc_id, simhash, batch_id) and NEVER the text:
   * 16 bytes + a stamp per survivor, so the screening state for a 100 TB
-  * text corpus is a few GB of signatures, streamed map-side past the
-  * broadcast batch each trigger ([[SemanticIngest]] must carry whole
-  * embeddings in its index; text needs only the sketch).
+  * text corpus is a few GB of signatures, streamed map-side past each
+  * broadcast batch.
   *
   * POLICY: the greedy STREAM variant — a doc dropped in batch b is not
   * in the index and can never drop a later arrival; within a batch, a
   * doc falls to any smaller-id near neighbor. Arrival order is part of
   * the contract, as in every streaming dedup here.
   *
-  * EXACTLY-ONCE REPLAY: identical to [[SemanticIngest]] — the index
-  * carries `batch_id`; a replayed batch whose id is already published
-  * recomputes nothing (its survivors ARE the index rows it stamped,
-  * computed against the pre-batch index state) and only rewrites its
-  * own sink partition via dynamic partition overwrite. A crash between
-  * the index publish and the sink write resumes without
-  * double-publishing or duplicating sink rows; SimhashIngestSpec drives
-  * the torn order.
+  * EXACTLY-ONCE REPLAY: the index carries `batch_id`; a replayed batch
+  * whose id is already published recomputes nothing (its survivors ARE
+  * the index rows it stamped, computed against the pre-batch index
+  * state) and only rewrites its own sink partition via dynamic
+  * partition overwrite. A crash between the index publish and the sink
+  * write resumes without double-publishing or duplicating sink rows;
+  * SimhashIngestSpec drives the torn order.
   *
   * Scale shape: per-batch work is one signature pass over the BATCH
   * plus the map-side index stream (both screening joins broadcast the
   * batch — plan-pinned on the underlying operator); the publish is an
-  * O(batch) [[Sinks.Versioned.append]] manifest commit; the replay
-  * high-water mark rides version metadata (one manifest read, zero
-  * Spark jobs). Compact on the [[SemanticIngest]] cadence
-  * (`compactEvery ≈ 50`, measured in BENCH_NOTES round 9).
+  * O(batch) [[graft.sources.Sinks.Versioned.append]] manifest commit;
+  * the replay high-water mark rides version metadata (one manifest
+  * read, zero Spark jobs).
   */
 object SimhashIngest {
 
@@ -76,8 +72,7 @@ object SimhashIngest {
         // cut: the screening joins stream the WHOLE signature index, and
         // three actions consume `kept` (index append, sink write, count)
         // — without materialization each would re-pay the O(index) scan
-        // and the per-batch wall the ScaleSanity sweep pins flat would
-        // silently triple
+        // and the per-batch wall would silently triple
         val kept = graft.ops.Checkpoints.cut(
           Dedup.incrementalSimhashDedupFromIndex(batch,
             index.select(col("doc_id"), col("simhash")), maxDist))
@@ -90,22 +85,4 @@ object SimhashIngest {
     val rows = survivors.withColumn("batch_id", lit(batchId))
     VersionedIngest.writeBatchPartition(rows, out)
   }
-
-  /** Checkpointed streaming ingest over a parquet directory of document
-    * rows — [[ingestBatch]] in foreachBatch; `compactEvery` as in
-    * [[SemanticIngest.startFromParquet]] (same measured cadence).
-    */
-  def startFromParquet(spark: SparkSession, dir: String, checkpoint: String,
-                       indexTable: String, out: String, maxDist: Int = 3,
-                       glob: String = "*.parquet",
-                       maxFilesPerTrigger: Option[Int] = None,
-                       schema: Option[org.apache.spark.sql.types.StructType] =
-                         None,
-                       compactEvery: Int = 0,
-                       compactTargetFiles: Int = 8)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    VersionedIngest.runStream(spark, dir, checkpoint, indexTable, glob,
-      maxFilesPerTrigger, schema, compactEvery, compactTargetFiles) {
-      (batch, id) => ingestBatch(batch, id, indexTable, out, maxDist); ()
-    }
 }

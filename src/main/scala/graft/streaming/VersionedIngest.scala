@@ -5,17 +5,16 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Sinks
 
-/** The ONE scaffold all five versioned ingest streams share
-  * (Simhash/Semantic/Substring/Paragraph/Image — review-forced: each
-  * carried a verbatim private copy, so a fix to the replay or lease
-  * discipline had to land five times): the `_current`-pointer existence
-  * probe, the O(1) `max_batch_id` metadata read with the one-off
-  * pre-metadata fallback scan, the empty-or-read index accessor, the
-  * publish-vs-append commit stamped with the batch id, and the
-  * checkpointed AvailableNow foreachBatch wiring with the compaction
-  * cadence. The per-modality SEMANTICS (what a batch screens against,
-  * what the replay arm reconstructs, what gets stamped) stay in each
-  * ingest — only the invariant-bearing plumbing lives here.
+/** The ONE scaffold the versioned ingests share (SimhashIngest and the
+  * three media streams through [[MediaDedupIngest]]; each once carried a
+  * verbatim private copy, so a fix to the replay discipline had to land
+  * in every one): the `_current`-pointer existence probe, the O(1)
+  * `max_batch_id` metadata read with the one-off pre-metadata fallback
+  * scan, the empty-or-read index accessor, the publish-vs-append commit
+  * stamped with the batch id, and the batch-partitioned sink write. The
+  * per-modality SEMANTICS (what a batch screens against, what the replay
+  * arm reconstructs, what gets stamped) stay in each ingest — only the
+  * invariant-bearing plumbing lives here.
   */
 private[streaming] object VersionedIngest {
 
@@ -79,34 +78,5 @@ private[streaming] object VersionedIngest {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id").parquet(out)
     obs.get("n").asInstanceOf[Long]
-  }
-
-  /** The checkpointed AvailableNow foreachBatch wiring every ingest
-    * stream runs: owner-side lease break, per-batch `ingest` callback,
-    * index compaction every `compactEvery` batches (guarded on
-    * existence — batch 0 may not have published yet).
-    */
-  def runStream(spark: SparkSession, dir: String, checkpoint: String,
-                indexTable: String, glob: String,
-                maxFilesPerTrigger: Option[Int],
-                schema: Option[org.apache.spark.sql.types.StructType],
-                compactEvery: Int, compactTargetFiles: Int)
-               (ingest: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    Sinks.Versioned.breakLease(spark, indexTable)
-    FileStreams.readParquetStream(spark, dir, glob, maxFilesPerTrigger,
-        schema)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ingest(batch, id)
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0 &&
-            indexExists(spark, indexTable))
-          Sinks.Versioned.compact(spark, indexTable, compactTargetFiles)
-        ()
-      }
-      .start()
   }
 }

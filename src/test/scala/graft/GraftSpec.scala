@@ -495,6 +495,25 @@ class GraftSpec extends SparkSpec {
     assert(logSorted.starts.size === 1)
   }
 
+  test("selectLogFiles skips names without a trailing yyyy-MM-dd-HH: a " +
+    "rotated .gz inside the day window selects what the directory " +
+    "without it selects") {
+    val plain = writeHourlyDir()
+    val withGz = writeHourlyDir()
+    Files.write(Paths.get(withGz, "postgresql.log.2024-01-15-03.gz"),
+      "rotated".getBytes(UTF_8))
+    def names(dir: String, ref: String) =
+      Graft.selectLogFiles(spark, dir, ref, 5).collect()
+        .map(_.getString(0)).toSeq
+    // every reference hour whose day filters cover 2024-01-15
+    val refs = (0 to 28).map(i => java.time.LocalDateTime.of(2024, 1, 15, 0, 0)
+      .plusHours(i).format(java.time.format.DateTimeFormatter
+        .ofPattern("yyyy-MM-dd-HH")))
+    refs.foreach(ref => assert(names(withGz, ref) === names(plain, ref), ref))
+    assert(names(withGz, "2024-01-15-05") ===
+      (4 to 0 by -1).map(h => f"postgresql.log.2024-01-15-$h%02d"))
+  }
+
   test("observe() metrics ride along with the pipeline run") {
     import scala.collection.mutable
     val captured = mutable.Map.empty[String, Any]
@@ -520,18 +539,5 @@ class GraftSpec extends SparkSpec {
       assert(captured.get("n_lines").contains(1000L))
       assert(captured.get("n_unparsed").contains(0L))
     } finally spark.listenerManager.unregister(listener)
-  }
-
-  test("per-file reports: one partition per selected log file") {
-    val logDir = writeLogDir()
-    val out = java.nio.file.Files.createTempDirectory("graft_pf").toString
-    Graft.runPerFileReports(spark, logDir, out, "2024-01-15-02", 5)
-    val stats = spark.read.parquet(s"$out/per_file_level_stats")
-    val files = stats.select("file_name").distinct().count()
-    assert(files === 5)
-    // partition pruning reaches the scan when reading one file's report
-    val one = stats.filter(col("file_name") === "postgresql.log.2024-01-15-01")
-    assert(one.queryExecution.executedPlan.toString.contains("PartitionFilters"))
-    assert(one.count() > 0)
   }
 }

@@ -128,28 +128,4 @@ class ImageIngestSpec extends SparkSpec {
     assert(Sinks.Versioned.read(spark, table).collect()
       .map(_.toString).sorted.toSeq === idxBefore)
   }
-
-  test("foreachBatch wiring end-to-end; a re-run on the same checkpoint " +
-    "is a no-op") {
-    val tmp = Files.createTempDirectory("graft_imgingest_st").toString
-    val in = s"$tmp/in"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-    stageParquetFile(media(b0: _*), s"$tmp/stage_b0", in, "b0", 1000000L)
-    stageParquetFile(media(b1: _*), s"$tmp/stage_b1", in, "b1", 2000000L)
-    val q = ImageIngest.startFromParquet(spark, in, s"$tmp/ckpt",
-      s"$tmp/index", s"$tmp/out", maxFilesPerTrigger = Some(1))
-    q.awaitTermination(120000)
-    assert(q.exception.isEmpty, s"ingest stream failed: ${q.exception}")
-    val got = sinkIds(s"$tmp/out")
-    assert(got(0L) === Set(3L, 6L))
-    assert(got(1L).contains(300L) && got(1L).contains(400L) &&
-      !got(1L).contains(103L))
-    val idxCount = Sinks.Versioned.read(spark, s"$tmp/index").count()
-    val q2 = ImageIngest.startFromParquet(spark, in, s"$tmp/ckpt",
-      s"$tmp/index", s"$tmp/out", maxFilesPerTrigger = Some(1))
-    q2.awaitTermination(120000)
-    assert(q2.exception.isEmpty)
-    assert(sinkIds(s"$tmp/out") === got)
-    assert(Sinks.Versioned.read(spark, s"$tmp/index").count() === idxCount)
-  }
 }

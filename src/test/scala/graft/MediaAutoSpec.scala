@@ -83,9 +83,10 @@ class MediaAutoSpec extends SparkSpec {
       Multimodal.mediaWithEditedImages(spark, dir)))
     // the EAGER read, paid BEFORE the listener: the card is the m13
     // artifact a pipeline already has
-    val infl = Multimodal.mediaDedupCard(
-      Multimodal.mediaWithEditedImages(spark, dir)
-        .filter(col("kind") === "image"))
+    val infl = Multimodal.mediaDedupCardFromUnits(
+      ph.select(lit("image").as("kind"), col("media_id"),
+        hex(col("phash")).as("sig"),
+        col("decode_err").isNotNull.as("has_err")))
       .filter(col("kind") === "image").select(col("inflation"))
       .head().getDouble(0)
     assert(infl >= 2.0, s"planted corpus must measure dup-heavy, got $infl")

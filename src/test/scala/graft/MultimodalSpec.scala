@@ -883,7 +883,7 @@ class MultimodalSpec extends SparkSpec {
       Row(32L, "pdf", Array.fill[Byte](16)(3), Row(null, null, null)))
     val media = spark.createDataFrame(
       spark.sparkContext.parallelize(rows), Multimodal.mediaSchema)
-    val got = Multimodal.mediaDedupCard(media).collect()
+    val got = MediaCard.of(media).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
         if (r.isNullAt(7)) None else Some(r.getDouble(7)))).toSeq

@@ -247,9 +247,11 @@ class SinksSpec extends SparkSpec {
         "now — it must survive its own retention window")
     // an old reader that resolved v-2 a moment before v-3 landed still
     // reads a complete snapshot (retention covers it)
-    // compact rewrites everything into one full version; once the append
-    // manifests age out of retention, v-1 and the commit dirs are GC'd
-    Sinks.Versioned.compact(spark, table, 1)                         // v-4
+    // a full publish of the live rows rewrites everything into one
+    // version; once the append manifests age out of retention, v-1 and
+    // the commit dirs are GC'd
+    Sinks.Versioned.publish(Sinks.Versioned.read(spark, table)
+      .repartition(1), table)                                        // v-4
     Sinks.Versioned.append(spark.range(18, 20).toDF("id"), table)    // v-5
     Sinks.Versioned.append(spark.range(20, 21).toDF("id"), table)    // v-6
     assert(Sinks.Versioned.read(spark, table)
@@ -259,7 +261,7 @@ class SinksSpec extends SparkSpec {
     val commitsAfter = new java.io.File(s"$table/data").listFiles()
       .map(_.getName).filter(_.startsWith("c-")).sorted
     assert(commitsAfter.forall(_.drop(2).takeWhile(_ != '-').toLong >= 5),
-      s"pre-compaction commits must be GC'd, got ${commitsAfter.mkString(",")}")
+      s"pre-rewrite commits must be GC'd, got ${commitsAfter.mkString(",")}")
   }
 
   test("versioned time travel: readVersion pins a snapshot; every " +
@@ -292,10 +294,11 @@ class SinksSpec extends SparkSpec {
       "an inherited full version is data now — still listed, still readable")
     assert(Sinks.Versioned.readVersion(spark, table, 1L)
       .as[Long].collect().sorted === (0L until 10L).toArray)
-    // a compact (full rewrite) breaks the inheritance chain; two more
-    // commits age the old manifests out of retention and the early
-    // versions genuinely disappear
-    Sinks.Versioned.compact(spark, table, 1, keepVersions = 3)       // v-5
+    // a full rewrite breaks the inheritance chain; two more commits age
+    // the old manifests out of retention and the early versions
+    // genuinely disappear
+    Sinks.Versioned.publish(Sinks.Versioned.read(spark, table)
+      .repartition(1), table, keepVersions = 3)                      // v-5
     Sinks.Versioned.append(spark.range(20, 21).toDF("id"), table,
       keepVersions = 3)                                             // v-6
     Sinks.Versioned.append(spark.range(21, 22).toDF("id"), table,
@@ -309,8 +312,7 @@ class SinksSpec extends SparkSpec {
       "a pruned version must fail with the retention knob named")
   }
 
-  test("versioned meta: stamped at publish/append, O(1) read-back, " +
-    "carried forward by compact") {
+  test("versioned meta: stamped at publish/append, O(1) read-back") {
     val table = Files.createTempDirectory("graft_vmeta").toString + "/t"
     Sinks.Versioned.publish(spark.range(5).toDF("id"), table,
       meta = Map("max_batch_id" -> "0", "source" -> "unit"))
@@ -319,9 +321,6 @@ class SinksSpec extends SparkSpec {
     Sinks.Versioned.append(spark.range(5, 9).toDF("id"), table,
       meta = Map("max_batch_id" -> "1"))
     assert(Sinks.Versioned.meta(spark, table) === Map("max_batch_id" -> "1"))
-    Sinks.Versioned.compact(spark, table, 1)
-    assert(Sinks.Versioned.meta(spark, table) === Map("max_batch_id" -> "1"),
-      "compact must carry the live version's metadata forward")
     assert(Sinks.Versioned.read(spark, table).count() === 9L)
   }
 
@@ -440,7 +439,7 @@ class SinksSpec extends SparkSpec {
     }
   }
 
-  test("versioned compact: a reader racing the swap always sees a full " +
+  test("versioned publish: a reader racing the swap always sees a full " +
     "table (the absent-window of the rename swap does not exist here)") {
     val table = Files.createTempDirectory("graft_vrace").toString + "/t"
     Sinks.Versioned.publish(
@@ -450,7 +449,7 @@ class SinksSpec extends SparkSpec {
     var reads = 0
     val reader = new Thread(() => {
       // do-while: at least ONE read always completes even if a loaded
-      // test machine finishes all three compactions before this thread's
+      // test machine finishes all three rewrites before this thread's
       // first Spark job does (the `reads > 0` guard was flaky otherwise);
       // every completed read must see a complete version — 1000 rows,
       // whichever side of the pointer swap it lands on
@@ -465,12 +464,13 @@ class SinksSpec extends SparkSpec {
     // reader may still hold — this test isolates the SWAP; the retention
     // contract ("size keepVersions to reader lifetimes") is its own test
     try (1 to 3).foreach(_ =>
-      Sinks.Versioned.compact(spark, table, 2, keepVersions = 10))
+      Sinks.Versioned.publish(Sinks.Versioned.read(spark, table)
+        .repartition(2), table, keepVersions = 10))
     finally { stop = true; reader.join(30000) }
     failure.foreach(throw _)
-    assert(reads > 0, "the reader must have actually raced the compactions")
+    assert(reads > 0, "the reader must have actually raced the rewrites")
     assert(new java.io.File(table, "v-4").isDirectory,
-      "three compactions over v-1 must have published v-2..v-4")
+      "three rewrites over v-1 must have published v-2..v-4")
   }
 
   test("schema-merge read spans evolving parquet versions") {

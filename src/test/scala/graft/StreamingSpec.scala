@@ -62,118 +62,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("file-source AvailableNow stream over the events parquet emits closed windows") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    Hourly.startFromParquet(spark, "/root/testdata/sf0.001",
-      s"$tmp/ckpt", s"$tmp/out").awaitTermination()
-    val out = spark.read.parquet(s"$tmp/out")
-    val batch = Hourly.hourlyAgg(
-      graft.ops.Tables.events(spark, "/root/testdata/sf0.001"))
-    // emitted windows must be exactly a prefix of the batch result: every
-    // emitted row appears in the batch twin, only watermark-open windows
-    // may be withheld
-    assert(out.count() > 0)
-    assert(out.exceptAll(batch).count() === 0)
-    val withheld = batch.exceptAll(out)
-    val maxClosed = out.agg(max(col("hour_start"))).head().getTimestamp(0)
-    assert(withheld.filter(col("hour_start") < maxClosed).count() === 0)
-  }
-
-  // ---- S7 on a stream: kill → resume must lose nothing and dupe nothing.
-  // A mid-batch kill has exactly two observable leftovers, and the test
-  // exercises both deterministically:
-  //   (1) source side: un-ingested input remains → the resumed run must
-  //       process it exactly once (checkpoint offset log);
-  //   (2) sink side: data files written by the dying batch exist on disk
-  //       but were never committed to `_spark_metadata` → readers must not
-  //       see them (we plant exactly such an orphan file and assert it
-  //       stays invisible while physically present).
-  test("checkpointed sink restart: resume after kill has no dupes, no losses; " +
-    "torn sink files stay invisible") {
-    import java.nio.file.{Files => JFiles, StandardCopyOption}
-    val tmp = JFiles.createTempDirectory("graft_restart").toString
-    val in = s"$tmp/in"; val ckpt = s"$tmp/ckpt"; val out = s"$tmp/out"
-    JFiles.createDirectories(java.nio.file.Paths.get(in))
-
-    // Split the events table into 4 event-time-ordered files so the
-    // watermark advances file by file (one micro-batch per file below).
-    val ev = graft.ops.Tables.events(spark, "/root/testdata/sf0.001")
-    val withQ = ev.withColumn("q", ntile(4).over(
-      org.apache.spark.sql.expressions.Window.orderBy(col("ts"))))
-    val staged = (1 to 4).map { i =>
-      val stage = s"$tmp/stage_q$i"
-      withQ.filter(col("q") === i).drop("q").coalesce(1)
-        .write.parquet(stage)
-      new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-    }
-    def arrive(i: Int): Unit = { // distinct ascending mtimes → stable order
-      val dst = new java.io.File(in, s"q$i.parquet")
-      JFiles.copy(staged(i - 1).toPath, dst.toPath,
-        StandardCopyOption.REPLACE_EXISTING)
-      dst.setLastModified(1700000000000L + i * 1000L)
-    }
-
-    // Run 1: only half the input has arrived; one file per micro-batch.
-    arrive(1); arrive(2)
-    Hourly.startFromParquet(spark, in, ckpt, out,
-      glob = "*.parquet", maxFilesPerTrigger = Some(1)).awaitTermination()
-    val afterKill = spark.read.parquet(out).count()
-    assert(afterKill > 0, "run 1 must have committed some closed windows")
-
-    // Plant the mid-batch-kill artifact: a data file in the sink directory
-    // that no committed batch registered in _spark_metadata.
-    val torn = plantTornFile(out)
-
-    // Run 2: the rest of the input arrives; same checkpoint + sink.
-    arrive(3); arrive(4)
-    Hourly.startFromParquet(spark, in, ckpt, out,
-      glob = "*.parquet", maxFilesPerTrigger = Some(1)).awaitTermination()
-
-    val emitted = spark.read.parquet(out)
-    val batch = Hourly.hourlyAgg(ev)
-    // No dupes, no spurious rows: every emitted row (multiset!) appears in
-    // the batch twin — a replayed batch or a visible torn file would leave
-    // a remainder here.
-    assert(emitted.count() > afterKill, "run 2 must have made progress")
-    assert(emitted.exceptAll(batch).count() === 0,
-      "restart produced duplicate or spurious rows")
-    // No losses: only windows the final watermark left open may be missing.
-    val maxClosed = emitted.agg(max(col("hour_start"))).head().getTimestamp(0)
-    assert(batch.exceptAll(emitted)
-      .filter(col("hour_start") < maxClosed).count() === 0,
-      "restart lost closed windows")
-    // The torn file is physically present, non-empty, and yet unread.
-    assertTornInvisible(torn)
-  }
-
-  test("explicit source schema lets the pipeline start AHEAD of data: " +
-    "empty input dir runs clean with schema, throws without") {
-    import java.nio.file.{Files => JFiles}
-    import org.apache.spark.sql.types._
-    val tmp = JFiles.createTempDirectory("graft_ahead").toString
-    val in = s"$tmp/in"
-    JFiles.createDirectories(java.nio.file.Paths.get(in))
-    // a monitor deployed before its first data file arrives: the dir
-    // exists, no matching files yet — a NORMAL state, not an error
-    val raw = StructType(Seq(StructField("ts", TimestampType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val q = Hourly.startFromParquet(spark, in, s"$tmp/ckpt", s"$tmp/out",
-      schema = Some(raw))
-    q.awaitTermination(60000)
-    assert(!q.isActive)
-    assert(q.exception.isEmpty, s"ahead-of-data start failed: ${q.exception}")
-    // the sink holds zero committed files; a schema-given read is empty
-    assert(spark.read
-      .schema("hour_start timestamp, event_type string, n long, sum_value double")
-      .parquet(s"$tmp/out").count() === 0L)
-    // without the explicit schema the inference fallback still throws —
-    // the documented pre-existing behavior the schema param exists to fix
-    intercept[org.apache.spark.sql.AnalysisException](
-      Hourly.startFromParquet(spark, in, s"$tmp/ckpt2", s"$tmp/out2"))
-  }
-
   test("per-row text operators run UNCHANGED on a stream: " +
     "normalizeRedactRaw + chunkDocsRaw, stream ≡ batch") {
     implicit val sqlCtx = spark.sqlContext
