@@ -275,6 +275,15 @@ object Queries {
       |FROM w LEFT JOIN nrem USING (doc_id) LEFT JOIN kept USING (doc_id)
       |ORDER BY doc_id""".stripMargin
 
+  /** The keep-first substring dedup oracle, shared VERBATIM by n122
+    * (plain), n123 (exact-dup pre-collapsed) and n145 (the measured
+    * auto): every branch produces n122's exact output.
+    */
+  private lazy val DupSubDedupOracle =
+    s"""WITH $DupSubCtes,
+      |$DupSubRebuildCtes
+      |$DupSubRebuildSelect""".stripMargin
+
   /** The 60-bit md5-prefix gram key — the hashed production twin's
     * oracle computes the identical key, so n125 is proven bit-for-bit,
     * not by rank agreement.
@@ -449,6 +458,24 @@ object Queries {
        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)),
        |bits AS (SELECT doc_id, ${simhashBitSumsSqlW(Dedup.SimhashWideBits, "h")} FROM wh GROUP BY doc_id),
        |sim AS (SELECT doc_id, ${simhashSigSqlW(Dedup.SimhashWideBits)} AS simhash FROM bits)""".stripMargin
+
+  /** The MinHash-front containment oracle, shared VERBATIM by n90
+    * (uncollapsed) and n91 (exact-dup pre-collapsed): the collapse is
+    * exact, so one oracle proves both.
+    */
+  private lazy val ContainmentPairsOracle =
+    s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte,
+      |pairs AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
+      |  FROM bands l JOIN bands r
+      |    ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id),
+      |w AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws FROM documents),
+      |sc AS (SELECT doc_a, doc_b,
+      |  round(len(list_intersect(wa.ws, wb.ws))::double / len(wa.ws), 6) AS cont_a_in_b,
+      |  round(len(list_intersect(wa.ws, wb.ws))::double / len(wb.ws), 6) AS cont_b_in_a
+      |FROM pairs JOIN w wa ON doc_a = wa.doc_id JOIN w wb ON doc_b = wb.doc_id)
+      |SELECT doc_a, doc_b, cont_a_in_b, cont_b_in_a FROM sc
+      |WHERE greatest(cont_a_in_b, cont_b_in_a) >= 0.5
+      |ORDER BY doc_a, doc_b""".stripMargin
 
   /** The containment-prefix oracle, shared VERBATIM by n115
     * (uncollapsed) and n118 (exact-dup pre-collapsed): both fronts
@@ -1634,18 +1661,7 @@ object Queries {
     // 0.5 — the excerpt/quote detector symmetric Jaccard misses.
     ("n90_containment_pairs",
       (s: SparkSession, d: String) => Dedup.containmentPairs(docs(s, d), 0.5),
-      Some(s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte,
-        |pairs AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-        |  FROM bands l JOIN bands r
-        |    ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id),
-        |w AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws FROM documents),
-        |sc AS (SELECT doc_a, doc_b,
-        |  round(len(list_intersect(wa.ws, wb.ws))::double / len(wa.ws), 6) AS cont_a_in_b,
-        |  round(len(list_intersect(wa.ws, wb.ws))::double / len(wb.ws), 6) AS cont_b_in_a
-        |FROM pairs JOIN w wa ON doc_a = wa.doc_id JOIN w wb ON doc_b = wb.doc_id)
-        |SELECT doc_a, doc_b, cont_a_in_b, cont_b_in_a FROM sc
-        |WHERE greatest(cont_a_in_b, cont_b_in_a) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin)),
+      Some(ContainmentPairsOracle)),
 
     // n90 with the exact-dup pre-collapse in front of the banding (the
     // n53/n78 move) — bit-equal by construction, proven here against
@@ -1654,18 +1670,7 @@ object Queries {
     ("n91_containment_pairs_collapsed",
       (s: SparkSession, d: String) =>
         Dedup.containmentPairsCollapsed(docs(s, d), 0.5),
-      Some(s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte,
-        |pairs AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-        |  FROM bands l JOIN bands r
-        |    ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id),
-        |w AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws FROM documents),
-        |sc AS (SELECT doc_a, doc_b,
-        |  round(len(list_intersect(wa.ws, wb.ws))::double / len(wa.ws), 6) AS cont_a_in_b,
-        |  round(len(list_intersect(wa.ws, wb.ws))::double / len(wb.ws), 6) AS cont_b_in_a
-        |FROM pairs JOIN w wa ON doc_a = wa.doc_id JOIN w wb ON doc_b = wb.doc_id)
-        |SELECT doc_a, doc_b, cont_a_in_b, cont_b_in_a FROM sc
-        |WHERE greatest(cont_a_in_b, cont_b_in_a) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin)),
+      Some(ContainmentPairsOracle)),
 
     // Containment-aware prefix index (PPJoin-family set-similarity
     // join): EXACT recall on shingle containment — the 30-word-quote-
@@ -1696,7 +1701,7 @@ object Queries {
     // than rep-level banding saves — the driver-visible 23.6 s vs
     // 7.7 s at sf0.1, inflation ≈ 1.07). Branch-independent output by
     // construction, so n115's oracle proves whichever branch the
-    // measurement picks; DedupSpec pins the forced branches bit-equal.
+    // measurement picks; DedupSpec pins both branches bit-equal.
     ("n139_containment_prefix_auto",
       (s: SparkSession, d: String) =>
         Dedup.containmentPairsPrefixAuto(docs(s, d), 0.5),
@@ -2693,9 +2698,7 @@ object Queries {
     ("n122_dupsub_dedup",
       (s: SparkSession, d: String) =>
         TextAnalysis.dupSubstringDedup(docs(s, d), 5),
-      Some(s"""WITH $DupSubCtes,
-        |$DupSubRebuildCtes
-        |$DupSubRebuildSelect""".stripMargin)),
+      Some(DupSubDedupOracle)),
 
     // n122's PRODUCTION twin: exact-dup pre-collapse in front of the
     // window machinery (the n118/n53 move) — one rep per distinct text
@@ -2706,9 +2709,7 @@ object Queries {
     ("n123_dupsub_dedup_collapsed",
       (s: SparkSession, d: String) =>
         TextAnalysis.dupSubstringDedupCollapsed(docs(s, d), 5),
-      Some(s"""WITH $DupSubCtes,
-        |$DupSubRebuildCtes
-        |$DupSubRebuildSelect""".stripMargin)),
+      Some(DupSubDedupOracle)),
 
     // The MEASURED switch between n122 (plain) and n123 (pre-collapse)
     // — the n139 discipline on the substring family: digest groups cut
@@ -2716,13 +2717,11 @@ object Queries {
     // regime where round 11 measured 12.4s -> 2.8s at plain 5x).
     // Branch-independent output by construction; n122's oracle proves
     // whichever branch the measurement picks; TextAnalysisSpec pins
-    // both forced branches bit-equal + the default's branch choice.
+    // both branches bit-equal + the default's branch choice.
     ("n145_dupsub_dedup_auto",
       (s: SparkSession, d: String) =>
         TextAnalysis.dupSubstringDedupAuto(docs(s, d), 5),
-      Some(s"""WITH $DupSubCtes,
-        |$DupSubRebuildCtes
-        |$DupSubRebuildSelect""".stripMargin)),
+      Some(DupSubDedupOracle)),
 
     // n122 over 60-bit HASHED gram keys — the production shuffle/index
     // payload (8 B per window vs a 5-word string). Both engines compute
@@ -4336,7 +4335,7 @@ object Queries {
           .filter(col("phash").isNotNull)
         OracleVals.register("m5_image_neardup_pairs",
           OracleVals.collapsedPairsSql(ph, "phash", 4))
-        graft.sources.Multimodal.imageNearDupPairsCollapsed(ph)
+        graft.sources.Multimodal.mediaNearDupPairsCollapsed(ph, "phash", 4)
       },
       None),
 
@@ -4363,11 +4362,11 @@ object Queries {
           OracleVals.incrementalScreenSql(
             ph.filter(col("phash").isNotNull), "phash", 4,
             half.head().getLong(0), "phash"))
-        graft.sources.Multimodal.imagePhashDedupFromIndex(
+        graft.sources.Multimodal.mediaSignatureDedupFromIndex(
           ph.join(broadcast(half), col("media_id") < col("h"))
             .select(col("media_id"), col("phash")),
           ph.join(broadcast(half), col("media_id") >= col("h"))
-            .select(col("media_id"), col("phash")))
+            .select(col("media_id"), col("phash")), "phash", 4)
       },
       None),
 
@@ -4394,7 +4393,7 @@ object Queries {
           .filter(col("ahash").isNotNull)
         OracleVals.register("m8_audio_neardup_pairs",
           OracleVals.collapsedPairsSql(ah, "ahash", 4))
-        graft.sources.Multimodal.audioNearDupPairsCollapsed(ah)
+        graft.sources.Multimodal.mediaNearDupPairsCollapsed(ah, "ahash", 4)
       },
       None),
 
@@ -4413,11 +4412,11 @@ object Queries {
           OracleVals.incrementalScreenSql(
             ah.filter(col("ahash").isNotNull), "ahash", 4,
             half.head().getLong(0), "ahash"))
-        graft.sources.Multimodal.audioHashDedupFromIndex(
+        graft.sources.Multimodal.mediaSignatureDedupFromIndex(
           ah.join(broadcast(half), col("media_id") < col("h"))
             .select(col("media_id"), col("ahash")),
           ah.join(broadcast(half), col("media_id") >= col("h"))
-            .select(col("media_id"), col("ahash")))
+            .select(col("media_id"), col("ahash")), "ahash", 4)
       },
       None),
 
@@ -4493,18 +4492,17 @@ object Queries {
     // spec-pinned bit-equal (plain pigeonhole vs exact-dup pre-collapse
     // + closed-form expansion), so the probe can only change the
     // candidate-generation shape, never the answer. EAGER by the
-    // documented auto contract (one count-only probe job; the lazy
-    // FromInflation half takes the card's inflation — zero-job
-    // construction, listener-pinned). Registered on the AUDIO corpus:
-    // its member relation is output-bounded (~1.6k distinct reachable
-    // fingerprints), where the image/video member relations on this
-    // synthetic corpus are inherently group-size²-sized — those autos
-    // are API + spec surfaces and their registry encodings stay the
-    // bounded rep-level m5/m11 forms. ORACLED by capture: whichever
-    // front the measured auto picks, DuckDB brute-forces the MEMBER
-    // pair relation over the captured fingerprints — so the
-    // "both fronts bit-equal" spec claim is also differentially
-    // checked against an engine that knows neither front.
+    // documented auto contract (one count-only probe job). Registered
+    // on the AUDIO corpus: its member relation is output-bounded (~1.6k
+    // distinct reachable fingerprints), where the image/video member
+    // relations on this synthetic corpus are inherently
+    // group-size²-sized — those autos are API + spec surfaces and their
+    // registry encodings stay the bounded rep-level m5/m11 forms.
+    // ORACLED by capture: whichever front the measured auto picks,
+    // DuckDB brute-forces the MEMBER pair relation over the captured
+    // fingerprints — so the "both fronts bit-equal" spec claim is also
+    // differentially checked against an engine that knows neither
+    // front.
     ("m14_audio_neardup_auto",
       (s: SparkSession, d: String) => {
         // staged signature table: the inflation probe, the oracle

@@ -84,7 +84,7 @@ object Checkpoints {
     * segment once as shuffle files; the sampling pass then replays
     * those files instead of the compute. Lazy and job-free at
     * construction (unlike [[cutLazy]] on an exchanging subtree — see
-    * the AQE caveat above), at the cost of one extra exchange of the
+    * its AQE caveat), at the cost of one extra exchange of the
     * (usually small) verified rows.
     */
   def sortBarrier(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame =
@@ -132,26 +132,22 @@ object Checkpoints {
     * materializes at the frame's FIRST action and is reused from blocks
     * after that — the same share-once semantics, deferred. This is the
     * form for share-inside-one-query cuts (a subtree read N times by
-    * one plan), where eagerness buys nothing and costs plan-build
-    * neutrality: operators built on cutLazy can be constructed and
-    * plan-inspected with zero Spark jobs (spec-pinned). Keep the EAGER
-    * [[cut]] for (a) iterative loops (lineage must truncate each round
-    * BEFORE the next builds on it), (b) read-modify-write cycles (the
-    * read must materialize before the write overwrites its input), and
-    * (c) measure-then-choose reads (the count IS the point).
+    * one plan), where eagerness buys nothing. Keep the EAGER [[cut]]
+    * for (a) iterative loops (lineage must truncate each round BEFORE
+    * the next builds on it), (b) read-modify-write cycles (the read
+    * must materialize before the write overwrites its input), and (c)
+    * measure-then-choose reads (the count IS the point).
     *
-    * AQE caveat (measured, round 14 — MediaAutoSpec's zero-job
-    * listener caught it): when the subtree being cut CONTAINS AN
-    * EXCHANGE and adaptive execution is on, building the checkpoint
-    * RDD materializes the plan's shuffle stages at construction — the
-    * "lazy" checkpoint still runs those jobs up front (only the final
-    * stage defers). Zero-job construction holds for exchange-free
-    * subtrees (a checkpointed input's filter/select, the card's
-    * decode union). An operator whose job-free construction is part
-    * of its CONTRACT must not cutLazy an exchanging subtree — share
-    * it through Catalyst's exchange reuse instead
-    * ([[graft.ops.Dedup.signaturePairsCollapsedExpanded]]'s sharing
-    * note).
+    * AQE caveat (measured, round 14): when the subtree being cut
+    * CONTAINS AN EXCHANGE and adaptive execution is on, building the
+    * checkpoint RDD materializes the plan's shuffle stages at
+    * construction — the "lazy" checkpoint still runs those jobs up
+    * front (only the final stage defers). Construction stays job-free
+    * only for exchange-free subtrees (a checkpointed input's
+    * filter/select, the card's decode union); an exchanging subtree
+    * shared inside one query can go through Catalyst's exchange reuse
+    * instead ([[graft.ops.Dedup.signaturePairsCollapsedExpanded]]'s
+    * sharing note).
     *
     * Reliable mode note: a reliable checkpoint needs the persist dance
     * around an eager materialization, so in that mode this falls back

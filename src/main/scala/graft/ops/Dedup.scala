@@ -195,12 +195,18 @@ object Dedup {
       .groupBy(col("band"), col("band_key"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) > 1)
-      .select(explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(slice(ids, i + 2, size(ids)),
-          |    y -> named_struct('doc_a', x, 'doc_b', y))))""".stripMargin))
-        .as("p"))
+      .select(pairsWithin)
       .select(col("p.doc_a"), col("p.doc_b")).distinct()
+
+  /** Every (doc_a < doc_b) pair inside each row's sorted `ids` array,
+    * exploded to a struct column `p` — the one per-bucket / per-group
+    * pair generator (LSH buckets, exact-dup groups), never a self-join.
+    */
+  private def pairsWithin: Column = explode(expr(
+    """flatten(transform(ids, (x, i) ->
+      |  transform(slice(ids, i + 2, size(ids)),
+      |    y -> named_struct('doc_a', x, 'doc_b', y))))""".stripMargin))
+    .as("p")
 
   /** MinHash-LSH index tuning harness — [[simhashIndexStats]]'s
     * discipline on the BAND index ([[bucketStats]], one definition):
@@ -371,24 +377,9 @@ object Dedup {
       maxBroadcastPairs: Long = MaxBroadcastPairs): DataFrame = {
     val pairs = Checkpoints.cut(
       minhashNearDupPairsRaw(docs, threshold).select(col("doc_a"), col("doc_b")))
-    sourceLeakageMatrixFromPairs(docs, pairs, pairs.count(),
-      maxBroadcastPairs)
-  }
-
-  /** The LAZY half of [[sourceLeakageMatrixAuto]] — the ADVICE-sketched
-    * measure()/build split: the caller supplies the verified pair frame
-    * (typically [[Checkpoints.cut]] of [[minhashNearDupPairs]]) and its
-    * already-measured count; constructing THIS plan executes zero jobs
-    * (spec-pinned via a job-count listener), so it composes and
-    * plan-inspects like the rest of the registry. The auto form keeps
-    * its documented EAGER contract as the registry entry; this is the
-    * form for callers who measure once and build many (or lazily).
-    */
-  def sourceLeakageMatrixFromPairs(
-      docs: DataFrame, pairs: DataFrame, nPairs: Long,
-      maxBroadcastPairs: Long = MaxBroadcastPairs): DataFrame =
     sourceLeakageCore(docs, pairs,
-      if (nPairs <= maxBroadcastPairs) broadcast else identity)
+      if (pairs.count() <= maxBroadcastPairs) broadcast else identity)
+  }
 
   /** ONE definition of the source-leakage matrix over an arbitrary
     * verified (doc_a, doc_b) pair frame — `hint` is the exchange
@@ -543,7 +534,14 @@ object Dedup {
     * signatures, bucket-bounded pair generation, exact verification on
     * candidate pairs only.
     */
-  def containmentPairs(docs: DataFrame, threshold: Double): DataFrame = {
+  def containmentPairs(docs: DataFrame, threshold: Double): DataFrame =
+    containmentPairsRaw(docs, threshold).orderBy(col("doc_a"), col("doc_b"))
+
+  /** [[containmentPairs]] without the presentation sort — the form the
+    * collapsed twin runs over the group reps.
+    */
+  private def containmentPairsRaw(docs: DataFrame,
+                                  threshold: Double): DataFrame = {
     val pairs = lshCandidatePairs(docs)
     val w = docs.select(col("doc_id"),
       array_distinct(split(col("text"), " ")).as("ws"))
@@ -560,19 +558,17 @@ object Dedup {
         round(col("inter").cast("double") / col("na"), 6).as("cont_a_in_b"),
         round(col("inter").cast("double") / col("nb"), 6).as("cont_b_in_a"))
       .filter(greatest(col("cont_a_in_b"), col("cont_b_in_a")) >= threshold)
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** [[containmentPairs]] with the exact-dup pre-collapse composed in
     * front of the banding — the production form for dup-heavy corpora,
     * the same n53/n78 move: identical texts share every shingle,
-    * signature, band key, and word set, so banding ONE representative
-    * per distinct text and expanding verified rep pairs back through
-    * the member lists is EXACT, not approximate. Cross-group member
-    * pairs inherit their reps' containment values with the direction
-    * columns swapped when id order flips across the groups; within-
-    * group pairs are identical texts — containment 1.0 both ways, which
-    * the uncollapsed path emits via their all-bands-shared buckets.
+    * signature, band key, and word set, so banding and verifying ONE
+    * representative per distinct text ([[digestGroups]]) and expanding
+    * the verified rep pairs back through the member lists
+    * ([[expandRepPairs]]) is EXACT, not approximate. Within-group pairs
+    * are identical texts — containment 1.0 both ways, which the
+    * uncollapsed path emits via their all-bands-shared buckets.
     * Without the collapse, a bucket holding a size-g dup group pays
     * g²/2 pair generation and verification for values the group's one
     * rep already determines. DedupSpec pins bit-equality with
@@ -582,58 +578,75 @@ object Dedup {
     */
   def containmentPairsCollapsed(docs: DataFrame,
                                 threshold: Double): DataFrame = {
-    val eligible = docs
-      .filter(graft.functions.MinHash.eligible(col("text")))
-      .select(col("doc_id"), col("text"))
-    val groups = Checkpoints.cut(
-      eligible.groupBy(md5(col("text")).as("digest"))
-        .agg(min(col("doc_id")).as("rep"), first(col("text")).as("text"),
-          sort_array(collect_list(col("doc_id"))).as("ids")))
-    val repPairs = lshCandidatePairs(
-      groups.select(col("rep").as("doc_id"), col("text")))
-    val w = groups.select(col("rep"),
-      array_distinct(split(col("text"), " ")).as("ws"), col("ids"))
-    val verified = repPairs
-      .join(w.as("wa"), col("doc_a") === col("wa.rep"))
-      .join(w.as("wb"), col("doc_b") === col("wb.rep"))
-      .select(
-        size(array_intersect(col("wa.ws"), col("wb.ws"))).as("inter"),
-        size(col("wa.ws")).as("na"), size(col("wb.ws")).as("nb"),
-        col("wa.ids").as("ids_a"), col("wb.ids").as("ids_b"))
-      // barrier below the threshold (Checkpoints.exprBarrier): the
-      // pushed predicate would re-evaluate the rep intersect twice
-      .transform(Checkpoints.exprBarrier(_, "contc_verify"))
-      .select(round(col("inter").cast("double") / col("na"), 6).as("ca"),
-        round(col("inter").cast("double") / col("nb"), 6).as("cb"),
-        col("ids_a"), col("ids_b"))
-      .filter(greatest(col("ca"), col("cb")) >= threshold)
-    // map-side expansion: each member pair ordered doc_a < doc_b, the
-    // containment direction following the id order across the groups
-    val cross = verified.select(col("ca"), col("cb"),
-      explode(flatten(transform(col("ids_a"), a =>
-        transform(col("ids_b"), b =>
-          struct(least(a, b).as("doc_a"), greatest(a, b).as("doc_b"),
-            (a < b).as("aFirst")))))).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"),
-        when(col("p.aFirst"), col("ca")).otherwise(col("cb"))
-          .as("cont_a_in_b"),
-        when(col("p.aFirst"), col("cb")).otherwise(col("ca"))
-          .as("cont_b_in_a"))
+    val groups = Checkpoints.cut(digestGroups(
+      docs.filter(graft.functions.MinHash.eligible(col("text")))))
+    expandRepPairs(
+      containmentPairsRaw(
+        groups.select(col("rep").as("doc_id"), col("text")), threshold),
+      // a threshold above 1 keeps no rep pair, and no within-group pair
+      // either (those score 1.0)
+      groups.filter(lit(1.0) >= threshold), ContainmentValues)
+  }
+
+  /** Exact-dup digest groups: one row per distinct md5(text) with
+    * rep = min doc_id, the group's text (identical across its members)
+    * and the sorted member ids — the front every text pre-collapse
+    * runs its pair or window machinery over. Lazy; each caller picks
+    * its own materialization.
+    */
+  private[ops] def digestGroups(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col("text")).as("digest"))
+      .agg(min(col("doc_id")).as("rep"), first(col("text")).as("text"),
+        sort_array(collect_list(col("doc_id"))).as("ids"))
+
+  /** The member pair relation of an exact-dup collapse, rebuilt from
+    * the pair front's answer over the group reps. Each rep pair
+    * (doc_a, doc_b, values…) expands map-side to its two groups' member
+    * cross product, each member pair ordered doc_a < doc_b; every
+    * ≥ 2-member group adds its within-group pairs. `groups` holds
+    * (rep, ids). Each of `values` is (column, mirror, within): a member
+    * pair whose id order flips against its reps' takes the `mirror`
+    * column's value (the other direction of an asymmetric score, the
+    * column itself for a symmetric one), and a within-group pair —
+    * identical texts or signatures — takes `within`. Sorted by
+    * (doc_a, doc_b).
+    */
+  private def expandRepPairs(repPairs: DataFrame, groups: DataFrame,
+                             values: Seq[(String, String, Column)])
+      : DataFrame = {
+    val gids = groups.select(col("rep"), col("ids"))
+    val cross = repPairs
+      .join(gids.as("ga"), col("doc_a") === col("ga.rep"))
+      .join(gids.as("gb"), col("doc_b") === col("gb.rep"))
+      .select(values.map(v => col(v._1)) :+
+        explode(flatten(transform(col("ga.ids"), a =>
+          transform(col("gb.ids"), b =>
+            struct(least(a, b).as("doc_a"), greatest(a, b).as("doc_b"),
+              (a < b).as("aFirst")))))).as("p"): _*)
+      .select(col("p.doc_a") +: col("p.doc_b") +: values.map {
+        case (v, mirror, _) =>
+          when(col("p.aFirst"), col(v)).otherwise(col(mirror)).as(v)
+      }: _*)
     val within = groups
-      .filter(size(col("ids")) > 1 && lit(1.0) >= threshold)
-      .select(explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(slice(ids, i + 2, size(ids)),
-          |    y -> named_struct('doc_a', x, 'doc_b', y))))""".stripMargin))
-        .as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"),
-        lit(1.0).as("cont_a_in_b"), lit(1.0).as("cont_b_in_a"))
-    // sortBarrier: the range exchange's boundary-sampling pass would
-    // otherwise re-run the verify + expansion segment (no exchange of
-    // its own) a second time per action
+      .filter(size(col("ids")) > 1)
+      .select(pairsWithin)
+      .select(col("p.doc_a") +: col("p.doc_b") +: values.map {
+        case (v, _, w) => w.as(v)
+      }: _*)
+    // sortBarrier: the rep-level verify and the member expansion sit
+    // between the last exchange and the range sort, so boundary
+    // sampling would re-run them per action
     Checkpoints.sortBarrier(cross.unionAll(within), col("doc_a"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
+
+  /** Containment's [[expandRepPairs]] values: the two directions trade
+    * places when a member pair's id order flips across its groups, and
+    * identical texts contain each other fully.
+    */
+  private val ContainmentValues = Seq(
+    ("cont_a_in_b", "cont_b_in_a", lit(1.0)),
+    ("cont_b_in_a", "cont_a_in_b", lit(1.0)))
 
   /** MinHash/LSH NEAR-DUP decontamination: test-split docs flagged
     * against train-split docs that share an LSH band-bucket, verified
@@ -890,7 +903,7 @@ object Dedup {
     * — screen a pre-hashed (doc_id, simhash) BATCH against a pre-hashed
     * index at hamming ≤ maxDist, keeping batch rows with no indexed or
     * earlier-in-batch neighbor (greedy stream policy). Factored so the
-    * image-phash ingest ([[graft.sources.Multimodal.imagePhashDedupFromIndex]],
+    * media ingests ([[graft.sources.Multimodal.mediaSignatureDedupFromIndex]],
     * 64-bit signatures) and the text simhash ingest (60-bit) share ONE
     * definition of the screening joins and the pigeonhole recall
     * argument (nBlocks > maxDist ⇒ some untouched block matches).
@@ -1253,64 +1266,20 @@ object Dedup {
     * the candidate front collapses with the distinct-text count.
     */
   def containmentPairsPrefixCollapsed(docs: DataFrame,
-                                      threshold: Double): DataFrame =
-    containmentPrefixCollapsedFromGroups(
-      containmentGroups(docs), threshold)
-
-  /** The exact-dup digest groups the collapsed containment front runs
-    * over — (digest, rep = min doc_id, one rep text, sorted member
-    * ids), cut because the collapsed form reads it twice (rep corpus +
-    * member expansion). The auto switch deliberately does NOT read it:
-    * it probes [[digestInflation]] (digest counts, no text) and only a
-    * collapse decision pays for this text-carrying pass.
-    */
-  private def containmentGroups(docs: DataFrame): DataFrame =
-    Checkpoints.cutLazy(docs
-      .filter(graft.functions.MinHash.eligible(col("text")))
-      .select(col("doc_id"), col("text"))
-      .groupBy(md5(col("text")).as("digest"))
-      .agg(min(col("doc_id")).as("rep"), first(col("text")).as("text"),
-        sort_array(collect_list(col("doc_id"))).as("ids")))
-
-  private def containmentPrefixCollapsedFromGroups(
-      groups: DataFrame, threshold: Double): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
-    val rp = containmentPairsPrefixRaw(
-      groups.select(col("rep").as("doc_id"), col("text")), threshold)
-    val gids = groups.select(col("rep"), col("ids"))
-    val cross = rp
-      .join(gids.as("ga"), col("doc_a") === col("ga.rep"))
-      .join(gids.as("gb"), col("doc_b") === col("gb.rep"))
-      .select(col("cont_a_in_b").as("ca"), col("cont_b_in_a").as("cb"),
-        col("ga.ids").as("ids_a"), col("gb.ids").as("ids_b"))
-      .select(col("ca"), col("cb"),
-        explode(flatten(transform(col("ids_a"), a =>
-          transform(col("ids_b"), b =>
-            struct(least(a, b).as("doc_a"), greatest(a, b).as("doc_b"),
-              (a < b).as("aFirst")))))).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"),
-        when(col("p.aFirst"), col("ca")).otherwise(col("cb"))
-          .as("cont_a_in_b"),
-        when(col("p.aFirst"), col("cb")).otherwise(col("ca"))
-          .as("cont_b_in_a"))
-    val within = groups
-      .filter(size(col("ids")) > 1)
-      .select(explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(slice(ids, i + 2, size(ids)),
-          |    y -> named_struct('doc_a', x, 'doc_b', y))))""".stripMargin))
-        .as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"),
-        lit(1.0).as("cont_a_in_b"), lit(1.0).as("cont_b_in_a"))
-    // sortBarrier — the rep-level prefix verify and the member
-    // expansion sit between the last exchange and the range sort, so
-    // boundary sampling would re-run them per action
-    Checkpoints.sortBarrier(cross.unionAll(within), col("doc_a"))
-      .orderBy(col("doc_a"), col("doc_b"))
+                                      threshold: Double): DataFrame = {
+    // cutLazy: the groups feed the rep corpus and the member expansion
+    val groups = Checkpoints.cutLazy(digestGroups(
+      docs.filter(graft.functions.MinHash.eligible(col("text")))))
+    expandRepPairs(
+      containmentPairsPrefixRaw(
+        groups.select(col("rep").as("doc_id"), col("text")), threshold),
+      groups, ContainmentValues)
   }
 
-  /** Default switch point for [[containmentPairsPrefixAuto]]: collapse
+  /** The switch point of the measured collapse autos
+    * ([[containmentPairsPrefixAuto]],
+    * [[graft.ops.TextAnalysis.dupSubstringDedupAuto]],
+    * [[graft.sources.Multimodal.mediaNearDupPairsAuto]]): collapse
     * when the duplication INFLATION — Σ g² / Σ g over exact-dup group
     * sizes g, i.e. the mean dup-group size weighted by membership (the
     * factor by which identical copies multiply the prefix index's
@@ -1350,28 +1319,15 @@ object Dedup {
     * never change the answer, only the candidate-generation shape.
     *
     * EAGER by contract, like [[sourceLeakageMatrixAuto]]: the inflation
-    * read runs a job at construction time. Callers that need a lazy
-    * plan pick a branch explicitly.
+    * read runs a job at construction time, and the switch point is
+    * [[MinCollapseInflation]]. Callers that need a lazy plan pick a
+    * branch explicitly.
     */
-  def containmentPairsPrefixAuto(
-      docs: DataFrame, threshold: Double,
-      minInflation: Double = MinCollapseInflation): DataFrame =
-    containmentPairsPrefixFromInflation(docs, threshold,
-      digestInflation(docs
-        .filter(graft.functions.MinHash.eligible(col("text")))),
-      minInflation)
-
-  /** The LAZY half of [[containmentPairsPrefixAuto]] — measure()/build
-    * split: the caller supplies the inflation number (run
-    * [[digestInflation]] once, at a moment of its choosing) and this
-    * picks the branch with ZERO construction-time jobs (spec-pinned
-    * via a job-count listener). The auto form stays the registry entry
-    * with its documented EAGER contract.
-    */
-  def containmentPairsPrefixFromInflation(
-      docs: DataFrame, threshold: Double, inflation: Double,
-      minInflation: Double = MinCollapseInflation): DataFrame =
-    if (inflation >= minInflation)
+  def containmentPairsPrefixAuto(docs: DataFrame,
+                                 threshold: Double): DataFrame =
+    if (digestInflation(docs.filter(
+        graft.functions.MinHash.eligible(col("text")))) >=
+        MinCollapseInflation)
       containmentPairsPrefixCollapsed(docs, threshold)
     else containmentPairsPrefix(docs, threshold)
 
@@ -1458,10 +1414,7 @@ object Dedup {
     * shuffle write and everything below it, including the caller's
     * signature derivation, runs once), and a lazy localCheckpoint here
     * would not even be lazy: under AQE, building the checkpoint RDD
-    * materializes the plan's shuffle stages AT CONSTRUCTION (measured
-    * — MediaAutoSpec's zero-job listener caught exactly that), which
-    * would break the FromInflation halves' job-free construction
-    * contract precisely on the branch that collapses.
+    * materializes the plan's shuffle stages at construction.
     */
   def signaturePairsCollapsedExpanded(sigs: DataFrame, bits: Int,
                                       maxDist: Int, nBlocks: Int,
@@ -1470,33 +1423,11 @@ object Dedup {
       .groupBy(col("simhash"))
       .agg(min(col("doc_id")).as("rep"),
         sort_array(collect_list(col("doc_id"))).as("ids"))
-    val rp = simhashNearDupPairsPermutedFromIndex(
-      groups.select(col("rep").as("doc_id"), col("simhash")),
-      bits, maxDist, nBlocks, nKeep)
-    val gids = groups.select(col("rep"), col("ids"))
-    val cross = rp
-      .join(gids.as("ga"), col("doc_a") === col("ga.rep"))
-      .join(gids.as("gb"), col("doc_b") === col("gb.rep"))
-      .select(col("hamming"),
-        explode(flatten(transform(col("ga.ids"), a =>
-          transform(col("gb.ids"), b =>
-            struct(least(a, b).as("doc_a"), greatest(a, b).as("doc_b"))))))
-          .as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"), col("hamming"))
-    val within = groups
-      .filter(size(col("ids")) > 1)
-      .select(explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(slice(ids, i + 2, size(ids)),
-          |    y -> named_struct('doc_a', x, 'doc_b', y))))""".stripMargin))
-        .as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"),
-        lit(0).cast("int").as("hamming"))
-    // sortBarrier: same boundary-sampling double-execution guard as
-    // the containment collapses (the pairing front + expansion above
-    // has no exchange between it and the range sort)
-    Checkpoints.sortBarrier(cross.unionAll(within), col("doc_a"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    expandRepPairs(
+      simhashNearDupPairsPermutedFromIndex(
+        groups.select(col("rep").as("doc_id"), col("simhash")),
+        bits, maxDist, nBlocks, nKeep),
+      groups, Seq(("hamming", "hamming", lit(0))))
   }
 
   /** SIGNATURE-level decontamination — the n26/n72 move on perceptual

@@ -1028,61 +1028,10 @@ object TextAnalysis {
     * bit-equality with the uncollapsed form on a dup-heavy fixture; the
     * registry proves n123 against n122's oracle verbatim.
     */
-  def dupSubstringDedupCollapsed(docs: DataFrame, k: Int = 5): DataFrame =
-    dupSubstringDedupCollapsedFromGroups(dupSubstringGroups(docs), k)
-
-  /** The exact-dup digest groups the collapsed substring front runs
-    * over — cut because the collapsed form reads it twice (rep corpus +
-    * member expansion). The auto switch deliberately does NOT read it:
-    * it probes [[graft.ops.Dedup.digestInflation]] (digest counts, no
-    * text) and only a collapse decision pays for this text-carrying
-    * pass.
-    */
-  private def dupSubstringGroups(docs: DataFrame): DataFrame =
-    graft.ops.Checkpoints.cutLazy(
-      docs.groupBy(md5(col("text")).as("digest"))
-        .agg(min(col("doc_id")).as("rep"), first(col("text")).as("text"),
-          sort_array(collect_list(col("doc_id"))).as("ids")))
-
-  /** The MEASURED switch between [[dupSubstringDedup]] (plain window
-    * machinery, n122) and [[dupSubstringDedupCollapsed]] (exact-dup
-    * pre-collapse, n123) — the n139 discipline on the substring
-    * family: read the duplication inflation Σg²/Σg over exact-dup
-    * group sizes, collapse only when it clears `minInflation` (below
-    * it the collapse pays its text-shuffling groupBy(md5) + expansion
-    * for nothing; above it the round-11 sweep measured 12.4 s → 2.8 s
-    * at plain 5×). The MEASURE shuffles 16-byte digest counts, never
-    * the text (measured: a text-carrying groups reuse cost the plain
-    * branch ~1.8× — the digest-count probe costs band-level); the
-    * collapsed branch's text-shuffling groups pass is paid exactly
-    * when the collapse pays for it. Both branches produce n122's
-    * exact output, so the choice can never change the answer. EAGER
-    * by contract like [[graft.ops.Dedup.containmentPairsPrefixAuto]].
-    */
-  def dupSubstringDedupAuto(
-      docs: DataFrame, k: Int = 5,
-      minInflation: Double = graft.ops.Dedup.MinCollapseInflation)
-      : DataFrame =
-    dupSubstringDedupFromInflation(docs, k,
-      graft.ops.Dedup.digestInflation(docs), minInflation)
-
-  /** The LAZY half of [[dupSubstringDedupAuto]] — measure()/build
-    * split (the containmentPairsPrefixFromInflation convention): the
-    * caller supplies the [[graft.ops.Dedup.digestInflation]] number;
-    * branch choice runs zero construction-time jobs (spec-pinned via a
-    * job-count listener). The auto form stays the registry entry with
-    * its documented EAGER contract.
-    */
-  def dupSubstringDedupFromInflation(
-      docs: DataFrame, k: Int, inflation: Double,
-      minInflation: Double = graft.ops.Dedup.MinCollapseInflation)
-      : DataFrame =
-    if (inflation >= minInflation)
-      dupSubstringDedupCollapsed(docs, k)
-    else dupSubstringDedup(docs, k)
-
-  private def dupSubstringDedupCollapsedFromGroups(
-      groups: DataFrame, k: Int): DataFrame = {
+  def dupSubstringDedupCollapsed(docs: DataFrame, k: Int = 5): DataFrame = {
+    // cutLazy: the groups feed the rep corpus and the member expansion
+    val groups = graft.ops.Checkpoints.cutLazy(
+      graft.ops.Dedup.digestGroups(docs))
     val repRes = dupSubstringDedupRaw(
       groups.select(col("rep").as("doc_id"), col("text")), k)
     val members = groups
@@ -1101,6 +1050,28 @@ object TextAnalysis {
         col("doc_id"))
       .orderBy(col("doc_id"))
   }
+
+  /** The MEASURED switch between [[dupSubstringDedup]] (plain window
+    * machinery, n122) and [[dupSubstringDedupCollapsed]] (exact-dup
+    * pre-collapse, n123) — the n139 discipline on the substring
+    * family: read the duplication inflation Σg²/Σg over exact-dup
+    * group sizes, collapse only when it clears
+    * [[graft.ops.Dedup.MinCollapseInflation]] (below it the collapse
+    * pays its text-shuffling groupBy(md5) + expansion for nothing;
+    * above it the round-11 sweep measured 12.4 s → 2.8 s at plain 5×).
+    * The MEASURE shuffles 16-byte digest counts, never the text
+    * (measured: a text-carrying groups reuse cost the plain branch
+    * ~1.8× — the digest-count probe costs band-level); the collapsed
+    * branch's text-shuffling groups pass is paid exactly when the
+    * collapse pays for it. Both branches produce n122's exact output,
+    * so the choice can never change the answer. EAGER by contract like
+    * [[graft.ops.Dedup.containmentPairsPrefixAuto]].
+    */
+  def dupSubstringDedupAuto(docs: DataFrame, k: Int = 5): DataFrame =
+    if (graft.ops.Dedup.digestInflation(docs) >=
+        graft.ops.Dedup.MinCollapseInflation)
+      dupSubstringDedupCollapsed(docs, k)
+    else dupSubstringDedup(docs, k)
 
   /** The gram INDEX for incremental keep-first substring dedup: the
     * distinct k-window texts of an already-processed corpus. Presence

@@ -760,41 +760,6 @@ object Multimodal {
       }(enc)
   }
 
-  /** Image near-dup pairs with the exact-dup pre-collapse — the
-    * production form (the n118/n123 move on the image signature):
-    * identical hashes form a GROUP (rep = min media_id, the n2 keeper
-    * policy); the pigeonhole front runs over one rep per DISTINCT
-    * hash, so candidate and output volume are bounded by
-    * distinct-signature structure, never by dup-group size². Output is
-    * rep-level: (media_a, media_b, n_a, n_b, hamming) — reps of the
-    * two groups, their member counts, and the signature distance
-    * (≥ 1 by construction: identical hashes are the same group).
-    * Member expansion is closed-form and EXACT because identical hash
-    * ⇒ identical signature: every cross-group member pair inherits its
-    * reps' hamming verbatim, and within-group pairs are distance 0 —
-    * so this plus the group table (a groupBy over [[imagePhash]]) is
-    * the complete near-dup relation, at a fraction of the rows. Spec
-    * pins rep pairs ≡ brute force over distinct hashes and that every
-    * planted edited twin is either in its original's group (hash
-    * unchanged) or rep-connected to it.
-    */
-  def imageNearDupPairsCollapsed(phash: DataFrame,
-                                 maxDist: Int = 4): DataFrame = {
-    val groups = phash.filter(col("phash").isNotNull)
-      .groupBy(col("phash"))
-      .agg(min(col("media_id")).as("rep"), count(lit(1)).as("n"))
-    val rp = graft.ops.Dedup.simhashNearDupPairsPermutedFromIndex(
-      groups.select(col("rep").as("doc_id"), col("phash").as("simhash")),
-      bits = 64, maxDist = maxDist, nBlocks = 8, nKeep = 4)
-    rp.join(groups.select(col("rep").as("doc_a"), col("n").as("n_a")),
-        Seq("doc_a"))
-      .join(groups.select(col("rep").as("doc_b"), col("n").as("n_b")),
-        Seq("doc_b"))
-      .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"),
-        col("n_a"), col("n_b"), col("hamming"))
-      .orderBy(col("media_a"), col("media_b"))
-  }
-
   /** Offset separating planted edited twins from their originals in
     * [[mediaWithEditedImages]] — far above any event id.
     */
@@ -946,27 +911,6 @@ object Multimodal {
     graft.ops.Checkpoints.sortBarrier(
         imagePhash(stagedEditedImages(spark, dir)), col("media_id"))
       .orderBy(col("media_id"))
-
-  /** INCREMENTAL image dedup — screen a new batch of dHash signatures
-    * against the persisted phash index of everything ingested earlier,
-    * keeping only images with no indexed (or earlier-in-batch) neighbor
-    * at hamming ≤ `maxDist`: the n95/SimhashIngest greedy stream policy
-    * on the image modality. One signature-generic core shared with the
-    * text simhash ingest ([[graft.ops.Dedup]]); the index stores
-    * 16-byte (media_id, phash) rows — screening never re-reads or
-    * re-decodes a payload, and the batch's block keys broadcast while
-    * the index streams map-side past them (the trigger-bounded-batch
-    * contract). Pigeonhole exact recall: 8 blocks > maxDist = 4.
-    */
-  def imagePhashDedupFromIndex(index: DataFrame, batchPhash: DataFrame,
-                               maxDist: Int = 4): DataFrame =
-    graft.ops.Dedup.incrementalSignatureDedupFromIndex(
-      batchPhash.filter(col("phash").isNotNull)
-        .select(col("media_id").as("doc_id"), col("phash").as("simhash")),
-      index.select(col("media_id").as("doc_id"),
-        col("phash").as("simhash")),
-      bits = 64, maxDist = maxDist, nBlocks = 8)
-      .select(col("doc_id").as("media_id"), col("simhash").as("phash"))
 
   /** Roll-up of [[audioFrameFeatures]] — the rows-only registry surface
     * (float rms means are not SQL-oracle material): frame/error
@@ -1243,29 +1187,6 @@ object Multimodal {
     base.unionAll(edited)
   }
 
-  /** Audio near-dup pairs with the exact-dup pre-collapse (the
-    * n118/m5 discipline): identical fingerprints group under a min-id
-    * rep, the pigeonhole front pairs one rep per DISTINCT hash, and
-    * member expansion is closed-form exact — pair volume is bounded by
-    * distinct-signature structure, never dup-group size².
-    */
-  def audioNearDupPairsCollapsed(ahash: DataFrame,
-                                 maxDist: Int = 4): DataFrame = {
-    val groups = ahash.filter(col("ahash").isNotNull)
-      .groupBy(col("ahash"))
-      .agg(min(col("media_id")).as("rep"), count(lit(1)).as("n"))
-    val rp = graft.ops.Dedup.simhashNearDupPairsPermutedFromIndex(
-      groups.select(col("rep").as("doc_id"), col("ahash").as("simhash")),
-      bits = 64, maxDist = maxDist, nBlocks = 8, nKeep = 4)
-    rp.join(groups.select(col("rep").as("doc_a"), col("n").as("n_a")),
-        Seq("doc_a"))
-      .join(groups.select(col("rep").as("doc_b"), col("n").as("n_b")),
-        Seq("doc_b"))
-      .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"),
-        col("n_a"), col("n_b"), col("hamming"))
-      .orderBy(col("media_a"), col("media_b"))
-  }
-
   /** Rows-only registry surface (m7): fingerprints over the planted
     * audio corpus — codec-bound (the m1 exemption; DuckDB decodes no
     * WAV), hash values spec-pinned deterministic.
@@ -1275,23 +1196,6 @@ object Multimodal {
     graft.ops.Checkpoints.sortBarrier(
         audioHash(stagedEditedAudio(spark, dir)), col("media_id"))
       .orderBy(col("media_id"))
-
-  /** INCREMENTAL audio dedup — the n95/m6 greedy stream policy on the
-    * audio modality, via the ONE signature-generic screening core
-    * ([[graft.ops.Dedup.incrementalSignatureDedupFromIndex]]): keep
-    * only clips with no indexed (or earlier-in-batch) neighbor at
-    * hamming ≤ `maxDist`. The index stores 16-byte (media_id, ahash)
-    * rows; screening never re-decodes a payload.
-    */
-  def audioHashDedupFromIndex(index: DataFrame, batchAhash: DataFrame,
-                              maxDist: Int = 4): DataFrame =
-    graft.ops.Dedup.incrementalSignatureDedupFromIndex(
-      batchAhash.filter(col("ahash").isNotNull)
-        .select(col("media_id").as("doc_id"), col("ahash").as("simhash")),
-      index.select(col("media_id").as("doc_id"),
-        col("ahash").as("simhash")),
-      bits = 64, maxDist = maxDist, nBlocks = 8)
-      .select(col("doc_id").as("media_id"), col("simhash").as("ahash"))
 
   // ======== video perceptual dedup (m10/m11/m12) ========
 
@@ -1749,21 +1653,7 @@ object Multimodal {
       .select(col("doc_id").as("media_id"), col("n_frames"))
       .orderBy(col("media_id"))
 
-  // ======== measured collapse autos (m14) ========
-  //
-  // m5/m8/m11 register the COLLAPSED (rep-level) encodings statically —
-  // the right call for their corpora, but a static call. These autos
-  // close the loop the m13 card opened: the per-modality Σg²/Σg
-  // inflation the card computes is the SAME number the text autos
-  // (n139/n145) switch on, so the MEMBER-level pair relation gets a
-  // measured front choice too — plain pigeonhole when duplication is
-  // low (the collapse would pay its groupBy for nothing), exact-dup
-  // pre-collapse + expansion when it is high. Both fronts produce the
-  // identical member relation (spec-pinned bit-equal per modality and
-  // regime), so the choice can never change an answer, only the
-  // candidate-generation shape. EAGER auto + lazy FromInflation halves,
-  // the n139 measure()/build discipline: a pipeline that already holds
-  // the card passes its per-kind inflation straight to the lazy half.
+  // ======== media signature pairs and screening (m5/m6/m8/m9/m14) ========
 
   /** Member-level media near-dup pairs at hamming ≤ `maxDist`, PLAIN
     * front: the n93/n94 pigeonhole machinery REUSED verbatim on a 64-bit
@@ -1781,11 +1671,11 @@ object Multimodal {
     * quadratic in exact-dup (identical-hash) group size BY DEFINITION
     * of the ask — on a corpus with massive identical-signature groups
     * (re-hosted thumbnails; this repo's periodic synthetic formula at
-    * scale multipliers) run [[imageNearDupPairsCollapsed]] /
-    * [[audioNearDupPairsCollapsed]], whose volume is bounded by
-    * DISTINCT-signature structure (the n118/n123 collapse discipline —
-    * the 10× sweep that motivated it spilled for half an hour here
-    * before the collapsed twin replaced it in the registry).
+    * scale multipliers) run [[mediaNearDupPairsCollapsed]], whose
+    * volume is bounded by DISTINCT-signature structure (the n118/n123
+    * collapse discipline — the 10× sweep that motivated it spilled for
+    * half an hour here before the collapsed twin replaced it in the
+    * registry).
     */
   def mediaSignaturePairsPlain(sigs: DataFrame, sigCol: String,
                                maxDist: Int = 4): DataFrame =
@@ -1810,35 +1700,83 @@ object Multimodal {
       .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"),
         col("hamming"))
 
-  /** The LAZY measure()/build half (the n139 discipline): the caller
-    * supplies the signature inflation — from
-    * [[graft.ops.Dedup.groupInflation]] run at a moment of its
-    * choosing, or the m13 card's per-kind inflation — and this
-    * picks the front with ZERO construction-time jobs (spec-pinned via
-    * the job-count listener).
+  /** Media near-dup pairs in the collapsed REP-LEVEL encoding — the
+    * production form m5 (image dHash) and m8 (audio fingerprint)
+    * register: identical signatures form a GROUP (rep = min media_id,
+    * the n2 keeper policy); the pigeonhole front runs over one rep per
+    * DISTINCT signature, so candidate and output volume are bounded by
+    * distinct-signature structure, never by dup-group size². Output is
+    * (media_a, media_b, n_a, n_b, hamming) — reps of the two groups,
+    * their member counts, and the signature distance (≥ 1 by
+    * construction: identical signatures are the same group). Member
+    * expansion is closed-form and EXACT: every cross-group member pair
+    * inherits its reps' hamming verbatim and within-group pairs are
+    * distance 0 ([[mediaSignaturePairsExpanded]] is that expansion), so
+    * this plus the group table is the complete near-dup relation, at a
+    * fraction of the rows. Spec pins rep pairs ≡ brute force over
+    * distinct signatures per modality, and that every planted edited
+    * twin is either in its original's group or rep-connected to it.
     */
-  def mediaNearDupPairsFromInflation(
-      sigs: DataFrame, sigCol: String, inflation: Double,
-      maxDist: Int = 4,
-      minInflation: Double = graft.ops.Dedup.MinCollapseInflation)
-      : DataFrame =
-    if (inflation >= minInflation)
+  def mediaNearDupPairsCollapsed(sigs: DataFrame, sigCol: String,
+                                 maxDist: Int): DataFrame = {
+    val groups = sigs.filter(col(sigCol).isNotNull)
+      .groupBy(col(sigCol))
+      .agg(min(col("media_id")).as("rep"), count(lit(1)).as("n"))
+    val rp = graft.ops.Dedup.simhashNearDupPairsPermutedFromIndex(
+      groups.select(col("rep").as("doc_id"), col(sigCol).as("simhash")),
+      bits = 64, maxDist = maxDist, nBlocks = 8, nKeep = 4)
+    rp.join(groups.select(col("rep").as("doc_a"), col("n").as("n_a")),
+        Seq("doc_a"))
+      .join(groups.select(col("rep").as("doc_b"), col("n").as("n_b")),
+        Seq("doc_b"))
+      .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"),
+        col("n_a"), col("n_b"), col("hamming"))
+      .orderBy(col("media_a"), col("media_b"))
+  }
+
+  /** The MEASURED front switch for the member-level pair relation (m14):
+    * the per-modality Σg²/Σg inflation ([[graft.ops.Dedup.groupInflation]],
+    * the number the m13 card reports per kind and the text autos
+    * n139/n145 switch on) picks the plain pigeonhole front below
+    * [[graft.ops.Dedup.MinCollapseInflation]] (the collapse would pay
+    * its groupBy for nothing) and the exact-dup pre-collapse +
+    * expansion at or above it. Both fronts produce the identical member
+    * relation (spec-pinned bit-equal per modality and regime), so the
+    * choice can never change an answer. EAGER by contract like the
+    * registry's other autos: the inflation probe runs one count-only
+    * job at construction (the shuffle carries an 8-byte signature and a
+    * long, never a payload).
+    */
+  def mediaNearDupPairsAuto(sigs: DataFrame, sigCol: String,
+                            maxDist: Int = 4): DataFrame =
+    if (graft.ops.Dedup.groupInflation(
+        sigs.filter(col(sigCol).isNotNull), col(sigCol)) >=
+        graft.ops.Dedup.MinCollapseInflation)
       mediaSignaturePairsExpanded(sigs, sigCol, maxDist)
     else mediaSignaturePairsPlain(sigs, sigCol, maxDist)
 
-  /** The MEASURED front switch — EAGER by contract like the registry's
-    * other autos (the inflation probe runs one count-only job at
-    * construction; the shuffle carries an 8-byte signature and a long,
-    * never a payload).
+  /** INCREMENTAL media dedup — screen a new batch of (media_id,
+    * `sigCol`) signatures against the persisted signature index of
+    * everything ingested earlier, keeping only rows with no indexed (or
+    * earlier-in-batch) neighbor at hamming ≤ `maxDist`: the
+    * n95/SimhashIngest greedy stream policy on the image (m6, phash)
+    * and audio (m9, ahash) modalities, through the ONE
+    * signature-generic core shared with the text simhash ingest
+    * ([[graft.ops.Dedup.incrementalSignatureDedupFromIndex]]). The
+    * index stores 16-byte signature rows — screening never re-reads or
+    * re-decodes a payload, and the batch's block keys broadcast while
+    * the index streams map-side past them (the trigger-bounded-batch
+    * contract). Pigeonhole exact recall: 8 blocks > maxDist = 4.
     */
-  def mediaNearDupPairsAuto(
-      sigs: DataFrame, sigCol: String, maxDist: Int = 4,
-      minInflation: Double = graft.ops.Dedup.MinCollapseInflation)
-      : DataFrame =
-    mediaNearDupPairsFromInflation(sigs, sigCol,
-      graft.ops.Dedup.groupInflation(
-        sigs.filter(col(sigCol).isNotNull), col(sigCol)),
-      maxDist, minInflation)
+  def mediaSignatureDedupFromIndex(index: DataFrame, batch: DataFrame,
+                                   sigCol: String,
+                                   maxDist: Int): DataFrame =
+    graft.ops.Dedup.incrementalSignatureDedupFromIndex(
+      batch.filter(col(sigCol).isNotNull)
+        .select(col("media_id").as("doc_id"), col(sigCol).as("simhash")),
+      index.select(col("media_id").as("doc_id"), col(sigCol).as("simhash")),
+      bits = 64, maxDist = maxDist, nBlocks = 8)
+      .select(col("doc_id").as("media_id"), col("simhash").as(sigCol))
 
   // ======== cross-modality dedup card (m13) ========
 

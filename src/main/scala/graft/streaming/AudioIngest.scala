@@ -10,7 +10,7 @@ import graft.sources.Multimodal
   * ([[Multimodal.audioHash]] — the m7 Haitsma–Kalker-shape 64-bit
   * signature, batched map-side, the m1 corrupt-payload policy),
   * screened against the PUBLISHED signature index at hamming ≤
-  * `maxDist` ([[Multimodal.audioHashDedupFromIndex]] — the ONE
+  * `maxDist` ([[Multimodal.mediaSignatureDedupFromIndex]] — the ONE
   * signature-generic screening core, batch reps broadcast, index
   * streaming map-side), survivors' 16-byte signatures appended to the
   * index, and surviving MEDIA rows emitted partitioned by batch id.
@@ -38,5 +38,6 @@ object AudioIngest {
       signatures = Multimodal.audioHash,
       emptyIndex = emptyIndex,
       screen = (index, sigs) =>
-        Multimodal.audioHashDedupFromIndex(index, sigs, maxDist))
+        Multimodal.mediaSignatureDedupFromIndex(index, sigs, "ahash",
+          maxDist))
 }

@@ -9,7 +9,7 @@ import graft.sources.Multimodal
   * dHashed once ([[Multimodal.imagePhash]], batched map-side, the m1
   * corrupt-payload policy), screened against the PUBLISHED signature
   * index at hamming ≤ `maxDist`
-  * ([[Multimodal.imagePhashDedupFromIndex]] — the signature-generic
+  * ([[Multimodal.mediaSignatureDedupFromIndex]] — the signature-generic
   * screening core, batch reps broadcast, index streaming map-side),
   * survivors' 16-byte signatures appended to the index, and surviving
   * MEDIA rows emitted partitioned by batch id.
@@ -51,5 +51,6 @@ object ImageIngest {
       signatures = Multimodal.imagePhash,
       emptyIndex = emptyIndex,
       screen = (index, sigs) =>
-        Multimodal.imagePhashDedupFromIndex(index, sigs, maxDist))
+        Multimodal.mediaSignatureDedupFromIndex(index, sigs, "phash",
+          maxDist))
 }

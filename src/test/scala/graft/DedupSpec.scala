@@ -319,6 +319,35 @@ class DedupSpec extends SparkSpec {
     assert(got === Map(1L -> List(1L, 2L, 3L, 9L), 5L -> List(5L, 6L)))
   }
 
+  test("dupClusters: every min-label round's final AQE plan reuses the " +
+    "propagate aggregate's exchange on the pointer-jump side") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (3L, 9L))
+      .toDF("doc_a", "doc_b")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.ops.Dedup.dupClusters(pairs).collect()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    // a round's cut is the only action whose plan holds the propagate
+    // aggregate, min(label)
+    val rounds = plans.asScala.toSeq.filter(_.contains("min(label"))
+    assert(rounds.nonEmpty, "no min-label round was observed")
+    rounds.foreach { p =>
+      assert(p.contains("isFinalPlan=true") && p.contains("ReusedExchange"),
+        s"the round re-executes its propagate pipeline:\n$p")
+    }
+  }
+
   test("dupClusters under reliable checkpointing matches the default mode") {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (3L, 9L))
       .toDF("doc_a", "doc_b")
@@ -820,12 +849,9 @@ class DedupSpec extends SparkSpec {
       df.collect().map(_.toSeq).toSeq
     val want = rows(Dedup.containmentPairsPrefix(d, 0.5))
     assert(want.nonEmpty)
-    // forced plain (switch point unreachable) and forced collapsed
-    // (always reached): same answer through diverging fronts
-    assert(rows(Dedup.containmentPairsPrefixAuto(d, 0.5,
-      minInflation = Double.MaxValue)) === want)
-    assert(rows(Dedup.containmentPairsPrefixAuto(d, 0.5,
-      minInflation = 0.0)) === want)
+    // the collapsed branch, taken directly: same answer through a
+    // diverging front
+    assert(rows(Dedup.containmentPairsPrefixCollapsed(d, 0.5)) === want)
     // default switch point: sf0.001 has inflation ≈ 1 → plain branch;
     // a ×3 replication has inflation ≈ 3 → collapsed branch — both must
     // agree with their anchors bit for bit (the branch choice is
@@ -836,63 +862,6 @@ class DedupSpec extends SparkSpec {
       .union(d.select(col("doc_id") + 2000000L, col("text")))
     assert(rows(Dedup.containmentPairsPrefixAuto(tri, 0.5)) ===
       rows(Dedup.containmentPairsPrefix(tri, 0.5)))
-  }
-
-  test("the measure()/build lazy halves of the three EAGER autos " +
-    "(containment, substring, leakage) construct their plans with ZERO " +
-    "Spark jobs, and each equals its auto twin's answer") {
-    val d = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
-    // measure ONCE, before the listener: these are the documented
-    // EAGER reads the registry autos pay at construction
-    val infl = Dedup.digestInflation(
-      d.filter(graft.functions.MinHash.eligible(col("text"))))
-    val inflAll = Dedup.digestInflation(d)
-    val pairs = Dedup.minhashNearDupPairs(d, 0.3)
-      .select(col("doc_a"), col("doc_b"))
-    val nPairs = pairs.count()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (lazyC, lazyS, lazyL) = try {
-      def gated[T](label: String)(build: => T): T = {
-        val before = jobs.get()
-        val r = build
-        // force full planning too, not just DataFrame construction —
-        // the contract is "plan-inspectable without jobs". Listener
-        // delivery is async; the expectation is zero, so the sleep can
-        // only catch a regression, never flake a pass.
-        Thread.sleep(1000)
-        assert(jobs.get() === before,
-          s"building the lazy $label form ran Spark jobs — the EAGER " +
-            "probe leaked into the build half")
-        r
-      }
-      val c = gated("containment") {
-        val df = Dedup.containmentPairsPrefixFromInflation(d, 0.5, infl)
-        df.queryExecution.executedPlan; df
-      }
-      val s = gated("substring") {
-        val df = graft.ops.TextAnalysis
-          .dupSubstringDedupFromInflation(d, 5, inflAll)
-        df.queryExecution.executedPlan; df
-      }
-      val l = gated("leakage") {
-        val df = Dedup.sourceLeakageMatrixFromPairs(d, pairs, nPairs)
-        df.queryExecution.executedPlan; df
-      }
-      (c, s, l)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    // and the split cannot change any answer: lazy(measure) ≡ auto
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSeq
-    assert(rows(lazyC) === rows(Dedup.containmentPairsPrefixAuto(d, 0.5)))
-    assert(rows(lazyS) ===
-      rows(graft.ops.TextAnalysis.dupSubstringDedupAuto(d, 5)))
-    assert(rows(lazyL) === rows(Dedup.sourceLeakageMatrixAuto(d, 0.3)))
   }
 
   test("simhashNearDupPairsPermuted: exact recall — the identical pair " +

@@ -521,7 +521,7 @@ class GraftSpec extends SparkSpec {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
         qe.observedMetrics.get("parse_metrics").foreach { row =>
-          captured += ("n_lines" -> row.getAs[Long]("n_lines"),
+          captured ++= Seq("n_lines" -> row.getAs[Long]("n_lines"),
             "n_unparsed" -> row.getAs[Long]("n_unparsed"))
         }
       override def onFailure(funcName: String,

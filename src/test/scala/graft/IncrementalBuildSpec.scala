@@ -35,7 +35,7 @@ class IncrementalBuildSpec extends SparkSpec {
     val cut = ids.grouped(math.max(1, ids.length / 5 + 1)).toSeq
     cut.zipWithIndex.foreach { case (chunk, i) =>
       IncrementalBuild.ingestBatch(
-        docs.filter(col("doc_id").isin(chunk: _*)), i.toLong,
+        docs.filter(col("doc_id").isin(chunk.toIndexedSeq: _*)), i.toLong,
         s"$tmp/state", maxDist = 0)
     }
     val release = TextAnalysis.trainingDataBuild(storeDocs(s"$tmp/state"))

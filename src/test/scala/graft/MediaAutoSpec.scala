@@ -8,9 +8,7 @@ import graft.sources.Multimodal
 
 /** The measured media collapse autos (m14 family): both fronts of the
   * member-level pair relation bit-equal per modality and dup regime,
-  * branch choice pinned per regime, and the lazy FromInflation half
-  * constructing with ZERO Spark jobs from the m13 card's measured
-  * number.
+  * and the branch choice pinned per regime.
   */
 class MediaAutoSpec extends SparkSpec {
 
@@ -74,40 +72,5 @@ class MediaAutoSpec extends SparkSpec {
       "collect_list"), "auto must pick the plain front here")
     assert(rows(autoD) === rows(Multimodal.mediaSignaturePairsPlain(
       d, "sig")))
-  }
-
-  test("the lazy FromInflation half constructs and plans with ZERO Spark " +
-    "jobs; fed the m13 card's measured number, its answer equals the " +
-    "plain front") {
-    val ph = graft.ops.Checkpoints.cut(Multimodal.imagePhash(
-      Multimodal.mediaWithEditedImages(spark, dir)))
-    // the EAGER read, paid BEFORE the listener: the card is the m13
-    // artifact a pipeline already has
-    val infl = Multimodal.mediaDedupCardFromUnits(
-      ph.select(lit("image").as("kind"), col("media_id"),
-        hex(col("phash")).as("sig"),
-        col("decode_err").isNotNull.as("has_err")))
-      .filter(col("kind") === "image").select(col("inflation"))
-      .head().getDouble(0)
-    assert(infl >= 2.0, s"planted corpus must measure dup-heavy, got $infl")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val lazySig = try {
-      val df = Multimodal.mediaNearDupPairsFromInflation(ph, "phash", infl)
-      df.queryExecution.executedPlan
-      Thread.sleep(1000) // async listener delivery; zero expected, so
-                         // the sleep can only catch a regression
-      assert(jobs.get() === 0,
-        "building the lazy media signature pairs form ran Spark jobs")
-      df
-    } finally spark.sparkContext.removeSparkListener(listener)
-    // the card-fed choice cannot change any answer
-    assert(rows(lazySig) ===
-      rows(Multimodal.mediaSignaturePairsPlain(ph, "phash")))
   }
 }

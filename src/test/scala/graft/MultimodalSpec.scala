@@ -133,7 +133,8 @@ class MultimodalSpec extends SparkSpec {
       if java.lang.Long.bitCount(ha ^ hb) <= 4
     } yield (ra, rb, byHash(ha)._2, byHash(hb)._2,
       java.lang.Long.bitCount(ha ^ hb))).toSet
-    val got = Multimodal.imageNearDupPairsCollapsed(phash, 4).collect()
+    val got = Multimodal.mediaNearDupPairsCollapsed(phash, "phash", 4)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getInt(4))).toSet
     assert(got === brute.map(t => (t._1, t._2, t._3.toLong, t._4.toLong,
@@ -186,7 +187,8 @@ class MultimodalSpec extends SparkSpec {
     import spark.implicits._
     val idxDf = idx.toSeq.toDF("media_id", "phash")
     val batchDf = batch.toSeq.toDF("media_id", "phash")
-    val got = Multimodal.imagePhashDedupFromIndex(idxDf, batchDf, 4)
+    val got = Multimodal.mediaSignatureDedupFromIndex(idxDf, batchDf,
+        "phash", 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toList
     // brute force: the pinned policy (DedupSpec n95) — drop on ANY
     // earlier batch ARRIVAL within distance, kept or dropped, never
@@ -314,11 +316,13 @@ class MultimodalSpec extends SparkSpec {
       if ra < rb && java.lang.Long.bitCount(ha ^ hb) <= 4
     } yield (math.min(ra, rb), math.max(ra, rb),
       java.lang.Long.bitCount(ha ^ hb))).toSet
-    val got = Multimodal.audioNearDupPairsCollapsed(ah, 4).collect()
+    val got = Multimodal.mediaNearDupPairsCollapsed(ah, "ahash", 4)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(4))).toSet
     assert(got === brute)
     // counts: every rep pair carries its groups' exact member counts
-    val counts = Multimodal.audioNearDupPairsCollapsed(ah, 4).collect()
+    val counts = Multimodal.mediaNearDupPairsCollapsed(ah, "ahash", 4)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     counts.foreach { case (a, b, na, nb) =>
       val byRep = groups.map { case (_, (rep, n)) => rep -> n }
@@ -361,7 +365,8 @@ class MultimodalSpec extends SparkSpec {
     import spark.implicits._
     val idxDf = idx.toSeq.toDF("media_id", "ahash")
     val batchDf = batch.toSeq.toDF("media_id", "ahash")
-    val got = Multimodal.audioHashDedupFromIndex(idxDf, batchDf, 4)
+    val got = Multimodal.mediaSignatureDedupFromIndex(idxDf, batchDf,
+        "ahash", 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toList
     // brute force: drop on ANY earlier ARRIVAL within distance (the
     // n95 pinned policy)

@@ -366,10 +366,7 @@ class TextAnalysisSpec extends SparkSpec {
       df.collect().map(_.toSeq).toSeq
     val want = rows(TextAnalysis.dupSubstringDedup(d, 5))
     assert(want.nonEmpty)
-    assert(rows(TextAnalysis.dupSubstringDedupAuto(d, 5,
-      minInflation = Double.MaxValue)) === want)
-    assert(rows(TextAnalysis.dupSubstringDedupAuto(d, 5,
-      minInflation = 0.0)) === want)
+    assert(rows(TextAnalysis.dupSubstringDedupCollapsed(d, 5)) === want)
     assert(rows(TextAnalysis.dupSubstringDedupAuto(d, 5)) === want)
     // ×3 replication: inflation ≈ 3 → collapsed branch, same answer
     val tri = d.union(d.select(col("doc_id") + 1000000L, col("text")))
