@@ -2,28 +2,25 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** RUNTIME-captured DuckDB oracles for the media SCREENING queries.
+/** SQL builders for the registry's captured media oracles
+  * ([[Queries.Captured]]).
   *
   * The media dedup/decontamination entries factor into (a) a CODEC
   * half — perceptual signatures that need a JDK image/audio decoder
   * DuckDB does not have (the m1 exemption) — and (b) a SCREENING half
   * that is pure 64-bit integer math (xor + popcount joins, exact-dup
   * group collapse, closed-form expansion, anti joins) DuckDB replays
-  * exactly. Round-14 verdict #3/#4 asked for precisely this split:
-  * keep the signature computation rows-only, but oracle the screening
-  * over the persisted signature relation.
+  * exactly. The signature computation stays rows-only; the screening
+  * is oracled over the persisted signature relation.
   *
-  * Mechanics: `Verify` evaluates [[Queries.oracleSql]] AFTER every
-  * query function has run, so a query function may REGISTER its oracle
-  * at construction time, embedding the signature values it just
-  * computed (the EAGER-probe contract the measured autos already
-  * follow — one bounded extra job at construction). The oracle then
-  * recomputes the whole relation BY BRUTE FORCE in DuckDB — any bug in
-  * the pigeonhole banding, permuted tables, rep collapse, member
-  * expansion, or anti-join math hash-mismatches against it. Only the
-  * signature VALUES ride on trust, and those are spec-pinned
-  * deterministic (MultimodalSpec) — the same trust the rows-only
-  * registration previously extended to the ENTIRE query.
+  * Each builder collects the signature relation it is handed into a
+  * VALUES list and returns SQL that recomputes the whole screening
+  * relation BY BRUTE FORCE — any bug in the pigeonhole banding, permuted
+  * tables, rep collapse, member expansion, or anti-join math
+  * hash-mismatches against it. Only the signature values ride on trust,
+  * and those are spec-pinned deterministic (MultimodalSpec). A captured
+  * entry calls one builder over the relation its query reads, for the
+  * dir it is asked about; nothing is kept between calls.
   *
   * The capture collect is a VERIFICATION surface, never a production
   * path: it is bounded by a loud require sized to the staged fixture
@@ -37,31 +34,6 @@ object OracleVals {
     * corpus-sized driver collect if a fixture grows.
     */
   val MaxRows = 200000
-
-  private val sqls =
-    new java.util.concurrent.ConcurrentHashMap[String, () => String]()
-
-  /** LAZY registration: the SQL (and the bounded signature collect
-    * behind it) is captured as a thunk and forced only in [[snapshot]]
-    * — i.e. only when Verify evaluates the oracle surface. Bench calls
-    * the same query constructors but never snapshots, so it no longer
-    * pays the 9 capture collects + VALUES-megastring builds per pass
-    * (measured round 15: m11 +43%, m12 +44% from exactly this).
-    */
-  def register(name: String, sql: => String): Unit =
-    sqls.put(name, () => sql)
-
-  /** Everything registered so far — merged into [[Queries.oracleSql]]
-    * (evaluated post-run by Verify, so registrations made while the
-    * query functions executed are visible). A query that never ran
-    * registers nothing and stays rows-only — the graceful fallback.
-    * Forcing the thunks here is where the capture collects actually
-    * run; Verify is the only snapshot caller.
-    */
-  def snapshot: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    sqls.asScala.map { case (k, thunk) => k -> thunk() }.toMap
-  }
 
   /** `(a,b),(c,d),…` VALUES literal over integer columns (exact
     * Long/Int rendering — no floats cross this boundary by design).

@@ -25,6 +25,16 @@ object Queries {
 
   type Q = (SparkSession, String) => DataFrame
 
+  /** A registry entry's DuckDB oracle: [[Sql]] is static SQL over the
+    * scale dir's parquet tables; [[Captured]] builds the SQL for the dir
+    * it is given by capturing that dir's staged media signature values
+    * ([[OracleVals]]) — one bounded verification collect per call.
+    */
+  sealed trait Oracle
+  final case class Sql(text: String) extends Oracle
+  final case class Captured(sql: (SparkSession, String) => String)
+    extends Oracle
+
   private def ev(s: SparkSession, d: String) = Tables.events(s, d)
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
@@ -38,6 +48,14 @@ object Queries {
 
   private val DayExpr =
     "CASE WHEN regexp_extract(file_name, '(\\d{4}-\\d{2}-\\d{2})', 1) = '' THEN 'unknown' ELSE regexp_extract(file_name, '(\\d{4}-\\d{2}-\\d{2})', 1) END"
+
+  /** Shared VERBATIM by a6 and a6b: the two digest forms must agree. */
+  private lazy val DayDigestOracle =
+    s"""WITH catalog AS ($CatalogCte)
+      |SELECT $DayExpr AS day,
+      |  md5(string_agg(file_name, '' ORDER BY file_name)) AS digest,
+      |  count(*) AS n_files
+      |FROM catalog GROUP BY 1 ORDER BY day""".stripMargin
 
   /** DuckDB twin of LogLines.synthesizeLines — must build byte-identical
     * strings (same printf, same modular host/pid derivation).
@@ -733,6 +751,25 @@ object Queries {
        |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id),
        |lbl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id)""".stripMargin
 
+  /** Shared VERBATIM by n21, n24 and n53: the same clusters, three ways. */
+  private lazy val CcClustersOracle =
+    s"""WITH RECURSIVE $CcClustersCte
+       |SELECT cluster, count(*) AS n_docs,
+       |  array_to_string(list_sort(list(id)), ',') AS members
+       |FROM lbl GROUP BY cluster ORDER BY cluster""".stripMargin
+
+  /** Shared VERBATIM by n46 and n54: the collapse is bit-equal. */
+  private lazy val SemanticDedupOracle =
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
+       |    ${rpBucketSql(Similarity.BucketBits)} AS bucket
+       |  FROM embeddings),
+       |d AS (SELECT DISTINCT b.vec_id
+       |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+       |  WHERE ${cosSql("a.emb", "b.emb")} >= 0.3)
+       |SELECT vec_id, label FROM embeddings
+       |WHERE vec_id NOT IN (SELECT vec_id FROM d)
+       |ORDER BY vec_id""".stripMargin
+
   /** Shared oracle for n56/n57 (the collapsed variant must be bit-equal):
     * the n41 pair graph → the same recursive-reachability labeling as the
     * text-side [[CcClustersCte]], rolled up to the cluster schema.
@@ -755,42 +792,107 @@ object Queries {
        |  array_to_string(list_sort(list(id)), ',') AS members
        |FROM lbl GROUP BY cluster ORDER BY cluster""".stripMargin
 
+  // ---- captured media oracles ------------------------------------------
+  // The media screening entries read staged signature tables computed by
+  // a JDK codec DuckDB lacks. Each entry derives its frame and its
+  // [[Captured]] oracle from ONE input definition, so the capture
+  // re-derives exactly the relation the query reads.
+
+  /** A staged signature table without its undecodable (null) rows. */
+  private def nonNullSigs(staged: Q, sigCol: String): Q =
+    (s, d) => staged(s, d).filter(col(sigCol).isNotNull)
+
+  private val imageSigs =
+    nonNullSigs(graft.sources.Multimodal.stagedImagePhash, "phash")
+  private val frameSigs =
+    nonNullSigs(graft.sources.Multimodal.stagedVideoFrameHashes, "fhash")
+
+  /** The one-row `h` boundary of an incremental index/batch split:
+    * `max(original id) div 2`, over the FULL staged relation (nulls
+    * included) — the older half of the originals is the index.
+    */
+  private def indexHalf(sigs: DataFrame, editIdOffset: Long): DataFrame =
+    sigs.filter(col("media_id") < editIdOffset)
+      .agg(expr("max(media_id) div 2").as("h"))
+
+  /** (index, batch): the rows below / at or above [[indexHalf]]. */
+  private def splitAtHalf(sigs: DataFrame, editIdOffset: Long,
+                          cols: String*): (DataFrame, DataFrame) = {
+    val half = broadcast(indexHalf(sigs, editIdOffset))
+    (sigs.join(half, col("media_id") < col("h")).select(cols.map(col): _*),
+     sigs.join(half, col("media_id") >= col("h")).select(cols.map(col): _*))
+  }
+
+  /** m5/m8: collapsed rep-level near-dup pairs at hamming <= 4 over one
+    * staged signature table, oracled by brute force over its values.
+    */
+  private def collapsedPairsEntry(name: String, staged: Q, sigCol: String)
+      : (String, Q, Option[Oracle]) = {
+    val sigs = nonNullSigs(staged, sigCol)
+    (name,
+      (s, d) => graft.sources.Multimodal.mediaNearDupPairsCollapsed(
+        sigs(s, d), sigCol, 4),
+      Some(Captured((s, d) =>
+        OracleVals.collapsedPairsSql(sigs(s, d), sigCol, 4))))
+  }
+
+  /** m6/m9: greedy incremental screening at hamming <= 4 of the batch
+    * against the index (older half of the originals), oracled by the
+    * brute-force replay of the same split.
+    */
+  private def incrementalScreenEntry(name: String, staged: Q,
+                                     sigCol: String, editIdOffset: Long)
+      : (String, Q, Option[Oracle]) =
+    (name,
+      (s, d) => {
+        val (index, batch) =
+          splitAtHalf(staged(s, d), editIdOffset, "media_id", sigCol)
+        graft.sources.Multimodal.mediaSignatureDedupFromIndex(
+          index, batch, sigCol, 4)
+      },
+      Some(Captured { (s, d) =>
+        val sigs = staged(s, d)
+        OracleVals.incrementalScreenSql(
+          sigs.filter(col(sigCol).isNotNull), sigCol, 4,
+          indexHalf(sigs, editIdOffset).head().getLong(0), sigCol)
+      }))
+
   // ---- registry --------------------------------------------------------
 
   /** name -> (spark query, optional DuckDB oracle). */
-  val all: Seq[(String, Q, Option[String])] = Seq(
+  val all: Seq[(String, Q, Option[Oracle])] = Seq(
 
     // ===== Tier A: the reference's own dataflow (SURVEY §2.1-2.8) =====
 
     ("a1_catalog_topk",
       (s: SparkSession, d: String) =>
         LogCatalog.selectLogFiles(cat(s, d), RefHour, MaxRecords),
-      Some(LogCatalog.selectLogFilesOracleSql(RefHour, MaxRecords))),
+      Some(Sql(LogCatalog.selectLogFilesOracleSql(RefHour, MaxRecords)))),
 
     ("a2_filter_name_contains",
       (s: SparkSession, d: String) => cat(s, d)
         .filter(col("file_name").contains("2024-01-15"))
         .orderBy(col("file_name")),
-      Some(s"""WITH catalog AS ($CatalogCte)
+      Some(Sql(s"""WITH catalog AS ($CatalogCte)
         |SELECT file_name FROM catalog
-        |WHERE contains(file_name, '2024-01-15') ORDER BY file_name""".stripMargin)),
+        |WHERE contains(file_name, '2024-01-15') ORDER BY file_name""".stripMargin))),
 
     ("a3_filter_open_hour",
       (s: SparkSession, d: String) => cat(s, d)
         .filter(col("file_name").contains("2024-01-15") &&
           !col("file_name").endsWith(RefHour))
         .orderBy(col("file_name")),
-      Some(s"""WITH catalog AS ($CatalogCte)
+      Some(Sql(s"""WITH catalog AS ($CatalogCte)
         |SELECT file_name FROM catalog
         |WHERE contains(file_name, '2024-01-15') AND NOT ends_with(file_name, '$RefHour')
-        |ORDER BY file_name""".stripMargin)),
+        |ORDER BY file_name""".stripMargin))),
 
     ("a4_dedup_days",
       (s: SparkSession, d: String) => cat(s, d)
         .select(Digest.extractDate(col("file_name")).as("day"))
         .distinct().orderBy(col("day")),
-      Some(s"""WITH catalog AS ($CatalogCte)
-        |SELECT DISTINCT $DayExpr AS day FROM catalog ORDER BY day""".stripMargin)),
+      Some(Sql(s"""WITH catalog AS ($CatalogCte)
+        |SELECT DISTINCT $DayExpr AS day FROM catalog ORDER BY day""".stripMargin))),
 
     ("a5_extract_date_fallback",
       (s: SparkSession, d: String) => cat(s, d)
@@ -798,9 +900,9 @@ object Queries {
         .select(col("file_name"),
           Digest.extractDate(col("file_name")).as("day"))
         .orderBy(col("file_name")),
-      Some(s"""WITH catalog AS ($CatalogCte),
+      Some(Sql(s"""WITH catalog AS ($CatalogCte),
         |aug AS (SELECT file_name FROM catalog UNION ALL SELECT 'not-a-log-name')
-        |SELECT file_name, $DayExpr AS day FROM aug ORDER BY file_name""".stripMargin)),
+        |SELECT file_name, $DayExpr AS day FROM aug ORDER BY file_name""".stripMargin))),
 
     ("a6_group_day_digest",
       (s: SparkSession, d: String) => cat(s, d)
@@ -808,11 +910,7 @@ object Queries {
         .agg(Digest.hashListExpr(col("file_name")).as("digest"),
           count(lit(1)).as("n_files"))
         .orderBy(col("day")),
-      Some(s"""WITH catalog AS ($CatalogCte)
-        |SELECT $DayExpr AS day,
-        |  md5(string_agg(file_name, '' ORDER BY file_name)) AS digest,
-        |  count(*) AS n_files
-        |FROM catalog GROUP BY 1 ORDER BY day""".stripMargin)),
+      Some(Sql(DayDigestOracle))),
 
     ("a7_basename",
       (s: SparkSession, d: String) => cat(s, d)
@@ -820,10 +918,10 @@ object Queries {
         .select(col("path"),
           regexp_extract(col("path"), "[^/]+$", 0).as("base"))
         .orderBy(col("path")),
-      Some(s"""WITH catalog AS ($CatalogCte)
+      Some(Sql(s"""WITH catalog AS ($CatalogCte)
         |SELECT path, regexp_extract(path, '[^/]+$$') AS base
         |FROM (SELECT 'data/db1/' || file_name AS path FROM catalog)
-        |ORDER BY path""".stripMargin)),
+        |ORDER BY path""".stripMargin))),
 
     ("a8_topk_per_day",
       (s: SparkSession, d: String) => {
@@ -836,12 +934,12 @@ object Queries {
           .select(col("day"), col("file_name"), col("rnk"))
           .orderBy(col("day"), col("rnk"))
       },
-      Some(s"""WITH catalog AS ($CatalogCte)
+      Some(Sql(s"""WITH catalog AS ($CatalogCte)
         |SELECT day, file_name, rnk FROM (
         |  SELECT day, file_name,
         |    row_number() OVER (PARTITION BY day ORDER BY file_name DESC) AS rnk
         |  FROM (SELECT file_name, $DayExpr AS day FROM catalog))
-        |WHERE rnk <= 3 ORDER BY day, rnk""".stripMargin)),
+        |WHERE rnk <= 3 ORDER BY day, rnk""".stripMargin))),
 
     ("a9_union_day_chunks",
       (s: SparkSession, d: String) => {
@@ -850,12 +948,12 @@ object Queries {
           .union(c.filter(col("file_name").contains("2024-01-11")))
           .distinct().orderBy(col("file_name"))
       },
-      Some(s"""WITH catalog AS ($CatalogCte)
+      Some(Sql(s"""WITH catalog AS ($CatalogCte)
         |SELECT DISTINCT file_name FROM (
         |  SELECT file_name FROM catalog WHERE contains(file_name, '2024-01-10')
         |  UNION ALL
         |  SELECT file_name FROM catalog WHERE contains(file_name, '2024-01-11'))
-        |ORDER BY file_name""".stripMargin)),
+        |ORDER BY file_name""".stripMargin))),
 
     ("a10_anti_resolved_days",
       (s: SparkSession, d: String) => {
@@ -866,10 +964,10 @@ object Queries {
           .join(resolved, Seq("day"), "left_anti")
           .orderBy(col("day"))
       },
-      Some(s"""WITH catalog AS ($CatalogCte)
+      Some(Sql(s"""WITH catalog AS ($CatalogCte)
         |SELECT day FROM (SELECT DISTINCT $DayExpr AS day FROM catalog)
         |WHERE day NOT IN ('2024-01-01','2024-01-02','2024-01-03','2024-01-04','2024-01-05','2024-01-06','2024-01-07')
-        |ORDER BY day""".stripMargin)),
+        |ORDER BY day""".stripMargin))),
 
     // Same digest as a6 but through the single-pass typed Aggregator
     // (G1's second implementation, SURVEY §2.10) — same oracle proves the
@@ -880,11 +978,7 @@ object Queries {
         .agg(Digest.hashListUdaf(col("file_name")).as("digest"),
           count(lit(1)).as("n_files"))
         .orderBy(col("day")),
-      Some(s"""WITH catalog AS ($CatalogCte)
-        |SELECT $DayExpr AS day,
-        |  md5(string_agg(file_name, '' ORDER BY file_name)) AS digest,
-        |  count(*) AS n_files
-        |FROM catalog GROUP BY 1 ORDER BY day""".stripMargin)),
+      Some(Sql(DayDigestOracle))),
 
     // F14/F3: ARN field extraction (rds_download_log.py:13-19) modeled
     // relationally over synthetic instance ARNs built from nation rows.
@@ -894,10 +988,10 @@ object Queries {
           lit(":123456789:db:inst"), col("n_nationkey")).as("arn"))
         .select(col("arn"), split(col("arn"), ":")(3).as("region"))
         .orderBy(col("arn")),
-      Some("""SELECT arn, string_split(arn, ':')[4] AS region
+      Some(Sql("""SELECT arn, string_split(arn, ':')[4] AS region
         |FROM (SELECT 'arn:aws:rds:region-' || n_name || ':123456789:db:inst' || n_nationkey::varchar AS arn
         |      FROM nation)
-        |ORDER BY arn""".stripMargin)),
+        |ORDER BY arn""".stripMargin))),
 
     // F10/F11: md5 + sha256 content hashes side by side (sha2 is the
     // reference's SigV4 payload hash, rds_download_log.py:26-34).
@@ -906,10 +1000,10 @@ object Queries {
         .select(col("file_name"), md5(col("file_name")).as("md5_hash"),
           sha2(col("file_name"), 256).as("sha256_hash"))
         .orderBy(col("file_name")),
-      Some(s"""WITH catalog AS ($CatalogCte)
+      Some(Sql(s"""WITH catalog AS ($CatalogCte)
         |SELECT file_name, md5(file_name) AS md5_hash,
         |  sha256(file_name) AS sha256_hash
-        |FROM catalog ORDER BY file_name""".stripMargin)),
+        |FROM catalog ORDER BY file_name""".stripMargin))),
 
     // F13 url_encode (the reference quote_plus-es signed-request params,
     // rds_download_log.py:80,84). Spark's url_encode = java URLEncoder
@@ -922,71 +1016,71 @@ object Queries {
           url_encode(concat(lit("select * from t where user = 'u"),
             col("user_id").cast("string"), lit("'"))).as("encoded"))
         .orderBy(col("user_id")),
-      Some("""SELECT user_id,
+      Some(Sql("""SELECT user_id,
         |  replace(replace(replace(
         |    'select * from t where user = ''u' || user_id::varchar || '''',
         |    '=', '%3D'), '''', '%27'), ' ', '+') AS encoded
         |FROM (SELECT DISTINCT user_id FROM events)
-        |ORDER BY user_id""".stripMargin)),
+        |ORDER BY user_id""".stripMargin))),
 
     // ===== Tier B: native pgbadger-report analytics (SURVEY §2.4-2.5) =====
 
     ("b1_level_counts",
       (s: SparkSession, d: String) => Reports.levelCounts(ev(s, d)),
-      Some("SELECT event_type AS level, count(*) AS n FROM events GROUP BY event_type ORDER BY level")),
+      Some(Sql("SELECT event_type AS level, count(*) AS n FROM events GROUP BY event_type ORDER BY level"))),
 
     ("b2_hourly_histogram",
       (s: SparkSession, d: String) => Reports.hourlyHistogram(ev(s, d)),
-      Some(s"""SELECT strftime(ts, '%Y-%m-%d %H:00:00') AS hour, count(*) AS n,
+      Some(Sql(s"""SELECT strftime(ts, '%Y-%m-%d %H:00:00') AS hour, count(*) AS n,
         |  $DecSum AS sum_value, count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY 1 ORDER BY hour""".stripMargin)),
+        |FROM events GROUP BY 1 ORDER BY hour""".stripMargin))),
 
     ("b3_distinct_entities",
       (s: SparkSession, d: String) => Reports.distinctEntities(ev(s, d)),
-      Some("""SELECT event_type, count(DISTINCT user_id) AS n_users,
+      Some(Sql("""SELECT event_type, count(DISTINCT user_id) AS n_users,
         |  count(DISTINCT strftime(ts, '%Y-%m-%d %H:00:00')) AS n_hours
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin))),
 
     ("b4_percentiles",
       (s: SparkSession, d: String) => Reports.percentiles(ev(s, d)),
-      Some("""SELECT event_type,
+      Some(Sql("""SELECT event_type,
         |  round(quantile_cont(value, 0.5), 4) AS p50,
         |  round(quantile_cont(value, 0.9), 4) AS p90,
         |  round(quantile_cont(value, 0.99), 4) AS p99
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin))),
 
     ("b5_top_slowest",
       (s: SparkSession, d: String) => Reports.topSlowestPerClass(ev(s, d), 10),
-      Some("""SELECT event_type, event_id, value, rnk FROM (
+      Some(Sql("""SELECT event_type, event_id, value, rnk FROM (
         |  SELECT event_type, event_id, value,
         |    row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id ASC) AS rnk
         |  FROM events)
-        |WHERE rnk <= 10 ORDER BY event_type, rnk""".stripMargin)),
+        |WHERE rnk <= 10 ORDER BY event_type, rnk""".stripMargin))),
 
     ("b6_rolling_hourly_avg",
       (s: SparkSession, d: String) => Reports.rollingHourlyAvg(ev(s, d)),
-      Some("""WITH hourly AS (
+      Some(Sql("""WITH hourly AS (
         |  SELECT strftime(ts, '%Y-%m-%d %H:00:00') AS hour, count(*) AS n
         |  FROM events GROUP BY 1)
         |SELECT hour, n,
         |  round(avg(n) OVER (ORDER BY hour ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 6) AS moving_avg
-        |FROM hourly ORDER BY hour""".stripMargin)),
+        |FROM hourly ORDER BY hour""".stripMargin))),
 
     ("b7_severity_day_cube",
       (s: SparkSession, d: String) => Reports.severityDayCube(ev(s, d)),
-      Some("""SELECT coalesce(event_type, 'ALL') AS event_type,
+      Some(Sql("""SELECT coalesce(event_type, 'ALL') AS event_type,
         |  coalesce(d, 'ALL') AS day, n
         |FROM (SELECT event_type, strftime(ts, '%Y-%m-%d') AS d, count(*) AS n
         |      FROM events GROUP BY GROUPING SETS ((event_type, d), (event_type), (d), ()))
-        |ORDER BY event_type, day""".stripMargin)),
+        |ORDER BY event_type, day""".stripMargin))),
 
     ("b8_error_rate_hourly",
       (s: SparkSession, d: String) => Reports.errorRateHourly(ev(s, d)),
-      Some("""SELECT hour, n, n_errors, round(n_errors::double / n, 6) AS error_rate
+      Some(Sql("""SELECT hour, n, n_errors, round(n_errors::double / n, 6) AS error_rate
         |FROM (SELECT strftime(ts, '%Y-%m-%d %H:00:00') AS hour, count(*) AS n,
         |        count(CASE WHEN event_type = 'error' THEN 1 END) AS n_errors
         |      FROM events GROUP BY 1)
-        |ORDER BY hour""".stripMargin)),
+        |ORDER BY hour""".stripMargin))),
 
     ("b9_parse_log_lines",
       // sortBarrier: the synthesize+regex-parse segment is exchange-free,
@@ -999,7 +1093,7 @@ object Queries {
             col("remote_host"), col("usr"), col("db"), col("pid"),
             col("level"), col("duration_ms"), col("query")),
         col("event_id")).orderBy(col("event_id")),
-      Some(s"""WITH lines AS ($LinesCte)
+      Some(Sql(s"""WITH lines AS ($LinesCte)
         |SELECT event_id,
         |  regexp_extract(line, '$PrefixRe', 1) AS ts_str,
         |  regexp_extract(line, '$PrefixRe', 2) AS remote_host,
@@ -1009,12 +1103,12 @@ object Queries {
         |  regexp_extract(line, '$PrefixRe', 6) AS level,
         |  $DurExpr AS duration_ms,
         |  regexp_extract(line, 'statement: (.*)$$', 1) AS query
-        |FROM lines ORDER BY event_id""".stripMargin)),
+        |FROM lines ORDER BY event_id""".stripMargin))),
 
     ("b10_query_class_stats",
       (s: SparkSession, d: String) =>
         Reports.queryStats(LogLines.parsedFromEvents(s, d)),
-      Some(s"""WITH lines AS ($LinesCte),
+      Some(Sql(s"""WITH lines AS ($LinesCte),
         |parsed AS (SELECT $DurExpr AS duration_ms,
         |    regexp_extract(line, 'statement: (.*)$$', 1) AS query FROM lines)
         |SELECT lower(trim(regexp_replace(regexp_replace(regexp_replace(query,
@@ -1023,7 +1117,7 @@ object Queries {
         |  CAST(sum(duration_ms::decimal(18,2)) AS double) AS total_ms,
         |  CAST(sum(duration_ms::decimal(18,2)) AS double) / count(*) AS avg_ms
         |FROM parsed WHERE duration_ms IS NOT NULL
-        |GROUP BY 1 ORDER BY query_norm""".stripMargin)),
+        |GROUP BY 1 ORDER BY query_norm""".stripMargin))),
 
     ("b11_json_props",
       (s: SparkSession, d: String) => ev(s, d)
@@ -1032,9 +1126,9 @@ object Queries {
         .groupBy(col("k"))
         .agg(count(lit(1)).as("n"), Reports.decSum(col("value")).as("sum_value"))
         .orderBy(col("k").asc_nulls_last), // Spark defaults NULLS FIRST, DuckDB LAST
-      Some(s"""SELECT json_extract_string(props, '$$.k')::int AS k, count(*) AS n,
+      Some(Sql(s"""SELECT json_extract_string(props, '$$.k')::int AS k, count(*) AS n,
         |  $DecSum AS sum_value
-        |FROM events GROUP BY 1 ORDER BY k NULLS LAST""".stripMargin)),
+        |FROM events GROUP BY 1 ORDER BY k NULLS LAST""".stripMargin))),
 
     // Malformed-line accounting: the reference silently writes failed
     // downloads INTO the log file (rds_download_log.py:49-50 →
@@ -1050,35 +1144,35 @@ object Queries {
           .agg(count(lit(1)).as("n_lines"), sum(col("bad")).as("n_bad"))
           .withColumn("bad_rate", round(col("n_bad").cast("double") / col("n_lines"), 8))
       },
-      Some(s"""WITH lines AS ($LinesCte),
+      Some(Sql(s"""WITH lines AS ($LinesCte),
         |aug AS (SELECT line FROM lines UNION ALL SELECT 'No access key is available.')
         |SELECT count(*) AS n_lines,
         |  CAST(sum(CASE WHEN regexp_extract(line, '$PrefixRe', 6) = '' THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
         |  round(sum(CASE WHEN regexp_extract(line, '$PrefixRe', 6) = '' THEN 1 ELSE 0 END)::double / count(*), 8) AS bad_rate
-        |FROM aug""".stripMargin)),
+        |FROM aug""".stripMargin))),
 
     // Gap-based sessionization (pgbadger sessions/connections view):
     // 30-min inactivity gap, µs-exact boundary math in both engines.
     ("b15_sessionize",
       (s: SparkSession, d: String) => Reports.sessionize(ev(s, d), 30),
-      Some(s"""WITH $SessionCtes
+      Some(Sql(s"""WITH $SessionCtes
         |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, count(*) AS n_events,
         |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
         |  CAST((epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS BIGINT) AS duration_sec,
         |  $DecSum AS sum_value
         |FROM sessions GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin)),
+        |ORDER BY user_id, session_seq""".stripMargin))),
 
     ("b16_session_stats",
       (s: SparkSession, d: String) => Reports.sessionStats(ev(s, d), 30),
-      Some(s"""WITH $SessionCtes,
+      Some(Sql(s"""WITH $SessionCtes,
         |per_session AS (
         |  SELECT user_id, session_seq, count(*) AS n_events,
         |    CAST((epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS BIGINT) AS duration_sec
         |  FROM sessions GROUP BY user_id, session_seq)
         |SELECT user_id, count(*) AS n_sessions, CAST(sum(n_events) AS BIGINT) AS n_events,
         |  max(duration_sec) AS max_session_sec
-        |FROM per_session GROUP BY user_id ORDER BY user_id""".stripMargin)),
+        |FROM per_session GROUP BY user_id ORDER BY user_id""".stripMargin))),
 
     // Ordered in-session conversion funnel: view → click ≥ t(view) →
     // purchase ≥ t(click), session boundaries from the b15 machinery
@@ -1087,7 +1181,7 @@ object Queries {
     // about what a session is.
     ("b29_session_funnel",
       (s: SparkSession, d: String) => Reports.sessionFunnel(ev(s, d), 30),
-      Some(s"""WITH $SessionCtes,
+      Some(Sql(s"""WITH $SessionCtes,
         |s1 AS (SELECT user_id, session_seq, epoch_us(ts) AS us, event_type
         |  FROM sessions),
         |t1 AS (SELECT user_id, session_seq,
@@ -1113,7 +1207,7 @@ object Queries {
         |    n0 AS prev FROM c
         |  UNION ALL SELECT 2, 'click', s2c, s1c FROM c
         |  UNION ALL SELECT 3, 'purchase', s3c, s2c FROM c)
-        |ORDER BY step_index""".stripMargin)),
+        |ORDER BY step_index""".stripMargin))),
 
     // Pivot cross-tab: days × severity counts as columns (the wide report
     // layout; values enumerated so the column order is deterministic).
@@ -1124,13 +1218,13 @@ object Queries {
         .agg(count(lit(1)))
         .na.fill(0L)
         .orderBy(col("day")),
-      Some("""SELECT strftime(ts, '%Y-%m-%d') AS day,
+      Some(Sql("""SELECT strftime(ts, '%Y-%m-%d') AS day,
         |  count(CASE WHEN event_type = 'click' THEN 1 END) AS click,
         |  count(CASE WHEN event_type = 'error' THEN 1 END) AS error,
         |  count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
         |  count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
         |  count(CASE WHEN event_type = 'view' THEN 1 END) AS view
-        |FROM events GROUP BY 1 ORDER BY day""".stripMargin)),
+        |FROM events GROUP BY 1 ORDER BY day""".stripMargin))),
 
     // Value-distribution histogram: fixed-width buckets (report latency
     // distribution shape; floor keeps both engines identical).
@@ -1140,8 +1234,8 @@ object Queries {
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("bucket")),
-      Some("""SELECT CAST(floor(value / 5) AS bigint) AS bucket, count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin)),
+      Some(Sql("""SELECT CAST(floor(value / 5) AS bigint) AS bucket, count(*) AS n
+        |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin))),
 
     // Distribution window functions over per-user spend: ntile quartiles,
     // cumulative distribution, percent rank (report "top X%" sections).
@@ -1157,7 +1251,7 @@ object Queries {
             round(percent_rank().over(w), 6).as("prank"))
           .orderBy(col("user_id"))
       },
-      Some(s"""WITH spend AS (
+      Some(Sql(s"""WITH spend AS (
         |  SELECT user_id, $DecSum AS total FROM events GROUP BY user_id)
         |SELECT user_id, total,
         |  ntile(4) OVER w AS quartile,
@@ -1165,7 +1259,7 @@ object Queries {
         |  round(percent_rank() OVER w, 6) AS prank
         |FROM spend
         |WINDOW w AS (ORDER BY total ASC, user_id ASC)
-        |ORDER BY user_id""".stripMargin)),
+        |ORDER BY user_id""".stripMargin))),
 
     // As-of-style latest snapshot: each user's last event at a cutoff
     // (the "state as of T" lookup).
@@ -1182,12 +1276,12 @@ object Queries {
             col("event_type"))
           .orderBy(col("user_id"))
       },
-      Some("""SELECT user_id, event_id,
+      Some(Sql("""SELECT user_id, event_id,
         |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str, event_type
         |FROM (SELECT user_id, event_id, ts, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
         |  FROM events WHERE ts < timestamp '2024-01-15 00:00:00')
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin)),
+        |WHERE rn = 1 ORDER BY user_id""".stripMargin))),
 
     // MapType surface: JSON props as map<string,int>, exploded and
     // aggregated per key.
@@ -1199,10 +1293,10 @@ object Queries {
         .groupBy(col("key"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
         .orderBy(col("key")),
-      Some("""SELECT key, count(*) AS n,
+      Some(Sql("""SELECT key, count(*) AS n,
         |  CAST(sum(json_extract_string(props, key)::int) AS BIGINT) AS total
         |FROM (SELECT props, unnest(json_keys(props)) AS key FROM events)
-        |GROUP BY key ORDER BY key""".stripMargin)),
+        |GROUP BY key ORDER BY key""".stripMargin))),
 
     // Native session_window operator — must agree with the first-principles
     // lag→flag→cumsum construction the oracle uses (b15's machinery):
@@ -1218,7 +1312,7 @@ object Queries {
             .as("session_end"),
           col("n_events"))
         .orderBy(col("user_id"), col("session_start")),
-      Some(s"""WITH flagged AS (
+      Some(Sql(s"""WITH flagged AS (
         |  SELECT user_id, ts, event_id,
         |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w >= ${30 * 60 * 1000000L}
         |      THEN 1
@@ -1235,7 +1329,7 @@ object Queries {
         |  strftime(max(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S') AS session_end,
         |  count(*) AS n_events
         |FROM sessions GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_start""".stripMargin)),
+        |ORDER BY user_id, session_start""".stripMargin))),
 
     // As-of join: each purchase matched to the user's latest click at or
     // before it — via tag+union+carry-forward (one shuffle), never a
@@ -1243,7 +1337,7 @@ object Queries {
     ("b23_asof_join",
       (s: SparkSession, d: String) =>
         Reports.asofJoin(ev(s, d), "purchase", "click"),
-      Some("""WITH tagged AS (
+      Some(Sql("""WITH tagged AS (
         |  SELECT user_id, ts, event_id,
         |    CASE WHEN event_type = 'click' THEN 0 ELSE 1 END AS side
         |  FROM events WHERE event_type IN ('click', 'purchase')),
@@ -1260,14 +1354,14 @@ object Queries {
         |SELECT user_id, event_id,
         |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str, asof_id,
         |  strftime(asof_ts, '%Y-%m-%d %H:%M:%S') AS asof_ts_str
-        |FROM carried WHERE side = 1 ORDER BY user_id, event_id""".stripMargin)),
+        |FROM carried WHERE side = 1 ORDER BY user_id, event_id""".stripMargin))),
 
     // Forward as-of join: earliest click at-or-after each purchase (the
     // reverse direction of b23; first_value over the following frame).
     ("b26_asof_forward",
       (s: SparkSession, d: String) =>
         Reports.asofJoinForward(ev(s, d), "purchase", "click"),
-      Some("""WITH tagged AS (
+      Some(Sql("""WITH tagged AS (
         |  SELECT user_id, ts, event_id,
         |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS side
         |  FROM events WHERE event_type IN ('click', 'purchase')),
@@ -1284,25 +1378,25 @@ object Queries {
         |SELECT user_id, event_id,
         |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str, asof_id,
         |  strftime(asof_ts, '%Y-%m-%d %H:%M:%S') AS asof_ts_str
-        |FROM carried WHERE side = 0 ORDER BY user_id, event_id""".stripMargin)),
+        |FROM carried WHERE side = 0 ORDER BY user_id, event_id""".stripMargin))),
 
     // Banded range join against a broadcast tier table ([lo, hi) buckets).
     ("b24_value_tiers",
       (s: SparkSession, d: String) => Reports.valueTierJoin(ev(s, d)),
-      Some(s"""WITH tiers(tier, lo, hi) AS (VALUES
+      Some(Sql(s"""WITH tiers(tier, lo, hi) AS (VALUES
         |  ${Reports.ValueTiers.map { case (t, lo, hi) =>
                s"('$t', $lo, $hi)" }.mkString(", ")})
         |SELECT coalesce(tier, 'z_unbucketed') AS tier, count(*) AS n,
         |  $DecSum AS sum_value
         |FROM events LEFT OUTER JOIN tiers ON value >= lo AND value < hi
-        |GROUP BY 1 ORDER BY tier""".stripMargin)),
+        |GROUP BY 1 ORDER BY tier""".stripMargin))),
 
     // Interval join (batch twin of the stream-stream attribution join):
     // all clicks within 30 min before each purchase, per user.
     ("b25_click_attribution",
       (s: SparkSession, d: String) =>
         Reports.clickAttribution(ev(s, d), 30),
-      Some("""SELECT c.user_id, p.event_id AS purchase_id,
+      Some(Sql("""SELECT c.user_id, p.event_id AS purchase_id,
         |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts_str,
         |  c.event_id AS click_id,
         |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_ts_str
@@ -1310,7 +1404,7 @@ object Queries {
         |  ON c.user_id = p.user_id
         |  AND c.event_type = 'click' AND p.event_type = 'purchase'
         |  AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE
-        |ORDER BY purchase_id, click_id""".stripMargin)),
+        |ORDER BY purchase_id, click_id""".stripMargin))),
 
     // Funnel DROP-OFF: clicks with NO purchase by the same user inside
     // the forward window — b25's anti form (the NOT-EXISTS shape);
@@ -1318,14 +1412,14 @@ object Queries {
     ("b27_unattributed_clicks",
       (s: SparkSession, d: String) =>
         Reports.unattributedClicks(ev(s, d), 30),
-      Some("""SELECT c.user_id, c.event_id AS click_id,
+      Some(Sql("""SELECT c.user_id, c.event_id AS click_id,
         |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_ts_str
         |FROM events c
         |WHERE c.event_type = 'click' AND NOT EXISTS (
         |  SELECT 1 FROM events p WHERE p.user_id = c.user_id
         |    AND p.event_type = 'purchase'
         |    AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE)
-        |ORDER BY click_id""".stripMargin)),
+        |ORDER BY click_id""".stripMargin))),
 
     // Retention cohort matrix: users by first-seen week × active-week
     // offset — first-seen via a window min (ONE exchange on the user
@@ -1333,7 +1427,7 @@ object Queries {
     // engines; the offset is exact integer day-diff // 7.
     ("b28_retention_cohorts",
       (s: SparkSession, d: String) => Reports.retentionCohorts(ev(s, d)),
-      Some("""WITH f AS (SELECT user_id,
+      Some(Sql("""WITH f AS (SELECT user_id,
         |    date_trunc('week', min(ts) OVER (PARTITION BY user_id))::date
         |      AS cohort_week,
         |    date_trunc('week', ts)::date AS wk
@@ -1342,7 +1436,7 @@ object Queries {
         |  date_diff('day', cohort_week, wk) // 7 AS week_offset,
         |  count(DISTINCT user_id) AS n_users
         |FROM f GROUP BY 1, 2
-        |ORDER BY cohort_week, week_offset""".stripMargin)),
+        |ORDER BY cohort_week, week_offset""".stripMargin))),
 
     ("b12_approx_distinct",
       (s: SparkSession, d: String) => Reports.approxDistinctEntities(ev(s, d)),
@@ -1357,20 +1451,20 @@ object Queries {
     ("r1_pricing_summary",
       (s: SparkSession, d: String) =>
         Relational.pricingSummary(Tables.lineitem(s, d)),
-      Some("""SELECT l_returnflag, l_linestatus,
+      Some(Sql("""SELECT l_returnflag, l_linestatus,
         |  CAST(sum(l_quantity::decimal(18,2)) AS double) AS sum_qty,
         |  CAST(sum(l_extendedprice::decimal(18,2)) AS double) AS sum_base_price,
         |  CAST(sum(l_extendedprice::decimal(18,2) * (1::decimal(18,2) - l_discount::decimal(18,2))) AS double) AS sum_disc_price,
         |  CAST(sum(l_quantity::decimal(18,2)) AS double) / count(*) AS avg_qty,
         |  count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= timestamp '2001-09-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin))),
 
     ("r2_revenue_by_nation",
       (s: SparkSession, d: String) => Relational.revenueByNation(
         Tables.lineitem(s, d), Tables.orders(s, d), Tables.customer(s, d),
         Tables.nation(s, d), Tables.region(s, d)),
-      Some("""SELECT r_name, n_name,
+      Some(Sql("""SELECT r_name, n_name,
         |  CAST(sum(l_extendedprice::decimal(18,2) * (1::decimal(18,2) - l_discount::decimal(18,2))) AS double) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem
@@ -1378,27 +1472,27 @@ object Queries {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin)),
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin))),
 
     ("r3_semi_join_big_orders",
       (s: SparkSession, d: String) => Relational.customersWithBigOrders(
         Tables.customer(s, d), Tables.orders(s, d)),
-      Some("""SELECT c_custkey, c_name, c_mktsegment FROM customer
+      Some(Sql("""SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE c_custkey IN (SELECT o_custkey FROM orders
         |                    WHERE o_orderstatus = 'F' AND o_totalprice > 200000.0)
-        |ORDER BY c_custkey""".stripMargin)),
+        |ORDER BY c_custkey""".stripMargin))),
 
     ("r4_anti_join_no_orders",
       (s: SparkSession, d: String) => Relational.customersWithoutOrders(
         Tables.customer(s, d), Tables.orders(s, d)),
-      Some("""SELECT c_custkey, c_name FROM customer
+      Some(Sql("""SELECT c_custkey, c_name FROM customer
         |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-        |ORDER BY c_custkey""".stripMargin)),
+        |ORDER BY c_custkey""".stripMargin))),
 
     ("r5_top_customers_per_nation",
       (s: SparkSession, d: String) => Relational.topCustomersPerNation(
         Tables.customer(s, d), Tables.orders(s, d), Tables.nation(s, d), 3),
-      Some("""WITH spend AS (
+      Some(Sql("""WITH spend AS (
         |  SELECT o_custkey, CAST(sum(o_totalprice::decimal(18,2)) AS double) AS spend
         |  FROM orders GROUP BY o_custkey)
         |SELECT n_name, c_custkey, spend, rnk FROM (
@@ -1406,56 +1500,56 @@ object Queries {
         |    row_number() OVER (PARTITION BY n_name ORDER BY spend DESC, c_custkey ASC) AS rnk
         |  FROM customer JOIN spend ON c_custkey = o_custkey
         |  JOIN nation ON c_nationkey = n_nationkey)
-        |WHERE rnk <= 3 ORDER BY n_name, rnk""".stripMargin)),
+        |WHERE rnk <= 3 ORDER BY n_name, rnk""".stripMargin))),
 
     ("r6_union_months",
       (s: SparkSession, d: String) =>
         Relational.unionOrderMonths(Tables.orders(s, d)),
-      Some("""SELECT DISTINCT o_custkey FROM (
+      Some(Sql("""SELECT DISTINCT o_custkey FROM (
         |  SELECT o_custkey FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1997-03'
         |  UNION ALL
         |  SELECT o_custkey FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1997-04')
-        |ORDER BY o_custkey""".stripMargin)),
+        |ORDER BY o_custkey""".stripMargin))),
 
     ("r7_intersect_months",
       (s: SparkSession, d: String) =>
         Relational.intersectCustomers(Tables.orders(s, d)),
-      Some("""SELECT o_custkey FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1997-03'
+      Some(Sql("""SELECT o_custkey FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1997-03'
         |INTERSECT
         |SELECT o_custkey FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1997-04'
-        |ORDER BY o_custkey""".stripMargin)),
+        |ORDER BY o_custkey""".stripMargin))),
 
     ("r8_except_months",
       (s: SparkSession, d: String) =>
         Relational.exceptCustomers(Tables.orders(s, d)),
-      Some("""SELECT o_custkey FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1997-03'
+      Some(Sql("""SELECT o_custkey FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1997-03'
         |EXCEPT
         |SELECT o_custkey FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1997-04'
-        |ORDER BY o_custkey""".stripMargin)),
+        |ORDER BY o_custkey""".stripMargin))),
 
     ("r9_order_priority",
       (s: SparkSession, d: String) => Relational.orderPriorityCount(
         Tables.orders(s, d), Tables.lineitem(s, d)),
-      Some("""SELECT o_orderpriority, count(*) AS order_count FROM orders
+      Some(Sql("""SELECT o_orderpriority, count(*) AS order_count FROM orders
         |WHERE o_orderdate >= timestamp '1997-01-01'
         |  AND o_orderdate < timestamp '1997-07-01'
         |  AND o_orderkey IN (SELECT l_orderkey FROM lineitem
         |                     WHERE l_shipdate > timestamp '1997-01-01')
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin))),
 
     ("r10_forecast_revenue",
       (s: SparkSession, d: String) =>
         Relational.forecastRevenue(Tables.lineitem(s, d)),
-      Some("""SELECT CAST(sum(l_extendedprice::decimal(18,2) * l_discount::decimal(18,2)) AS double) AS revenue,
+      Some(Sql("""SELECT CAST(sum(l_extendedprice::decimal(18,2) * l_discount::decimal(18,2)) AS double) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem
         |WHERE l_shipdate >= timestamp '1997-01-01' AND l_shipdate < timestamp '1998-01-01'
-        |  AND l_discount BETWEEN 0.04 AND 0.06 AND l_quantity < 24""".stripMargin)),
+        |  AND l_discount BETWEEN 0.04 AND 0.06 AND l_quantity < 24""".stripMargin))),
 
     ("r11_shipping_priority",
       (s: SparkSession, d: String) => Relational.shippingPriority(
         Tables.lineitem(s, d), Tables.orders(s, d), Tables.customer(s, d), 10),
-      Some("""SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
+      Some(Sql("""SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
         |  o_orderpriority,
         |  CAST(sum(l_extendedprice::decimal(18,2) * (1::decimal(18,2) - l_discount::decimal(18,2))) AS double) AS revenue
         |FROM customer
@@ -1465,28 +1559,28 @@ object Queries {
         |  AND o_orderdate < timestamp '1997-06-01'
         |  AND l_shipdate > timestamp '1997-06-01'
         |GROUP BY o_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin)),
+        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin))),
 
     ("r12_left_outer_summary",
       (s: SparkSession, d: String) => Relational.customerOrderSummary(
         Tables.customer(s, d), Tables.orders(s, d)),
-      Some("""SELECT c_custkey, c_name,
+      Some(Sql("""SELECT c_custkey, c_name,
         |  coalesce(n_orders, 0) AS n_orders, coalesce(spend, 0.0) AS spend
         |FROM customer LEFT OUTER JOIN (
         |  SELECT o_custkey, count(*) AS n_orders,
         |    CAST(sum(o_totalprice::decimal(18,2)) AS double) AS spend
         |  FROM orders GROUP BY o_custkey) s ON c_custkey = s.o_custkey
-        |ORDER BY c_custkey""".stripMargin)),
+        |ORDER BY c_custkey""".stripMargin))),
 
     ("r13_full_outer_churn",
       (s: SparkSession, d: String) => Relational.customerChurn(Tables.orders(s, d)),
-      Some("""SELECT coalesce(a.ck, b.ck) AS o_custkey,
+      Some(Sql("""SELECT coalesce(a.ck, b.ck) AS o_custkey,
         |  CASE WHEN a.ck IS NULL THEN 'gained'
         |       WHEN b.ck IS NULL THEN 'lost' ELSE 'retained' END AS status
         |FROM (SELECT DISTINCT o_custkey AS ck FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1997-03') a
         |FULL OUTER JOIN (SELECT DISTINCT o_custkey AS ck FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1997-04') b
         |  ON a.ck = b.ck
-        |ORDER BY o_custkey""".stripMargin)),
+        |ORDER BY o_custkey""".stripMargin))),
 
     // TPC-H Q11's group-share pattern: nations above 5% of GLOBAL
     // revenue. The global total is a 1-row broadcast aggregate (never a
@@ -1497,7 +1591,7 @@ object Queries {
       (s: SparkSession, d: String) => Relational.nationRevenueShare(
         Tables.lineitem(s, d), Tables.orders(s, d), Tables.customer(s, d),
         Tables.nation(s, d)),
-      Some("""WITH per AS (SELECT n_name,
+      Some(Sql("""WITH per AS (SELECT n_name,
         |    sum(l_extendedprice::decimal(18,2)
         |      * (1::decimal(18,2) - l_discount::decimal(18,2))) AS rdec,
         |    count(*) AS n_items
@@ -1511,7 +1605,7 @@ object Queries {
         |  round(CAST(rdec AS double) / CAST(tdec AS double), 6) AS share
         |FROM per CROSS JOIN tot
         |WHERE CAST(rdec AS double) > CAST(tdec AS double) * 0.05
-        |ORDER BY n_name""".stripMargin)),
+        |ORDER BY n_name""".stripMargin))),
 
     // TPC-H Q15's argmax-over-view: per-supplier quarter revenue, the
     // supplier(s) at the global max — ties surface, the tie test on
@@ -1520,7 +1614,7 @@ object Queries {
     ("r15_top_supplier",
       (s: SparkSession, d: String) => Relational.topSupplier(
         Tables.lineitem(s, d), Tables.supplier(s, d)),
-      Some("""WITH per AS (SELECT l_suppkey,
+      Some(Sql("""WITH per AS (SELECT l_suppkey,
         |    sum(l_extendedprice::decimal(18,2)
         |      * (1::decimal(18,2) - l_discount::decimal(18,2))) AS rdec,
         |    count(*) AS n_items
@@ -1533,19 +1627,19 @@ object Queries {
         |FROM per CROSS JOIN mx
         |JOIN supplier ON l_suppkey = s_suppkey
         |WHERE rdec = mdec
-        |ORDER BY s_suppkey""".stripMargin)),
+        |ORDER BY s_suppkey""".stripMargin))),
 
     // ===== North star: dedup / similarity / text analysis =====
 
     ("n1_exact_dup_groups",
       (s: SparkSession, d: String) => Dedup.exactDupGroups(docs(s, d)),
-      Some("""SELECT md5(text) AS text_hash, count(*) AS n_docs, min(doc_id) AS keeper
-        |FROM documents GROUP BY 1 ORDER BY text_hash""".stripMargin)),
+      Some(Sql("""SELECT md5(text) AS text_hash, count(*) AS n_docs, min(doc_id) AS keeper
+        |FROM documents GROUP BY 1 ORDER BY text_hash""".stripMargin))),
 
     ("n2_exact_dedup",
       (s: SparkSession, d: String) => Dedup.exactDedup(docs(s, d)),
-      Some("""SELECT doc_id FROM (SELECT md5(text) AS h, min(doc_id) AS doc_id
-        |FROM documents GROUP BY 1) ORDER BY doc_id""".stripMargin)),
+      Some(Sql("""SELECT doc_id FROM (SELECT md5(text) AS h, min(doc_id) AS doc_id
+        |FROM documents GROUP BY 1) ORDER BY doc_id""".stripMargin))),
 
     // Incremental dedup: docs with doc_id % 5 = 0 play the NEW batch, the
     // rest the already-ingested corpus.
@@ -1556,13 +1650,13 @@ object Queries {
           all.filter(col("doc_id") % 5 === 0),
           all.filter(col("doc_id") % 5 =!= 0))
       },
-      Some("""WITH nf AS (SELECT doc_id, md5(text) AS text_hash
+      Some(Sql("""WITH nf AS (SELECT doc_id, md5(text) AS text_hash
         |  FROM documents WHERE doc_id % 5 = 0),
         |cf AS (SELECT DISTINCT md5(text) AS text_hash
         |  FROM documents WHERE doc_id % 5 != 0)
         |SELECT min(doc_id) AS doc_id, text_hash FROM nf
         |WHERE text_hash NOT IN (SELECT text_hash FROM cf)
-        |GROUP BY text_hash ORDER BY doc_id""".stripMargin)),
+        |GROUP BY text_hash ORDER BY doc_id""".stripMargin))),
 
     // Snapshot diff: old = every doc_id not divisible by 7; new = every
     // doc_id not divisible by 5, with % 3 = 0 texts edited — exercises
@@ -1576,7 +1670,7 @@ object Queries {
             .withColumn("text", when(col("doc_id") % 3 === 0,
               concat(col("text"), lit(" zz"))).otherwise(col("text"))))
       },
-      Some("""WITH o AS (SELECT doc_id, source, md5(text) AS h
+      Some(Sql("""WITH o AS (SELECT doc_id, source, md5(text) AS h
         |  FROM documents WHERE doc_id % 7 != 0),
         |n AS (SELECT doc_id, source,
         |    md5(CASE WHEN doc_id % 3 = 0 THEN text || ' zz' ELSE text END) AS h
@@ -1589,7 +1683,7 @@ object Queries {
         |    ELSE 'unchanged' END AS status,
         |  count(*) AS n_docs
         |FROM o FULL OUTER JOIN n USING (doc_id)
-        |GROUP BY 1, 2 ORDER BY source, status""".stripMargin)),
+        |GROUP BY 1, 2 ORDER BY source, status""".stripMargin))),
 
     // Train-once/score-many twins (the production shape n23's and n44's
     // Scaladocs describe): the model is persisted via Sinks.writeIfAbsent
@@ -1621,31 +1715,31 @@ object Queries {
           graft.sources.Sinks.materializeModel(s, path)(
             TextAnalysis.trainBigramLm(docs(s, d))))
       },
-      Some(BigramLmSql)),
+      Some(Sql(BigramLmSql))),
 
     ("n3_adjacent_jaccard",
       (s: SparkSession, d: String) => Dedup.adjacentJaccard(docs(s, d)),
-      Some("""WITH w AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws FROM documents)
+      Some(Sql("""WITH w AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws FROM documents)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  round(len(list_intersect(a.ws, b.ws))::double / len(list_distinct(a.ws || b.ws)), 6) AS jaccard
-        |FROM w a JOIN w b ON a.doc_id + 1 = b.doc_id ORDER BY doc_a""".stripMargin)),
+        |FROM w a JOIN w b ON a.doc_id + 1 = b.doc_id ORDER BY doc_a""".stripMargin))),
 
     ("n4_minhash_signatures",
       (s: SparkSession, d: String) => Dedup.minhashSignatures(docs(s, d)),
-      Some(s"""WITH sh AS ($ShinglesCte), $MinhashCte
-        |SELECT doc_id, seed, mh FROM mh ORDER BY doc_id, seed""".stripMargin)),
+      Some(Sql(s"""WITH sh AS ($ShinglesCte), $MinhashCte
+        |SELECT doc_id, seed, mh FROM mh ORDER BY doc_id, seed""".stripMargin))),
 
     ("n5_lsh_buckets",
       (s: SparkSession, d: String) => Dedup.lshBuckets(docs(s, d)),
-      Some(s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte
+      Some(Sql(s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte
         |SELECT band, band_key, count(*) AS n_docs,
         |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
         |FROM bands GROUP BY band, band_key HAVING count(*) > 1
-        |ORDER BY band, band_key""".stripMargin)),
+        |ORDER BY band, band_key""".stripMargin))),
 
     ("n6_minhash_neardup_pairs",
       (s: SparkSession, d: String) => Dedup.minhashNearDupPairs(docs(s, d), 0.0),
-      Some(s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte,
+      Some(Sql(s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte,
         |pairs AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
         |  FROM bands l JOIN bands r
         |    ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id),
@@ -1654,14 +1748,14 @@ object Queries {
         |  round(len(list_intersect(wa.ws, wb.ws))::double / len(list_distinct(wa.ws || wb.ws)), 6) AS jaccard
         |FROM pairs JOIN w wa ON doc_a = wa.doc_id JOIN w wb ON doc_b = wb.doc_id
         |WHERE round(len(list_intersect(wa.ws, wb.ws))::double / len(list_distinct(wa.ws || wb.ws)), 6) >= 0.0
-        |ORDER BY doc_a, doc_b""".stripMargin)),
+        |ORDER BY doc_a, doc_b""".stripMargin))),
 
     // Asymmetric containment pairs off the same LSH candidate front:
     // both per-pair containment directions, kept when either clears
     // 0.5 — the excerpt/quote detector symmetric Jaccard misses.
     ("n90_containment_pairs",
       (s: SparkSession, d: String) => Dedup.containmentPairs(docs(s, d), 0.5),
-      Some(ContainmentPairsOracle)),
+      Some(Sql(ContainmentPairsOracle))),
 
     // n90 with the exact-dup pre-collapse in front of the banding (the
     // n53/n78 move) — bit-equal by construction, proven here against
@@ -1670,7 +1764,7 @@ object Queries {
     ("n91_containment_pairs_collapsed",
       (s: SparkSession, d: String) =>
         Dedup.containmentPairsCollapsed(docs(s, d), 0.5),
-      Some(ContainmentPairsOracle)),
+      Some(Sql(ContainmentPairsOracle))),
 
     // Containment-aware prefix index (PPJoin-family set-similarity
     // join): EXACT recall on shingle containment — the 30-word-quote-
@@ -1681,7 +1775,7 @@ object Queries {
     ("n115_containment_prefix",
       (s: SparkSession, d: String) =>
         Dedup.containmentPairsPrefix(docs(s, d), 0.5),
-      Some(ContainmentPrefixOracle)),
+      Some(Sql(ContainmentPrefixOracle))),
 
     // n115 with the exact-dup pre-collapse in front of the prefix
     // index (the n91 move on the PPJoin front) — proven against n115's
@@ -1691,7 +1785,7 @@ object Queries {
     ("n118_containment_prefix_collapsed",
       (s: SparkSession, d: String) =>
         Dedup.containmentPairsPrefixCollapsed(docs(s, d), 0.5),
-      Some(ContainmentPrefixOracle)),
+      Some(Sql(ContainmentPrefixOracle))),
 
     // The MEASURED switch between n115 (plain PPJoin front) and n118
     // (exact-dup pre-collapse front) — the n120 discipline on the
@@ -1705,7 +1799,7 @@ object Queries {
     ("n139_containment_prefix_auto",
       (s: SparkSession, d: String) =>
         Dedup.containmentPairsPrefixAuto(docs(s, d), 0.5),
-      Some(ContainmentPrefixOracle)),
+      Some(Sql(ContainmentPrefixOracle))),
 
     // Split-leakage matrix: verified near-dup pairs per unordered
     // (split, split) cell with eligible-universe denominators and the
@@ -1713,7 +1807,7 @@ object Queries {
     // of the pair's ids (never a join back to the corpus).
     ("n97_split_leakage_matrix",
       (s: SparkSession, d: String) => Dedup.splitLeakageMatrix(docs(s, d)),
-      Some {
+      Some(Sql {
         def sp(c: String) = splitCaseSql(c)
         s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte,
         |pairs AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
@@ -1737,14 +1831,14 @@ object Queries {
         |    THEN (a.n * (a.n - 1)) // 2 ELSE a.n * b.n END), 9) AS leak_rate
         |FROM m JOIN sz a ON m.split_a = a.split JOIN sz b ON m.split_b = b.split
         |ORDER BY split_a, split_b""".stripMargin
-      }),
+      })),
 
     // Source-leakage matrix: the exact-count twin of n28's MinHash
     // sketch estimate — verified near-dup pairs per unordered
     // (source, source) cell with denominators and duplication rates.
     ("n98_source_leakage_matrix",
       (s: SparkSession, d: String) => Dedup.sourceLeakageMatrix(docs(s, d)),
-      Some(SourceLeakageOracle)),
+      Some(Sql(SourceLeakageOracle))),
 
     // n98's broadcast-outgrow fallback, proven against n98's oracle
     // VERBATIM (the n91-vs-n90 move): the pair-labeling joins run
@@ -1754,7 +1848,7 @@ object Queries {
     ("n112_source_leakage_shuffle",
       (s: SparkSession, d: String) =>
         Dedup.sourceLeakageMatrixShuffle(docs(s, d)),
-      Some(SourceLeakageOracle)),
+      Some(Sql(SourceLeakageOracle))),
 
     // The MEASURED auto switch itself, driver-verified end to end: the
     // output is branch-independent by construction (one core, two
@@ -1764,7 +1858,7 @@ object Queries {
     ("n120_source_leakage_auto",
       (s: SparkSession, d: String) =>
         Dedup.sourceLeakageMatrixAuto(docs(s, d)),
-      Some(SourceLeakageOracle)),
+      Some(Sql(SourceLeakageOracle))),
 
     // Leakage-safe split ASSIGNMENT: the split key is the verified
     // near-dup component's min id (singleton docs keep their own), so a
@@ -1774,7 +1868,7 @@ object Queries {
     // measurement (n97) derive from the same definitions.
     ("n134_leakage_safe_splits",
       (s: SparkSession, d: String) => Dedup.leakageSafeSplits(docs(s, d)),
-      Some(s"""WITH RECURSIVE $VerifiedPairsCtes,
+      Some(Sql(s"""WITH RECURSIVE $VerifiedPairsCtes,
         |edges AS (SELECT doc_a AS u, doc_b AS v FROM vp
         |  UNION SELECT doc_b, doc_a FROM vp),
         |reach(id, r) AS (
@@ -1785,14 +1879,14 @@ object Queries {
         |k AS (SELECT d.doc_id, coalesce(l.cluster, d.doc_id) AS split_key
         |  FROM documents d LEFT JOIN lbl l ON d.doc_id = l.id)
         |SELECT doc_id, split_key, ${splitCaseSql("split_key")} AS split
-        |FROM k ORDER BY doc_id""".stripMargin)),
+        |FROM k ORDER BY doc_id""".stripMargin))),
 
     // The PROOF for n134: the n97 leakage matrix recomputed over the
     // cluster-aware assignment, full cell universe — the off-diagonal
     // rows are zero BY CONSTRUCTION and visible as data.
     ("n135_leakage_safe_matrix",
       (s: SparkSession, d: String) => Dedup.leakageSafeMatrix(docs(s, d)),
-      Some(s"""WITH RECURSIVE $VerifiedPairsCtes,
+      Some(Sql(s"""WITH RECURSIVE $VerifiedPairsCtes,
         |edges AS (SELECT doc_a AS u, doc_b AS v FROM vp
         |  UNION SELECT doc_b, doc_a FROM vp),
         |reach(id, r) AS (
@@ -1823,7 +1917,7 @@ object Queries {
         |      (CASE WHEN split_a = split_b THEN (na * (na - 1)) // 2
         |        ELSE na * nb END), 9) END AS leak_rate
         |FROM cells LEFT JOIN m USING (split_a, split_b)
-        |ORDER BY split_a, split_b""".stripMargin)),
+        |ORDER BY split_a, split_b""".stripMargin))),
 
     // LSH tuning harness: precision/recall of the band-collision
     // candidate set vs exact shingle-Jaccard ground truth on a bounded
@@ -1831,7 +1925,7 @@ object Queries {
     // before committing a 100 TB run to it.
     ("n59_lsh_tuning",
       (s: SparkSession, d: String) => Dedup.lshTuning(docs(s, d), 50, 0.5),
-      Some(s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte,
+      Some(Sql(s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte,
         |cand AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
         |  FROM bands l JOIN bands r ON l.band = r.band AND l.band_key = r.band_key
         |    AND l.doc_id < r.doc_id AND r.doc_id - l.doc_id <= 50),
@@ -1850,7 +1944,7 @@ object Queries {
         |SELECT n_truth, n_candidates, n_hits,
         |  round(CASE WHEN n_candidates != 0 THEN n_hits::double / n_candidates END, 6) AS precision,
         |  round(CASE WHEN n_truth != 0 THEN n_hits::double / n_truth END, 6) AS recall
-        |FROM c""".stripMargin)),
+        |FROM c""".stripMargin))),
 
     // Sampled twin of n59: the SAME harness over a deterministic
     // md5-bucket 20% sample — the shape a 100 TB user tunes with (hold
@@ -1860,7 +1954,7 @@ object Queries {
     ("n65_lsh_tuning_sampled",
       (s: SparkSession, d: String) =>
         Dedup.lshTuningSampled(docs(s, d), 20, 50, 0.5),
-      Some(s"""WITH sdocs AS (SELECT * FROM documents
+      Some(Sql(s"""WITH sdocs AS (SELECT * FROM documents
         |  WHERE ('0x' || substring(md5('tune|' || doc_id::varchar), 1, 8))::bigint % 100 < 20),
         |sh AS (${ShinglesCte.replace("FROM documents", "FROM sdocs")}), $MinhashCte, $BandsCte,
         |cand AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
@@ -1881,26 +1975,26 @@ object Queries {
         |SELECT n_truth, n_candidates, n_hits,
         |  round(CASE WHEN n_candidates != 0 THEN n_hits::double / n_candidates END, 6) AS precision,
         |  round(CASE WHEN n_truth != 0 THEN n_hits::double / n_truth END, 6) AS recall
-        |FROM c""".stripMargin)),
+        |FROM c""".stripMargin))),
 
     ("n7_simhash",
       (s: SparkSession, d: String) => Dedup.simhash(docs(s, d)),
-      Some(s"""WITH $SimhashCte
-        |SELECT doc_id, simhash FROM sim ORDER BY doc_id""".stripMargin)),
+      Some(Sql(s"""WITH $SimhashCte
+        |SELECT doc_id, simhash FROM sim ORDER BY doc_id""".stripMargin))),
 
     ("n8_simhash_hamming",
       (s: SparkSession, d: String) => Dedup.simhashAdjacentHamming(docs(s, d)),
-      Some(s"""WITH $SimhashCte
+      Some(Sql(s"""WITH $SimhashCte
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  bit_count(xor(a.simhash, b.simhash)) AS hamming
-        |FROM sim a JOIN sim b ON a.doc_id + 1 = b.doc_id ORDER BY doc_a""".stripMargin)),
+        |FROM sim a JOIN sim b ON a.doc_id + 1 = b.doc_id ORDER BY doc_a""".stripMargin))),
 
     // Full-pair-space simhash near dups via the Manku pigeonhole block
     // index: hamming ≤ 3 over 4 exact-match blocks of the 32-bit hash —
     // candidate recall is EXACT by pigeonhole, verify is xor+popcount.
     ("n93_simhash_neardup_pairs",
       (s: SparkSession, d: String) => Dedup.simhashNearDupPairs(docs(s, d)),
-      Some(s"""WITH $SimhashCte,
+      Some(Sql(s"""WITH $SimhashCte,
         |bl AS (SELECT doc_id, simhash, b.b AS blk,
         |    (simhash >> (b.b * 8)) & 255 AS bv
         |  FROM sim CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS b) b),
@@ -1910,7 +2004,7 @@ object Queries {
         |    ON a.blk = b.blk AND a.bv = b.bv AND a.doc_id < b.doc_id)
         |SELECT doc_a, doc_b, bit_count(xor(ha, hb)) AS hamming
         |FROM cand WHERE bit_count(xor(ha, hb)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin)),
+        |ORDER BY doc_a, doc_b""".stripMargin))),
 
     // The 60-bit WIDE pigeonhole index — the production twin of n93:
     // 15-bit blocks keep candidate buckets 2^7x smaller, the difference
@@ -1919,7 +2013,7 @@ object Queries {
     ("n94_simhash_neardup_pairs_wide",
       (s: SparkSession, d: String) =>
         Dedup.simhashNearDupPairsWide(docs(s, d)),
-      Some(SimhashWidePairsOracle)),
+      Some(Sql(SimhashWidePairsOracle))),
 
     // Manku WWW'07 permuted-table index (60 bits, 6 blocks, keep 3 →
     // 20 tables of 30-bit keys) — the hot-block fix for n94: a block
@@ -1930,7 +2024,7 @@ object Queries {
     ("n113_simhash_neardup_permuted",
       (s: SparkSession, d: String) =>
         Dedup.simhashNearDupPairsPermuted(docs(s, d)),
-      Some(SimhashWidePairsOracle)),
+      Some(Sql(SimhashWidePairsOracle))),
 
     // The permuted index's tuning harness (n96's discipline): per
     // combination table, bucket count, max bucket, exact candidate
@@ -1939,7 +2033,7 @@ object Queries {
     ("n114_simhash_permuted_stats",
       (s: SparkSession, d: String) =>
         Dedup.permutedIndexStats(Dedup.simhashWideRaw(docs(s, d))),
-      Some {
+      Some(Sql {
         val combos = (0 until 6).combinations(3).toSeq
         val keyed = combos.zipWithIndex.map { case (c, t) =>
           val kv = c.zipWithIndex.map { case (b, j) =>
@@ -1955,7 +2049,7 @@ object Queries {
         |  CAST(max(s) AS BIGINT) AS max_bucket,
         |  CAST(sum((s * (s - 1)) // 2) AS BIGINT) AS est_candidate_pairs
         |FROM bk GROUP BY tbl ORDER BY tbl""".stripMargin
-      }),
+      })),
 
     // Incremental simhash screening: batch (doc_id % 5 = 0) vs the rest
     // as the persisted index; survivors after corpus-hit + greedy
@@ -1967,7 +2061,7 @@ object Queries {
           all.filter(col("doc_id") % 5 === 0),
           all.filter(col("doc_id") % 5 =!= 0))
       },
-      Some(s"""WITH $SimhashWideCte,
+      Some(Sql(s"""WITH $SimhashWideCte,
         |nb AS (SELECT * FROM sim WHERE doc_id % 5 = 0),
         |cb AS (SELECT * FROM sim WHERE doc_id % 5 != 0),
         |nblk AS (SELECT doc_id, simhash, b.b AS blk,
@@ -1985,14 +2079,14 @@ object Queries {
         |SELECT doc_id, simhash FROM nb
         |WHERE doc_id NOT IN (SELECT doc_id FROM chit)
         |  AND doc_id NOT IN (SELECT doc_id FROM bhit)
-        |ORDER BY doc_id""".stripMargin)),
+        |ORDER BY doc_id""".stripMargin))),
 
     // Pigeonhole-index tuning harness: per (bits, block), bucket count,
     // max bucket, and the EXACT candidate volume Σ s(s−1)/2 — the
     // 32-vs-60-bit decision as data. All integers, oracle-exact.
     ("n96_simhash_index_stats",
       (s: SparkSession, d: String) => Dedup.simhashIndexStats(docs(s, d)),
-      Some {
+      Some(Sql {
         s"""WITH wh AS (SELECT doc_id,
         |    ('0x' || substring(md5(w), 1, 8))::bigint AS h32,
         |    ('0x' || substring(md5(w), 1, 15))::bigint AS h60
@@ -2013,7 +2107,7 @@ object Queries {
         |  CAST(max(s) AS BIGINT) AS max_bucket,
         |  CAST(sum((s * (s - 1)) // 2) AS BIGINT) AS est_candidate_pairs
         |FROM bk GROUP BY bits, blk ORDER BY bits, blk""".stripMargin
-      }),
+      })),
 
     // MinHash-LSH band-index tuning harness (n96's discipline on the
     // band index): per band, bucket count, max bucket, exact candidate
@@ -2021,17 +2115,17 @@ object Queries {
     // surfaced as data before a corpus-scale run commits to it.
     ("n119_lsh_index_stats",
       (s: SparkSession, d: String) => Dedup.lshIndexStats(docs(s, d)),
-      Some(s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte,
+      Some(Sql(s"""WITH sh AS ($ShinglesCte), $MinhashCte, $BandsCte,
         |bk AS (SELECT band, band_key, count(*) AS s
         |  FROM bands GROUP BY 1, 2)
         |SELECT band, count(*) AS n_buckets,
         |  CAST(max(s) AS BIGINT) AS max_bucket,
         |  CAST(sum((s * (s - 1)) // 2) AS BIGINT) AS est_candidate_pairs
-        |FROM bk GROUP BY band ORDER BY band""".stripMargin)),
+        |FROM bk GROUP BY band ORDER BY band""".stripMargin))),
 
     ("n9_cosine_topk",
       (s: SparkSession, d: String) => Similarity.bruteForceTopK(emb(s, d), 10, 5),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+      Some(Sql(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
         |p AS (SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id < 10),
         |scored AS (SELECT q_id, vec_id, ${cosSql("q_emb", "emb")} AS cos
         |  FROM e, p WHERE vec_id != q_id)
@@ -2039,7 +2133,7 @@ object Queries {
         |  SELECT q_id, vec_id, cos,
         |    row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rnk
         |  FROM scored)
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin)),
+        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin))),
 
     ("n10_lsh_ann_topk",
       // bucketBits pinned so the oracle's embedded 4-bit plane literals
@@ -2047,7 +2141,7 @@ object Queries {
       (s: SparkSession, d: String) =>
         Similarity.lshBucketTopK(emb(s, d), 10, 5,
           bucketBits = Similarity.BucketBits),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
+      Some(Sql(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
         |  ${rpBucketSql(Similarity.BucketBits)} AS bucket
         |  FROM embeddings),
         |p AS (SELECT vec_id AS q_id, emb AS q_emb, bucket AS q_bucket FROM e WHERE vec_id < 10),
@@ -2057,7 +2151,7 @@ object Queries {
         |  SELECT q_id, vec_id, cos,
         |    row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rnk
         |  FROM scored)
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin)),
+        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin))),
 
     // IVF recall@k vs brute-force truth — the number on the "sign-LSH
     // recall collapsed, switch to IVF" decision n64 surfaces; nProbe=2
@@ -2084,7 +2178,7 @@ object Queries {
     ("n62_ann_recall",
       (s: SparkSession, d: String) =>
         Similarity.annRecall(emb(s, d), 10, 5, Similarity.BucketBits),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
+      Some(Sql(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
         |  ${rpBucketSql(Similarity.BucketBits)} AS bucket FROM embeddings),
         |p AS (SELECT vec_id AS q_id, emb AS q_emb, bucket AS q_bucket FROM e WHERE vec_id < 10),
         |truth AS (SELECT q_id, vec_id FROM (
@@ -2102,7 +2196,7 @@ object Queries {
         |SELECT t.q_id, count(*) AS n_truth, count(a.vec_id) AS n_hits,
         |  round(count(a.vec_id)::double / count(*), 6) AS recall
         |FROM truth t LEFT JOIN approx a ON t.q_id = a.q_id AND t.vec_id = a.vec_id
-        |GROUP BY t.q_id ORDER BY t.q_id""".stripMargin)),
+        |GROUP BY t.q_id ORDER BY t.q_id""".stripMargin))),
 
     // ANN recall-vs-width CURVE: recall@k for every candidate bucket
     // width in ONE pass — rpPlanes are width-shared, so width w's bucket
@@ -2112,7 +2206,7 @@ object Queries {
     ("n64_ann_recall_curve",
       (s: SparkSession, d: String) =>
         Similarity.annRecallCurve(emb(s, d), 10, 5, Seq(2, 4, 6, 8, 10, 12)),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
+      Some(Sql(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
         |  ${rpBucketSql(12)} AS bucket FROM embeddings),
         |p AS (SELECT vec_id AS q_id, emb AS q_emb, bucket AS q_bucket FROM e WHERE vec_id < 10),
         |widths(bits, mask) AS (VALUES (2, 3), (4, 15), (6, 63), (8, 255), (10, 1023), (12, 4095)),
@@ -2137,7 +2231,7 @@ object Queries {
         |  round(count(a.vec_id)::double / count(*), 6) AS recall
         |FROM tw t LEFT JOIN approx a
         |  ON t.bits = a.bits AND t.q_id = a.q_id AND t.vec_id = a.vec_id
-        |GROUP BY t.bits ORDER BY t.bits""".stripMargin)),
+        |GROUP BY t.bits ORDER BY t.bits""".stripMargin))),
 
     // Multi-probe twin of n64 (probeRadius=1): every (probe, width) also
     // scans the `bits` buckets one hyperplane-flip away — the standard
@@ -2148,7 +2242,7 @@ object Queries {
       (s: SparkSession, d: String) =>
         Similarity.annRecallCurve(emb(s, d), 10, 5, Seq(2, 4, 6, 8, 10, 12),
           probeRadius = 1),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
+      Some(Sql(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
         |  ${rpBucketSql(12)} AS bucket FROM embeddings),
         |p AS (SELECT vec_id AS q_id, emb AS q_emb, bucket AS q_bucket FROM e WHERE vec_id < 10),
         |widths(bits, mask) AS (VALUES (2, 3), (4, 15), (6, 63), (8, 255), (10, 1023), (12, 4095)),
@@ -2179,18 +2273,18 @@ object Queries {
         |  round(count(a.vec_id)::double / count(*), 6) AS recall
         |FROM tw t LEFT JOIN approx a
         |  ON t.bits = a.bits AND t.q_id = a.q_id AND t.vec_id = a.vec_id
-        |GROUP BY t.bits ORDER BY t.bits""".stripMargin)),
+        |GROUP BY t.bits ORDER BY t.bits""".stripMargin))),
 
     ("n11_cosine_neardup",
       (s: SparkSession, d: String) =>
         Similarity.cosineNearDupPairs(emb(s, d), 0.3, 100),
-      Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings)
+      Some(Sql(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings)
         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |  ${cosSql("a.emb", "b.emb")} AS cos
         |FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
         |  AND b.vec_id - a.vec_id <= 100
         |WHERE ${cosSql("a.emb", "b.emb")} >= 0.3
-        |ORDER BY id_a, id_b""".stripMargin)),
+        |ORDER BY id_a, id_b""".stripMargin))),
 
     // Near-dup pairs blocked by the hyperplane sign bucket — the
     // scale path twin of n11's id-band baseline (bucket equi-join,
@@ -2200,14 +2294,14 @@ object Queries {
       // default derives it from the corpus size (Similarity.deriveBucketBits)
       (s: SparkSession, d: String) =>
         Similarity.lshNearDupPairs(emb(s, d), 0.3, Similarity.BucketBits),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
+      Some(Sql(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
         |    ${rpBucketSql(Similarity.BucketBits)} AS bucket
         |  FROM embeddings)
         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |  ${cosSql("a.emb", "b.emb")} AS cos
         |FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
         |WHERE ${cosSql("a.emb", "b.emb")} >= 0.3
-        |ORDER BY id_a, id_b""".stripMargin)),
+        |ORDER BY id_a, id_b""".stripMargin))),
 
     // Semantic dedup (SemDeDup-shape): sign-bucket blocking + min-id
     // keeper — the keep list is deterministic, so fully oracled. Bucket
@@ -2215,15 +2309,7 @@ object Queries {
     ("n46_semantic_dedup",
       (s: SparkSession, d: String) =>
         Similarity.semanticDedup(emb(s, d), 0.3, Similarity.BucketBits),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    ${rpBucketSql(Similarity.BucketBits)} AS bucket
-        |  FROM embeddings),
-        |d AS (SELECT DISTINCT b.vec_id
-        |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        |  WHERE ${cosSql("a.emb", "b.emb")} >= 0.3)
-        |SELECT vec_id, label FROM embeddings
-        |WHERE vec_id NOT IN (SELECT vec_id FROM d)
-        |ORDER BY vec_id""".stripMargin)),
+      Some(Sql(SemanticDedupOracle))),
 
     // Same keep list with exact-identical-vector pre-collapse (the n53
     // move on the embedding side): pair join over one representative per
@@ -2233,15 +2319,7 @@ object Queries {
       (s: SparkSession, d: String) =>
         Similarity.semanticDedupCollapsed(emb(s, d), 0.3,
           Similarity.BucketBits),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    ${rpBucketSql(Similarity.BucketBits)} AS bucket
-        |  FROM embeddings),
-        |d AS (SELECT DISTINCT b.vec_id
-        |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        |  WHERE ${cosSql("a.emb", "b.emb")} >= 0.3)
-        |SELECT vec_id, label FROM embeddings
-        |WHERE vec_id NOT IN (SELECT vec_id FROM d)
-        |ORDER BY vec_id""".stripMargin)),
+      Some(Sql(SemanticDedupOracle))),
 
     // Incremental semantic dedup (n49's batch-ingest contract on the
     // embedding side): vec_id % 4 = 0 plays the NEW batch, the rest the
@@ -2255,7 +2333,7 @@ object Queries {
           e.filter(col("vec_id") % 4 =!= 0),
           0.3, Similarity.BucketBits)
       },
-      Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb,
+      Some(Sql(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb,
         |    ${rpBucketSql(Similarity.BucketBits)} AS bucket
         |  FROM embeddings),
         |nw AS (SELECT * FROM e WHERE vec_id % 4 = 0),
@@ -2270,7 +2348,7 @@ object Queries {
         |WHERE vec_id % 4 = 0
         |  AND vec_id NOT IN (SELECT vec_id FROM di)
         |  AND vec_id NOT IN (SELECT vec_id FROM db)
-        |ORDER BY vec_id""".stripMargin)),
+        |ORDER BY vec_id""".stripMargin))),
 
     // Semantic near-dup clusters: CC over the n41 pair graph — cluster
     // labels for embeddings (n21/n24's embedding-side twin). n57 is the
@@ -2280,7 +2358,7 @@ object Queries {
         Similarity.semanticDupClusters(emb(s, d), 0.3, Similarity.BucketBits)
           .withColumn("members",
             array_join(transform(col("members"), _.cast("string")), ",")),
-      Some(SemClustersSql)),
+      Some(Sql(SemClustersSql))),
 
     ("n57_semantic_dup_clusters_collapsed",
       (s: SparkSession, d: String) =>
@@ -2288,14 +2366,14 @@ object Queries {
           Similarity.BucketBits)
           .withColumn("members",
             array_join(transform(col("members"), _.cast("string")), ",")),
-      Some(SemClustersSql)),
+      Some(Sql(SemClustersSql))),
 
     // Bucket-blocked k-NN graph: every vector's top-5 in-bucket cosine
     // neighbors (rounded cosine + dst tiebreak → deterministic ranks).
     ("n48_knn_graph",
       (s: SparkSession, d: String) =>
         Similarity.knnGraph(emb(s, d), 5, Similarity.BucketBits),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
+      Some(Sql(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
         |    ${rpBucketSql(Similarity.BucketBits)} AS bucket
         |  FROM embeddings),
         |sc AS (SELECT a.vec_id AS src, b.vec_id AS dst,
@@ -2305,7 +2383,7 @@ object Queries {
         |r AS (SELECT src, dst, cos, row_number() OVER
         |    (PARTITION BY src ORDER BY cos DESC, dst) AS rnk FROM sc)
         |SELECT src, dst, cos, rnk FROM r WHERE rnk <= 5
-        |ORDER BY src, rnk""".stripMargin)),
+        |ORDER BY src, rnk""".stripMargin))),
 
     // IVF ANN with deterministically-trained k-means centroids (rows-only:
     // float averaging is engine-specific; reproducible across runs).
@@ -2334,14 +2412,14 @@ object Queries {
         Similarity.randomProjection(emb(s, d), 8)
           .select(col("vec_id"), posexplode(col("proj")).as(Seq("j", "v")))
           .orderBy(col("vec_id"), col("j")),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+      Some(Sql(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
         |s AS (SELECT j, list_transform(generate_series(0, ${EmbDims - 1}), i ->
         |    CAST(1 - 2 * (('0x' || substring(md5('rp|' || i || '|' || j), 1, 8))::bigint % 2)
         |      AS DOUBLE)) AS srow
         |  FROM (SELECT unnest(generate_series(0, 7)) AS j)),
         |pr AS (SELECT vec_id, j, round(list_dot_product(emb, srow), 6) AS v
         |  FROM e CROSS JOIN s)
-        |SELECT vec_id, j, v FROM pr ORDER BY vec_id, j""".stripMargin)),
+        |SELECT vec_id, j, v FROM pr ORDER BY vec_id, j""".stripMargin))),
 
     // JL-prefiltered exact ANN: shortlist by cosine in the 8-dim
     // projected space, exact-cosine re-rank of the shortlist only.
@@ -2350,7 +2428,7 @@ object Queries {
     ("n89_projected_ann_topk",
       (s: SparkSession, d: String) =>
         Similarity.projectedTopK(emb(s, d), 10, 5),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+      Some(Sql(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
         |s AS (SELECT j, list_transform(generate_series(0, ${EmbDims - 1}), i ->
         |    CAST(1 - 2 * (('0x' || substring(md5('rp|' || i || '|' || j), 1, 8))::bigint % 2)
         |      AS DOUBLE)) AS srow
@@ -2371,21 +2449,21 @@ object Queries {
         |  SELECT q_id, vec_id, cos,
         |    row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rnk
         |  FROM scored)
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin)),
+        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin))),
 
     ("n12_token_stats_by_source",
       (s: SparkSession, d: String) => TextAnalysis.tokenStatsBySource(docs(s, d)),
-      Some("""SELECT source, count(*) AS n_docs,
+      Some(Sql("""SELECT source, count(*) AS n_docs,
         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
         |  CAST(sum(length(text)) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin))),
 
     // Per-source ADAPTIVE length thresholds (exact p05/p95 of token
     // count) + outlier counts — the per-source length filter; a fixed
     // global cutoff is wrong across tweet-like and book-like sources.
     ("n69_length_outliers",
       (s: SparkSession, d: String) => TextAnalysis.lengthOutliers(docs(s, d)),
-      Some("""WITH d AS (SELECT source, len(string_split(text, ' ')) AS nw FROM documents),
+      Some(Sql("""WITH d AS (SELECT source, len(string_split(text, ' ')) AS nw FROM documents),
         |s AS (SELECT source, round(quantile_cont(nw, 0.05), 4) AS p05,
         |    round(quantile_cont(nw, 0.95), 4) AS p95
         |  FROM d GROUP BY source)
@@ -2393,7 +2471,7 @@ object Queries {
         |  CAST(sum(CASE WHEN d.nw < s.p05 THEN 1 ELSE 0 END) AS BIGINT) AS n_short,
         |  CAST(sum(CASE WHEN d.nw > s.p95 THEN 1 ELSE 0 END) AS BIGINT) AS n_long
         |FROM d JOIN s USING (source)
-        |GROUP BY d.source, s.p05, s.p95 ORDER BY source""".stripMargin)),
+        |GROUP BY d.source, s.p05, s.p95 ORDER BY source""".stripMargin))),
 
     // The 100 TB twin of n69: percentile_approx (mergeable fixed-size
     // sketch) replaces the exact per-group percentile sort — the skew
@@ -2410,7 +2488,7 @@ object Queries {
     // the quality predicate is n22's verbatim.
     ("n70_dataset_card",
       (s: SparkSession, d: String) => TextAnalysis.datasetCard(docs(s, d)),
-      Some(s"""SELECT source, count(*) AS n_docs,
+      Some(Sql(s"""SELECT source, count(*) AS n_docs,
         |  count(DISTINCT md5(text)) AS n_unique_texts,
         |  count(DISTINCT lang) AS n_langs,
         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
@@ -2419,7 +2497,7 @@ object Queries {
         |      / len(string_split(text, ' ')), 6) <= 0.3 THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
         |  round(1 - count(DISTINCT md5(text))::double / count(*), 6) AS dup_frac,
         |  round(sum(len(string_split(text, ' ')))::double / count(*), 6) AS avg_tokens
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin))),
 
     // Per-doc token counts incl. the BPE-ish subword proxy (runs of
     // letters, digits, or single punctuation — the common pre-tokenizer
@@ -2429,15 +2507,15 @@ object Queries {
       (s: SparkSession, d: String) => Checkpoints.sortBarrier(
         TextAnalysis.tokenCounts(docs(s, d)), col("doc_id"))
         .orderBy(col("doc_id")),
-      Some("""SELECT doc_id, len(string_split(text, ' ')) AS ws_tokens,
+      Some(Sql("""SELECT doc_id, len(string_split(text, ' ')) AS ws_tokens,
         |  len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS subword_tokens,
         |  len(regexp_extract_all(text, '[a-z]{1,4}|[0-9]{1,4}|[^a-z0-9\s]')) AS bpe_pieces,
         |  length(text) AS n_chars_measured
-        |FROM documents ORDER BY doc_id""".stripMargin)),
+        |FROM documents ORDER BY doc_id""".stripMargin))),
 
     ("n13_quality_by_lang",
       (s: SparkSession, d: String) => TextAnalysis.qualityByLang(docs(s, d)),
-      Some(s"""WITH q AS (SELECT lang, len(string_split(text, ' ')) AS n_words,
+      Some(Sql(s"""WITH q AS (SELECT lang, len(string_split(text, ' ')) AS n_words,
         |    length(text) AS n_chars,
         |    round(len(list_filter(string_split(text, ' '), w -> w IN $Stop))::double
         |      / len(string_split(text, ' ')), 6) AS stopword_ratio
@@ -2446,7 +2524,7 @@ object Queries {
         |  sum(n_words)::double / count(*) AS avg_words,
         |  sum(n_chars)::double / count(*) AS avg_chars,
         |  round(CAST(sum(stopword_ratio::decimal(18,6)) AS double) / count(*), 6) AS avg_stopword_ratio
-        |FROM q GROUP BY lang ORDER BY lang""".stripMargin)),
+        |FROM q GROUP BY lang ORDER BY lang""".stripMargin))),
 
     // Gopher-style per-rule quality audit: rule × lang fail counts +
     // the all_rules composite, every rule a flag on one scan row over
@@ -2455,7 +2533,7 @@ object Queries {
     ("n138_quality_rules",
       (s: SparkSession, d: String) =>
         TextAnalysis.qualityRulesReport(docs(s, d)),
-      Some(s"""WITH q AS (SELECT lang,
+      Some(Sql(s"""WITH q AS (SELECT lang,
         |    len(string_split(text, ' ')) AS n_words,
         |    round((length(text) - len(string_split(text, ' ')) + 1)::double
         |      / len(string_split(text, ' ')), 6) AS mean_word_len,
@@ -2497,27 +2575,27 @@ object Queries {
         |  UNION ALL SELECT lang, 'punct_ratio', n_docs, f5 FROM a
         |  UNION ALL SELECT lang, 'upper_ratio', n_docs, f6 FROM a
         |  UNION ALL SELECT lang, 'all_rules', n_docs, fall FROM a)
-        |ORDER BY lang, rule""".stripMargin)),
+        |ORDER BY lang, rule""".stripMargin))),
 
     ("n14_langid",
       (s: SparkSession, d: String) => TextAnalysis.langId(docs(s, d)),
-      Some(s"""WITH $LangPredCte
+      Some(Sql(s"""WITH $LangPredCte
         |SELECT doc_id, lang, pred, score_en, score_de FROM pred
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
+        |WHERE rn = 1 ORDER BY doc_id""".stripMargin))),
 
     // Confusion matrix over the heuristic classifier: labeled × predicted
     // lang counts — the classifier-audit roll-up.
     ("n33_lang_confusion",
       (s: SparkSession, d: String) => TextAnalysis.langConfusion(docs(s, d)),
-      Some(s"""WITH $LangPredCte
+      Some(Sql(s"""WITH $LangPredCte
         |SELECT lang, pred, count(*) AS n_docs FROM pred
-        |WHERE rn = 1 GROUP BY lang, pred ORDER BY lang, pred""".stripMargin)),
+        |WHERE rn = 1 GROUP BY lang, pred ORDER BY lang, pred""".stripMargin))),
 
     // Gopher-style repetition signals: distinct-word ratio, top-word
     // fraction, duplicate-bigram fraction (boilerplate/spam heuristics).
     ("n30_repetition_quality",
       (s: SparkSession, d: String) => TextAnalysis.repetitionQuality(docs(s, d)),
-      Some("""WITH wc AS (
+      Some(Sql("""WITH wc AS (
         |  SELECT doc_id, word, count(*) AS c
         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
         |  GROUP BY 1, 2),
@@ -2537,14 +2615,14 @@ object Queries {
         |  round(a.top_n::double / a.n_words, 6) AS top_word_frac,
         |  CASE WHEN b.n_bg > 0
         |    THEN round(1.0 - b.n_bg_uniq::double / b.n_bg, 6) END AS dup_bigram_frac
-        |FROM agg a JOIN bg b USING (doc_id) ORDER BY a.doc_id""".stripMargin)),
+        |FROM agg a JOIN bg b USING (doc_id) ORDER BY a.doc_id""".stripMargin))),
 
     // Substring-level decontamination: per test doc, the fraction of its
     // distinct word 5-grams found anywhere in the train split.
     ("n31_ngram_decontamination",
       (s: SparkSession, d: String) =>
         TextAnalysis.ngramDecontamination(docs(s, d), 5),
-      Some("""WITH sp AS (
+      Some(Sql("""WITH sp AS (
         |  SELECT doc_id, CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
         |    ELSE 'test' END AS split
         |  FROM (SELECT doc_id,
@@ -2563,7 +2641,7 @@ object Queries {
         |  round(count(tr.g)::double / count(*), 6) AS contamination_frac
         |FROM g t LEFT OUTER JOIN tr ON t.g = tr.g
         |WHERE t.split = 'test'
-        |GROUP BY t.doc_id ORDER BY test_doc""".stripMargin)),
+        |GROUP BY t.doc_id ORDER BY test_doc""".stripMargin))),
 
     // Corpus self-overlap: per doc, the fraction of its distinct word
     // 5-grams that appear in at least one other document (per-doc-distinct
@@ -2571,7 +2649,7 @@ object Queries {
     ("n47_dup_span_stats",
       (s: SparkSession, d: String) =>
         TextAnalysis.dupSpanStats(docs(s, d), 5),
-      Some("""WITH g AS (
+      Some(Sql("""WITH g AS (
         |  SELECT doc_id, unnest(list_distinct(list_transform(
         |    generate_series(1, len(string_split(text, ' ')) - 4),
         |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
@@ -2584,7 +2662,7 @@ object Queries {
         |  round(sum(CASE WHEN c.ndocs > 1 THEN 1 ELSE 0 END)::double / count(*), 6)
         |    AS shared_frac
         |FROM g JOIN c USING (g)
-        |GROUP BY g.doc_id ORDER BY doc_id""".stripMargin)),
+        |GROUP BY g.doc_id ORDER BY doc_id""".stripMargin))),
 
     // Boilerplate POSITION coverage: per doc, the fraction of word
     // positions covered by ≥1 corpus-repeated 5-gram (df ≥ 2) — the
@@ -2595,7 +2673,7 @@ object Queries {
     ("n71_boilerplate_coverage",
       (s: SparkSession, d: String) =>
         TextAnalysis.boilerplateCoverage(docs(s, d), 5, 2),
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+      Some(Sql("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |g AS (SELECT doc_id, u.pos AS pos, u.g AS g FROM (
         |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws) - 4),
         |    i -> {'pos': i, 'g': ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
@@ -2609,7 +2687,7 @@ object Queries {
         |SELECT w.doc_id, len(w.ws)::bigint AS n_tokens,
         |  coalesce(cov.n_cov, 0)::bigint AS n_cov,
         |  round(coalesce(cov.n_cov, 0)::double / len(w.ws), 6) AS boilerplate_frac
-        |FROM w LEFT JOIN cov USING (doc_id) ORDER BY doc_id""".stripMargin)),
+        |FROM w LEFT JOIN cov USING (doc_id) ORDER BY doc_id""".stripMargin))),
 
     // Boilerplate TRIM: execute what n71 measures — drop every word
     // position covered by a hot (df ≥ 2) 5-gram, emit cleaned text +
@@ -2620,7 +2698,7 @@ object Queries {
     ("n82_boilerplate_trim",
       (s: SparkSession, d: String) =>
         TextAnalysis.boilerplateTrim(docs(s, d), 5, 2),
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+      Some(Sql("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |g AS (SELECT doc_id, u.pos AS pos, u.g AS g FROM (
         |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws) - 4),
         |    i -> {'pos': i, 'g': ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
@@ -2643,7 +2721,7 @@ object Queries {
         |  coalesce(nrem.n_removed, 0)::bigint AS n_removed,
         |  coalesce(kept.trimmed_text, '') AS trimmed_text
         |FROM w LEFT JOIN nrem USING (doc_id) LEFT JOIN kept USING (doc_id)
-        |ORDER BY doc_id""".stripMargin)),
+        |ORDER BY doc_id""".stripMargin))),
 
     // Duplicated-span INVENTORY: maximal contiguous runs of hot-gram
     // covered positions (gaps-and-islands over n71/n82's shared covered-
@@ -2653,7 +2731,7 @@ object Queries {
     ("n106_boilerplate_spans",
       (s: SparkSession, d: String) =>
         TextAnalysis.boilerplateSpans(docs(s, d), 5, 2),
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+      Some(Sql("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |g AS (SELECT doc_id, u.pos AS pos, u.g AS g FROM (
         |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws) - 4),
         |    i -> {'pos': i, 'g': ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
@@ -2669,7 +2747,7 @@ object Queries {
         |  FROM covp)
         |SELECT doc_id, min(p) AS span_start, count(*) AS span_len
         |FROM i GROUP BY doc_id, grp
-        |ORDER BY doc_id, span_start""".stripMargin)),
+        |ORDER BY doc_id, span_start""".stripMargin))),
 
     // Keep-FIRST duplicated-substring span inventory (Lee et al. 2022's
     // exact-substring dedup at 5-word-window granularity): maximal runs
@@ -2682,13 +2760,13 @@ object Queries {
     ("n121_dupsub_spans",
       (s: SparkSession, d: String) =>
         TextAnalysis.dupSubstringSpans(docs(s, d), 5),
-      Some(s"""WITH $DupSubCtes,
+      Some(Sql(s"""WITH $DupSubCtes,
         |i AS (SELECT doc_id, p,
         |    p - row_number() OVER (PARTITION BY doc_id ORDER BY p) AS grp
         |  FROM covp)
         |SELECT doc_id, min(p) AS span_start, count(*) AS span_len
         |FROM i GROUP BY doc_id, grp
-        |ORDER BY doc_id, span_start""".stripMargin)),
+        |ORDER BY doc_id, span_start""".stripMargin))),
 
     // The EXECUTE side of n121: remove every position covered by a
     // non-first duplicated 5-window, emit the deduplicated text +
@@ -2698,7 +2776,7 @@ object Queries {
     ("n122_dupsub_dedup",
       (s: SparkSession, d: String) =>
         TextAnalysis.dupSubstringDedup(docs(s, d), 5),
-      Some(DupSubDedupOracle)),
+      Some(Sql(DupSubDedupOracle))),
 
     // n122's PRODUCTION twin: exact-dup pre-collapse in front of the
     // window machinery (the n118/n53 move) — one rep per distinct text
@@ -2709,7 +2787,7 @@ object Queries {
     ("n123_dupsub_dedup_collapsed",
       (s: SparkSession, d: String) =>
         TextAnalysis.dupSubstringDedupCollapsed(docs(s, d), 5),
-      Some(DupSubDedupOracle)),
+      Some(Sql(DupSubDedupOracle))),
 
     // The MEASURED switch between n122 (plain) and n123 (pre-collapse)
     // — the n139 discipline on the substring family: digest groups cut
@@ -2721,7 +2799,7 @@ object Queries {
     ("n145_dupsub_dedup_auto",
       (s: SparkSession, d: String) =>
         TextAnalysis.dupSubstringDedupAuto(docs(s, d), 5),
-      Some(DupSubDedupOracle)),
+      Some(Sql(DupSubDedupOracle))),
 
     // n122 over 60-bit HASHED gram keys — the production shuffle/index
     // payload (8 B per window vs a 5-word string). Both engines compute
@@ -2731,9 +2809,9 @@ object Queries {
     ("n125_dupsub_dedup_hashed",
       (s: SparkSession, d: String) =>
         TextAnalysis.dupSubstringDedupHashed(docs(s, d), 5),
-      Some(s"""WITH $DupSubCtesHashed,
+      Some(Sql(s"""WITH $DupSubCtesHashed,
         |$DupSubRebuildCtes
-        |$DupSubRebuildSelect""".stripMargin)),
+        |$DupSubRebuildSelect""".stripMargin))),
 
     // Per-source duplicated-substring profile — the dataset-card view
     // deciding whether a corpus needs the keep-first stage at all;
@@ -2741,7 +2819,7 @@ object Queries {
     ("n127_dupsub_by_source",
       (s: SparkSession, d: String) =>
         TextAnalysis.dupSubstringBySource(docs(s, d), 5),
-      Some(s"""WITH $DupSubCtes,
+      Some(Sql(s"""WITH $DupSubCtes,
         |nrem AS (SELECT doc_id, count(*) AS n_removed FROM covp GROUP BY doc_id),
         |per AS (SELECT d.source AS source, len(w.ws)::bigint AS n_tokens,
         |    coalesce(nrem.n_removed, 0)::bigint AS n_removed
@@ -2751,7 +2829,7 @@ object Queries {
         |  sum(n_tokens)::bigint AS total_tokens,
         |  sum(n_removed)::bigint AS dup_tokens,
         |  round(sum(n_removed)::double / sum(n_tokens), 6) AS dup_frac
-        |FROM per GROUP BY source ORDER BY source""".stripMargin)),
+        |FROM per GROUP BY source ORDER BY source""".stripMargin))),
 
     // PARAGRAPH-level keep-first dedup — CCNet's first pass (Wenzek et
     // al. 2020: hash each paragraph, drop every non-first occurrence
@@ -2763,12 +2841,12 @@ object Queries {
     ("n140_paragraph_dedup",
       (s: SparkSession, d: String) =>
         TextAnalysis.paragraphDedupBlocks(docs(s, d), 20),
-      Some(s"""WITH $ParagraphBlockCtes
+      Some(Sql(s"""WITH $ParagraphBlockCtes
         |SELECT doc_id, count(*) AS n_paras,
         |  sum(CASE WHEN keep THEN 0 ELSE 1 END)::bigint AS n_removed,
         |  coalesce(string_agg(CASE WHEN keep THEN para END, ' '
         |    ORDER BY pidx), '') AS text_dedup
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin))),
 
     // Per-source paragraph-dedup profile — n127's dataset-card shape at
     // paragraph granularity: which sources are whole-unit copy-heavy
@@ -2778,7 +2856,7 @@ object Queries {
     ("n141_paragraph_dedup_by_source",
       (s: SparkSession, d: String) =>
         TextAnalysis.paragraphDedupBySource(docs(s, d), 20),
-      Some(s"""WITH $ParagraphBlockCtes,
+      Some(Sql(s"""WITH $ParagraphBlockCtes,
         |per AS (SELECT doc_id, count(*) AS n_paras,
         |    sum(CASE WHEN keep THEN 0 ELSE 1 END)::bigint AS n_removed
         |  FROM k GROUP BY doc_id)
@@ -2787,7 +2865,7 @@ object Queries {
         |  sum(per.n_removed)::bigint AS dup_paras,
         |  round(sum(per.n_removed)::double / sum(per.n_paras), 6) AS dup_frac
         |FROM per JOIN documents d USING (doc_id)
-        |GROUP BY source ORDER BY source""".stripMargin)),
+        |GROUP BY source ORDER BY source""".stripMargin))),
 
     // INCREMENTAL paragraph dedup — the n124 move at paragraph
     // granularity: the newer half of the corpus deduped against the
@@ -2807,7 +2885,7 @@ object Queries {
         TextAnalysis.paragraphDedupFromIndex(
           TextAnalysis.paragraphIndex(older, 20), batch, 20)
       },
-      Some(s"""WITH h AS (SELECT max(doc_id) // 2 AS h FROM documents),
+      Some(Sql(s"""WITH h AS (SELECT max(doc_id) // 2 AS h FROM documents),
         |${paragraphBlockCtes(
             "SELECT doc_id, string_split(text, ' ') AS ws " +
             "FROM documents, h WHERE doc_id >= h.h")},
@@ -2824,7 +2902,7 @@ object Queries {
         |  sum(CASE WHEN keep2 THEN 0 ELSE 1 END)::bigint AS n_removed,
         |  coalesce(string_agg(CASE WHEN keep2 THEN para END, ' '
         |    ORDER BY pidx), '') AS text_dedup
-        |FROM k2 GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+        |FROM k2 GROUP BY doc_id ORDER BY doc_id""".stripMargin))),
 
     // The n83 pipeline with the PARAGRAPH keep-first stage — the
     // CCNet-shaped cleaner (paragraph-hash dedup as the first content
@@ -2836,9 +2914,9 @@ object Queries {
     ("n143_clean_corpus_paragraph",
       (s: SparkSession, d: String) =>
         TextAnalysis.cleanCorpusParagraph(docs(s, d), 20),
-      Some(s"""WITH $ParagraphCleanCtes
+      Some(Sql(s"""WITH $ParagraphCleanCtes
         |SELECT doc_id, split, n_tokens, n_removed, text_clean
-        |FROM cc ORDER BY doc_id""".stripMargin)),
+        |FROM cc ORDER BY doc_id""".stripMargin))),
 
     // The n83 pipeline with the keep-first SUBSTRING stage in place of
     // the boilerplate trim (quotes/mirrors corpora: one copy of every
@@ -2850,9 +2928,9 @@ object Queries {
     ("n126_clean_corpus_subdedup",
       (s: SparkSession, d: String) =>
         TextAnalysis.cleanCorpusSubstring(docs(s, d), 5),
-      Some(s"""WITH $SubstringCleanCtes
+      Some(Sql(s"""WITH $SubstringCleanCtes
         |SELECT doc_id, split, n_tokens, n_removed, text_clean
-        |FROM cc ORDER BY doc_id""".stripMargin)),
+        |FROM cc ORDER BY doc_id""".stripMargin))),
 
     // INCREMENTAL keep-first substring dedup: the newer half of the
     // corpus (doc_id ≥ max÷2) deduped against the older half's gram
@@ -2872,7 +2950,7 @@ object Queries {
         TextAnalysis.dupSubstringDedupFromIndex(
           TextAnalysis.dupSubstringIndex(older, 5), batch, 5)
       },
-      Some(s"""WITH h AS (SELECT max(doc_id) // 2 AS h FROM documents),
+      Some(Sql(s"""WITH h AS (SELECT max(doc_id) // 2 AS h FROM documents),
         |w AS (SELECT doc_id, string_split(text, ' ') AS ws
         |  FROM documents, h WHERE doc_id >= h.h),
         |g AS (SELECT doc_id, u.pos AS pos, u.g AS g FROM (
@@ -2896,7 +2974,7 @@ object Queries {
         |covp AS (SELECT DISTINCT doc_id, p FROM (
         |  SELECT doc_id, unnest(generate_series(pos, pos + 4)) AS p FROM dup)),
         |$DupSubRebuildCtes
-        |$DupSubRebuildSelect""".stripMargin)),
+        |$DupSubRebuildSelect""".stripMargin))),
 
     // The cleaned training corpus ITSELF (the n63 funnel's execute
     // side): normalize → exact-dup keeper (FIRST, so dup copies can't
@@ -2906,9 +2984,9 @@ object Queries {
     ("n83_clean_corpus",
       (s: SparkSession, d: String) =>
         TextAnalysis.cleanCorpus(docs(s, d), 5, 2),
-      Some(s"""WITH $CleanCorpusCtes
+      Some(Sql(s"""WITH $CleanCorpusCtes
         |SELECT doc_id, split, n_tokens, n_removed, text_clean FROM cc
-        |ORDER BY doc_id""".stripMargin)),
+        |ORDER BY doc_id""".stripMargin))),
 
     // The one-call training-data BUILD: cleaned corpus (n83's chain
     // verbatim) → near-dup decontamination drop of flagged train docs
@@ -2922,7 +3000,7 @@ object Queries {
       (s: SparkSession, d: String) =>
         TextAnalysis.trainingDataBuild(docs(s, d), 5, 2, 0.5, 0.5,
           20000L, 8),
-      Some(s"""WITH $CleanCorpusCtes, $DecontVerifiedCtes,
+      Some(Sql(s"""WITH $CleanCorpusCtes, $DecontVerifiedCtes,
         |tr AS (SELECT cc.doc_id AS doc_id, d.source AS source,
         |    cc.n_tokens AS n_tokens, cc.n_removed AS n_removed,
         |    cc.text_clean AS text_clean
@@ -2949,7 +3027,7 @@ object Queries {
         |    PARTITION BY ('0x' || substring(skey, 1, 8))::bigint % 8
         |    ORDER BY skey, doc_id) AS pos,
         |  n_tokens, n_removed, text_clean
-        |FROM sa ORDER BY doc_id""".stripMargin)),
+        |FROM sa ORDER BY doc_id""".stripMargin))),
 
     // n99 with LEAKAGE-SAFE splits (n134 wired into the shipped
     // dataset): split = hash of the near-dup COMPONENT key, so a
@@ -2964,7 +3042,7 @@ object Queries {
       (s: SparkSession, d: String) =>
         TextAnalysis.trainingDataBuildSafe(docs(s, d), 5, 2, 0.5, 0.5,
           20000L, 8, 0.3),
-      Some(s"""WITH RECURSIVE $VerifiedPairsCtes,
+      Some(Sql(s"""WITH RECURSIVE $VerifiedPairsCtes,
         |edges AS (SELECT doc_a AS u, doc_b AS v FROM vp
         |  UNION SELECT doc_b, doc_a FROM vp),
         |reach(id, r) AS (
@@ -3002,7 +3080,7 @@ object Queries {
         |    PARTITION BY ('0x' || substring(skey, 1, 8))::bigint % 8
         |    ORDER BY skey, doc_id) AS pos,
         |  n_tokens, n_removed, text_clean
-        |FROM sa ORDER BY doc_id""".stripMargin)),
+        |FROM sa ORDER BY doc_id""".stripMargin))),
 
     // n142's safe build with the PARAGRAPH cleaning stage (the CCNet-
     // shaped corpus's pipeline): the cleaner seam exposed at the build
@@ -3017,7 +3095,7 @@ object Queries {
         TextAnalysis.trainingDataBuildSafeWith(docs(s, d),
           dd => TextAnalysis.cleanCorpusParagraphRaw(dd, 20),
           0.5, 0.5, 20000L, 8, 0.3),
-      Some(safeBuildWithCleanerSql(ParagraphCleanCtes))),
+      Some(Sql(safeBuildWithCleanerSql(ParagraphCleanCtes)))),
 
     // n142's safe build with the keep-first SUBSTRING cleaning stage
     // (quote/mirror corpora: one copy of every repeated k-gram run
@@ -3032,7 +3110,7 @@ object Queries {
         TextAnalysis.trainingDataBuildSafeWith(docs(s, d),
           dd => TextAnalysis.cleanCorpusSubstringRaw(dd, 5),
           0.5, 0.5, 20000L, 8, 0.3),
-      Some(safeBuildWithCleanerSql(SubstringCleanCtes))),
+      Some(Sql(safeBuildWithCleanerSql(SubstringCleanCtes)))),
 
     // Jaccard BACKGROUND distribution (τ calibration): 20-bucket
     // histogram of exact word-set Jaccard over a deterministic 10%
@@ -3041,7 +3119,7 @@ object Queries {
     // absolute sample volume is the flat-cost knob at 100 TB.
     ("n100_jaccard_background",
       (s: SparkSession, d: String) => Dedup.jaccardBackground(docs(s, d), 10),
-      Some("""WITH s AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws
+      Some(Sql("""WITH s AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws
         |  FROM documents
         |  WHERE ('0x' || substring(md5('jbg|' || doc_id::varchar), 1, 8))::bigint
         |    % 100 < 10),
@@ -3050,7 +3128,7 @@ object Queries {
         |  FROM s a JOIN s b ON a.doc_id < b.doc_id)
         |SELECT least(CAST(floor(j * 20) AS BIGINT), 19) AS bucket,
         |  count(*) AS n_pairs
-        |FROM p GROUP BY 1 ORDER BY 1 NULLS FIRST""".stripMargin)),
+        |FROM p GROUP BY 1 ORDER BY 1 NULLS FIRST""".stripMargin))),
 
     // Cosine BACKGROUND distribution — n100's embedding twin: the null
     // distribution semantic-dedup / semantic-decontamination τ (n46/
@@ -3058,7 +3136,7 @@ object Queries {
     // NULL bucket (explicitly ordered first on both engines).
     ("n101_cosine_background",
       (s: SparkSession, d: String) => Similarity.cosineBackground(emb(s, d), 20),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb
+      Some(Sql(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb
         |  FROM embeddings
         |  WHERE ('0x' || substring(md5('cbg|' || vec_id::varchar), 1, 8))::bigint
         |    % 100 < 20),
@@ -3067,7 +3145,7 @@ object Queries {
         |SELECT CASE WHEN c IS NULL THEN NULL
         |    ELSE least(CAST(floor((c + 1.0) * 10) AS BIGINT), 19) END AS bucket,
         |  count(*) AS n_pairs
-        |FROM p GROUP BY 1 ORDER BY 1 NULLS FIRST""".stripMargin)),
+        |FROM p GROUP BY 1 ORDER BY 1 NULLS FIRST""".stripMargin))),
 
     // n100's PRODUCTION twin: the τ-calibration background over a
     // deterministic ABSOLUTE-size sample (lowest 200 salted-md5 ranks,
@@ -3076,7 +3154,7 @@ object Queries {
     ("n116_jaccard_background_abs",
       (s: SparkSession, d: String) =>
         Dedup.jaccardBackgroundSample(docs(s, d), 200),
-      Some("""WITH r AS (SELECT doc_id, text,
+      Some(Sql("""WITH r AS (SELECT doc_id, text,
         |    ('0x' || substring(md5('jbgs|' || doc_id::varchar), 1, 8))::bigint
         |      % 1000000000 AS bk
         |  FROM documents),
@@ -3087,14 +3165,14 @@ object Queries {
         |  FROM s a JOIN s b ON a.doc_id < b.doc_id)
         |SELECT least(CAST(floor(j * 20) AS BIGINT), 19) AS bucket,
         |  count(*) AS n_pairs
-        |FROM p GROUP BY 1 ORDER BY 1 NULLS FIRST""".stripMargin)),
+        |FROM p GROUP BY 1 ORDER BY 1 NULLS FIRST""".stripMargin))),
 
     // n101's PRODUCTION twin — same absolute-sample move on the
     // embedding side (lowest 100 salted ranks).
     ("n117_cosine_background_abs",
       (s: SparkSession, d: String) =>
         Similarity.cosineBackgroundSample(emb(s, d), 100),
-      Some(s"""WITH r AS (SELECT vec_id, embedding,
+      Some(Sql(s"""WITH r AS (SELECT vec_id, embedding,
         |    ('0x' || substring(md5('cbgs|' || vec_id::varchar), 1, 8))::bigint
         |      % 1000000000 AS bk
         |  FROM embeddings),
@@ -3105,7 +3183,7 @@ object Queries {
         |SELECT CASE WHEN c IS NULL THEN NULL
         |    ELSE least(CAST(floor((c + 1.0) * 10) AS BIGINT), 19) END AS bucket,
         |  count(*) AS n_pairs
-        |FROM p GROUP BY 1 ORDER BY 1 NULLS FIRST""".stripMargin)),
+        |FROM p GROUP BY 1 ORDER BY 1 NULLS FIRST""".stripMargin))),
 
     // Embedding-space drift per label: each label's round-6-decimal
     // centroid (n66's construction verbatim) scored against the
@@ -3113,7 +3191,7 @@ object Queries {
     // can't see.
     ("n102_label_centroid_drift",
       (s: SparkSession, d: String) => Similarity.labelCentroidDrift(emb(s, d)),
-      Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
+      Some(Sql(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
         |u0 AS (SELECT label, unnest(generate_series(1, len(emb))) AS pos, emb FROM e),
         |u AS (SELECT label, pos, round(emb[pos], 6) AS v FROM u0),
         |c AS (SELECT label, pos,
@@ -3129,7 +3207,7 @@ object Queries {
         |SELECT cent.label AS label, n.n_vecs AS n_vecs,
         |  ${cosSql("cent.cemb", "gcent.gemb")} AS cos_corpus
         |FROM cent JOIN n USING (label) CROSS JOIN gcent
-        |ORDER BY label""".stripMargin)),
+        |ORDER BY label""".stripMargin))),
 
     // PII scrub pass: emails / URLs / dotted-quad IPs → typed
     // placeholders + per-doc match counts (patterns from the Java∩RE2
@@ -3138,7 +3216,7 @@ object Queries {
     // end; TextAnalysisSpec drives planted matches.
     ("n103_pii_redact",
       (s: SparkSession, d: String) => TextAnalysis.piiRedact(docs(s, d)),
-      Some(s"""SELECT doc_id,
+      Some(Sql(s"""SELECT doc_id,
         |  len(regexp_extract_all(text, '${TextAnalysis.UrlRe}')) AS n_urls,
         |  len(regexp_extract_all(text, '${TextAnalysis.EmailRe}')) AS n_emails,
         |  len(regexp_extract_all(text, '${TextAnalysis.Ipv4Re}')) AS n_ips,
@@ -3146,7 +3224,7 @@ object Queries {
         |    '${TextAnalysis.UrlRe}', '<url>', 'g'),
         |    '${TextAnalysis.EmailRe}', '<email>', 'g'),
         |    '${TextAnalysis.Ipv4Re}', '<ip>', 'g')) AS clean_md5
-        |FROM documents ORDER BY doc_id""".stripMargin)),
+        |FROM documents ORDER BY doc_id""".stripMargin))),
 
     // Per-source corpus content checksum: commutative exact-decimal sum
     // of 15-hex md5 prefixes — order/partitioning/engine-invariant, any
@@ -3155,10 +3233,10 @@ object Queries {
     // release-integrity stamp a dataset publish records.
     ("n107_corpus_digest",
       (s: SparkSession, d: String) => TextAnalysis.corpusDigest(docs(s, d)),
-      Some("""SELECT source, count(*) AS n_docs,
+      Some(Sql("""SELECT source, count(*) AS n_docs,
         |  CAST(CAST(sum(CAST(('0x' || substring(md5(text), 1, 15))::bigint
         |    AS decimal(38,0))) AS decimal(38,0)) AS varchar) AS checksum
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin))),
 
     // Approximate per-source distinct vocabulary (HLL++) — the 100 TB
     // twin of exact count(DISTINCT word) by source; sketches merge
@@ -3174,10 +3252,10 @@ object Queries {
     // norms — bit-identical across engines).
     ("n34_label_norms",
       (s: SparkSession, d: String) => Similarity.labelNorms(emb(s, d)),
-      Some("""SELECT label, count(*) AS n_vecs,
+      Some(Sql("""SELECT label, count(*) AS n_vecs,
         |  round(CAST(sum(CAST(round(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6)
         |    AS decimal(18,6))) AS double) / count(*), 6) AS avg_norm
-        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin)),
+        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin))),
 
     // Label-noise / embedding-QC pass: per-label centroid (component
     // averages through round-6 + decimal — fold-order-independent, so
@@ -3187,7 +3265,7 @@ object Queries {
     ("n66_label_centroid_outliers",
       (s: SparkSession, d: String) =>
         Similarity.labelCentroidOutliers(emb(s, d), 0.1),
-      Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
+      Some(Sql(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
         |u0 AS (SELECT label, unnest(generate_series(1, len(emb))) AS pos, emb FROM e),
         |u AS (SELECT label, pos, round(emb[pos], 6) AS v FROM u0),
         |c AS (SELECT label, pos,
@@ -3200,7 +3278,7 @@ object Queries {
         |SELECT vec_id, label, cos_centroid,
         |  CASE WHEN cos_centroid IS NULL THEN NULL
         |    ELSE CAST(cos_centroid < 0.1 AS INT) END AS is_outlier
-        |FROM x ORDER BY vec_id""".stripMargin)),
+        |FROM x ORDER BY vec_id""".stripMargin))),
 
     // Normalization/scrub pass: lowercase, digit runs -> <num>, space
     // collapse, trim — per-row regex chain, identical in both engines
@@ -3208,19 +3286,19 @@ object Queries {
     // replace-all default).
     ("n36_normalize_redact",
       (s: SparkSession, d: String) => TextAnalysis.normalizeRedact(docs(s, d)),
-      Some("""SELECT doc_id,
+      Some(Sql("""SELECT doc_id,
         |  len(regexp_extract_all(lower(text), '[0-9]+')) AS n_redacted,
         |  length(trim(regexp_replace(regexp_replace(lower(text), '[0-9]+', '<num>', 'g'),
         |    ' +', ' ', 'g'))) AS clean_len,
         |  md5(trim(regexp_replace(regexp_replace(lower(text), '[0-9]+', '<num>', 'g'),
         |    ' +', ' ', 'g'))) AS norm_md5
-        |FROM documents ORDER BY doc_id""".stripMargin)),
+        |FROM documents ORDER BY doc_id""".stripMargin))),
 
     // Context-window chunking: 32-word chunks on a 24-word stride
     // (8-word overlap), last chunk clamped; chunk identity = content md5.
     ("n37_chunks",
       (s: SparkSession, d: String) => TextAnalysis.chunkDocs(docs(s, d)),
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+      Some(Sql("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |st AS (SELECT doc_id, ws,
         |  unnest(generate_series(1, greatest(len(ws), 1), 24)) AS s FROM w),
         |c AS (
@@ -3229,7 +3307,7 @@ object Queries {
         |  FROM st)
         |SELECT doc_id, chunk_id, len(chunk) AS n_tokens,
         |  md5(array_to_string(chunk, ' ')) AS chunk_md5
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin)),
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin))),
 
     // ANN on the int8-quantized representation + exact re-rank (the
     // search half of n38). Fully oracled: the quantize→dequantize round
@@ -3239,7 +3317,7 @@ object Queries {
     ("n40_int8_ann_topk",
       (s: SparkSession, d: String) =>
         Similarity.int8AnnTopK(emb(s, d), 5, 10),
-      Some("""WITH ui AS (
+      Some(Sql("""WITH ui AS (
         |  SELECT vec_id, embedding,
         |    unnest(generate_series(1, len(embedding))) AS i FROM embeddings),
         |u AS (SELECT vec_id, i, embedding[i]::DOUBLE AS x FROM ui),
@@ -3278,13 +3356,13 @@ object Queries {
         |      ORDER BY cos DESC, vec_id ASC) AS rnk
         |  FROM cands)
         |SELECT q_id, vec_id, cos, rnk FROM ranked WHERE rnk <= 10
-        |ORDER BY q_id, rnk""".stripMargin)),
+        |ORDER BY q_id, rnk""".stripMargin))),
 
     // Deterministic per-source cap (md5-ordered "sample" of k docs per
     // source) — the no-source-dominates guard of corpus assembly.
     ("n39_source_cap",
       (s: SparkSession, d: String) => TextAnalysis.sourceCap(docs(s, d), 10),
-      Some("""WITH keyed AS (
+      Some(Sql("""WITH keyed AS (
         |  SELECT source, doc_id, md5('cap|' || doc_id::varchar) AS samp_key
         |  FROM documents),
         |ranked AS (
@@ -3293,7 +3371,7 @@ object Queries {
         |      ORDER BY samp_key ASC, doc_id ASC) AS rk
         |  FROM keyed)
         |SELECT source, doc_id, rk FROM ranked WHERE rk <= 10
-        |ORDER BY source, rk""".stripMargin)),
+        |ORDER BY source, rk""".stripMargin))),
 
     // Token-budget corpus mix: greedy per-source keep in stable md5
     // order until the token budget fills (mixes are specified in tokens,
@@ -3301,7 +3379,7 @@ object Queries {
     ("n42_token_budget_mix",
       (s: SparkSession, d: String) =>
         TextAnalysis.tokenBudgetMix(docs(s, d), 1000L),
-      Some("""WITH keyed AS (
+      Some(Sql("""WITH keyed AS (
         |  SELECT source, doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
         |    md5('cap|' || doc_id::varchar) AS samp_key
@@ -3315,7 +3393,7 @@ object Queries {
         |SELECT source, count(*) AS n_docs_kept,
         |  CAST(sum(n_tok) AS BIGINT) AS tokens_kept
         |FROM cum WHERE cum_tok - n_tok < 1000
-        |GROUP BY source ORDER BY source""".stripMargin)),
+        |GROUP BY source ORDER BY source""".stripMargin))),
 
     // Sequence packing: concat-and-split docs into 512-token training
     // sequences per source (a doc belongs to the sequence its first
@@ -3323,7 +3401,7 @@ object Queries {
     ("n43_sequence_packing",
       (s: SparkSession, d: String) =>
         TextAnalysis.sequencePacking(docs(s, d), 512L),
-      Some("""WITH keyed AS (
+      Some(Sql("""WITH keyed AS (
         |  SELECT source, doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
         |    md5('cap|' || doc_id::varchar) AS samp_key
@@ -3336,7 +3414,7 @@ object Queries {
         |  FROM keyed)
         |SELECT source, CAST((cum_tok - n_tok) // 512 AS BIGINT) AS seq_id,
         |  count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-        |FROM cum GROUP BY source, seq_id ORDER BY source, seq_id""".stripMargin)),
+        |FROM cum GROUP BY source, seq_id ORDER BY source, seq_id""".stripMargin))),
 
     // Corpus-trained bigram-LM quality score (the CCNet-shape model
     // filter). Add-one smoothing over the corpus vocabulary; ln terms go
@@ -3344,7 +3422,7 @@ object Queries {
     // the oracle bit-exact.
     ("n44_bigram_lm_score",
       (s: SparkSession, d: String) => TextAnalysis.bigramLmScore(docs(s, d)),
-      Some(BigramLmSql)),
+      Some(Sql(BigramLmSql))),
 
     // CCNet-style perplexity terciles (Wenzek et al. 2020): per-source
     // head/middle/tail partition of the n44 LM score — the
@@ -3355,7 +3433,7 @@ object Queries {
     // engines.
     ("n136_ccnet_buckets",
       (s: SparkSession, d: String) => TextAnalysis.ccnetBuckets(docs(s, d)),
-      Some(s"""WITH $BigramLmCtes,
+      Some(Sql(s"""WITH $BigramLmCtes,
         |meta AS (SELECT doc_id, source,
         |    len(string_split(text, ' ')) AS n_tokens FROM documents),
         |pr AS (SELECT m.source AS source, m.n_tokens AS n_tokens,
@@ -3371,7 +3449,7 @@ object Queries {
         |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
         |  min(avg_lnp) AS min_lnp, max(avg_lnp) AS max_lnp
         |FROM b GROUP BY source, bucket
-        |ORDER BY source, bucket""".stripMargin)),
+        |ORDER BY source, bucket""".stripMargin))),
 
     // BPE merge induction: train the tokenizer's merge table (10 rounds)
     // on the corpus word-frequency table. Rows-only: each round's argmax
@@ -3413,9 +3491,9 @@ object Queries {
     // n44 discipline).
     ("n73_dsir_weights",
       (s: SparkSession, d: String) => TextAnalysis.dsirWeights(docs(s, d)),
-      Some(s"""WITH $DsirWeightCtes
+      Some(Sql(s"""WITH $DsirWeightCtes
         |SELECT doc_id, n_tokens, dsir_weight FROM dsw
-        |ORDER BY doc_id""".stripMargin)),
+        |ORDER BY doc_id""".stripMargin))),
 
     // DSIR execute half (importance RESAMPLING, Xie et al. 2023):
     // Gumbel top-k over the documents' TOTAL log importance (the summed
@@ -3426,7 +3504,7 @@ object Queries {
     // provably ranks the weights the gate verified.
     ("n108_dsir_select",
       (s: SparkSession, d: String) => TextAnalysis.dsirSelect(docs(s, d), 50),
-      Some(s"""WITH $DsirWeightCtes,
+      Some(Sql(s"""WITH $DsirWeightCtes,
         |sel AS (SELECT doc_id, n_tokens, dsir_weight,
         |    round(total_lw
         |      + -ln(-ln((('0x' || substring(md5('dsir|' || doc_id::varchar), 1, 8))::bigint
@@ -3434,7 +3512,7 @@ object Queries {
         |  FROM dsw)
         |SELECT row_number() OVER (ORDER BY sel_key DESC, doc_id) AS rank,
         |  doc_id, n_tokens, dsir_weight, sel_key
-        |FROM sel ORDER BY sel_key DESC, doc_id LIMIT 50""".stripMargin)),
+        |FROM sel ORDER BY sel_key DESC, doc_id LIMIT 50""".stripMargin))),
 
     // PRODUCTION DSIR weights — the paper's hashed-feature model
     // (tokens → 10⁴ md5 buckets): the model frame is FIXED-SIZE at any
@@ -3444,9 +3522,9 @@ object Queries {
     ("n109_dsir_weights_hashed",
       (s: SparkSession, d: String) =>
         TextAnalysis.dsirWeightsHashed(docs(s, d)),
-      Some(s"""WITH $DsirHashedWeightCtes
+      Some(Sql(s"""WITH $DsirHashedWeightCtes
         |SELECT doc_id, n_tokens, dsir_weight FROM dsw
-        |ORDER BY doc_id""".stripMargin)),
+        |ORDER BY doc_id""".stripMargin))),
 
     // n108's production twin: the same deterministic Gumbel top-k
     // ranking the HASHED-model weights (n109) — the selection a
@@ -3455,7 +3533,7 @@ object Queries {
     ("n111_dsir_select_hashed",
       (s: SparkSession, d: String) =>
         TextAnalysis.dsirSelectHashed(docs(s, d), 50),
-      Some(s"""WITH $DsirHashedWeightCtes,
+      Some(Sql(s"""WITH $DsirHashedWeightCtes,
         |sel AS (SELECT doc_id, n_tokens, dsir_weight,
         |    round(total_lw
         |      + -ln(-ln((('0x' || substring(md5('dsir|' || doc_id::varchar), 1, 8))::bigint
@@ -3463,7 +3541,7 @@ object Queries {
         |  FROM dsw)
         |SELECT row_number() OVER (ORDER BY sel_key DESC, doc_id) AS rank,
         |  doc_id, n_tokens, dsir_weight, sel_key
-        |FROM sel ORDER BY sel_key DESC, doc_id LIMIT 50""".stripMargin)),
+        |FROM sel ORDER BY sel_key DESC, doc_id LIMIT 50""".stripMargin))),
 
     // Quality-classifier distillation + calibration: NB unigram
     // log-odds fit to the n22 rule gate (the TEACHER, predicate
@@ -3473,7 +3551,7 @@ object Queries {
     ("n84_quality_classifier",
       (s: SparkSession, d: String) =>
         TextAnalysis.qualityClassifierCalibration(docs(s, d)),
-      Some(s"""WITH sp AS (
+      Some(Sql(s"""WITH sp AS (
         |  SELECT doc_id, CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
         |    ELSE 'test' END AS split
         |  FROM (SELECT doc_id,
@@ -3522,7 +3600,7 @@ object Queries {
         |    ELSE round(tp::double / (tp + fn), 6) END AS rec,
         |  CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
         |    ELSE round(2 * tp::double / (2 * tp + fp + fn), 6) END AS f1
-        |FROM r ORDER BY threshold""".stripMargin)),
+        |FROM r ORDER BY threshold""".stripMargin))),
 
     // n84's PRODUCTION twin — the NB model over HASHED features
     // (tokens → 10⁴ md5 buckets, the n109 move): fixed-size model,
@@ -3531,7 +3609,7 @@ object Queries {
     ("n110_quality_classifier_hashed",
       (s: SparkSession, d: String) =>
         TextAnalysis.qualityClassifierCalibrationHashed(docs(s, d)),
-      Some(s"""WITH sp AS (
+      Some(Sql(s"""WITH sp AS (
         |  SELECT doc_id, CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
         |    ELSE 'test' END AS split
         |  FROM (SELECT doc_id,
@@ -3583,7 +3661,7 @@ object Queries {
         |    ELSE round(tp::double / (tp + fn), 6) END AS rec,
         |  CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
         |    ELSE round(2 * tp::double / (2 * tp + fp + fn), 6) END AS f1
-        |FROM r ORDER BY threshold""".stripMargin)),
+        |FROM r ORDER BY threshold""".stripMargin))),
 
     // Zipf rank-frequency fit per source: least squares of ln(tf) on
     // ln(rank) over each source's top-100 words (ties word asc), five
@@ -3591,7 +3669,7 @@ object Queries {
     // closed-form slope/intercept/r2 bit-exact.
     ("n86_zipf_fit",
       (s: SparkSession, d: String) => TextAnalysis.zipfFit(docs(s, d), 100),
-      Some("""WITH sw AS (SELECT source, x AS w, count(*) AS tf FROM
+      Some(Sql("""WITH sw AS (SELECT source, x AS w, count(*) AS tf FROM
         |    (SELECT source, unnest(string_split(text, ' ')) AS x
         |     FROM documents)
         |  GROUP BY 1, 2),
@@ -3619,7 +3697,7 @@ object Queries {
         |    ELSE round((n_terms * sxy - sx * sy) * (n_terms * sxy - sx * sy) /
         |      ((n_terms * sxx - sx * sx) * (n_terms * syy - sy * sy)), 6)
         |    END AS r2
-        |FROM m ORDER BY source""".stripMargin)),
+        |FROM m ORDER BY source""".stripMargin))),
 
     // Temperature-scaled source mixing (XLM/mT5 α-sampling): p_s ∝
     // n_s^0.5, token-budget targets, and the realized md5-bucket
@@ -3629,7 +3707,7 @@ object Queries {
     ("n87_temperature_mix",
       (s: SparkSession, d: String) =>
         TextAnalysis.temperatureMix(docs(s, d), 0.5, 20000L),
-      Some("""WITH wt AS (SELECT doc_id, source,
+      Some(Sql("""WITH wt AS (SELECT doc_id, source,
         |    len(string_split(text, ' '))::bigint AS n_tok,
         |    ('0x' || substring(md5('tmix|' || doc_id::varchar), 1, 8))::bigint
         |      % 1000000 AS b6
@@ -3659,7 +3737,7 @@ object Queries {
         |  coalesce(k.n_docs_kept, 0) AS n_docs_kept,
         |  coalesce(k.tokens_kept, 0) AS tokens_kept
         |FROM pl2 p LEFT JOIN kept k USING (source)
-        |ORDER BY p.source""".stripMargin)),
+        |ORDER BY p.source""".stripMargin))),
 
     // UniMax allocation (Chung et al. 2023): waterfill the token budget
     // uniformly across sources under a per-source epoch cap — closed
@@ -3668,7 +3746,7 @@ object Queries {
     ("n92_unimax_mix",
       (s: SparkSession, d: String) =>
         TextAnalysis.unimaxMix(docs(s, d), 30000L, 2.0),
-      Some("""WITH per AS (SELECT source, count(*) AS n_docs,
+      Some(Sql("""WITH per AS (SELECT source, count(*) AS n_docs,
         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
         |  FROM documents GROUP BY source),
         |c AS (SELECT source, n_docs, n_tokens,
@@ -3689,14 +3767,14 @@ object Queries {
         |  FROM f CROSS JOIN t)
         |SELECT source, n_docs, n_tokens, cap, alloc_tokens,
         |  round(alloc_tokens::double / n_tokens, 6) AS epochs
-        |FROM a ORDER BY source""".stripMargin)),
+        |FROM a ORDER BY source""".stripMargin))),
 
     // Per-source unigram-distribution drift KL(source || corpus) — the
     // mixing-time divergence check. Terms in a fixed op order through
     // decimal(18,12): order-independent, oracle-exact.
     ("n45_source_drift",
       (s: SparkSession, d: String) => TextAnalysis.sourceDrift(docs(s, d)),
-      Some("""WITH sw AS (
+      Some(Sql("""WITH sw AS (
         |  SELECT source, x AS w, count(*) AS csw FROM
         |    (SELECT source, unnest(string_split(text, ' ')) AS x
         |     FROM documents)
@@ -3711,14 +3789,14 @@ object Queries {
         |      AS decimal(18,12)) AS term
         |  FROM sw JOIN s USING (source) JOIN wt USING (w) CROSS JOIN tot)
         |SELECT source, round(CAST(sum(term) AS double), 6) AS kl_vs_corpus
-        |FROM terms GROUP BY source ORDER BY source""".stripMargin)),
+        |FROM terms GROUP BY source ORDER BY source""".stripMargin))),
 
     // Scalar int8 quantization of embeddings: global per-dim (min, max)
     // stats then round((x-mn)*255/(mx-mn)) codes — double math with a
     // fixed op order on both sides, so the codes are bit-exact.
     ("n38_int8_codes",
       (s: SparkSession, d: String) => Similarity.int8Codes(emb(s, d), 10),
-      Some("""WITH ui AS (
+      Some(Sql("""WITH ui AS (
         |  SELECT vec_id, embedding,
         |    unnest(generate_series(1, len(embedding))) AS i FROM embeddings),
         |u AS (SELECT vec_id, i, embedding[i]::DOUBLE AS x FROM ui),
@@ -3728,31 +3806,31 @@ object Queries {
         |    ELSE CAST(round((x - mn) * 255.0 / (mx - mn), 0) AS BIGINT)
         |  END AS code
         |FROM u JOIN mm ON u.i = mm.i
-        |WHERE vec_id < 10 ORDER BY vec_id, dim""".stripMargin)),
+        |WHERE vec_id < 10 ORDER BY vec_id, dim""".stripMargin))),
 
     ("n15_fingerprints",
       (s: SparkSession, d: String) => TextAnalysis.fingerprints(docs(s, d)),
-      Some("""SELECT doc_id,
+      Some(Sql("""SELECT doc_id,
         |  md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fingerprint
-        |FROM documents ORDER BY doc_id""".stripMargin)),
+        |FROM documents ORDER BY doc_id""".stripMargin))),
 
     ("n16_fingerprint_dup_groups",
       (s: SparkSession, d: String) => TextAnalysis.fingerprintDupGroups(docs(s, d)),
-      Some("""SELECT fingerprint, count(*) AS n_docs, min(doc_id) AS keeper
+      Some(Sql("""SELECT fingerprint, count(*) AS n_docs, min(doc_id) AS keeper
         |FROM (SELECT doc_id,
         |  md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fingerprint
         |  FROM documents)
-        |GROUP BY fingerprint HAVING count(*) > 1 ORDER BY fingerprint""".stripMargin)),
+        |GROUP BY fingerprint HAVING count(*) > 1 ORDER BY fingerprint""".stripMargin))),
 
     ("n19_train_split_counts",
       (s: SparkSession, d: String) => TextAnalysis.splitCounts(docs(s, d)),
-      Some("""SELECT lang, split, count(*) AS n_docs FROM (
+      Some(Sql("""SELECT lang, split, count(*) AS n_docs FROM (
         |  SELECT lang, CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
         |    ELSE 'test' END AS split
         |  FROM (SELECT lang,
         |    ('0x' || substring(md5(doc_id::varchar), 1, 8))::bigint % 100 AS b
         |    FROM documents))
-        |GROUP BY 1, 2 ORDER BY lang, split""".stripMargin)),
+        |GROUP BY 1, 2 ORDER BY lang, split""".stripMargin))),
 
     // Training-shard assignment: shard = salted-md5 bucket % 8 (salted
     // so shard boundaries don't correlate with n19's split buckets),
@@ -3761,12 +3839,12 @@ object Queries {
     ("n60_shard_assignment",
       (s: SparkSession, d: String) =>
         TextAnalysis.shardAssignment(docs(s, d), 8),
-      Some("""WITH k AS (SELECT doc_id, md5('shard|' || doc_id::varchar) AS key FROM documents)
+      Some(Sql("""WITH k AS (SELECT doc_id, md5('shard|' || doc_id::varchar) AS key FROM documents)
         |SELECT doc_id,
         |  ('0x' || substring(key, 1, 8))::bigint % 8 AS shard,
         |  row_number() OVER (PARTITION BY ('0x' || substring(key, 1, 8))::bigint % 8
         |    ORDER BY key, doc_id) AS pos
-        |FROM k ORDER BY doc_id""".stripMargin)),
+        |FROM k ORDER BY doc_id""".stripMargin))),
 
     // Shard BALANCE audit: per-shard doc/token accounting + share and
     // skew-vs-ideal from the SAME shardKey the assignment uses — the
@@ -3775,7 +3853,7 @@ object Queries {
     ("n128_shard_balance",
       (s: SparkSession, d: String) =>
         TextAnalysis.shardBalance(docs(s, d), 8),
-      Some("""WITH per AS (SELECT
+      Some(Sql("""WITH per AS (SELECT
         |    ('0x' || substring(md5('shard|' || doc_id::varchar), 1, 8))::bigint
         |      % 8 AS shard,
         |    count(*) AS n_docs,
@@ -3785,7 +3863,7 @@ object Queries {
         |SELECT shard, n_docs, tokens,
         |  round(tokens::double / total, 6) AS share,
         |  round(tokens::double * 8 / total, 6) AS skew
-        |FROM per CROSS JOIN tot ORDER BY shard""".stripMargin)),
+        |FROM per CROSS JOIN tot ORDER BY shard""".stripMargin))),
 
     // Compression-ratio quality signal (deflate/|text|) — the
     // repetitiveness filter alongside n30's token heuristics; rows-only
@@ -3799,9 +3877,9 @@ object Queries {
 
     ("n20_vocabulary",
       (s: SparkSession, d: String) => TextAnalysis.vocabulary(docs(s, d), 100),
-      Some("""SELECT word, count(*) AS tf FROM (
+      Some(Sql("""SELECT word, count(*) AS tf FROM (
         |  SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |GROUP BY word ORDER BY tf DESC, word ASC LIMIT 100""".stripMargin)),
+        |GROUP BY word ORDER BY tf DESC, word ASC LIMIT 100""".stripMargin))),
 
     // Tokenizer-fit signal: per-doc out-of-vocabulary rate against the
     // top-100 corpus vocabulary (token OCCURRENCES counted). Vocab is
@@ -3810,7 +3888,7 @@ object Queries {
     ("n67_vocab_coverage",
       (s: SparkSession, d: String) =>
         TextAnalysis.vocabCoverage(docs(s, d), 100),
-      Some("""WITH v AS (SELECT word FROM (
+      Some(Sql("""WITH v AS (SELECT word FROM (
         |    SELECT unnest(string_split(text, ' ')) AS word FROM documents)
         |  GROUP BY word ORDER BY count(*) DESC, word ASC LIMIT 100),
         |t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
@@ -3818,14 +3896,14 @@ object Queries {
         |  CAST(count(*) - count(v.word) AS BIGINT) AS n_oov,
         |  round((count(*) - count(v.word))::double / count(*), 6) AS oov_rate
         |FROM t LEFT JOIN v ON t.word = v.word
-        |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin)),
+        |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin))),
 
     // The composite training-corpus pipeline: exact dedup → quality
     // filter → deterministic split → per-(lang, split) accounting.
     ("n22_training_corpus",
       (s: SparkSession, d: String) =>
         TextAnalysis.trainingCorpusCounts(docs(s, d)),
-      Some(s"""WITH keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+      Some(Sql(s"""WITH keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
         |q AS (SELECT d.doc_id, d.lang, len(string_split(d.text, ' ')) AS nw,
         |    round(len(list_filter(string_split(d.text, ' '), w -> w IN $Stop))::double
         |      / len(string_split(d.text, ' ')), 6) AS sr,
@@ -3835,14 +3913,14 @@ object Queries {
         |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
         |  count(*) AS n_docs, CAST(sum(nw) AS BIGINT) AS total_tokens
         |FROM q WHERE nw >= 30 AND sr <= 0.3
-        |GROUP BY 1, 2 ORDER BY lang, split""".stripMargin)),
+        |GROUP BY 1, 2 ORDER BY lang, split""".stripMargin))),
 
     // Pipeline funnel: per-stage doc/token survivor counts for the n22
     // pipeline (raw → dedup keeper → quality → train split) — the
     // where-did-the-tokens-go observability query, one scan + one agg.
     ("n63_pipeline_funnel",
       (s: SparkSession, d: String) => TextAnalysis.pipelineFunnel(docs(s, d)),
-      Some(s"""WITH base AS (SELECT doc_id, md5(text) AS h,
+      Some(Sql(s"""WITH base AS (SELECT doc_id, md5(text) AS h,
         |    len(string_split(text, ' ')) AS nw,
         |    round(len(list_filter(string_split(text, ' '), w -> w IN $Stop))::double
         |      / len(string_split(text, ' ')), 6) AS sr,
@@ -3861,11 +3939,11 @@ object Queries {
         |UNION ALL SELECT '1_exact_dedup', d1, t1 FROM f
         |UNION ALL SELECT '2_quality', d2, t2 FROM f
         |UNION ALL SELECT '3_train_split', d3, t3 FROM f
-        |ORDER BY stage""".stripMargin)),
+        |ORDER BY stage""".stripMargin))),
 
     ("n25_tfidf_top_terms",
       (s: SparkSession, d: String) => TextAnalysis.tfidfTopTerms(docs(s, d), 5),
-      Some("""WITH tfc AS (
+      Some(Sql("""WITH tfc AS (
         |  SELECT doc_id, word, count(*) AS tf
         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
         |  GROUP BY 1, 2),
@@ -3881,13 +3959,13 @@ object Queries {
         |  SELECT doc_id, word, tfidf,
         |    row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, word ASC) AS rnk
         |  FROM scored)
-        |WHERE rnk <= 5 ORDER BY doc_id, rnk""".stripMargin)),
+        |WHERE rnk <= 5 ORDER BY doc_id, rnk""".stripMargin))),
 
     // Train/test decontamination: test docs sharing a content fingerprint
     // with any train doc (the eval-leakage check).
     ("n26_decontamination",
       (s: SparkSession, d: String) => TextAnalysis.decontamination(docs(s, d)),
-      Some("""WITH fp AS (
+      Some(Sql("""WITH fp AS (
         |  SELECT doc_id,
         |    md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fingerprint
         |  FROM documents),
@@ -3901,7 +3979,7 @@ object Queries {
         |SELECT t.doc_id AS test_doc, tr.doc_id AS train_doc, t.fingerprint
         |FROM j t JOIN j tr ON t.fingerprint = tr.fingerprint
         |WHERE t.split = 'test' AND tr.split = 'train'
-        |ORDER BY test_doc, train_doc""".stripMargin)),
+        |ORDER BY test_doc, train_doc""".stripMargin))),
 
     // Contamination report: every test doc × all three text-side
     // detectors in one row — exact train copies (n26), distinct-5-gram
@@ -3911,7 +3989,7 @@ object Queries {
     ("n74_contamination_report",
       (s: SparkSession, d: String) =>
         TextAnalysis.contaminationReport(docs(s, d)),
-      Some(s"""WITH sp AS (
+      Some(Sql(s"""WITH sp AS (
         |  SELECT doc_id, CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
         |    ELSE 'test' END AS split
         |  FROM (SELECT doc_id,
@@ -3954,7 +4032,7 @@ object Queries {
         |  coalesce(ex.n_exact, 0)::bigint AS n_exact, nr.max_jaccard
         |FROM base LEFT JOIN ng USING (test_doc) LEFT JOIN ex USING (test_doc)
         |  LEFT JOIN nr USING (test_doc)
-        |ORDER BY test_doc""".stripMargin)),
+        |ORDER BY test_doc""".stripMargin))),
 
     // MinHash/LSH NEAR-DUP decontamination: test docs flagged against
     // train docs sharing an LSH band-bucket, verified with exact word-set
@@ -3964,7 +4042,7 @@ object Queries {
     ("n72_minhash_decontamination",
       (s: SparkSession, d: String) =>
         Dedup.minhashDecontamination(docs(s, d), 0.5),
-      Some(MinhashDecontOracle)),
+      Some(Sql(MinhashDecontOracle))),
 
     // Exact-dup pre-collapse composed into the decontamination banding
     // front (the n53 move): band ONE representative per distinct text,
@@ -3976,7 +4054,7 @@ object Queries {
     ("n78_minhash_decontamination_collapsed",
       (s: SparkSession, d: String) =>
         Dedup.minhashDecontaminationCollapsed(docs(s, d), 0.5),
-      Some(MinhashDecontOracle)),
+      Some(Sql(MinhashDecontOracle))),
 
     // Quality-aware keeper per near-dup cluster; oracled via the recursive
     // CC CTE + argmax on (score DESC, doc_id ASC).
@@ -3988,7 +4066,7 @@ object Queries {
       (s: SparkSession, d: String) => Dedup.keepBestPerClusterLabels(
         Dedup.dupLabelsCollapsed(docs(s, d)),
         docs(s, d)),
-      Some(s"""WITH RECURSIVE $CcClustersCte,
+      Some(Sql(s"""WITH RECURSIVE $CcClustersCte,
         |scored AS (SELECT lbl.cluster, lbl.id AS doc_id, length(d.text) AS score
         |  FROM lbl JOIN documents d ON lbl.id = d.doc_id)
         |SELECT cluster, doc_id AS keeper, score AS keeper_score, n_members FROM (
@@ -3996,27 +4074,27 @@ object Queries {
         |    count(*) OVER (PARTITION BY cluster) AS n_members,
         |    row_number() OVER (PARTITION BY cluster ORDER BY score DESC, doc_id ASC) AS rn
         |  FROM scored)
-        |WHERE rn = 1 ORDER BY cluster""".stripMargin)),
+        |WHERE rn = 1 ORDER BY cluster""".stripMargin))),
 
     // Group-level MinHash sketch merge: per-source signatures (elementwise
     // min) → estimated cross-source similarity, no pairwise doc compare.
     ("n28_source_similarity",
       (s: SparkSession, d: String) => Dedup.sourceSimilarity(docs(s, d)),
-      Some(s"""WITH sh AS ($ShinglesCte), $MinhashCte,
+      Some(Sql(s"""WITH sh AS ($ShinglesCte), $MinhashCte,
         |srcsig AS (SELECT d.source, m.seed, min(m.mh) AS mh
         |  FROM mh m JOIN documents d USING (doc_id) GROUP BY d.source, m.seed)
         |SELECT a.source AS source_a, b.source AS source_b,
         |  round(sum(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END)::double
         |    / ${Dedup.NumMinhashSeeds}, 6) AS est_jaccard
         |FROM srcsig a JOIN srcsig b ON a.seed = b.seed AND a.source < b.source
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))),
 
     // Corpus mixing: halve sources src0-src4, keep the rest whole;
     // deterministic md5-bucket sampling so both engines agree exactly.
     ("n29_corpus_mix",
       (s: SparkSession, d: String) => TextAnalysis.mixReport(docs(s, d),
         (0 to 4).map(i => s"src$i" -> 0.5).toMap, 1.0),
-      Some("""WITH b AS (SELECT source,
+      Some(Sql("""WITH b AS (SELECT source,
         |    ('0x' || substring(md5(doc_id::varchar), 1, 8))::bigint % 100 AS bucket
         |  FROM documents),
         |kept AS (SELECT source, count(*) AS n_kept FROM b
@@ -4025,7 +4103,7 @@ object Queries {
         |  GROUP BY source)
         |SELECT b.source, count(*) AS n_total, coalesce(max(n_kept), 0) AS n_kept
         |FROM b LEFT OUTER JOIN kept ON b.source = kept.source
-        |GROUP BY b.source ORDER BY b.source""".stripMargin)),
+        |GROUP BY b.source ORDER BY b.source""".stripMargin))),
 
     // Connected components over LSH candidate pairs → dedup clusters
     // (iterative min-label propagation). Oracled exactly: DuckDB computes
@@ -4036,10 +4114,7 @@ object Queries {
         Dedup.lshCandidatePairs(docs(s, d)))
         .withColumn("members",
           array_join(transform(col("members"), _.cast("string")), ",")),
-      Some(s"""WITH RECURSIVE $CcClustersCte
-        |SELECT cluster, count(*) AS n_docs,
-        |  array_to_string(list_sort(list(id)), ',') AS members
-        |FROM lbl GROUP BY cluster ORDER BY cluster""".stripMargin)),
+      Some(Sql(CcClustersOracle))),
 
     // CLUSTER CHAINING audit: per verified-pair cluster, size, edge
     // count, density vs complete graph, WEAKEST edge, decimal-exact
@@ -4048,7 +4123,7 @@ object Queries {
     ("n130_cluster_chaining",
       (s: SparkSession, d: String) =>
         Dedup.clusterChainingAudit(docs(s, d), 0.3),
-      Some(s"""WITH RECURSIVE $VerifiedPairsCtes,
+      Some(Sql(s"""WITH RECURSIVE $VerifiedPairsCtes,
         |edges AS (SELECT doc_a AS u, doc_b AS v FROM vp
         |  UNION SELECT doc_b, doc_a FROM vp),
         |reach(id, r) AS (
@@ -4067,7 +4142,7 @@ object Queries {
         |  round(es.n_edges * 2.0 / (cs.n_docs * (cs.n_docs - 1)), 6)
         |    AS density,
         |  es.min_jaccard AS min_jaccard, es.avg_jaccard AS avg_jaccard
-        |FROM cs JOIN es USING (cluster) ORDER BY cluster""".stripMargin)),
+        |FROM cs JOIN es USING (cluster) ORDER BY cluster""".stripMargin))),
 
     // Dedup SAVINGS comparison — one row per keeper policy over the
     // SAME verified graph ('cc' transitive min-id vs 'star' hub):
@@ -4075,7 +4150,7 @@ object Queries {
     // chained-yield trade n130 exposes.
     ("n133_dedup_savings",
       (s: SparkSession, d: String) => Dedup.dedupSavings(docs(s, d), 0.3),
-      Some(s"""WITH RECURSIVE $VerifiedPairsCtes,
+      Some(Sql(s"""WITH RECURSIVE $VerifiedPairsCtes,
         |edges AS (SELECT doc_a AS u, doc_b AS v FROM vp
         |  UNION SELECT doc_b, doc_a FROM vp),
         |reach(id, r) AS (
@@ -4107,7 +4182,7 @@ object Queries {
         |    sum(CASE WHEN id != cluster THEN t ELSE 0 END)::bigint AS tokens_dropped
         |  FROM lblstar JOIN tk ON id = doc_id)
         |SELECT * FROM s1 UNION ALL SELECT * FROM s2
-        |ORDER BY policy""".stripMargin)),
+        |ORDER BY policy""".stripMargin))),
 
     // Candidate-front PRECISION: of everything the banding proposes,
     // the fraction verifying at τ — the tuning number read with n119's
@@ -4115,7 +4190,7 @@ object Queries {
     // n6 machinery verbatim.
     ("n132_lsh_precision",
       (s: SparkSession, d: String) => Dedup.lshPrecision(docs(s, d), 0.3),
-      Some(s"""WITH $CandidatePairsCtes,
+      Some(Sql(s"""WITH $CandidatePairsCtes,
         |w2 AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ws
         |  FROM documents),
         |cj AS (SELECT round(len(list_intersect(wa.ws, wb.ws))::double
@@ -4127,7 +4202,7 @@ object Queries {
         |  CASE WHEN count(*) > 0 THEN
         |    round(sum(CASE WHEN j >= 0.3 THEN 1 ELSE 0 END)::double
         |      / count(*), 6) END AS precision
-        |FROM cj""".stripMargin)),
+        |FROM cj""".stripMargin))),
 
     // Bounded-diameter STAR clusters — the n130-motivated policy fix:
     // local-min hubs, 1-hop attach to the minimum adjacent hub,
@@ -4139,7 +4214,7 @@ object Queries {
         Dedup.starClusters(docs(s, d), 0.3)
           .withColumn("members",
             array_join(transform(col("members"), _.cast("string")), ",")),
-      Some(s"""WITH $VerifiedPairsCtes,
+      Some(Sql(s"""WITH $VerifiedPairsCtes,
         |nb AS (SELECT doc_a AS id, doc_b AS nbr FROM vp
         |  UNION ALL SELECT doc_b, doc_a FROM vp),
         |mn AS (SELECT id, min(nbr) AS mn FROM nb GROUP BY id),
@@ -4151,7 +4226,7 @@ object Queries {
         |  FROM mn LEFT JOIN att USING (id))
         |SELECT cluster, count(*) AS n_docs,
         |  array_to_string(list_sort(list(id)), ',') AS members
-        |FROM lbl GROUP BY cluster ORDER BY cluster""".stripMargin)),
+        |FROM lbl GROUP BY cluster ORDER BY cluster""".stripMargin))),
 
     // Same clusters via O(log n)-round large-star/small-star (the 100 TB
     // path); identical oracle — both variants must agree exactly.
@@ -4160,10 +4235,7 @@ object Queries {
         Dedup.lshCandidatePairs(docs(s, d)))
         .withColumn("members",
           array_join(transform(col("members"), _.cast("string")), ",")),
-      Some(s"""WITH RECURSIVE $CcClustersCte
-        |SELECT cluster, count(*) AS n_docs,
-        |  array_to_string(list_sort(list(id)), ',') AS members
-        |FROM lbl GROUP BY cluster ORDER BY cluster""".stripMargin)),
+      Some(Sql(CcClustersOracle))),
 
     // Same clusters again with exact-duplicate pre-collapse: LSH + CC run
     // over one representative per distinct text, labels expanded back
@@ -4175,10 +4247,7 @@ object Queries {
       (s: SparkSession, d: String) => Dedup.dupClustersCollapsed(docs(s, d))
         .withColumn("members",
           array_join(transform(col("members"), _.cast("string")), ",")),
-      Some(s"""WITH RECURSIVE $CcClustersCte
-        |SELECT cluster, count(*) AS n_docs,
-        |  array_to_string(list_sort(list(id)), ',') AS members
-        |FROM lbl GROUP BY cluster ORDER BY cluster""".stripMargin)),
+      Some(Sql(CcClustersOracle))),
 
     // Duplication-depth profile: clusters per size off the collapsed CC
     // labels (bit-equal to n21/n24's) — the dedup audit that sets the
@@ -4188,11 +4257,11 @@ object Queries {
     ("n105_cluster_size_histogram",
       (s: SparkSession, d: String) =>
         Dedup.clusterSizeHistogram(Dedup.dupLabelsCollapsed(docs(s, d))),
-      Some(s"""WITH RECURSIVE $CcClustersCte,
+      Some(Sql(s"""WITH RECURSIVE $CcClustersCte,
         |cs AS (SELECT cluster, count(*) AS sz FROM lbl GROUP BY cluster)
         |SELECT sz AS cluster_size, count(*) AS n_clusters,
         |  CAST(sz * count(*) AS BIGINT) AS n_docs
-        |FROM cs GROUP BY sz ORDER BY sz""".stripMargin)),
+        |FROM cs GROUP BY sz ORDER BY sz""".stripMargin))),
 
     // Bloom-filter decontamination: broadcast-bloom semi filter instead of
     // a fingerprint join — the 100 TB path for n26 (rows-only: Bloom bit
@@ -4205,13 +4274,13 @@ object Queries {
     ("n61_semantic_decontamination",
       (s: SparkSession, d: String) =>
         Similarity.semanticDecontaminate(emb(s, d), 10, 0.35),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+      Some(Sql(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
         |p AS (SELECT emb AS q_emb FROM e WHERE vec_id < 10),
         |s AS (SELECT e.vec_id, max(${cosSql("q_emb", "emb")}) AS max_probe_cos
         |  FROM e CROSS JOIN p WHERE e.vec_id >= 10 GROUP BY e.vec_id)
         |SELECT vec_id, max_probe_cos FROM s
         |WHERE max_probe_cos IS NULL OR max_probe_cos < 0.35
-        |ORDER BY vec_id""".stripMargin)),
+        |ORDER BY vec_id""".stripMargin))),
 
     ("n35_bloom_decontamination",
       (s: SparkSession, d: String) =>
@@ -4228,7 +4297,7 @@ object Queries {
     // long representation.
     ("n18_winnow_matches",
       (s: SparkSession, d: String) => TextAnalysis.winnowMatches(docs(s, d)),
-      Some("""WITH h AS (
+      Some(Sql("""WITH h AS (
         |  SELECT doc_id,
         |    list_transform(generate_series(1, len(text) - 7), i ->
         |      (ord(substr(text, i, 1))::HUGEINT * 12924618581234127435 +
@@ -4258,7 +4327,7 @@ object Queries {
         |SELECT fp, count(DISTINCT doc_id) AS n_docs,
         |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
         |FROM signedfp GROUP BY fp HAVING count(DISTINCT doc_id) > 1
-        |ORDER BY fp""".stripMargin)),
+        |ORDER BY fp""".stripMargin))),
 
     ("n17_minhash_fast",
       (s: SparkSession, d: String) => Dedup.minhashSignaturesFast(docs(s, d)),
@@ -4273,9 +4342,9 @@ object Queries {
         .select(date_format(col("hour_start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
           col("event_type"), col("n"), col("sum_value"))
         .orderBy(col("hour_start"), col("event_type")),
-      Some(s"""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
+      Some(Sql(s"""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
         |  event_type, count(*) AS n, $DecSum AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin)),
+        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin))),
 
     // Binary payload → mapPartitions feature extraction with real JDK
     // codecs (PNG via ImageIO, WAV via AudioSystem, PNG-frame video
@@ -4329,15 +4398,8 @@ object Queries {
     // DuckDB recomputes it by brute force over the captured signature
     // values (OracleVals), so the pigeonhole front, collapse, and
     // member counts are differentially verified, not just spec-pinned.
-    ("m5_image_neardup_pairs",
-      (s: SparkSession, d: String) => {
-        val ph = graft.sources.Multimodal.stagedImagePhash(s, d)
-          .filter(col("phash").isNotNull)
-        OracleVals.register("m5_image_neardup_pairs",
-          OracleVals.collapsedPairsSql(ph, "phash", 4))
-        graft.sources.Multimodal.mediaNearDupPairsCollapsed(ph, "phash", 4)
-      },
-      None),
+    collapsedPairsEntry("m5_image_neardup_pairs",
+      graft.sources.Multimodal.stagedImagePhash, "phash"),
 
     // INCREMENTAL image dedup: the OLDER half of the originals as the
     // persisted phash index, everything else (newer originals + all
@@ -4346,29 +4408,12 @@ object Queries {
     // sharing ONE signature-generic screening core with the text
     // simhash ingest (the n124/n144 half-split convention). Survivors =
     // genuinely new signatures; edits of indexed originals drop.
-    // Rows-only (codec-bound); the spec proves survivors equal
-    // brute-force screening.
-    ("m6_image_dedup_incremental",
-      (s: SparkSession, d: String) => {
-        val ph = graft.sources.Multimodal.stagedImagePhash(s, d)
-        val off = graft.sources.Multimodal.EditIdOffset
-        val half = ph.filter(col("media_id") < off)
-          .agg(expr("max(media_id) div 2").as("h"))
-        // captured oracle: the greedy policy is "any earlier arrival"
-        // (non-recursive), so DuckDB replays index + earlier-rep
-        // screening by brute force; the half boundary is computed over
-        // the FULL relation (nulls included), matching the join below
-        OracleVals.register("m6_image_dedup_incremental",
-          OracleVals.incrementalScreenSql(
-            ph.filter(col("phash").isNotNull), "phash", 4,
-            half.head().getLong(0), "phash"))
-        graft.sources.Multimodal.mediaSignatureDedupFromIndex(
-          ph.join(broadcast(half), col("media_id") < col("h"))
-            .select(col("media_id"), col("phash")),
-          ph.join(broadcast(half), col("media_id") >= col("h"))
-            .select(col("media_id"), col("phash")), "phash", 4)
-      },
-      None),
+    // ORACLED by capture: the greedy policy is "any earlier arrival"
+    // (non-recursive), so DuckDB replays index + earlier-rep screening
+    // by brute force.
+    incrementalScreenEntry("m6_image_dedup_incremental",
+      graft.sources.Multimodal.stagedImagePhash, "phash",
+      graft.sources.Multimodal.EditIdOffset),
 
     // Audio fingerprints (Haitsma-Kalker-shape sign-of-energy-delta,
     // 64-bit, integer-exact over the shared pcmShorts decode path) on
@@ -4387,38 +4432,17 @@ object Queries {
     // fingerprints pre-group; pair volume bounded by DISTINCT-signature
     // structure). ORACLED by capture like m5: DuckDB brute-forces the
     // rep pair relation over the captured fingerprints.
-    ("m8_audio_neardup_pairs",
-      (s: SparkSession, d: String) => {
-        val ah = graft.sources.Multimodal.stagedAudioHash(s, d)
-          .filter(col("ahash").isNotNull)
-        OracleVals.register("m8_audio_neardup_pairs",
-          OracleVals.collapsedPairsSql(ah, "ahash", 4))
-        graft.sources.Multimodal.mediaNearDupPairsCollapsed(ah, "ahash", 4)
-      },
-      None),
+    collapsedPairsEntry("m8_audio_neardup_pairs",
+      graft.sources.Multimodal.stagedAudioHash, "ahash"),
 
     // INCREMENTAL audio dedup: older half of the originals as the
     // persisted fingerprint index, newer originals + all planted twins
     // as the arriving batch (the m6 half-split convention), screened
     // at hamming <= 4 through the ONE signature-generic core shared
     // with the text and image ingests. ORACLED by capture like m6.
-    ("m9_audio_dedup_incremental",
-      (s: SparkSession, d: String) => {
-        val ah = graft.sources.Multimodal.stagedAudioHash(s, d)
-        val off = graft.sources.Multimodal.AudioEditIdOffset
-        val half = ah.filter(col("media_id") < off)
-          .agg(expr("max(media_id) div 2").as("h"))
-        OracleVals.register("m9_audio_dedup_incremental",
-          OracleVals.incrementalScreenSql(
-            ah.filter(col("ahash").isNotNull), "ahash", 4,
-            half.head().getLong(0), "ahash"))
-        graft.sources.Multimodal.mediaSignatureDedupFromIndex(
-          ah.join(broadcast(half), col("media_id") < col("h"))
-            .select(col("media_id"), col("ahash")),
-          ah.join(broadcast(half), col("media_id") >= col("h"))
-            .select(col("media_id"), col("ahash")), "ahash", 4)
-      },
-      None),
+    incrementalScreenEntry("m9_audio_dedup_incremental",
+      graft.sources.Multimodal.stagedAudioHash, "ahash",
+      graft.sources.Multimodal.AudioEditIdOffset),
 
     // Per-frame video hashes (one dHash per sampled GFV frame) over the
     // planted corpus: originals + a frame-0 one-pixel-edit twin per
@@ -4439,14 +4463,9 @@ object Queries {
     // frame pairs, and re-aggregates — the whole multi-signature
     // composition differentially verified over the captured frames.
     ("m11_video_neardup_clips",
-      (s: SparkSession, d: String) => {
-        val fh = graft.sources.Multimodal.stagedVideoFrameHashes(s, d)
-          .filter(col("fhash").isNotNull)
-        OracleVals.register("m11_video_neardup_clips",
-          OracleVals.clipPairsSql(fh, 4))
-        graft.sources.Multimodal.videoNearDupClipsCollapsed(fh)
-      },
-      None),
+      (s: SparkSession, d: String) =>
+        graft.sources.Multimodal.videoNearDupClipsCollapsed(frameSigs(s, d)),
+      Some(Captured((s, d) => OracleVals.clipPairsSql(frameSigs(s, d), 4)))),
 
     // INCREMENTAL video dedup through the GROUP-level screening core
     // (the n95/m6/m9 policy lifted to multi-signature units): older
@@ -4457,21 +4476,19 @@ object Queries {
     // policy replayed by brute force in DuckDB.
     ("m12_video_dedup_incremental",
       (s: SparkSession, d: String) => {
-        val fh = graft.sources.Multimodal.stagedVideoFrameHashes(s, d)
-        val off = graft.sources.Multimodal.VideoEditIdOffset
-        val half = fh.filter(col("media_id") < off)
-          .agg(expr("max(media_id) div 2").as("h"))
-        OracleVals.register("m12_video_dedup_incremental",
-          OracleVals.groupIncrementalScreenSql(
-            fh.filter(col("fhash").isNotNull), "fhash", 4,
-            half.head().getLong(0)))
-        graft.sources.Multimodal.videoDedupFromIndex(
-          fh.join(broadcast(half), col("media_id") < col("h"))
-            .select(col("media_id"), col("frame_idx"), col("fhash")),
-          fh.join(broadcast(half), col("media_id") >= col("h"))
-            .select(col("media_id"), col("frame_idx"), col("fhash")))
+        val (index, batch) = splitAtHalf(
+          graft.sources.Multimodal.stagedVideoFrameHashes(s, d),
+          graft.sources.Multimodal.VideoEditIdOffset,
+          "media_id", "frame_idx", "fhash")
+        graft.sources.Multimodal.videoDedupFromIndex(index, batch)
       },
-      None),
+      Some(Captured { (s, d) =>
+        val fh = graft.sources.Multimodal.stagedVideoFrameHashes(s, d)
+        OracleVals.groupIncrementalScreenSql(
+          fh.filter(col("fhash").isNotNull), "fhash", 4,
+          indexHalf(fh, graft.sources.Multimodal.VideoEditIdOffset)
+            .head().getLong(0))
+      })),
 
     // Cross-modality dedup card: per kind, decode health + the
     // exact-signature duplication structure (distinct sigs, dup
@@ -4503,19 +4520,15 @@ object Queries {
     // fingerprints — so the "both fronts bit-equal" spec claim is also
     // differentially checked against an engine that knows neither
     // front.
+    // The inflation probe, the oracle capture and the executed query
+    // all read the staged fingerprint table — the one materialization.
     ("m14_audio_neardup_auto",
-      (s: SparkSession, d: String) => {
-        // staged signature table: the inflation probe, the oracle
-        // capture, and the executed query all consume the fingerprints
-        // — the staged parquet is the one materialization (previously
-        // a cut guarded a triple WAV decode; now no run decodes here)
-        val ah = graft.sources.Multimodal.stagedAudioHash(s, d)
-        OracleVals.register("m14_audio_neardup_auto",
-          OracleVals.memberPairsSql(
-            ah.filter(col("ahash").isNotNull), "ahash", 4))
-        graft.sources.Multimodal.mediaNearDupPairsAuto(ah, "ahash")
-      },
-      None),
+      (s: SparkSession, d: String) =>
+        graft.sources.Multimodal.mediaNearDupPairsAuto(
+          graft.sources.Multimodal.stagedAudioHash(s, d), "ahash"),
+      Some(Captured((s, d) => OracleVals.memberPairsSql(
+        nonNullSigs(graft.sources.Multimodal.stagedAudioHash, "ahash")(s, d),
+        "ahash", 4)))),
 
     // Media QUALITY audit rolled up per kind — the n13/n22 quality
     // discipline on the modality axis: pure column expressions over
@@ -4540,17 +4553,14 @@ object Queries {
     // anti join by brute force over the captured signatures.
     ("m16_image_decontamination",
       (s: SparkSession, d: String) => {
-        val ph = graft.sources.Multimodal.stagedImagePhash(s, d)
-          .filter(col("phash").isNotNull)
-        OracleVals.register("m16_image_decontamination",
-          OracleVals.decontaminateSql(ph, "phash", 4,
-            graft.sources.Multimodal.EditIdOffset, "phash"))
+        val ph = imageSigs(s, d)
         graft.sources.Multimodal.imageDecontaminate(ph,
           ph.filter(col("media_id") <
             graft.sources.Multimodal.EditIdOffset &&
             pmod(col("media_id"), lit(97)) === 0))
       },
-      None),
+      Some(Captured((s, d) => OracleVals.decontaminateSql(imageSigs(s, d),
+        "phash", 4, graft.sources.Multimodal.EditIdOffset, "phash")))),
 
     // VIDEO decontamination — the multi-signature composition: a clip
     // drops iff ANY sampled frame nears any test clip's frame (the one
@@ -4560,17 +4570,14 @@ object Queries {
     // replayed in SQL.
     ("m17_video_decontamination",
       (s: SparkSession, d: String) => {
-        val fh = graft.sources.Multimodal.stagedVideoFrameHashes(s, d)
-          .filter(col("fhash").isNotNull)
-        OracleVals.register("m17_video_decontamination",
-          OracleVals.groupDecontaminateSql(fh, "fhash", 4,
-            graft.sources.Multimodal.VideoEditIdOffset))
+        val fh = frameSigs(s, d)
         graft.sources.Multimodal.videoDecontaminate(fh,
           fh.filter(col("media_id") <
             graft.sources.Multimodal.VideoEditIdOffset &&
             pmod(col("media_id"), lit(97)) === 0))
       },
-      None),
+      Some(Captured((s, d) => OracleVals.groupDecontaminateSql(frameSigs(s, d),
+        "fhash", 4, graft.sources.Multimodal.VideoEditIdOffset)))),
 
     // MIXED text+media one-call BUILD (m18) — the composition pillar
     // as a driver-visible receipt (round-14 verdict #2): one gated
@@ -4597,12 +4604,16 @@ object Queries {
   def queries: Map[String, Q] =
     all.map { case (n, f, _) => n -> f }.toMap
 
-  /** Static oracles from the registry PLUS the runtime-captured media
-    * screening oracles ([[OracleVals]]) — Verify evaluates this after
-    * every query ran, so captures made during execution are included;
-    * a query that never ran captures nothing and stays rows-only.
-    */
+  /** The static oracles: [[Sql]] entries only, whatever has run. */
   def oracleSql: Map[String, String] =
-    all.collect { case (n, _, Some(sql)) => n -> sql }.toMap ++
-      OracleVals.snapshot
+    all.collect { case (n, _, Some(Sql(text))) => n -> text }.toMap
+
+  /** Every oracle evaluated for `dir`: [[oracleSql]] plus each
+    * [[Captured]] oracle's SQL over that dir's staged signatures (one
+    * bounded collect each).
+    */
+  def oracleSql(spark: SparkSession, dir: String): Map[String, String] =
+    oracleSql ++ all.collect {
+      case (n, _, Some(Captured(sql))) => n -> sql(spark, dir)
+    }
 }

@@ -18,6 +18,11 @@ object SparkEntry {
     Queries.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. Omit for non-SQL-expressible ops.
+    *
+    * These are the registry's static oracles, the same whatever has run.
+    * The captured media oracles need a scale dir to capture signatures
+    * from, so they are only in Verify's dump
+    * (`Queries.oracleSql(spark, dir)`). */
   def oracleSql: Map[String, String] = Queries.oracleSql
 }

@@ -1914,14 +1914,40 @@ object Dedup {
       .join(minNbr.filter(col("mn") < col("id")), Seq("id"))
       .join(hubs, col("nbr") === col("hub"))
       .groupBy(col("id")).agg(min(col("nbr")).as("cluster"))
-    minNbr.select(col("id"))
+    clusterRollup(minNbr.select(col("id"))
       .join(attach, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n_docs"),
-        sort_array(collect_list(col("id"))).as("members"))
-      .orderBy(col("cluster"))
+      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster")),
+      col("cluster"), "id")
   }
+
+  /** Cluster label rows rolled up to the CC reporting schema
+    * (cluster, n_docs, members): one row per `cluster` group, members
+    * sorted, clusters in order.
+    */
+  private[ops] def clusterRollup(labels: DataFrame, cluster: Column,
+                                 member: String): DataFrame =
+    labels.groupBy(cluster)
+      .agg(count(lit(1)).as("n_docs"),
+        sort_array(collect_list(col(member))).as("members"))
+      .orderBy(col("cluster"))
+
+  /** Members labeled through their exact-dup group's representative:
+    * `members` joins `groups` (rep, n) on `groupCol`, and each member
+    * takes its rep's CC cluster from `repLabels` (id, cluster). A group
+    * whose rep gained no cross-group edge still forms its own cluster
+    * when it has ≥ 2 members (pairwise dups by identity) — the `n > 1`
+    * fallback; members of edgeless singleton groups get no row.
+    */
+  private[ops] def expandRepLabels(members: DataFrame, groups: DataFrame,
+                                   groupCol: String, repLabels: DataFrame,
+                                   id: Column): DataFrame =
+    members.join(groups, groupCol)
+      .join(repLabels.select(col("id").as("rep"), col("cluster")),
+        Seq("rep"), "left")
+      .select(id,
+        coalesce(col("cluster"), when(col("n") > 1, col("rep")))
+          .as("cluster"))
+      .filter(col("cluster").isNotNull)
 
   def dupClusters(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     // materialize the PAIR list once, THEN mirror it — a union of two
@@ -1980,11 +2006,7 @@ object Dedup {
       s"dupClusters did not converge in $maxIters rounds; " +
         "component diameter exceeds the iteration bound — use dupClustersLogN")
     // labels is already a cut frame — the rollup reads checkpoint blocks
-    labels
-      .groupBy(col("label").as("cluster"))
-      .agg(count(lit(1)).as("n_docs"),
-        sort_array(collect_list(col("id"))).as("members"))
-      .orderBy(col("cluster"))
+    clusterRollup(labels, col("label").as("cluster"), "id")
   }
 
   /** O(log n)-round connected components: alternating large-star /
@@ -2070,11 +2092,7 @@ object Dedup {
     * directly and skip the collect_list/explode round trip.
     */
   def dupClustersLogN(pairs: DataFrame, maxIters: Int = 12): DataFrame =
-    dupLabelsLogN(pairs, maxIters)
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n_docs"),
-        sort_array(collect_list(col("id"))).as("members"))
-      .orderBy(col("cluster"))
+    clusterRollup(dupLabelsLogN(pairs, maxIters), col("cluster"), "id")
 
   /** Connected-component labels with EXACT-DUPLICATE PRE-COLLAPSE — the
     * production front of the near-dup pipeline on boilerplate-heavy
@@ -2100,11 +2118,8 @@ object Dedup {
     * whose map-side combine collapses identical texts per partition
     * before anything moves.
     *
-    * Groups whose representative gains no cross-group edge still form
-    * their own cluster when the group has ≥ 2 members (its members are
-    * pairwise near-dups by identity) — the `n > 1` fallback below;
-    * size-1 groups with no edges are not in any cluster, exactly like
-    * singleton docs in the uncollapsed graph.
+    * Labels expand through [[expandRepLabels]]: size-1 groups with no
+    * edges are in no cluster, exactly like singleton docs uncollapsed.
     */
   def dupLabelsCollapsed(
       docs: DataFrame,
@@ -2122,14 +2137,10 @@ object Dedup {
           first(col("text")).as("text")))
     val repDocs = groups.select(col("rep").as("doc_id"), col("text"))
     val repLabels = cc(lshCandidatePairs(repDocs))
-    eligible.select(col("doc_id"), md5(col("text")).as("digest"))
-      .join(groups.select(col("digest"), col("rep"), col("n")), "digest")
-      .join(repLabels.select(col("id").as("rep"), col("cluster")),
-        Seq("rep"), "left")
-      .select(col("doc_id").as("id"),
-        coalesce(col("cluster"), when(col("n") > 1, col("rep")))
-          .as("cluster"))
-      .filter(col("cluster").isNotNull)
+    expandRepLabels(
+      eligible.select(col("doc_id"), md5(col("text")).as("digest")),
+      groups.select(col("digest"), col("rep"), col("n")), "digest",
+      repLabels, col("doc_id").as("id"))
       .select(col("cluster"), col("id"))
   }
 
@@ -2137,11 +2148,7 @@ object Dedup {
     * schema — the n53 registry surface, oracled identically to n21/n24.
     */
   def dupClustersCollapsed(docs: DataFrame): DataFrame =
-    dupLabelsCollapsed(docs)
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n_docs"),
-        sort_array(collect_list(col("id"))).as("members"))
-      .orderBy(col("cluster"))
+    clusterRollup(dupLabelsCollapsed(docs), col("cluster"), "id")
 
   /** Duplication-depth profile — the dedup AUDIT companion to
     * [[jaccardBackground]]: how many near-dup clusters exist at each

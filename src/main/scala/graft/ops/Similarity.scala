@@ -1213,11 +1213,10 @@ object Similarity {
     * threshold ≤ 1), so CC over one representative per distinct vector
     * (the group's min vec_id) plus label expansion reconstructs the
     * uncollapsed components exactly, cluster ids included (component
-    * min = min over group reps = min over all members). A copy group
-    * whose rep gains no cross-group edge still forms its own cluster
-    * when it has ≥ 2 members (pairwise near-dups by identity); zero-norm
-    * and null embeddings are excluded before grouping — they pair with
-    * nothing, so they must never ride the n>1 fallback into a cluster.
+    * min = min over group reps = min over all members; the expansion is
+    * [[graft.ops.Dedup.expandRepLabels]]). Zero-norm and null embeddings
+    * are excluded before grouping — they pair with nothing, so they must
+    * never ride its n>1 fallback into a cluster.
     * SimilaritySpec pins bit-equality with [[semanticDupClusters]]; the
     * registry's n57 passes n56's oracle verbatim.
     */
@@ -1239,18 +1238,11 @@ object Similarity {
       nearDupPairsUnsorted(reps, col("a.bucket") === col("b.bucket"),
           threshold)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
-    cast.filter(selfDot =!= 0d).select(col("vec_id"), col("emb"))
-      .join(groups, Seq("emb"))
-      .join(repLabels.select(col("id").as("rep"), col("cluster")),
-        Seq("rep"), "left")
-      .select(col("vec_id"),
-        coalesce(col("cluster"), when(col("n") > 1, col("rep")))
-          .as("cluster"))
-      .filter(col("cluster").isNotNull)
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n_docs"),
-        sort_array(collect_list(col("vec_id"))).as("members"))
-      .orderBy(col("cluster"))
+    graft.ops.Dedup.clusterRollup(
+      graft.ops.Dedup.expandRepLabels(
+        cast.filter(selfDot =!= 0d).select(col("vec_id"), col("emb")),
+        groups, "emb", repLabels, col("vec_id")),
+      col("cluster"), "vec_id")
   }
 
   /** Cross-snapshot (incremental) semantic dedup — the embedding-side

@@ -706,7 +706,6 @@ class DedupSpec extends SparkSpec {
   test("sourceLeakageMatrix: the shuffle twin and both auto branches " +
     "are bit-equal to the broadcast form; the two exchange strategies " +
     "actually plan differently") {
-    import spark.implicits._
     val d = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"), col("source"))
     val want = Dedup.sourceLeakageMatrix(d, 0.3).collect().map(_.toSeq).toSeq

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ops.LogCatalog
 
 /** Golden test of the SURVEY §3.2 planner over the FIXTURES.md §2.1

@@ -145,7 +145,6 @@ class MediaQualitySpec extends SparkSpec {
       if fs.forall(f => testFrames.forall(t =>
         java.lang.Long.bitCount(t ^ f) > 4)) => id -> fs.length.toLong
     }.toMap
-    import spark.implicits._
     val got = Multimodal.videoDecontaminate(fh,
       fh.filter(col("media_id") < Multimodal.VideoEditIdOffset &&
         pmod(col("media_id"), lit(97)) === 0))

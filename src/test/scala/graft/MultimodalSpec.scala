@@ -51,7 +51,6 @@ class MultimodalSpec extends SparkSpec {
     "contextual error and never kills the task; null payload is a " +
     "null-hash no-error row") {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
     val rows = Seq(
       Row(1L, "image", Multimodal.pngBytes(1L), Row(4, 4, null)),
       Row(2L, "image", Array.fill[Byte](16)(7), Row(4, 4, null)),
@@ -111,7 +110,7 @@ class MultimodalSpec extends SparkSpec {
     // (a one-pixel ±1 edit moves few 9×8 samples on the tiny images)
     val planted = sig.map(_._1).filter(_ >= Multimodal.EditIdOffset)
       .map(id => (id - Multimodal.EditIdOffset, id))
-      .filter { case (o, e) => sig.toMap.contains(o) }
+      .filter { case (o, _) => sig.toMap.contains(o) }
     val caught = planted.count { case (o, e) =>
       got.exists(p => p._1 == o && p._2 == e) }
     assert(planted.nonEmpty && caught > 0,
@@ -312,7 +311,7 @@ class MultimodalSpec extends SparkSpec {
     val groups = sig.groupBy(_._2)
       .map { case (h, g) => h -> (g.map(_._1).min, g.length) }
     val brute = (for {
-      (ha, (ra, na)) <- groups; (hb, (rb, nb)) <- groups
+      (ha, (ra, _)) <- groups; (hb, (rb, _)) <- groups
       if ra < rb && java.lang.Long.bitCount(ha ^ hb) <= 4
     } yield (math.min(ra, rb), math.max(ra, rb),
       java.lang.Long.bitCount(ha ^ hb))).toSet

@@ -11,7 +11,20 @@ class QueriesSpec extends SparkSpec {
 
   test("oracle map only names registered queries") {
     val qs = Queries.queries.keySet
-    assert(Queries.oracleSql.keySet.subsetOf(qs))
+    assert(SparkEntry.oracleSql.keySet.subsetOf(qs))
+    assert(Queries.oracleSql(spark, dir).keySet.subsetOf(qs))
+  }
+
+  test("captured oracles are values: evaluated for a dir, nothing built first") {
+    val captured = Queries.all.collect {
+      case (n, _, Some(_: Queries.Captured)) => n
+    }.toSet
+    assert(captured.size == 9)
+    val full = Queries.oracleSql(spark, dir)
+    assert(full.size == 198)
+    assert(full.keySet == SparkEntry.oracleSql.keySet ++ captured)
+    assert(Queries.oracleSql(spark, dir) == full)
+    assert(SparkEntry.oracleSql == full -- captured)
   }
 
   for ((name, fn, _) <- Queries.all) {

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
 import graft.ops.Reports
 
 /** Hand-computed expectations for the report aggregates (SURVEY §5.2.2)

@@ -12,7 +12,6 @@ import graft.ops.{LogLines, Tables}
   * "a filesystem the cluster can reach".
   */
 class SourcesSpec extends SparkSpec {
-  import spark.implicits._
 
   test("text source round-trip: files on disk → lines + file identity → parse → agg") {
     val root = Files.createTempDirectory("graft_logs").toString
